@@ -11,8 +11,8 @@ table needs between query workloads:
   *names and sizes*, never data) used to decide when to compact.
 - ``compact``: rewrite a parquet table into ~``target_file_bytes`` files.
   Sizing comes from the actual on-disk byte count, not a row-count guess,
-  so compression ratio is respected. Atomic swap (same staging + rename
-  protocol as operators/merge.py), crash-safe: readers see old or new.
+  so compression ratio is respected. Atomic swap (operators/merge.py
+  swap_plain_table), crash-safe: readers see old or new.
 - ``write_clustered``: range-repartition + sort-within-partitions on the
   cluster keys before writing. Each output file then covers a narrow,
   non-overlapping key range, so parquet footer min/max lets any engine
@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .merge import recover_plain_table, swap_plain_table
 
 
 def table_file_stats(path: str) -> dict:
@@ -68,17 +68,13 @@ def compact(
     bytes-identical multiset of rows, not an ordering. For ordered output
     use ``write_clustered`` instead.
     """
+    recover_plain_table(table_path)
     before = table_file_stats(table_path)
     if before["n_files"] < min_files_to_compact:
         return {"before": before, "after": before, "compacted": False}
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
     df = spark.read.parquet(table_path)
-    staging = f"{table_path}.__compact__{uuid.uuid4().hex[:8]}"
-    df.coalesce(n_out).write.mode("overwrite").parquet(staging)
-    backup = f"{table_path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(table_path, backup)
-    os.rename(staging, table_path)
-    shutil.rmtree(backup, ignore_errors=True)
+    swap_plain_table(table_path, df.coalesce(n_out))
     return {"before": before, "after": table_file_stats(table_path), "compacted": True}
 
 

@@ -1,44 +1,33 @@
-"""Keyed upsert MERGE (SURVEY S6/S7/J4/W3): Delta ``MERGE INTO`` when
-delta-spark is importable, Parquet swap fallback otherwise.
+"""Keyed upsert MERGE (SURVEY S6/S7/J4/W3) over plain parquet.
 
 The reference's merge layer is Mongo bulk ``UpdateOne(upsert=True)`` keyed by
 event_id (data_migration.py:102-158, etl_sqlite_to_mongo.py:129-164,
-scrapers_v2/utils.py:94-180). The Spark-native equivalent is Delta
-``MERGE INTO`` — transactional, cross-partition-atomic via the Delta log,
-and file-pruned (only files containing matched keys rewrite). The same
-``merge_upsert`` API dispatches to it when available (``backend="auto"``);
-without delta the documented fallback (SURVEY §4) runs: latest-wins within
-the batch → left-anti + union → atomic directory swap. In environments
-without delta-spark (including this sandbox) the parquet fallback IS the
-canonical path; both backends are held to identical upsert semantics by the
-shared-fixture test tests/test_refine_merge.py::
-test_merge_upsert_roundtrip_and_stats, whose delta parametrization executes
-wherever delta-spark is installed and self-skips elsewhere.
+scrapers_v2/utils.py:94-180). Here a merge is latest-wins within the batch
+(W3, ``row_number`` over the key — mandatory before any MERGE to avoid a
+nondeterministic multi-match, SURVEY §7 hard-part 5), then left-anti +
+union against the target.
 
-BLOCKING CONSTRAINT (verified r6, re-verified r7, r10, r11 and r12): delta-spark cannot
-execute in this sandbox — the package is not installed, ``pip install`` is
-prohibited, no ``delta-*`` jar ships under /opt/spark/jars or any ivy
-cache, ``pip download delta-spark`` finds no distribution (no network),
-and there is no way to resolve ``io.delta:delta-spark_2.13`` at session
-start. Until
-an environment provides the jar, the MERGE branch's LOGIC (dedup-before-
-merge, keyed condition, UpdateAll/InsertAll wiring, operationMetrics
-stats) is exercised by tests/test_delta_branch.py against an in-memory
-double of the DeltaTable API that simulates Delta's upsert semantics; the
-two real-delta parametrizations in test_refine_merge.py remain the
-end-to-end check wherever the package exists.
+Each table shape commits through exactly one protocol:
 
-Scale notes:
-- within-batch dedup is W3 (row_number over the key) — mandatory before any
-  MERGE to avoid nondeterministic multi-match (SURVEY §7 hard-part 5);
-- the whole-table fallback swap is atomic at the directory level; the
-  PARTITIONED merge commits fresh targets through a pointer layout (r14,
-  see merge_upsert_partitioned) whose single atomic pointer replace gives
-  whole-commit atomicity over plain parquet — the crash-between-partition-
-  swaps window of the r13 in-place form is closed (legacy plain-hive
-  targets keep the per-partition-atomic swap, the documented relaxation);
-- stats are computed in a SINGLE key-overlap aggregation job, not per-count
-  table re-reads (Delta path reads them from the commit's operationMetrics).
+- PLAIN-DIRECTORY tables — the whole-table ``merge_upsert`` here,
+  ``rollup.fold_rollup`` and ``layout.compact``. These stay plain parquet
+  directories because their readers scan the path directly (streaming
+  consumers, report queries, benchmarks). They commit by staging the new
+  table beside the target and swapping it in with two renames
+  (``swap_plain_table``). The one unsafe moment — a crash between the two
+  renames, which leaves no table at the path — is repaired by the next
+  writer on entry (``recover_plain_table``): it renames the lone backup
+  back and drops stale staging directories before reading the table.
+- VERSIONED tables — ``merge_upsert_partitioned`` here and every
+  streaming/store.py store. They commit through the store's CAS commit
+  log (``_commits/c-<seq>``, exclusive create; see streaming/store.py):
+  immutable data directories, one manifest view per version, and one
+  put-if-absent log entry as the only mutation readers can observe. No
+  rename and no symlink anywhere on this path, so it holds on object
+  stores as well as POSIX.
+
+MergeStats come from a SINGLE key-overlap aggregation job, not per-count
+table re-reads.
 """
 
 from __future__ import annotations
@@ -51,6 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -69,20 +59,6 @@ def latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list[Column])
     """W3: newest row per business key; order must be a total order."""
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True when delta-spark is importable AND (if a session is given) the
-    session was built with the Delta SQL extension (session.get_spark does
-    this automatically when the package is present)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    if spark is not None:
-        ext = spark.conf.get("spark.sql.extensions", "") or ""
-        return "DeltaSparkSessionExtension" in ext
-    return True
 
 
 def _overlap_stats(
@@ -109,55 +85,6 @@ def _overlap_stats(
     return int(row["before"]), int(row["incoming"]), int(row["batch_keys"]), int(row["updated"])
 
 
-def _merge_upsert_delta(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    order_cols: list[Column],
-    collect_stats: bool,
-) -> MergeStats | None:
-    """Transactional upsert via Delta ``MERGE INTO`` — cross-partition atomic
-    (the Delta log plays the role Mongo's per-doc atomicity does in the
-    reference, data_migration.py:133-139) and file-pruned: only data files
-    containing matched keys rewrite, so merge cost scales with the batch's
-    locality, not table size."""
-    from delta.tables import DeltaTable
-
-    deduped = latest_per_key(updates, key_cols, order_cols)
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        deduped.write.format("delta").mode("overwrite").save(target_path)
-        if not collect_stats:
-            return None
-        total_incoming = updates.count()
-        n = deduped.count()
-        return MergeStats(total_incoming, total_incoming - n, 0, n, n)
-
-    t = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in key_cols)
-    (
-        t.alias("t")
-        .merge(deduped.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    if not collect_stats:
-        return None
-    # stats come from the commit's operationMetrics — zero extra scan jobs
-    m = t.history(1).select("operationMetrics").first()[0]
-    updated = int(m.get("numTargetRowsUpdated", 0))
-    inserted = int(m.get("numTargetRowsInserted", 0))
-    total_incoming = updates.count()
-    return MergeStats(
-        total_incoming=total_incoming,
-        within_batch_duplicates=total_incoming - (updated + inserted),
-        updated=updated,
-        inserted=inserted,
-        target_rows_after=t.toDF().count(),
-    )
-
-
 def _kept_rows(
     target: DataFrame, deduped: DataFrame, key_cols: list[str], prefilter: str
 ) -> DataFrame:
@@ -173,6 +100,65 @@ def _kept_rows(
     return target.join(deduped.select(*key_cols), key_cols, "left_anti")
 
 
+# ----------------------------------------------------------------------
+# Plain-directory commit: staging write + two-rename swap, shared by
+# merge_upsert, rollup.fold_rollup and layout.compact.
+
+_BACKUP = ".__old__"
+_STAGING = ".__staging__"
+# staging suffixes a crashed writer may have left: this module's, plus the
+# ones fold_rollup and compact staged under before they shared this helper
+_STALE_STAGING = (_STAGING, ".__rollup__", ".__compact__")
+
+
+def recover_plain_table(target_path: str) -> bool:
+    """Entry step of every plain-directory writer; True if the table exists.
+
+    Repairs what a crashed ``swap_plain_table`` left beside the target. A
+    crash between its two renames leaves NO table at ``target_path`` and
+    one ``{target}.__old__*`` backup, which is the last committed table:
+    it is renamed back. Backups left by a crash after the second rename,
+    and staging directories, are deleted. Single writer per table."""
+    target = os.path.normpath(target_path)
+    parent, base = os.path.split(os.path.abspath(target))
+    backups, staging = [], []
+    for name in os.listdir(parent) if os.path.isdir(parent) else []:
+        if name.startswith(base + _BACKUP):
+            backups.append(os.path.join(parent, name))
+        elif name.startswith(tuple(base + s for s in _STALE_STAGING)):
+            staging.append(os.path.join(parent, name))
+    if backups and not os.path.exists(target):
+        if len(backups) > 1:
+            raise RuntimeError(
+                f"plain table {target_path} is missing and {len(backups)} "
+                f"backups exist ({sorted(backups)}) — refusing to guess which "
+                "is the committed table; rename the right one to the table path"
+            )
+        os.rename(backups.pop(), target)
+    for p in backups + staging:
+        shutil.rmtree(p, ignore_errors=True)
+    return os.path.exists(target)
+
+
+def swap_plain_table(target_path: str, df: DataFrame) -> None:
+    """Commit ``df`` as the plain parquet directory at ``target_path``:
+    write it to a staging directory beside the target, rename the live
+    table to a backup, rename the staging directory in, drop the backup.
+    Readers see the old or the new table; the gap between the renames is
+    closed by the next writer's ``recover_plain_table``."""
+    target = os.path.normpath(target_path)
+    tag = uuid.uuid4().hex[:8]
+    staging = f"{target}{_STAGING}{tag}"
+    df.write.mode("overwrite").parquet(staging)
+    if os.path.exists(target):
+        backup = f"{target}{_BACKUP}{tag}"
+        os.rename(target, backup)
+        os.rename(staging, target)
+        shutil.rmtree(backup, ignore_errors=True)
+    else:
+        os.rename(staging, target)
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -180,57 +166,28 @@ def merge_upsert(
     key_cols: list[str],
     order_cols: list[Column] | None = None,
     collect_stats: bool = True,
-    backend: str = "auto",
     prefilter: str = "none",
 ) -> MergeStats | None:
-    """Upsert ``updates`` into the keyed table at ``target_path``.
+    """Upsert ``updates`` into the plain parquet table at ``target_path``.
 
-    Semantics = Mongo's ``$set`` whole-document upsert / Delta
-    ``WHEN MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *`` with
-    latest-wins inside the batch.
+    Semantics = Mongo's ``$set`` whole-document upsert (``WHEN MATCHED
+    UPDATE SET * WHEN NOT MATCHED INSERT *``) with latest-wins inside the
+    batch. Rewrites the whole table and commits it with
+    ``swap_plain_table``.
 
-    ``backend``: ``"delta"`` requires delta-spark (raises otherwise);
-    ``"parquet"`` forces the swap fallback; ``"auto"`` uses Delta when the
-    session has it AND the target is not already a plain parquet table.
-
-    ``prefilter="bloom"`` (parquet path only; Delta MERGE file-prunes on its
-    own) applies the broadcast Bloom prefilter before the keep-side
-    anti-join — identical output, shuffle volume proportional to the match
-    fraction instead of the table.
+    ``prefilter="bloom"`` applies the broadcast Bloom prefilter before the
+    keep-side anti-join — identical output, shuffle volume proportional to
+    the match fraction instead of the table.
     """
     order_cols = order_cols or [F.col(key_cols[0])]
-    if backend not in ("auto", "delta", "parquet"):
-        raise ValueError(f"unknown merge backend {backend!r}")
-    if backend == "delta" and not delta_available(spark):
-        raise RuntimeError(
-            "merge_upsert(backend='delta') requires the delta-spark package "
-            "and a session built with the Delta SQL extension (session.get_spark)"
-        )
-    use_delta = backend == "delta"
-    if backend == "auto" and delta_available(spark):
-        # don't silently convert an existing parquet target
-        from delta.tables import DeltaTable
-
-        use_delta = not os.path.exists(target_path) or DeltaTable.isDeltaTable(
-            spark, target_path
-        )
-    if use_delta:
-        return _merge_upsert_delta(
-            spark, target_path, updates, key_cols, order_cols, collect_stats
-        )
-
     deduped = latest_per_key(updates, key_cols, order_cols)
-    exists = os.path.exists(target_path)
-    target = spark.read.parquet(target_path) if exists else None
-    if exists:
-        kept = _kept_rows(target, deduped, key_cols, prefilter)
-        merged = kept.unionByName(deduped)
+    target = spark.read.parquet(target_path) if recover_plain_table(target_path) else None
+    if target is not None:
+        merged = _kept_rows(target, deduped, key_cols, prefilter).unionByName(deduped)
     else:
         merged = deduped
 
-    staging = f"{target_path}.__staging__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-
+    stats = None
     if collect_stats:
         before, total_incoming, batch_keys, updated = _overlap_stats(
             target, updates, key_cols
@@ -242,128 +199,69 @@ def merge_upsert(
             inserted=batch_keys - updated,
             target_rows_after=before - updated + batch_keys,
         )
-    else:
-        stats = None
-
-    # atomic swap
-    backup = f"{target_path}.__old__{uuid.uuid4().hex[:8]}"
-    if exists:
-        os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    if exists:
-        shutil.rmtree(backup, ignore_errors=True)
+    swap_plain_table(target_path, merged)
     return stats
 
 
 # ----------------------------------------------------------------------
-# Crash-atomic pointer layout for the partitioned merge (VERDICT r13 item 2)
+# Versioned partitioned tables (merge_upsert_partitioned)
 #
 #   target_path/
-#       CURRENT             <- pointer file: name of the live view dir
-#       v-<seq>-<uuid>/     <- immutable VIEW: hive-named partition dirs,
-#                              each a RELATIVE SYMLINK into data/
-#       data/<uuid>/        <- immutable per-commit data (the staging write)
+#       _commits/c-<seq>      <- CAS commit log (streaming/store.py): the
+#                                newest intact entry names the live view
+#       v-<seq>-<uuid>/       <- immutable VIEW: _VIEW_MANIFEST.json holds
+#                                the table schema and maps hive
+#                                partition-dir name -> target-relative data
+#                                path ("data/<commit>/day=x")
+#       data/<commit>/        <- immutable per-commit data (the batch write)
 #
-# A commit materializes the batch's partitions under data/, builds a fresh
-# view dir whose symlinks mix the new partitions with the previous view's
-# untouched ones, and then performs exactly ONE committing operation: an
-# atomic ``os.replace`` of the pointer (the streaming/store.py pattern). A
-# crash at any earlier point — including between two partition links, the
-# window the legacy in-place swap could not survive — leaves readers on the
-# previous pointer and therefore a fully consistent snapshot; orphans are
-# GC'd by the next successful commit. Readers resolve the pointer and scan
-# one immutable hive-layout directory (partition discovery and pruning work
-# unchanged through directory symlinks on a POSIX filesystem). Same scope
-# note as the store: atomic rename ⇒ local/POSIX or HDFS-like; on object
-# stores use the Delta MERGE path.
-#
-# MANIFEST view variant (r15, VERDICT r14 item 5): object stores and some
-# network filesystems have no symlinks, so a view can instead be a dir
-# holding ONE file, ``_VIEW_MANIFEST.json`` — a JSON mapping of hive
-# partition-dir name → target-relative data path ("data/<commit>/day=x").
-# Readers resolve partitions through the mapping instead of the directory
-# tree; everything else (immutable data commits, one pointer replace as
-# the only committing operation, post-commit GC) is identical, and both
-# view formats are readable at any time — a table can even mix formats
-# across versions. ``layout="auto"`` (the default) probes os.symlink once
-# per commit and falls back to the manifest, so the same code path works
-# on POSIX and symlink-free filesystems.
-#
-# POINTER COMMIT (r16, VERDICT r15 item 1): the pointer put itself no
-# longer assumes atomic rename either — it routes through
-# streaming/store.py put_pointer, whose "auto" strategy probes os.replace
-# per commit and falls back to the CAS commit log (_commits/c-<seq>,
-# committed by EXCLUSIVE CREATE = conditional put / If-None-Match on a
-# real object store). With layout="manifest" + the CAS strategy the whole
-# commit path is rename-free AND symlink-free: stage immutable data,
-# write one manifest file, put-if-absent one log entry.
+# A commit writes the touched partitions under data/, writes a new view
+# whose manifest mixes them with the previous view's untouched partitions,
+# and then performs exactly ONE committing operation: the exclusive create
+# of the next log entry (store.put_pointer). A crash at any earlier point
+# leaves readers on the previous view; orphans are GC'd by the next
+# successful commit.
 
-_PT_POINTER = "CURRENT"
 _PT_DATA = "data"
 _PT_MANIFEST = "_VIEW_MANIFEST.json"
 
 
-def _symlinks_supported(root: str) -> bool:
-    probe = os.path.join(root, f".__lnprobe__{uuid.uuid4().hex[:8]}")
-    try:
-        os.symlink(".", probe)
-    except (OSError, NotImplementedError):
-        return False
-    else:
-        os.remove(probe)
-        return True
+def _read_manifest(view_dir: str) -> dict:
+    with open(os.path.join(view_dir, _PT_MANIFEST)) as f:
+        return json.load(f)
 
 
-def _view_mapping(target_path: str, view_dir: str, prefix: str) -> dict[str, str]:
-    """partition-dir name → target-relative data path, from EITHER view
-    format (symlink dirs or _VIEW_MANIFEST.json)."""
-    mpath = os.path.join(view_dir, _PT_MANIFEST)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            return {k: v for k, v in json.load(f).items() if k.startswith(prefix)}
-    out = {}
-    for name in os.listdir(view_dir):
-        p = os.path.join(view_dir, name)
-        if not name.startswith(prefix):
-            continue
-        if os.path.islink(p):
-            resolved = os.path.normpath(os.path.join(view_dir, os.readlink(p)))
-            out[name] = os.path.relpath(resolved, target_path)
-        elif os.path.isdir(p):
-            # hand-migrated real dir inside a view: target-relative via the
-            # view itself (the writer re-homes it into data/ on next touch)
-            out[name] = os.path.relpath(p, target_path)
-    return out
+def _view_mapping(view_dir: str) -> dict[str, str]:
+    """partition-dir name → target-relative data path of one view."""
+    return _read_manifest(view_dir)["partitions"]
 
 
-def _read_view_df(
-    spark: SparkSession, target_path: str, view_dir: str
-) -> DataFrame:
-    """The view as a DataFrame, either format. Symlink views scan as one
-    hive directory; manifest views group partitions by data commit (shared
-    basePath ⇒ hive partition-column discovery per group) and union —
-    group count is bounded by live commits, which GC keeps at ≤ the number
-    of merges since each partition's last rewrite."""
-    mpath = os.path.join(view_dir, _PT_MANIFEST)
-    if not os.path.exists(mpath):
-        return spark.read.option("basePath", view_dir).parquet(view_dir)
-    with open(mpath) as f:
-        mapping = json.load(f)
+def _read_view_df(spark: SparkSession, target_path: str, view_dir: str) -> DataFrame:
+    """The view as a DataFrame: partitions grouped by data commit (one
+    basePath per group) and unioned — group count is bounded by live
+    commits, which GC keeps at ≤ the number of merges since each
+    partition's last rewrite. Every group reads with the schema the writer
+    recorded, so the partition column keeps its written type instead of
+    whatever each group's directory names would infer to."""
+    manifest = _read_manifest(view_dir)
+    mapping = manifest["partitions"]
     if not mapping:
         # a commit always maps >=1 touched partition, so an empty manifest
         # is a hand-truncated/corrupt view — indexing dfs[0] below would
         # surface it as a bare IndexError (r16 ADVICE)
         raise RuntimeError(
             f"partitioned merge view {view_dir}: _VIEW_MANIFEST.json maps no "
-            "partitions — corrupt or hand-truncated view. Restore CURRENT "
-            "to the latest intact v-*/ dir or delete the table to reset."
+            "partitions — corrupt or hand-truncated view. Point the top "
+            "_commits/c-* entry at the latest intact v-*/ dir or delete the "
+            "table to reset."
         )
     groups: dict[str, list[str]] = {}
-    for name, rel in mapping.items():
-        commit_root = os.path.dirname(os.path.join(target_path, rel))
-        groups.setdefault(commit_root, []).append(os.path.join(target_path, rel))
+    for rel in mapping.values():
+        path = os.path.join(target_path, rel)
+        groups.setdefault(os.path.dirname(path), []).append(path)
+    schema = StructType.fromJson(manifest["schema"])
     dfs = [
-        spark.read.option("basePath", root).parquet(*sorted(paths))
+        spark.read.schema(schema).option("basePath", root).parquet(*sorted(paths))
         for root, paths in sorted(groups.items())
     ]
     out = dfs[0]
@@ -372,152 +270,55 @@ def _read_view_df(
     return out
 
 
-def resolve_partitioned_path(target_path: str) -> str | None:
-    """Readable root of a partitioned merge target: the live view dir for
-    pointer-layout tables (either commit mechanism — CURRENT file or CAS
-    commit log, streaming/store.py), the path itself for legacy plain-hive
-    tables, None if nothing committed/written yet."""
-    from ..streaming.store import pointer_exists, resolve_pointer_name
-
-    if pointer_exists(target_path):
-        version = resolve_pointer_name(target_path)
-        if version is None:
-            # torn/empty pointer: joining "" would resolve to the RAW root
-            # (data/ + v-*/ mixed), which readers must never scan
-            return None
-        d = os.path.join(target_path, version)
-        return d if os.path.isdir(d) else None
-    return target_path if os.path.isdir(target_path) else None
-
-
 def read_partitioned_table(spark: SparkSession, target_path: str) -> DataFrame | None:
-    """The live snapshot of a partitioned merge target (any layout — legacy
-    plain-hive, symlink view, or manifest view), or None if the table
-    doesn't exist yet."""
-    d = resolve_partitioned_path(target_path)
-    if d is None:
-        return None
-    if os.path.exists(os.path.join(d, _PT_MANIFEST)):
-        return _read_view_df(spark, target_path, d)
-    return spark.read.parquet(d)
+    """The live snapshot of a partitioned merge target, or None if nothing
+    has been committed (or the commit log names no intact view)."""
+    from ..streaming.store import store_version_dir
+
+    view = store_version_dir(target_path)
+    return None if view is None else _read_view_df(spark, target_path, view)
 
 
-def _pt_next_version(target_path: str, prev_view: str | None) -> str:
-    seq = 0
-    if prev_view is not None:
-        name = os.path.basename(prev_view)
-        try:
-            seq = int(name.split("-")[1]) + 1
-        except (IndexError, ValueError):
-            seq = 1
-    return f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-
-
-def _merge_partitions_pointer(
-    target_path: str,
-    merged: DataFrame,
-    partition_col: str,
-    touched: list,
-    prev_view: str | None,
-    layout: str = "auto",
-    pointer_strategy: str = "auto",
+def _commit_view(
+    target_path: str, merged: DataFrame, partition_col: str, prev_view: str | None
 ) -> None:
     """Commit ``merged`` (the touched partitions' full new contents) plus
-    the previous view's untouched partitions as one new immutable view,
-    then move the pointer. Crash-atomic: the pointer replace is the only
-    mutation readers can observe. ``layout``: "symlink" | "manifest" |
-    "auto" (probe os.symlink, fall back to the manifest — the symlink-free
-    format for object-store-like filesystems)."""
+    the previous view's untouched partitions as one new immutable view."""
+    from ..streaming.store import _commit_pointer, _new_version
+
     data_root = os.path.join(target_path, _PT_DATA)
-    os.makedirs(data_root, exist_ok=True)
-    commit_id = uuid.uuid4().hex[:8]
-    data_dir = os.path.join(data_root, commit_id)
+    data_dir = os.path.join(data_root, uuid.uuid4().hex[:8])
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(data_dir)
 
-    if layout == "auto":
-        layout = "symlink" if _symlinks_supported(target_path) else "manifest"
-    if layout not in ("symlink", "manifest"):
-        raise ValueError(f"unknown partitioned-merge layout {layout!r}")
-
-    version = _pt_next_version(target_path, prev_view)
-    view_dir = os.path.join(target_path, version)
-    os.makedirs(view_dir)
     # The staged write's OWN directory names define the touched set — the
     # hive writer percent-escapes special chars (':', '%', '=', …), so a
     # name constructed from str(value) can silently miss the staged dir
-    # (new data dropped, stale data relinked). Every staged dir is, by
-    # construction, exactly the touched partitions' new contents.
+    # (new data dropped, stale data kept). Untouched partitions keep the
+    # previous view's data path; touched ones point at this commit.
+    mapping = _view_mapping(prev_view) if prev_view is not None else {}
     prefix = f"{partition_col}="
-    staged = {
-        name
-        for name in os.listdir(data_dir)
-        if name.startswith(prefix) and os.path.isdir(os.path.join(data_dir, name))
-    }
-    # the new view's mapping: partition dir name -> target-relative data
-    # path. Untouched partitions re-point at the PREVIOUS view's data
-    # (mapping read from either view format); touched ones at this commit.
-    mapping: dict[str, str] = {}
-    if prev_view is not None:
-        for name, rel in _view_mapping(target_path, prev_view, prefix).items():
-            if name in staged:
-                continue
-            src = os.path.join(target_path, rel)
-            if os.path.commonpath([os.path.abspath(src), os.path.abspath(data_root)]) != os.path.abspath(data_root):
-                # a REAL directory inside a view (hand-migrated table):
-                # pointing through the view would dangle once GC drops it —
-                # preserve the data as its own immutable migrated commit
-                # (hardlink tree, the store.py migration precedent)
-                from ..streaming.store import _link_tree
+    for name in os.listdir(data_dir):
+        if name.startswith(prefix) and os.path.isdir(os.path.join(data_dir, name)):
+            mapping[name] = os.path.relpath(os.path.join(data_dir, name), target_path)
 
-                mig = os.path.join(data_root, f"mig-{uuid.uuid4().hex[:8]}")
-                os.makedirs(mig)
-                _link_tree(src, os.path.join(mig, name))
-                rel = os.path.relpath(os.path.join(mig, name), target_path)
-            mapping[name] = rel
-    for name in staged:
-        mapping[name] = os.path.relpath(os.path.join(data_dir, name), target_path)
+    version = _new_version(target_path)
+    view_dir = os.path.join(target_path, version)
+    os.makedirs(view_dir)
+    # the schema as a partitioned read returns it: partition column last
+    schema = StructType(
+        [f for f in merged.schema if f.name != partition_col] + [merged.schema[partition_col]]
+    )
+    with open(os.path.join(view_dir, _PT_MANIFEST), "w") as f:
+        json.dump({"schema": schema.jsonValue(), "partitions": mapping}, f, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
 
-    if layout == "symlink":
-        for name, rel in mapping.items():
-            os.symlink(
-                os.path.relpath(os.path.join(target_path, rel), view_dir),
-                os.path.join(view_dir, name),
-            )
-    else:
-        mpath = os.path.join(view_dir, _PT_MANIFEST)
-        with open(mpath, "w") as f:
-            json.dump(mapping, f, indent=0, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-
-    # THE commit: one pointer put — atomic replace on POSIX, or the CAS
-    # commit-log exclusive create where rename isn't atomic/available
-    # (streaming/store.py put_pointer; strategy "auto" probes per commit).
-    from ..streaming.store import _gc_commitlog, put_pointer
-
-    put_pointer(target_path, version, pointer_strategy)
-    _gc_commitlog(target_path, version)
-
-    # GC (post-commit, store.py precedent): drop view dirs other than the
-    # one just committed and data commits it no longer references. Readers
-    # resolve the pointer at read time; the single-writer contract makes
+    # THE commit (one log entry), then GC of every other view; data
+    # commits the new view no longer references go after it. Readers
+    # resolve the log at read time; the single-writer contract makes
     # post-commit GC safe for the sequential reader/writer harness.
-    live_data = set()
-    for rel in mapping.values():
-        resolved = os.path.normpath(os.path.join(target_path, rel))
-        drel = os.path.relpath(resolved, data_root)
-        live_data.add(drel.split(os.sep)[0])
-    for name in os.listdir(target_path):
-        p = os.path.join(target_path, name)
-        if name.startswith("v-") and name != version and os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        elif name.startswith(
-            (f"{_PT_POINTER}.__tmp__", f".{_PT_POINTER}.tmp.")
-        ):  # crashed writers (legacy + put_pointer tmp namings)
-            try:
-                os.remove(p)
-            except OSError:
-                pass
+    _commit_pointer(target_path, version, keep=1)
+    live_data = {rel.split(os.sep)[1] for rel in mapping.values()}
     for name in os.listdir(data_root):
         if name not in live_data:
             shutil.rmtree(os.path.join(data_root, name), ignore_errors=True)
@@ -531,37 +332,25 @@ def merge_upsert_partitioned(
     partition_col: str,
     order_cols: list[Column] | None = None,
     prefilter: str = "none",
-    layout: str = "auto",
-    pointer_strategy: str = "auto",
 ) -> list[str]:
-    """Partition-pruned upsert into a hive-partitioned Parquet table.
-
-    ``layout`` picks the pointer view format for this commit: "symlink"
-    (POSIX), "manifest" (symlink-free, object-store-safe), or "auto"
-    (probe; the default). Both formats interoperate — readers handle
-    either, per version.
+    """Partition-pruned upsert into a versioned hive-partitioned table.
 
     The whole-table ``merge_upsert`` rewrite is O(table) per batch — wrong
-    cost model at 100 TB. This variant implements what Delta MERGE's file
-    pruning does over plain parquet: only partitions that the batch actually
+    cost model at 100 TB. Here only partitions that the batch actually
     touches are read, merged, and committed; every other partition is never
     opened. Merge cost scales with the batch's data locality (a day's
     re-scrape rewrites that day), not with table size.
 
     Requirements: the partition column must be a stable string/date key.
 
-    Atomicity (r14, VERDICT r13 item 2): tables CREATED by this function
-    use the pointer layout above — the commit is one atomic pointer
-    rename, so a crash anywhere mid-merge (including between two
-    partitions) leaves readers on the previous snapshot, matching the
-    reference's per-doc-atomic Mongo upsert (database/data_migration.py:
-    102-158) at whole-commit granularity. Read the table back with
-    :func:`read_partitioned_table` (or scan the dir
-    :func:`resolve_partitioned_path` returns). A target that already
-    exists as a PLAIN hive directory (e.g. written by ``partitionBy``
-    directly) keeps the legacy in-place per-partition swap — atomic per
-    partition dir only, the documented relaxation — rather than silently
-    migrating a layout the caller's readers point at.
+    Atomicity: the commit is one commit-log entry (layout above), so a
+    crash anywhere mid-merge leaves readers on the previous snapshot,
+    matching the reference's per-doc-atomic Mongo upsert (database/
+    data_migration.py:102-158) at whole-commit granularity. Read the table
+    back with :func:`read_partitioned_table`. A non-empty directory
+    without a commit log (e.g. written by ``partitionBy`` directly) is
+    refused with ``ValueError`` rather than silently re-laid-out under
+    readers that scan it.
 
     Returns the list of partition values rewritten.
     """
@@ -576,75 +365,43 @@ def merge_upsert_partitioned(
     if not touched:
         return []
     # A NULL partition value would be written as __HIVE_DEFAULT_PARTITION__
-    # in staging, but the swap/link loops below build "col=None" paths
-    # (never found → rows silently dropped) and isin(touched) can't prune
-    # NULLs. Callers must coalesce to a sentinel first (stream_ingest does).
+    # and isin(touched) can't prune NULLs. Callers must coalesce to a
+    # sentinel first (stream_ingest does).
     if any(v is None for v in touched):
         raise ValueError(
             f"merge_upsert_partitioned: NULL values in partition column "
             f"{partition_col!r}; coalesce to a sentinel before merging"
         )
 
-    from ..streaming.store import pointer_exists
+    from ..streaming.store import _COMMITLOG, _version_dir_for_write
 
-    pointer_mode = pointer_exists(target_path) or not os.path.isdir(target_path)
-    read_root = resolve_partitioned_path(target_path)
-    if read_root is None and os.path.exists(os.path.join(target_path, _PT_POINTER)):
-        # ADVICE r14 (medium): CURRENT exists but resolves to nothing —
-        # empty/torn write or dangling view name. Treating the table as
-        # fresh would commit merged=deduped and post-commit GC would then
-        # delete every prior view/data commit: recoverable pointer
-        # corruption turned into silent loss of all untouched partitions.
-        # Readers stay safely on None; the WRITER must refuse.
-        raise RuntimeError(
-            f"partitioned merge target {target_path}: CURRENT exists but "
-            "names no view directory — refusing to commit as if the table "
-            "were fresh. Restore CURRENT to the latest intact v-*/ dir or "
-            "delete the table directory to reset."
-        )
-    if read_root is not None and os.path.isdir(read_root) and os.listdir(read_root):
-        target = (
-            _read_view_df(spark, target_path, read_root)
-            if pointer_mode
-            else spark.read.option("basePath", read_root).parquet(read_root)
-        )
+    # raises StoreCorruptPointerError when a log exists but names no intact
+    # view: treating the table as fresh would commit merged=deduped and GC
+    # would then delete every untouched partition (ADVICE r14)
+    prev_view = _version_dir_for_write(target_path)
+    if prev_view is None:
+        # a crashed FIRST commit leaves only this layout's own entries,
+        # which the commit below GCs; anything else is someone's data
+        own = (_PT_DATA, _COMMITLOG)
+        if os.path.isdir(target_path) and any(
+            n not in own and not n.startswith("v-") for n in os.listdir(target_path)
+        ):
+            raise ValueError(
+                f"merge_upsert_partitioned: {target_path} is a non-empty "
+                "directory without a commit log — not a table this function "
+                "created; merge into a fresh path instead"
+            )
+        merged = deduped
+    else:
         # partition pruning: only touched partition directories are scanned;
         # within them, the optional Bloom prefilter skips the anti-join for
         # keys the batch provably doesn't carry.
+        target = _read_view_df(spark, target_path, prev_view)
         affected = target.filter(F.col(partition_col).isin(touched))
         kept = _kept_rows(affected, deduped, key_cols, prefilter)
         merged = kept.unionByName(deduped.select(*kept.columns))
-        prev_view = read_root if pointer_mode else None
-    else:
-        merged = deduped
-        prev_view = None
 
-    if pointer_mode:
-        _merge_partitions_pointer(
-            target_path, merged, partition_col, touched, prev_view, layout,
-            pointer_strategy,
-        )
-        return sorted(str(v) for v in touched)
-
-    # legacy plain-hive target: in-place per-partition swap (see docstring).
-    # Swap the dirs the staged write actually PRODUCED (hive-escaped names)
-    # — constructing "col=str(value)" misses any value the writer escapes
-    # (same fix as the pointer path).
-    staging = f"{target_path}.__staging__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-
-    os.makedirs(target_path, exist_ok=True)
-    for part_dir in sorted(os.listdir(staging)):
-        src = os.path.join(staging, part_dir)
-        if not part_dir.startswith(f"{partition_col}=") or not os.path.isdir(src):
-            continue
-        dst = os.path.join(target_path, part_dir)
-        backup = f"{dst}.__old__{uuid.uuid4().hex[:8]}"
-        if os.path.exists(dst):
-            os.rename(dst, backup)
-        os.rename(src, dst)
-        shutil.rmtree(backup, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
+    _commit_view(target_path, merged, partition_col, prev_view)
     return sorted(str(v) for v in touched)
 
 

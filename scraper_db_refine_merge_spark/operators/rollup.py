@@ -20,12 +20,10 @@ order and split (IEEE double addition is not associative; decimal is).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .merge import recover_plain_table, swap_plain_table
 
 __all__ = ["rollup_aggregate", "fold_rollup"]
 
@@ -78,13 +76,13 @@ def fold_rollup(
     Cost: one shuffle over (batch keys ∪ stored keys) — the stored rollup
     has one row per key, so folding scales with key cardinality and batch
     size, never with the raw history. Crash-safe: readers see the old or
-    the new table (same staging + rename protocol as operators/merge.py).
+    the new table (operators/merge.py swap_plain_table).
     """
     sum_cols, min_cols, max_cols = sum_cols or [], min_cols or [], max_cols or []
     batch_agg = rollup_aggregate(
         batch_df, key_cols, sum_cols, min_cols, max_cols, count_col, sum_decimal
     )
-    if os.path.exists(target_path):
+    if recover_plain_table(target_path):
         existing = spark.read.parquet(target_path)
         merged = (
             existing.unionByName(batch_agg)
@@ -94,13 +92,5 @@ def fold_rollup(
     else:
         merged = batch_agg
 
-    staging = f"{target_path}.__rollup__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        backup = f"{target_path}.__old__{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, backup)
-        os.rename(staging, target_path)
-        shutil.rmtree(backup, ignore_errors=True)
-    else:
-        os.rename(staging, target_path)
+    swap_plain_table(target_path, merged)
     return spark.read.parquet(target_path)

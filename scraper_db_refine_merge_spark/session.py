@@ -52,19 +52,4 @@ def get_spark(app_name: str = "scraper_db_refine_merge_spark") -> SparkSession:
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
-    # Delta Lake (transactional MERGE backend for operators/merge.py) when
-    # the delta-spark package is present; plain sessions otherwise.
-    try:
-        from delta import configure_spark_with_delta_pip
-
-        builder = configure_spark_with_delta_pip(
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
-    except ImportError:
-        pass
     return builder.getOrCreate()

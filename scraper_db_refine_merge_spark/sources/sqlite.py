@@ -139,8 +139,8 @@ def write_sqlite_upsert(
     retries (the reference's lock-retry discipline, ventura_crawler.py:162-185).
 
     Scale note: SQLite is the reference-parity OPERATIONAL scratch store —
-    inherently single-node. The 100 TB path for keyed sinks is the parquet/
-    Delta MERGE (operators/merge.py) or a server-side JDBC sink; this writer
+    inherently single-node. The 100 TB path for keyed sinks is the parquet
+    MERGE (operators/merge.py) or a server-side JDBC sink; this writer
     exists for bronze-cache parity, not throughput.
     """
     cols = df.columns

@@ -1,67 +1,49 @@
 """Crash-safe versioned parquet store for incrementally-maintained state
-(sketch register tables, incremental connected-components assignments).
+(sketch register tables, incremental connected-components assignments),
+and the commit protocol of every VERSIONED table — these stores and the
+partitioned merge (operators/merge.py merge_upsert_partitioned).
 
 The r4 pattern — rename(target, backup); rename(staging, target) — had a
 crash window between the two renames that left the store MISSING with
-orphaned backup/staging dirs (ADVICE r4). This store has exactly ONE
-committing operation:
+orphaned backup/staging dirs (ADVICE r4). A versioned table instead has
+exactly ONE committing operation, and it is not a rename:
 
     target_path/
-        CURRENT              <- pointer file: name of the live version dir
-        v-<uuid>/            <- immutable parquet snapshot (+ marker files)
+        _commits/c-<seq>     <- commit log: entry N names version N
+        v-<seq>-<uuid>/      <- immutable parquet snapshot (+ marker files)
 
-A writer materializes a new ``v-*`` snapshot, then atomically replaces the
-pointer with ``os.replace`` (atomic on POSIX local filesystems). A crash at
-any earlier point leaves the previous pointer — and therefore the previous
-snapshot — fully intact; orphaned snapshots are garbage-collected by the
-next successful commit. Readers resolve the pointer and read one immutable
-directory, so they can never observe a half-swapped store.
+A writer materializes a new ``v-*`` snapshot, then commits it by an
+EXCLUSIVE CREATE of ``_commits/c-<seq>`` (``O_CREAT|O_EXCL`` here;
+conditional put / If-None-Match on a real object store — the
+put-if-absent primitive S3/GCS/ABFS all expose, and the same one Delta
+Lake's S3 LogStore builds on). No rename and no symlink is involved, so
+the protocol holds on object stores as well as POSIX.
 
-Pointer commit strategies (r16, VERDICT r15 item 1 — the last POSIX
-assumption in the 100 TB story):
-
-- ``replace`` — write ``.CURRENT.tmp.*`` + fsync + ONE atomic
-  ``os.replace`` onto ``CURRENT`` (local/POSIX, HDFS-like).
-- ``cas`` — object-store form, NO rename anywhere: an append-only commit
-  log ``_commits/c-<seq>`` where committing seq N is an EXCLUSIVE CREATE
-  of ``c-<N>`` (``O_CREAT|O_EXCL`` here; conditional put / If-None-Match
-  on a real object store — the put-if-absent primitive S3/GCS/ABFS all
-  expose, and the same one Delta Lake's S3 LogStore builds on). Readers
-  resolve the HIGHEST INTACT entry: entries are immutable once written,
-  so a crashed writer leaves at worst an empty/dangling TOP entry, which
-  resolution skips — the previous entry still IS the committed state
-  (append-only logs make crash fallback trivially safe where a torn
-  REPLACED pointer needs manual recovery). The exclusive create is also
-  the single-writer check: two writers deriving the same next seq from
-  the same prior snapshot collide on the same entry name and the loser
-  raises ``StoreConcurrentWriterError`` at create time, BEFORE its state
-  becomes visible (strictly stronger than the replace strategy's
-  after-the-fact re-read).
-- ``auto`` (default) — probe ``os.replace`` on a scratch file per commit
-  (the ``layout="auto"`` symlink-probe pattern); stick with ``cas`` once
-  a store has a commit log, so a table created on an object store keeps
-  one mechanism even when later written from a POSIX host. Both
-  mechanisms interoperate per commit: resolution compares the CURRENT
-  file and the log and the higher seq wins.
+- Readers resolve the HIGHEST INTACT entry. Entries are immutable once
+  written, so a crashed writer leaves at worst an empty/dangling TOP
+  entry, which resolution skips — the previous entry still IS the
+  committed state. A log that exists but names no intact version is
+  corruption: readers get None, writers raise
+  ``StoreCorruptPointerError`` instead of committing over it.
+- A crash before the put leaves the previous entry, and therefore the
+  previous snapshot, fully intact; orphaned snapshots and superseded log
+  entries are garbage-collected by the next successful commit.
 
 SINGLE-WRITER CONTRACT (ADVICE r5): at most one committer per store at a
-time. Two concurrent commits could derive the same seq from the same prior
-pointer (breaking ``store_read_version`` disambiguation and orphan-GC
-reasoning) and the loser's read-modify-write merge would be silently
-discarded. The commit section cheaply enforces this: after the pointer
-replace it re-reads CURRENT and raises ``StoreConcurrentWriterError`` if
-the pointer is not the version it just committed — a lost update becomes a
-loud failure instead of silent state corruption. Streaming callers satisfy
-the contract by construction (foreachBatch serializes batches); batch
-callers (fold_components, fold_minhash_index, fold_rollup) own one store
-per pipeline.
+time. Two writers deriving the same next seq from the same prior
+snapshot collide on the same entry name; the loser's exclusive create
+fails and it raises ``StoreConcurrentWriterError`` BEFORE its state
+becomes visible, so a lost update is a loud failure instead of silent
+state corruption. Streaming callers satisfy the contract by construction
+(foreachBatch serializes batches); batch callers (fold_components,
+fold_minhash_index) own one store per pipeline.
 
 Incremental multi-part snapshots (ADVICE r5): ``store_commit_parts``
 appends ONLY the new batch's rows as immutable part directories under
 ``parts/`` and commits a MANIFEST listing the accumulated parts per table
-— per-commit write I/O is O(batch), not O(total state), while the pointer
-replace remains the single atomic operation. GC keeps every part
-referenced by a retained manifest.
+— per-commit write I/O is O(batch), not O(total state), while the log
+entry remains the single commit. GC keeps every part referenced by a
+retained manifest.
 """
 
 from __future__ import annotations
@@ -73,23 +55,24 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "CURRENT"
 _MANIFEST = "_MANIFEST.json"
 _PARTS = "parts"
 _COMMITLOG = "_commits"
 
 
 class StoreConcurrentWriterError(RuntimeError):
-    """Another writer moved CURRENT during our commit — the single-writer
-    contract was violated and this writer's merge may be lost."""
+    """Another writer committed the log entry this writer derived — the
+    single-writer contract was violated and this writer's merge may be
+    lost."""
 
 
 class StoreCorruptPointerError(RuntimeError):
-    """CURRENT exists but resolves to no snapshot (empty/torn write or a
-    dangling version name). Writers must NOT treat this as a fresh store:
-    committing would produce a truncated snapshot and post-commit GC would
-    then delete every prior commit — recoverable corruption (restore the
-    pointer to the latest intact v-*/ dir) turned into permanent loss."""
+    """A commit log exists but no entry names an intact snapshot (torn
+    entries or dangling version names). Writers must NOT treat this as a
+    fresh store: committing would produce a truncated snapshot and
+    post-commit GC would then delete every prior commit — recoverable
+    corruption (point the top entry at the latest intact v-*/ dir) turned
+    into permanent loss."""
 
 
 def _commitlog_entries(target_path: str) -> list[tuple[int, str]]:
@@ -109,45 +92,24 @@ def _commitlog_entries(target_path: str) -> list[tuple[int, str]]:
 
 
 def pointer_exists(target_path: str) -> bool:
-    """Has EITHER commit mechanism ever touched this path? (The writer-side
-    'this is a pointer table' test — counterpart of os.path.exists(CURRENT)
-    from before the CAS strategy existed.)"""
-    return os.path.exists(os.path.join(target_path, _POINTER)) or bool(
-        _commitlog_entries(target_path)
-    )
+    """Has any commit ever been attempted on this path (log non-empty)?"""
+    return bool(_commitlog_entries(target_path))
 
 
 def resolve_pointer_name(target_path: str) -> str | None:
-    """Committed version NAME via either mechanism, or None.
+    """Committed version NAME, or None.
 
-    The CURRENT file and the commit log each yield one candidate; the
-    higher seq wins (mixed-mechanism histories interoperate per commit).
-    A torn/empty/dangling CURRENT file resolves the whole store to None —
-    replace-mode corruption stays strict (writers then refuse via
-    ``_version_dir_for_write``). Crashed TOP log entries (empty content /
-    naming no directory) are SKIPPED down to the last intact entry: the
-    log is append-only, so an incomplete top entry means that commit never
-    finished and the previous entry is the true committed state."""
-    cand: list[tuple[int, str]] = []
-    pointer = os.path.join(target_path, _POINTER)
-    if os.path.exists(pointer):
-        with open(pointer) as f:
-            version = f.read().strip()
-        # torn/empty pointer: os.path.join(target, "") IS the store root,
-        # which isdir() would happily bless — never hand that to a reader
-        if not version or not os.path.isdir(os.path.join(target_path, version)):
-            return None
-        cand.append((_seq_of(version) or 0, version))
+    Crashed TOP log entries (empty content / naming no directory) are
+    SKIPPED down to the last intact entry: the log is append-only, so an
+    incomplete top entry means that commit never finished and the previous
+    entry is the true committed state."""
     log_dir = os.path.join(target_path, _COMMITLOG)
-    for seq, name in reversed(_commitlog_entries(target_path)):
+    for _, name in reversed(_commitlog_entries(target_path)):
         with open(os.path.join(log_dir, name)) as f:
             version = f.read().strip()
         if version and os.path.isdir(os.path.join(target_path, version)):
-            cand.append((seq, version))
-            break
-    if not cand:
-        return None
-    return max(cand)[1]
+            return version
+    return None
 
 
 def store_version_dir(target_path: str) -> str | None:
@@ -188,19 +150,21 @@ def store_marker(target_path: str, name: str) -> str | None:
 
 def store_versions(target_path: str) -> list[tuple[int, str]]:
     """Committed snapshots as (seq, dirname), ascending — the time-travel
-    index. Only snapshots at-or-below the current pointer count as
-    committed (a newer orphan from a crashed writer is never listed)."""
+    index. Only the current snapshot and those below its seq count as
+    committed: a crashed writer's orphan sits at or above the current seq
+    (the retry derives the SAME seq as the crash) and is never listed."""
     cur = store_version_dir(target_path)
     if cur is None:
         return []
-    cur_seq = _seq_of(os.path.basename(cur))
-    if cur_seq is None:  # pre-retention-format store: no time-travel index
+    cur_name = os.path.basename(cur)
+    cur_seq = _seq_of(cur_name)
+    if cur_seq is None:  # not a v-<seq>-<uuid> name: no time-travel index
         return []
     out = []
     for name in os.listdir(target_path):
         if name.startswith("v-") and os.path.isdir(os.path.join(target_path, name)):
             seq = _seq_of(name)
-            if seq is not None and seq <= cur_seq:
+            if seq is not None and (seq < cur_seq or name == cur_name):
                 out.append((seq, name))
     return sorted(out)
 
@@ -224,16 +188,16 @@ def _seq_of(version_name: str) -> int | None:
 
 def _version_dir_for_write(target_path: str) -> str | None:
     """store_version_dir for WRITER paths: raises StoreCorruptPointerError
-    when CURRENT exists but resolves to nothing, instead of letting the
-    writer re-initialize over a corrupted pointer (ADVICE r14, medium).
+    when a commit log exists but no entry names an intact snapshot, instead
+    of letting the writer re-initialize over it (ADVICE r14, medium).
     Readers keep the safe None path in store_version_dir."""
     d = store_version_dir(target_path)
-    if d is None and os.path.exists(os.path.join(target_path, _POINTER)):
+    if d is None and pointer_exists(target_path):
         raise StoreCorruptPointerError(
-            f"store {target_path}: CURRENT exists but names no snapshot "
-            "directory — refusing to commit as if the store were fresh. "
-            "Restore CURRENT to the latest intact v-*/ dir (store_versions "
-            "lists candidates) or delete the store directory to reset."
+            f"store {target_path}: a commit log exists but no entry names an "
+            "intact snapshot directory — refusing to commit as if the store "
+            "were fresh. Point the top _commits/c-* entry at the latest "
+            "intact v-*/ dir or delete the store directory to reset."
         )
     return d
 
@@ -259,60 +223,11 @@ def _manifest_of(vd: str) -> dict[str, list[str]] | None:
         return json.load(f)
 
 
-def _replace_supported(root: str) -> bool:
-    """Probe atomic rename on this filesystem (the _symlinks_supported
-    pattern from the merge layer): an object-store-like FS — or the
-    crash-injection suites' forbidden-os.replace harness — fails the
-    probe and auto mode falls through to the CAS commit log."""
-    a = os.path.join(root, f".__rpprobe__{uuid.uuid4().hex[:8]}")
-    b = f"{a}.b"
-    try:
-        with open(a, "w") as f:
-            f.write("x")
-        os.replace(a, b)
-    except (OSError, NotImplementedError):
-        for p in (a, b):
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        return False
-    else:
-        os.remove(b)
-        return True
-
-
-def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
-    """Commit ``version`` as the live snapshot name via the chosen
-    strategy (module docstring). The ONLY mutation readers can observe in
-    any commit path — shared by this store and the partitioned-merge
-    pointer layout (operators/merge.py)."""
-    if strategy == "auto":
-        # a store that already has a commit log stays on it (one mechanism
-        # per table even if it moves between filesystems); otherwise keep
-        # the POSIX pointer file wherever atomic rename actually works
-        if _commitlog_entries(target_path) or not _replace_supported(target_path):
-            strategy = "cas"
-        else:
-            strategy = "replace"
-    if strategy == "replace":
-        tmp = os.path.join(target_path, f".{_POINTER}.tmp.{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(target_path, _POINTER))
-        with open(os.path.join(target_path, _POINTER)) as f:
-            observed = f.read().strip()
-        if observed != version:
-            raise StoreConcurrentWriterError(
-                f"store {target_path}: pointer moved to {observed!r} during "
-                f"commit of {version!r} — this store is single-writer; the "
-                "competing commit may have merged from a stale snapshot"
-            )
-        return
-    if strategy != "cas":
-        raise ValueError(f"unknown pointer commit strategy {strategy!r}")
+def put_pointer(target_path: str, version: str) -> None:
+    """Commit ``version`` as the live snapshot name: exclusive create of
+    its commit-log entry. The ONLY mutation readers can observe in any
+    versioned commit path — shared by this store and the partitioned merge
+    (operators/merge.py)."""
     log_dir = os.path.join(target_path, _COMMITLOG)
     os.makedirs(log_dir, exist_ok=True)
     entry = os.path.join(log_dir, f"c-{_seq_of(version) or 0:06d}")
@@ -332,7 +247,13 @@ def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
     # THE commit: exclusive create = conditional put. On a real object
     # store this maps to If-None-Match; a losing racer fails HERE, before
     # its snapshot is ever visible.
-    fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+    try:
+        fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+    except FileExistsError:
+        raise StoreConcurrentWriterError(
+            f"store {target_path}: another writer created the commit-log "
+            f"entry for {version!r} first — this store is single-writer"
+        ) from None
     try:
         os.write(fd, version.encode())
         os.fsync(fd)
@@ -340,61 +261,28 @@ def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
         os.close(fd)
 
 
-def _gc_commitlog(target_path: str, committed: str) -> None:
-    """Post-put pointer GC, shared by this store and the merge layer.
-
-    Drops log entries below the committed seq (resolution only ever reads
-    down from the top intact entry; retained-version history lives in the
-    v-*/ dirs themselves, so old entries are pure clutter). Also drops a
-    SUPERSEDED ``CURRENT`` file after a CAS commit (content != the
-    committed version): a replace-history table that switched to the log
-    would otherwise keep a stale CURRENT whose named version the version
-    GC eventually deletes — and a dangling CURRENT reads as corruption
-    (strict None / writer refusal), bricking a healthy store. Removing it
-    is a plain DELETE (object-store-legal) and completes the migration to
-    one mechanism per table."""
+def _commit_pointer(target_path: str, version: str, keep: int) -> None:
+    """THE commit: one log entry (``put_pointer``), then GC of superseded
+    log entries, snapshots beyond the retention window, crashed-writer
+    orphans (at or above the committed seq), and ``parts/`` directories no
+    retained manifest references (best-effort — a concurrent reader
+    holding an old dir open on POSIX keeps its fds)."""
+    put_pointer(target_path, version)
+    # resolution only reads down from the top intact entry, and retained
+    # history lives in the v-*/ dirs themselves: older entries are clutter
     log_dir = os.path.join(target_path, _COMMITLOG)
-    committed_seq = _seq_of(committed) or 0
     for seq, name in _commitlog_entries(target_path):
-        if seq < committed_seq:
+        if seq < (_seq_of(version) or 0):
             try:
                 os.remove(os.path.join(log_dir, name))
             except OSError:
                 pass
-    pointer = os.path.join(target_path, _POINTER)
-    if os.path.exists(pointer):
-        with open(pointer) as f:
-            content = f.read().strip()
-        if content != committed:
-            try:
-                os.remove(pointer)
-            except OSError:
-                pass
-
-
-def _commit_pointer(
-    target_path: str, version: str, keep: int, strategy: str = "auto"
-) -> None:
-    """THE commit: one pointer put (atomic replace or CAS log entry —
-    ``put_pointer``), then GC of snapshots beyond the retention window,
-    crashed-writer orphans (seq above the committed pointer), stale
-    pointer tmps, superseded commit-log entries, and ``parts/``
-    directories no retained manifest references (best-effort — a
-    concurrent reader holding an old dir open on POSIX keeps its fds)."""
-    put_pointer(target_path, version, strategy)
-    _gc_commitlog(target_path, version)
     keep_names = {version} | {
         name for _, name in sorted(store_versions(target_path), reverse=True)[:keep]
     }
     for name in os.listdir(target_path):
-        full = os.path.join(target_path, name)
         if name.startswith("v-") and name not in keep_names:
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith(f".{_POINTER}.tmp."):
-            try:
-                os.remove(full)
-            except OSError:
-                pass
+            shutil.rmtree(os.path.join(target_path, name), ignore_errors=True)
     # parts GC: drop part dirs referenced by NO retained manifest (orphans
     # from crashed writers and parts owned only by retention-expired
     # snapshots). Parts referenced by any kept version stay — snapshots
@@ -437,9 +325,10 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     band) — the payoff is the layout contract at scale, where a listing
     is remote I/O and a fold's shuffle output would otherwise inherit
     whatever partition count the plan happened to end with.
-    SPARK_GRAFT_SIZED_WRITE=0 disables (A/B lever, default on).
-    Row content is untouched — file layout only."""
-    if os.environ.get("SPARK_GRAFT_SIZED_WRITE", "1") == "0":
+    Applied only when AQE is on for the frame's session: without AQE the
+    hint plans a plain round-robin exchange that sizes nothing (ADVICE
+    r17). Row content is untouched — file layout only."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true").lower() != "true":
         return df
     return df.hint("rebalance")
 
@@ -462,9 +351,8 @@ def store_commit(
     target_path: str,
     markers: dict[str, str] | None = None,
     keep: int = 1,
-    pointer_strategy: str = "auto",
 ) -> str:
-    """Write ``df`` as a new snapshot and atomically point CURRENT at it.
+    """Write ``df`` as a new snapshot and commit it (one log entry).
 
     Returns the committed snapshot dir. Marker filenames should start with
     ``_`` so Spark's parquet reader ignores them as metadata files.
@@ -477,7 +365,7 @@ def store_commit(
     vd = os.path.join(target_path, version)
     _sized_for_write(df).write.mode("overwrite").parquet(vd)
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
@@ -486,10 +374,9 @@ def store_commit_many(
     target_path: str,
     markers: dict[str, str] | None = None,
     keep: int = 1,
-    pointer_strategy: str = "auto",
 ) -> str:
     """Commit SEVERAL named tables as ONE atomic snapshot (one version dir
-    with a parquet subdir per name, one pointer replace). The primitive
+    with a parquet subdir per name, one log entry). The primitive
     for multi-table state that must stay mutually consistent — e.g. the
     incremental MinHash index's signatures + shingle sets + pair log,
     where a crash between separate per-table commits would leave pairs
@@ -499,7 +386,7 @@ def store_commit_many(
     for name, df in dfs.items():
         _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(vd, name))
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
@@ -509,7 +396,6 @@ def store_commit_parts(
     markers: dict[str, str] | None = None,
     keep: int = 1,
     replace_parts: dict[str, DataFrame] | None = None,
-    pointer_strategy: str = "auto",
 ) -> str:
     """Incremental multi-part commit (ADVICE r5): write ONLY the new
     batch's rows — one immutable ``parts/p-*`` directory per table — and
@@ -519,7 +405,7 @@ def store_commit_parts(
     Per-commit write I/O is O(new batch), not O(total state) — the fix for
     fold-style callers whose accumulated tables grow with the corpus. The
     atomicity story is unchanged: all tables' new parts land under one
-    manifest behind one pointer replace, so mutually-consistent multi-table
+    manifest behind one log entry, so mutually-consistent multi-table
     state still moves together; a crash before the pointer commit leaves
     only unreferenced part dirs that the next successful commit GCs.
 
@@ -590,20 +476,19 @@ def store_commit_parts(
     with open(os.path.join(vd, _MANIFEST), "w") as f:
         json.dump(manifest, f)
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
 def store_compact(
-    spark: SparkSession, target_path: str, keep: int = 1,
-    pointer_strategy: str = "auto",
+    spark: SparkSession, target_path: str, keep: int = 1
 ) -> str | None:
     """Squash a multi-part store's accumulated parts (r14, VERDICT r13
     item 5): N folds leave N part dirs per table, so replay/read cost grows
     with fold count — fine for a harness, wrong at a year of daily batches.
     Each table whose manifest lists >1 parts is union-read and rewritten as
-    ONE part; the new manifest commits behind the usual single pointer
-    replace, and retention GC reclaims the small parts. Read results are
+    ONE part; the new manifest commits behind the usual single log
+    entry, and retention GC reclaims the small parts. Read results are
     row-identical by construction (readers union the listed parts — the
     union now has one member); markers are carried over so exactly-once
     batch guards survive compaction.
@@ -641,7 +526,7 @@ def store_compact(
         src = os.path.join(prior, fname)
         if fname != _MANIFEST and os.path.isfile(src):
             shutil.copy2(src, os.path.join(vd, fname))
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 

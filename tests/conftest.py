@@ -25,10 +25,9 @@ def sf_dir():
 def _forbid_os_replace(monkeypatch):
     """SPARK_GRAFT_FORBID_REPLACE=1 runs the whole suite with os.replace
     DISABLED (r16, VERDICT r15 item 1) — the object-store simulation for
-    the pointer-commit layer, the way r15 ran it with os.symlink disabled.
-    Every pointer commit's "auto" strategy must then fall through to the
-    CAS commit log; any code path still depending on atomic rename fails
-    loudly here instead of on a real object store."""
+    the versioned-table commit layer: any code path that still depends on
+    an atomic pointer replace fails loudly here instead of on a real
+    object store."""
     if os.environ.get("SPARK_GRAFT_FORBID_REPLACE") == "1":
         def refuse(*a, **k):
             raise OSError("os.replace forbidden (object-store simulation)")

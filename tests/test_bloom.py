@@ -18,6 +18,7 @@ from scraper_db_refine_merge_spark.operators.bloom import (
 from scraper_db_refine_merge_spark.operators.merge import (
     merge_upsert,
     merge_upsert_partitioned,
+    read_partitioned_table,
 )
 
 BITS = 1 << 14  # small filter → measurable fp rate, still zero fn
@@ -84,8 +85,8 @@ def test_merge_upsert_bloom_prefilter_identical_result(spark, tmp_path):
         "event_id string, v double, ver int",
     )
     for path, pf in ((plain_t, "none"), (bloom_t, "bloom")):
-        merge_upsert(spark, path, base, ["event_id"], [F.desc("ver")], collect_stats=False, backend="parquet")
-        merge_upsert(spark, path, batch, ["event_id"], [F.desc("ver")], collect_stats=False, backend="parquet", prefilter=pf)
+        merge_upsert(spark, path, base, ["event_id"], [F.desc("ver")], collect_stats=False)
+        merge_upsert(spark, path, batch, ["event_id"], [F.desc("ver")], collect_stats=False, prefilter=pf)
     cols = ["event_id", "v", "ver"]
     assert _rows(spark.read.parquet(bloom_t), cols) == _rows(spark.read.parquet(plain_t), cols)
 
@@ -102,10 +103,11 @@ def test_partitioned_merge_bloom_prefilter_identical_result(spark, tmp_path):
         "event_id string, day string, v double",
     )
     for path, pf in ((plain_t, "none"), (bloom_t, "bloom")):
-        base.write.partitionBy("day").parquet(path)
+        merge_upsert_partitioned(spark, path, base, ["event_id"], "day")
         merge_upsert_partitioned(spark, path, batch, ["event_id"], "day", prefilter=pf)
     cols = ["event_id", "day", "v"]
-    assert _rows(spark.read.parquet(bloom_t), cols) == _rows(spark.read.parquet(plain_t), cols)
+    plain, bloom = (read_partitioned_table(spark, t) for t in (plain_t, bloom_t))
+    assert _rows(bloom, cols) == _rows(plain, cols)
 
 
 def test_auto_num_bits_scales_with_batch_and_stays_exact(spark):

@@ -108,7 +108,7 @@ def test_deduplicate_events(refined):
 def _roundtrip_fixture(spark):
     """Shared MERGE fixture: base {e1:v1, e2:v1}, batch with a within-batch
     duplicate (e2 v2 then v3 — latest must win) plus a fresh key e3.
-    Expected final state {e1:v1, e2:v3, e3:v1} regardless of backend."""
+    Expected final state {e1:v1, e2:v3, e3:v1}."""
     base = spark.createDataFrame(
         [("e1", "v1", 1), ("e2", "v1", 1)], "event_id string, payload string, version int"
     )
@@ -119,54 +119,21 @@ def _roundtrip_fixture(spark):
     return base, batch
 
 
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_merge_upsert_roundtrip_and_stats(spark, tmp_path, backend):
-    """The SAME fixture and assertion set runs against both backends — the
-    equivalence proof that the parquet anti-join+union+swap fallback (the
-    canonical in-sandbox path; this container has no delta-spark) and the
-    transactional Delta MERGE INTO path implement identical upsert
-    semantics. The delta param self-skips where delta-spark is absent and
-    executes in full wherever it is installed."""
-    from scraper_db_refine_merge_spark.operators.merge import delta_available
-
-    if backend == "delta":
-        pytest.importorskip("delta")
-        if not delta_available(spark):
-            pytest.skip("session built without Delta SQL extension")
-
-    target = str(tmp_path / f"events_table_{backend}")
+def test_merge_upsert_roundtrip_and_stats(spark, tmp_path):
+    target = str(tmp_path / "events_table")
     base, batch = _roundtrip_fixture(spark)
 
-    stats0 = merge_upsert(
-        spark, target, base, ["event_id"], [F.col("version").desc()], backend=backend
-    )
+    stats0 = merge_upsert(spark, target, base, ["event_id"], [F.col("version").desc()])
     assert stats0.inserted == 2 and stats0.target_rows_after == 2
 
-    stats = merge_upsert(
-        spark, target, batch, ["event_id"], [F.col("version").desc()], backend=backend
-    )
+    stats = merge_upsert(spark, target, batch, ["event_id"], [F.col("version").desc()])
     assert stats.total_incoming == 3
     assert stats.within_batch_duplicates == 1  # e2 appears twice; latest wins (W3)
     assert stats.updated == 1 and stats.inserted == 1
     assert stats.target_rows_after == 3
 
-    reader = spark.read.format("delta") if backend == "delta" else spark.read
-    final = {r["event_id"]: r["payload"] for r in reader.load(target).collect()}
+    final = {r["event_id"]: r["payload"] for r in spark.read.parquet(target).collect()}
     assert final == {"e1": "v1", "e2": "v3", "e3": "v1"}
-
-
-def test_merge_upsert_delta_backend_requires_delta(spark, tmp_path):
-    """backend='delta' must fail loudly, not silently fall back, when
-    delta-spark is absent or the session lacks the Delta extension."""
-    from scraper_db_refine_merge_spark.operators.merge import delta_available
-
-    df = spark.createDataFrame([("e1", 1)], "event_id string, v int")
-    if not delta_available(spark):
-        with pytest.raises(RuntimeError, match="delta"):
-            merge_upsert(spark, str(tmp_path / "t"), df, ["event_id"], backend="delta")
-    else:
-        stats = merge_upsert(spark, str(tmp_path / "t"), df, ["event_id"], backend="delta")
-        assert stats.inserted == 1
 
 
 def test_insert_if_absent(spark, tmp_path):

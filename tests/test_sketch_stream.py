@@ -158,8 +158,8 @@ def test_stream_kmv_equals_batch_and_replay_is_noop(spark, tmp_path):
 
 
 def test_store_commit_is_atomic_and_crash_safe(spark, tmp_path):
-    """The versioned store's only committing operation is the pointer
-    replace: a writer dying at ANY earlier point (simulated by a fully
+    """The versioned store's only committing operation is the commit-log
+    entry: a writer dying at ANY earlier point (simulated by a fully
     written but never-committed snapshot dir) leaves the previous state
     live, and the next successful commit garbage-collects the orphan."""
     import os
@@ -175,7 +175,7 @@ def test_store_commit_is_atomic_and_crash_safe(spark, tmp_path):
     store_commit(df1, target)
     assert [tuple(r) for r in store_read(spark, target).collect()] == [(1, "a")]
 
-    # simulate a crash mid-write: snapshot exists, pointer never moved
+    # simulate a crash mid-write: snapshot exists, log entry never made
     orphan = os.path.join(target, "v-deadbeefdead")
     spark.createDataFrame([(9, "x")], "k long, v string").write.parquet(orphan)
     assert [tuple(r) for r in store_read(spark, target).collect()] == [(1, "a")]
@@ -379,34 +379,65 @@ def test_store_parts_gc_drops_unreferenced_orphans(spark, tmp_path):
     assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2]
 
 
-def test_store_single_writer_violation_raises(spark, tmp_path):
-    """The commit section enforces the single-writer contract: if CURRENT
-    is not the version just committed after the pointer replace, the
-    commit raises instead of silently losing an update. Simulated via a
-    monkeypatched os.replace that lets a competing pointer land last."""
+def test_store_single_writer_violation_raises(spark, tmp_path, monkeypatch):
+    """The commit section enforces the single-writer contract: if another
+    writer's commit-log entry lands at this writer's seq first, the
+    exclusive create fails and the commit raises instead of silently losing
+    an update. Simulated by a competing entry created just before our
+    exclusive create."""
     import os as _os
+
+    import pytest
 
     from scraper_db_refine_merge_spark.streaming import store as st
 
     target = str(tmp_path / "store")
     st.store_commit(spark.createDataFrame([(1,)], "k long"), target)
 
-    real_replace = _os.replace
+    rival = "v-000002-feedface"
+    real_open = _os.open
 
-    def racing_replace(src, dst):
-        real_replace(src, dst)
-        if _os.path.basename(dst) == "CURRENT":
-            with open(dst, "w") as f:  # competing writer wins the pointer
-                f.write("v-000777-feedface")
+    def racing_open(path, flags, *a, **k):
+        if flags & _os.O_EXCL and _os.path.basename(path).startswith("c-"):
+            _os.makedirs(_os.path.join(target, rival))
+            with open(path, "w") as f:  # competing writer wins the entry
+                f.write(rival)
+        return real_open(path, flags, *a, **k)
 
-    _os.replace = racing_replace
+    monkeypatch.setattr(_os, "open", racing_open)
+    with pytest.raises(st.StoreConcurrentWriterError):
+        st.store_commit(spark.createDataFrame([(2,)], "k long"), target)
+    monkeypatch.undo()
+    assert st.resolve_pointer_name(target) == rival
+
+
+def test_store_commit_under_aqe_off_plans_no_rebalance(spark, tmp_path, monkeypatch):
+    """The REBALANCE write hint only sizes files through AQE; with AQE off
+    it would plan a plain round-robin exchange for nothing, so store
+    writes skip it — decided by the frame's own session setting."""
+    from scraper_db_refine_merge_spark.streaming import store as st
+
+    plans = []
+    real_sized = st._sized_for_write
+
+    def spy(df):
+        out = real_sized(df)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(st, "_sized_for_write", spy)
+    df = spark.range(100).repartition(4)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        import pytest
-
-        with pytest.raises(st.StoreConcurrentWriterError):
-            st.store_commit(spark.createDataFrame([(2,)], "k long"), target)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        st.store_commit(df, str(tmp_path / "off"))
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        st.store_commit(df, str(tmp_path / "on"))
     finally:
-        _os.replace = real_replace
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    off, on = plans
+    assert "REBALANCE" not in off, off
+    assert "REBALANCE" in on, on  # the spy sees the hint when AQE is on
 
 
 def test_store_commit_parts_migrates_commit_many_snapshot(spark, tmp_path):

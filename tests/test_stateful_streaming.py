@@ -152,17 +152,15 @@ def test_stream_ingest_partitioned_merge(spark, tmp_path):
     q.awaitTermination(120)
 
     from scraper_db_refine_merge_spark.operators.merge import (
+        _view_mapping,
         read_partitioned_table,
-        resolve_partitioned_path,
     )
+    from scraper_db_refine_merge_spark.streaming.store import store_version_dir
 
     t = read_partitioned_table(spark, target)
     rows = {r["title"]: r for r in t.collect()}
     assert set(rows) == {"Party A", "Party B"}
     assert rows["Party A"]["content"]["full_description"] == "v2"  # latest won
-    # hive layout in the live snapshot: one directory per event date
-    # (pointer layout since r14 — fresh targets commit via CURRENT)
-    view = resolve_partitioned_path(target)
-    assert view != target  # fresh table → pointer layout
-    parts = sorted(d for d in _os.listdir(view) if d.startswith("event_date="))
+    # hive partitions in the live snapshot's manifest: one per event date
+    parts = sorted(_view_mapping(store_version_dir(target)))
     assert parts == ["event_date=2025-05-05", "event_date=2025-05-06"]

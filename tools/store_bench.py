@@ -8,9 +8,9 @@ min-of-2 warm runs, one JSON line, committed as STORE_BENCH_r{N}.json and
 compared round-over-round in ROADMAP like BENCH_LOCAL.
 
 Operations timed (documents table at sf0.1 = 5k docs; 10x = 50k):
-- merge_fresh_<layout>    merge_upsert_partitioned into a fresh target
-                          (symlink view / manifest view / manifest+CAS)
-- merge_upsert_<layout>   second batch touching 1/5 of the keys
+- merge_fresh             merge_upsert_partitioned into a fresh target
+                          (manifest view + CAS commit log)
+- merge_upsert            second batch touching 1/5 of the keys
 - read_partitioned        full read-back through the committed view
 - parts_fold_x4           4 incremental store_commit_parts folds
 - parts_read              union-read of the accumulated parts
@@ -87,30 +87,21 @@ def run_factor(spark, factor: int) -> dict[str, float]:
     out: dict[str, float] = {}
     scratch = tempfile.mkdtemp(prefix=f"store_bench_x{factor}_")
 
-    # ---- partitioned merge, three commit configurations. Fresh-create and
-    # upsert are timed ONCE per configuration (a merge mutates its target,
-    # so min-of-2 would measure a different table state on run 2); the
-    # read-back is repeatable and gets min-of-2.
-    for label, kw in (
-        ("symlink", dict(layout="symlink")),
-        ("manifest", dict(layout="manifest")),
-        ("manifest_cas", dict(layout="manifest", pointer_strategy="cas")),
-    ):
-        tgt = os.path.join(scratch, f"pm_{label}")
-        out[f"merge_fresh_{label}"] = _once(
-            lambda t=tgt, k=kw: merge_upsert_partitioned(
-                spark, t, docs, key_cols=["doc_id"], partition_col="source", **k
-            )
+    # ---- partitioned merge. Fresh-create and upsert are timed ONCE (a
+    # merge mutates its target, so min-of-2 would measure a different
+    # table state on run 2); the read-back is repeatable and gets min-of-2.
+    tgt = os.path.join(scratch, "pm")
+    out["merge_fresh"] = _once(
+        lambda: merge_upsert_partitioned(
+            spark, tgt, docs, key_cols=["doc_id"], partition_col="source"
         )
-        out[f"merge_upsert_{label}"] = _once(
-            lambda t=tgt, k=kw: merge_upsert_partitioned(
-                spark, t, batch2, key_cols=["doc_id"], partition_col="source", **k
-            )
+    )
+    out["merge_upsert"] = _once(
+        lambda: merge_upsert_partitioned(
+            spark, tgt, batch2, key_cols=["doc_id"], partition_col="source"
         )
-        if label == "manifest_cas":
-            out["read_partitioned"] = _min2(
-                lambda t=tgt: read_partitioned_table(spark, t).count()
-            )
+    )
+    out["read_partitioned"] = _min2(lambda: read_partitioned_table(spark, tgt).count())
 
     # ---- incremental parts store: 4 folds, read, compact (timed once —
     # compaction mutates; the store is rebuilt per timing elsewhere only
@@ -165,11 +156,9 @@ def main() -> int:
     wdocs = load_table(spark, BASE, "documents").select(
         "doc_id", "source", "n_chars", "text"
     ).filter(F.col("doc_id") % 11 == 0)
-    for label, kw in (("symlink", {}), ("manifest", dict(layout="manifest"))):
-        merge_upsert_partitioned(
-            spark, os.path.join(warm, label), wdocs,
-            key_cols=["doc_id"], partition_col="source", **kw,
-        )
+    merge_upsert_partitioned(
+        spark, os.path.join(warm, "pm"), wdocs, key_cols=["doc_id"], partition_col="source"
+    )
     st.store_commit_parts({"t": wdocs.select("doc_id")}, os.path.join(warm, "p"))
     dd.fold_minhash_index(
         spark, os.path.join(warm, "mh"), wdocs, "doc_id", "text",
