@@ -21,7 +21,7 @@ Bit-parity notes:
   missing when NULL or empty, mirroring ``not acts_data``.
 
 Each ``score_*`` returns ``struct(score double, flags array<string>)``;
-``data_quality_struct`` composes them into the schema's ``data_quality``
+``with_data_quality`` composes them into the schema's ``data_quality``
 shape (quality_scorer.py:79-91).
 """
 
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .strings import _PY_WS, _PY_WS_CHARS, python_strip
@@ -350,46 +350,50 @@ def _tag_flags(field: str, flags: Column) -> Column:
     )
 
 
-def data_quality_struct(
+def with_data_quality(
+    df: DataFrame,
     title: Column,
     venue: Column,
     dt: Column,
     acts: Column,
     ticketing: Column,
     now: datetime | None = None,
-) -> Column:
-    """Full data_quality struct for an event row (quality_scorer.py:29-91)."""
-    ts = score_title_info(title)
-    vs = score_venue_info(venue)
-    ds = score_datetime_info(dt, now)
-    as_ = score_acts_info(acts)
-    tks = score_ticketing_info(ticketing)
-    fqs = F.struct(
-        ts["score"].alias("title"),
-        vs["score"].alias("venue"),
-        ds["score"].alias("datetime"),
-        as_["score"].alias("acts"),
-        tks["score"].alias("ticketing"),
-    )
-    all_flags = F.concat(
-        _tag_flags("title", ts["flags"]),
-        _tag_flags("venue", vs["flags"]),
-        _tag_flags("datetime", ds["flags"]),
-        _tag_flags("acts", as_["flags"]),
-        _tag_flags("ticketing", tks["flags"]),
-    )
-    return F.struct(
-        overall_score(ts["score"], vs["score"], ds["score"], as_["score"], tks["score"]).alias(
-            "overall_score"
-        ),
-        fqs.alias("field_quality_scores"),
-        all_flags.alias("validation_flags"),
+) -> DataFrame:
+    """``df`` plus the event's ``data_quality`` struct column
+    (quality_scorer.py:29-91).
+
+    The five field scorers are projected ONCE into a struct column; the
+    overall score, the field scores and the flags then read it by name.
+    Composing the scorer Columns directly inlines each scorer tree at all
+    three uses — the Catalyst-analysis blowup (ROADMAP gotchas)."""
+    fields = "__dq_fields"
+    scored = df.withColumn(
+        fields,
         F.struct(
-            F.lit(False).alias("is_verified"),
-            F.lit(None).cast("string").alias("verified_by"),
-            F.lit(None).cast("string").alias("verified_at"),
-        ).alias("manual_verification"),
+            score_title_info(title).alias("title"),
+            score_venue_info(venue).alias("venue"),
+            score_datetime_info(dt, now).alias("datetime"),
+            score_acts_info(acts).alias("acts"),
+            score_ticketing_info(ticketing).alias("ticketing"),
+        ),
     )
+    names = ("title", "venue", "datetime", "acts", "ticketing")
+    score = {f: F.col(fields)[f]["score"] for f in names}
+    return scored.withColumn(
+        "data_quality",
+        F.struct(
+            overall_score(*(score[f] for f in names)).alias("overall_score"),
+            F.struct(*(score[f].alias(f) for f in names)).alias("field_quality_scores"),
+            F.concat(*(_tag_flags(f, F.col(fields)[f]["flags"]) for f in names)).alias(
+                "validation_flags"
+            ),
+            F.struct(
+                F.lit(False).alias("is_verified"),
+                F.lit(None).cast("string").alias("verified_by"),
+                F.lit(None).cast("string").alias("verified_at"),
+            ).alias("manual_verification"),
+        ),
+    ).drop(fields)
 
 
 # ----------------------------------------------------------------------

@@ -208,7 +208,8 @@ def bloom_might_contain(
             F.try_element_at(words, _word_ix(pos) + F.lit(1)), F.lit(0).cast("long")
         )
         cond = cond & (word.bitwiseAND(_bit_val(pos)) != F.lit(0))
-    return cond
+    # NULL words make the derived size NULL under ANSI (size(NULL) is NULL)
+    return F.coalesce(cond, F.lit(False))
 
 
 def pruned_left_anti(

@@ -26,8 +26,10 @@ Each table shape commits through exactly one protocol:
   rename and no symlink anywhere on this path, so it holds on object
   stores as well as POSIX.
 
-MergeStats come from a SINGLE key-overlap aggregation job, not per-count
-table re-reads.
+MergeStats come from the commit job itself: row-count observations
+(``DataFrame.observe``) on the batch, its latest-per-key rows, the target
+and the target rows the anti-join keeps are filled in by the staging
+write, so no job runs only to count.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -59,30 +61,6 @@ def latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list[Column])
     """W3: newest row per business key; order must be a total order."""
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def _overlap_stats(
-    target: DataFrame | None, updates: DataFrame, key_cols: list[str]
-) -> tuple[int, int, int, int]:
-    """(target_rows_before, total_incoming, batch_keys, updated) from ONE
-    key-overlap aggregation job — replaces the 3-4 whole-table count() jobs
-    the naive stats path issued per batch (r1 VERDICT 'what's wrong' #3)."""
-    u = updates.select(*key_cols).withColumn("__t", F.lit(0)).withColumn("__s", F.lit(1))
-    if target is not None:
-        u = (
-            target.select(*key_cols)
-            .withColumn("__t", F.lit(1))
-            .withColumn("__s", F.lit(0))
-            .unionByName(u)
-        )
-    g = u.groupBy(*key_cols).agg(F.sum("__t").alias("t"), F.sum("__s").alias("s"))
-    row = g.agg(
-        F.coalesce(F.sum("t"), F.lit(0)).alias("before"),
-        F.coalesce(F.sum("s"), F.lit(0)).alias("incoming"),
-        F.count(F.when(F.col("s") > 0, 1)).alias("batch_keys"),
-        F.count(F.when((F.col("t") > 0) & (F.col("s") > 0), 1)).alias("updated"),
-    ).first()
-    return int(row["before"]), int(row["incoming"]), int(row["batch_keys"]), int(row["updated"])
 
 
 def _kept_rows(
@@ -159,15 +137,30 @@ def swap_plain_table(target_path: str, df: DataFrame) -> None:
         os.rename(staging, target)
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count Observation attached: the count arrives with
+    whatever action evaluates ``df``, no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _count(obs: Observation) -> int:
+    """The row count an observation saw. Adaptive execution drops a plan
+    branch once it has proved the branch's input empty, and the branch's
+    observation then reports an empty row (which ``Observation.get``
+    cannot convert): that count is 0."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
     updates: DataFrame,
     key_cols: list[str],
     order_cols: list[Column] | None = None,
-    collect_stats: bool = True,
     prefilter: str = "none",
-) -> MergeStats | None:
+) -> MergeStats:
     """Upsert ``updates`` into the plain parquet table at ``target_path``.
 
     Semantics = Mongo's ``$set`` whole-document upsert (``WHEN MATCHED
@@ -178,29 +171,34 @@ def merge_upsert(
     ``prefilter="bloom"`` applies the broadcast Bloom prefilter before the
     keep-side anti-join — identical output, shuffle volume proportional to
     the match fraction instead of the table.
+
+    MergeStats are always returned; they cost no job of their own. The
+    target is read through ``updates.sparkSession``, not ``spark``: a
+    ``foreachBatch`` frame lives in the stream's cloned session, and the
+    observations below fire only on the session that runs the write.
     """
     order_cols = order_cols or [F.col(key_cols[0])]
-    deduped = latest_per_key(updates, key_cols, order_cols)
-    target = spark.read.parquet(target_path) if recover_plain_table(target_path) else None
-    if target is not None:
-        merged = _kept_rows(target, deduped, key_cols, prefilter).unionByName(deduped)
-    else:
-        merged = deduped
+    session = updates.sparkSession
+    updates, incoming = _counted(updates)
+    deduped, batch_keys = _counted(latest_per_key(updates, key_cols, order_cols))
+    merged, target_counts = deduped, ()
+    if recover_plain_table(target_path):
+        # observed once, before the bloom prefilter splits the target read
+        target, before = _counted(session.read.parquet(target_path))
+        kept, after_anti = _counted(_kept_rows(target, deduped, key_cols, prefilter))
+        merged, target_counts = kept.unionByName(deduped), (before, after_anti)
 
-    stats = None
-    if collect_stats:
-        before, total_incoming, batch_keys, updated = _overlap_stats(
-            target, updates, key_cols
-        )
-        stats = MergeStats(
-            total_incoming=total_incoming,
-            within_batch_duplicates=total_incoming - batch_keys,
-            updated=updated,
-            inserted=batch_keys - updated,
-            target_rows_after=before - updated + batch_keys,
-        )
     swap_plain_table(target_path, merged)
-    return stats
+    n_in, n_keys = _count(incoming), _count(batch_keys)
+    n_before, n_kept = (_count(o) for o in target_counts) if target_counts else (0, 0)
+    updated = n_before - n_kept
+    return MergeStats(
+        total_incoming=n_in,
+        within_batch_duplicates=n_in - n_keys,
+        updated=updated,
+        inserted=n_keys - updated,
+        target_rows_after=n_kept + n_keys,
+    )
 
 
 # ----------------------------------------------------------------------

@@ -17,8 +17,11 @@ Input shape: the raw calendar/card rows of FIXTURES.md §1/§2 —
 price_text?, genres?, description?``. Missing columns are tolerated (filled
 with NULL) so heterogeneous sources union cleanly (J7/U1).
 
-Everything is a single projection — at 100 TB this is a scan + map with zero
-shuffles; the only shuffle in the ingest DAG is the final dedup/merge.
+Everything is projections — at 100 TB this is a scan + map with zero
+shuffles; the only shuffle in the ingest DAG is the final dedup/merge. Deep
+helpers used more than once (the shared scalars, the five field scorers) sit
+behind a projection boundary and are read by name, which keeps the analyzed
+plan small.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from pyspark.sql import functions as F
 from .functions.dates import parse_club_date, strip_day_name, to_utc_iso
 from .functions.ids import generate_unique_id
 from .functions.normalize import normalize_genres, normalize_venue_name, timezone_from_location
-from .functions.quality import data_quality_struct
+from .functions.quality import with_data_quality
 from .functions.strings import (
     classify_event_type,
     extract_price,
@@ -65,16 +68,27 @@ def refine(
     default_city: str = "Ibiza",
     default_country: str = "Spain",
 ) -> DataFrame:
-    """Raw rows → unified event rows (one projection, SURVEY D4)."""
+    """Raw rows → unified event rows (a scan + map, SURVEY D4). Works on
+    batch and streaming frames alike."""
     now = now or datetime.now(timezone.utc)
     now_iso = now.strftime("%Y-%m-%dT%H:%M:%S+00:00")
     df = _ensure_columns(df)
 
-    title = F.coalesce(normalize_text_v2(F.col("title")), F.lit("Untitled Event"))
-    venue_name = F.coalesce(
-        normalize_venue_name(normalize_text_v2(F.col("venue"))), F.lit("Unknown Venue")
-    )
+    # Shared scalars: deep trees that the projection below uses several
+    # times each, so they are projected once here and read by name (ROADMAP
+    # gotcha "Catalyst-analysis blowup").
     raw_date = F.coalesce(F.col("date_text"), F.lit(""))
+    df = df.select(
+        "*",
+        F.coalesce(normalize_text_v2(F.col("title")), F.lit("Untitled Event")).alias("__title"),
+        F.coalesce(
+            normalize_venue_name(normalize_text_v2(F.col("venue"))), F.lit("Unknown Venue")
+        ).alias("__venue_name"),
+        raw_date.alias("__raw_date"),
+        parse_club_date(raw_date).alias("__start_ts"),
+        extract_price(F.col("price_text")).alias("__price"),
+    )
+    title, venue_name, raw_date = F.col("__title"), F.col("__venue_name"), F.col("__raw_date")
     url = normalize_url(F.col("url"))
 
     # J1 — event/venue/artist ids, uuid5-parity (schema_adapter_enhanced.py:480-483,615,655)
@@ -117,8 +131,7 @@ def refine(
     )
 
     # F3 — club-default datetime from the raw date text
-    start_ts = parse_club_date(raw_date)
-    start_date_iso = to_utc_iso(start_ts)
+    start_date_iso = to_utc_iso(F.col("__start_ts"))
     tz = timezone_from_location(F.concat_ws(" ", venue_name, F.lit(default_city)))
 
     datetime_struct = F.struct(
@@ -173,7 +186,7 @@ def refine(
 
     # F16 — genres; F9 — price
     genres_norm = normalize_genres(F.coalesce(F.col("genres"), F.array().cast("array<string>")))
-    price = extract_price(F.col("price_text"))
+    price = F.col("__price")
 
     music_struct = F.struct(
         F.try_element_at(genres_norm, F.lit(1)).alias("primary_genre"),
@@ -259,11 +272,8 @@ def refine(
     )
 
     # D1/D2 — quality scoring over the assembled structures
-    scored = base.withColumn(
-        "data_quality",
-        data_quality_struct(
-            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), now
-        ),
+    scored = with_data_quality(
+        base, F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), now
     )
 
     # Gold-layer derived columns (query accelerators; SURVEY §1.5)

@@ -4,10 +4,10 @@ The reference is batch + incremental re-scrape with upsert semantics
 (data_migration.py:133-139, unified_scraper.py:622-642). Structured
 Streaming generalizes it:
 
-- ST1: ``readStream`` over a landing directory → refine → ``foreachBatch``
-  keyed MERGE (latest wins). foreachBatch is the correct sink because MERGE
-  is not an append-only streaming sink; each micro-batch applies W3 dedup
-  then the upsert.
+- ST1: ``readStream`` over a landing directory → refine (planned once per
+  query, on the stream) → ``foreachBatch`` keyed MERGE (latest wins).
+  foreachBatch is the correct sink because MERGE is not an append-only
+  streaming sink; each micro-batch applies W3 dedup then the upsert.
 - ST2: freshness predicate / TTL (ventura_crawler.py:260-287) as both a
   batch predicate and a watermark config.
 - ST3: staleness detection (DF001/DF002) producing a refresh queue.
@@ -48,8 +48,20 @@ def stream_ingest(
 ):
     """ST1 — continuous upsert ingestion. Returns the StreamingQuery.
 
-    Each micro-batch: refine → latest-wins per event_id → MERGE into the
-    keyed events table; optionally append a run-metrics row (ST5).
+    Refine is applied once, to the streaming frame, before ``foreachBatch``.
+    Each micro-batch's incremental execution plans it once, and
+    ``foreachBatch`` hands the refined rows on as a frame over that
+    execution's RDD, so the merge's jobs plan a small tree instead of each
+    planning the whole refine expression again. Each micro-batch then:
+    latest-wins per event_id → MERGE into the keyed events table;
+    optionally append a run-metrics row (ST5).
+
+    ``now`` is the scrape time stamped on every row (``first_scraped``,
+    ``last_scraped``, ``created_at``, ``updated_at``) and the reference
+    point of the date-sanity scores. A fixed value gives a deterministic
+    replay (the oracle-gated q57); ``None`` takes the wall clock once, when
+    the query starts, so all micro-batches of one ``availableNow`` run share
+    one scrape time.
 
     ``partition_by_event_date=True`` switches to the partition-pruned MERGE
     (operators.merge.merge_upsert_partitioned) over a table hive-partitioned
@@ -63,17 +75,15 @@ def stream_ingest(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(landing_dir)
     )
+    refined = refine(raw, source_platform, now=now or datetime.now(timezone.utc))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # fixed `now` (deterministic replay / the oracle-gated q57) or
-        # wall clock (production)
-        refined = refine(batch_df, source_platform, now=now)
         if partition_by_event_date:
             from ..operators.merge import merge_upsert_partitioned
 
-            with_date = refined.withColumn(
+            with_date = batch_df.withColumn(
                 "event_date",
                 F.coalesce(
                     F.to_date(F.try_to_timestamp(F.col("datetime.start_date"))),
@@ -98,19 +108,14 @@ def stream_ingest(
                 )
                 metrics.write.mode("append").parquet(metrics_path)
             return
-        # r17 (guide §1.2): MergeStats cost real jobs per micro-batch
-        # (_overlap_stats counts over target AND the full refine lineage)
-        # and were discarded whenever no metrics sink was configured —
-        # only collect them when the ST5 metrics emission consumes them.
         stats = merge_upsert(
             spark,
             target_path,
-            refined,
+            batch_df,
             key_cols=["event_id"],
             order_cols=[F.col("scraping_metadata.last_scraped").desc(), F.col("event_id")],
-            collect_stats=metrics_path is not None,
         )
-        if metrics_path and stats:
+        if metrics_path:
             # ST5 — run-level metrics emission (ventura_crawler.py:289-300)
             metrics = spark.createDataFrame(
                 [
@@ -130,7 +135,7 @@ def stream_ingest(
             metrics.write.mode("append").parquet(metrics_path)
 
     return (
-        raw.writeStream.foreachBatch(_apply)
+        refined.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

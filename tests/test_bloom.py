@@ -85,8 +85,8 @@ def test_merge_upsert_bloom_prefilter_identical_result(spark, tmp_path):
         "event_id string, v double, ver int",
     )
     for path, pf in ((plain_t, "none"), (bloom_t, "bloom")):
-        merge_upsert(spark, path, base, ["event_id"], [F.desc("ver")], collect_stats=False)
-        merge_upsert(spark, path, batch, ["event_id"], [F.desc("ver")], collect_stats=False, prefilter=pf)
+        merge_upsert(spark, path, base, ["event_id"], [F.desc("ver")])
+        merge_upsert(spark, path, batch, ["event_id"], [F.desc("ver")], prefilter=pf)
     cols = ["event_id", "v", "ver"]
     assert _rows(spark.read.parquet(bloom_t), cols) == _rows(spark.read.parquet(plain_t), cols)
 
@@ -150,6 +150,17 @@ def test_probe_derives_size_from_words_when_not_given(spark):
         bloom_might_contain(["k"], F.col("__bf_words"), 1 << 16, HASHES).alias("hit")
     )
     assert probed.exceptAll(explicit).count() == 0
+
+
+def test_derived_size_probe_is_false_not_null_on_null_words(spark):
+    """ADVICE r17: size(NULL) is NULL under ANSI, so the derived-size probe
+    went NULL for a NULL words array; the docstring promises never NULL,
+    which is what makes ``filter(~probe)`` safe."""
+    rows = spark.createDataFrame([("a", None), ("b", [0, 0])], "k string, w array<bigint>")
+    got = rows.select(
+        "k", bloom_might_contain(["k"], F.col("w"), num_hashes=HASHES).alias("hit")
+    ).collect()
+    assert sorted((r["k"], r["hit"]) for r in got) == [("a", False), ("b", False)]
 
 
 def test_resolve_num_bits_memo_and_batch_count(spark):

@@ -16,10 +16,10 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 
 from scraper_db_refine_merge_spark import schemas as SC
 from scraper_db_refine_merge_spark.functions.quality import (
-    data_quality_struct,
     quality_level,
     score_title_info,
     weak_fields,
+    with_data_quality,
 )
 
 NOW = datetime(2026, 8, 13, 12, 0, 0, tzinfo=timezone.utc)
@@ -205,12 +205,9 @@ GOLDEN = {
 @pytest.fixture(scope="module")
 def scored(spark):
     df = spark.createDataFrame(FIXTURES, EVENT_SCHEMA)
-    out = df.select(
-        "name",
-        data_quality_struct(
-            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), NOW
-        ).alias("dq"),
-    ).collect()
+    out = with_data_quality(
+        df, F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), NOW
+    ).select("name", F.col("data_quality").alias("dq")).collect()
     return {r["name"]: r["dq"] for r in out}
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from scraper_db_refine_merge_spark.operators.merge import insert_if_absent, merge_upsert
 from scraper_db_refine_merge_spark.refine import deduplicate_events, refine
+from scraper_db_refine_merge_spark.streaming.pipeline import RAW_STREAM_SCHEMA
 from tests.test_functions import ref_generate_unique_id
 
 NOW = datetime(2026, 8, 13, 12, 0, 0, tzinfo=timezone.utc)
@@ -96,6 +97,17 @@ def test_refine_structures(refined):
     assert ants["type"] == "festival"  # F19 classifier
     assert ants["ticketing"]["is_free"] is True
     assert ants["venue"]["name"] == "Ushuaïa"
+
+
+def test_refine_plans_each_deep_helper_once(spark, tmp_path):
+    """Plan-size guard: the title-date regex (title scorer) and the venue
+    alias map (venue-name normalization) each appear once in the optimized
+    plan. Composing deep helpers without a projection boundary inlines them
+    at every use — 10 and 11 copies before the boundaries were cut."""
+    raw = spark.read.schema(RAW_STREAM_SCHEMA).json(str(tmp_path))
+    plan = refine(raw, "p", now=NOW)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(r"\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}") == 1
+    assert plan.count("hi ibiza") == 1
 
 
 def test_deduplicate_events(refined):

@@ -72,6 +72,51 @@ def test_stream_ingest_upserts(spark, tmp_path):
     assert {r["inserted"] for r in m.collect()} >= {5}
 
 
+def test_stream_ingest_merge_stats_per_batch(spark, tmp_path):
+    """Every micro-batch's MergeStats, exactly, with refine applied once to
+    the stream. The target is read in the stream's cloned session, where
+    the merge's observations fire; read in the outer session they never
+    fire and the second batch waits forever — hence the bounded wait. With
+    ``now=None`` the whole run shares one scrape time."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    target = str(tmp_path / "events_table")
+    metrics = str(tmp_path / "metrics")
+    # file 0: events 0-3 plus a byte-identical copy of event 1;
+    # file 1: re-scrapes of 2 and 3, new 4 and 5, plus a copy of event 5
+    files = [[0, 1, 2, 3, 1], [2, 3, 4, 5, 5]]
+    for version, members in enumerate(files):
+        path = landing / f"batch_{version}.json"
+        with open(path, "w") as f:
+            for i in members:
+                row = _raw_event(i, f"Stream Party {i}") | {"description": f"v{version}"}
+                f.write(json.dumps(row) + "\n")
+        t = 1_700_000_000 + version * 60  # the file source orders by mtime
+        os.utime(path, (t, t))
+
+    q = stream_ingest(
+        spark, str(landing), target, str(tmp_path / "ck"), metrics_path=metrics,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(240)
+    finished = not q.isActive
+    if not finished:
+        q.stop()
+    assert finished, "stream did not finish within 240 s"
+    assert q.exception() is None
+
+    cols = ["incoming", "within_batch_duplicates", "updated", "inserted", "target_rows_after"]
+    got = [tuple(r) for r in spark.read.parquet(metrics).orderBy("batch_id").select(*cols).collect()]
+    assert got == [(5, 1, 0, 4, 4), (5, 1, 2, 2, 6)]
+
+    final = spark.read.parquet(target)
+    latest = final.select("title", F.col("content.full_description").alias("d")).collect()
+    assert sorted((r["title"], r["d"]) for r in latest) == [
+        (f"Stream Party {i}", "v0" if i < 2 else "v1") for i in range(6)
+    ]
+    assert final.select("scraping_metadata.last_scraped").distinct().count() == 1
+
+
 def test_fresh_rows_and_refresh_queue(spark):
     rows = [
         ("e1", "https://x/1", (NOW - timedelta(hours=1)).isoformat(), "2025-06-01T23:00:00Z", False),
