@@ -26,12 +26,17 @@ caches its own thread created; interleaved pipelines in one thread use
 Repeated identical operator calls register one entry per call; releasing
 both is harmless (the second unpersist of an already-unpersisted plan is a
 no-op in Spark).
+
+The module also owns the engine's one MEMO (:func:`memo`/:func:`forget`)
+for driver-side probes and trained artifacts — work that must run once per
+session, not once per plan build.
 """
 
 from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame
 
@@ -155,3 +160,34 @@ def release_all_threads() -> int:
             df.unpersist()
             n += 1
     return n
+
+
+# Driver-side probe/artifact memo: {owner: {key: value}}. The owner is a
+# DataFrame (probe results and trained state of that frame OBJECT — a
+# rebuilt frame misses) or a SparkSession (loaded tables, views, per-lineage
+# sizes); WeakKeyDictionary, so entries die with their owner. Owners are
+# assumed static for their lifetime: a caller over mutating files passes a
+# fresh frame (re-``load_table``) or calls :func:`forget`.
+_memos: "WeakKeyDictionary[object, dict]" = WeakKeyDictionary()
+_MISSING = object()
+
+
+def memo(owner, key, build):
+    """``build()`` memoized per (owner, key). Callers namespace their own
+    key (e.g. ``("dim", vec_col)``). A ``None`` result is stored; a
+    ``build()`` that raises stores nothing, so the next call retries."""
+    per = _memos.get(owner)
+    value = _MISSING if per is None else per.get(key, _MISSING)
+    if value is _MISSING:
+        value = build()
+        _memos.setdefault(owner, {})[key] = value
+    return value
+
+
+def forget(owner=None) -> None:
+    """Drop every memo of ``owner`` (its next probe or training re-runs);
+    ``owner=None`` drops all memos."""
+    if owner is None:
+        _memos.clear()
+    else:
+        _memos.pop(owner, None)

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import memo
+
 # golden-ratio int32 constant; any fixed literal works — it only has to make
 # lane 2 independent of lane 1 (xxhash64 over a different arity/input).
 _SEED2 = -1640531527
@@ -53,52 +55,35 @@ _AUTO_MAX_BITS = 1 << 26
 _AUTO_BITS_PER_KEY = 16  # ~0.1% fp at k=5
 
 
-# resolve_num_bits memo, keyed on the batch's ANALYZED-PLAN semantic hash
-# (ADVICE r16): merge_upsert builds a fresh ``deduped.select(*key_cols)``
-# object per call, so a per-DataFrame-object memo (corpus_count) always
-# missed and the batch lineage ran an extra count job per merge. Semantic
-# hashing matches identical lineage across fresh objects. A (rare) 32-bit
-# hash collision would only reuse a wrong SIZE — filter exactness never
-# depends on num_bits (false positives are corrected by the anti-join),
-# so this memo is collision-safe in a way a result-affecting memo
-# (adaptive_band_size etc.) would not be. Session-lived ints, a few bytes
-# per distinct batch lineage.
-_BITS_MEMO: dict[int, int] = {}
-
-
-def resolve_num_bits(
-    batch: DataFrame, num_bits: int | str, batch_count: int | None = None
-) -> int:
+def resolve_num_bits(batch: DataFrame, num_bits: int | str) -> int:
     """Resolve ``num_bits="auto"`` to a power of two ≈ 16 bits per batch key
     (r16, guide §2.3/§3.2): the filter scales WITH the batch instead of a
     constant tuned for 1M keys — a 500-key decontamination list gets a 2^16
     filter (trivial assembly/broadcast), a 4M-key merge batch gets 2^26.
-    One count job per distinct batch lineage (semantic-hash memo above);
-    callers that already know the batch size pass ``batch_count`` and no
-    job runs. Exactness does not depend on the size — any value yields
-    identical query results — so the data-determined size is deterministic
-    and safe under retries."""
+    Exactness does not depend on the size — any value yields identical
+    query results — so the data-determined size is deterministic and safe
+    under retries.
+
+    One count job per distinct batch lineage per session: the memo key is
+    the batch's ANALYZED-PLAN semantic hash (ADVICE r16), because
+    merge_upsert builds a fresh ``deduped.select(*key_cols)`` object per
+    call and a per-object memo would always miss. A (rare) 32-bit hash
+    collision would only reuse a wrong SIZE, never a wrong result."""
     if num_bits != "auto":
         return int(num_bits)
 
-    def _bits_for(n: int) -> int:
+    def _bits() -> int:
+        n = max(batch.count(), 1)
         bits = _AUTO_MIN_BITS
         while bits < n * _AUTO_BITS_PER_KEY and bits < _AUTO_MAX_BITS:
             bits <<= 1
         return bits
 
-    if batch_count is not None:
-        return _bits_for(max(int(batch_count), 1))
     try:
         key = batch._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
-        key = None
-    if key is not None and key in _BITS_MEMO:
-        return _BITS_MEMO[key]
-    bits = _bits_for(max(batch.count(), 1))
-    if key is not None:
-        _BITS_MEMO[key] = bits
-    return bits
+        return _bits()
+    return memo(batch.sparkSession, ("bloom_bits", key), _bits)
 
 
 def _lanes(key_cols: list[str], num_bits: int | Column) -> tuple[Column, Column]:
@@ -218,7 +203,6 @@ def pruned_left_anti(
     key_cols: list[str],
     num_bits: int | str = "auto",
     num_hashes: int = DEFAULT_NUM_HASHES,
-    batch_count: int | None = None,
 ) -> DataFrame:
     """``target LEFT ANTI JOIN batch USING key_cols`` with Bloom pruning.
 
@@ -230,10 +214,8 @@ def pruned_left_anti(
 
     ``num_bits`` defaults to ``"auto"`` (r16): sized from the batch's key
     count (resolve_num_bits) so build/probe use one consistent size.
-    ``batch_count`` lets a caller that already knows the batch size skip
-    the sizing count job entirely (ADVICE r16).
     """
-    num_bits = resolve_num_bits(batch, num_bits, batch_count)
+    num_bits = resolve_num_bits(batch, num_bits)
     bf = bloom_build(batch, key_cols, num_bits, num_hashes)
     tagged = target.crossJoin(F.broadcast(bf)).withColumn(
         "__bf_maybe",

@@ -19,12 +19,10 @@ across engines (the DuckDB oracle mirrors them byte-for-byte).
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._cache import persist_tracked
+from ._cache import memo, persist_tracked
 
 # ----------------------------------------------------------------------
 # Exact dedup
@@ -48,9 +46,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy("content_hash")
         .agg(F.count("*").alias("dup_count"), F.min("__id").alias("canonical_id"))
     )
-
-
-_SPREAD_MEMO: "WeakKeyDictionary[DataFrame, int]" = WeakKeyDictionary()
 
 
 def spread_degenerate_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -80,19 +75,17 @@ def spread_degenerate_scan(df: DataFrame, key_col: str) -> DataFrame:
     if df.isStreaming:
         return df
     n = df.sparkSession.sparkContext.defaultParallelism
-    nparts = _SPREAD_MEMO.get(df)
-    if nparts is None:
+
+    def _nparts() -> int:
         try:
-            nparts = df.rdd.getNumPartitions()
+            return df.rdd.getNumPartitions()
         except Exception:
-            nparts = n  # unknown → leave the frame alone
-        _SPREAD_MEMO[df] = nparts
+            return n  # unknown → leave the frame alone
+
+    nparts = memo(df, ("spread_nparts",), _nparts)
     if nparts < max(2, n // 4):
         return df.repartition(n, F.col(key_col))
     return df
-
-
-_LW_SKEW_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
 
 
 def _hashable_cols(df: DataFrame) -> list[str]:
@@ -147,31 +140,24 @@ def latest_wins(
       deterministic whole-row salt splits each key over ``n_salts`` tasks,
       winners reduce in a second tiny window. Identical rows to ``window``
       whenever ``order_cols`` is a total order (pinned by test_skew).
-    - ``None`` → ``spark.graft.dedup.latestWinsMode`` (auto|window|salted,
-      default auto): ONE exact keyed-count probe pass (memoized per
+    - ``None`` or ``auto``: ONE exact keyed-count probe pass (memoized per
       (frame, params) — see _lw_probe for why sampling doesn't pay here)
       takes ``salted`` when the hottest key holds more than
       ``skew_threshold`` of rows. Callers with an expensive uncached
       upstream should persist it first: the probe is a second evaluation.
     """
-    spark = df.sparkSession
-    if mode is None:
-        mode = spark.conf.get("spark.graft.dedup.latestWinsMode", "auto")
+    mode = "auto" if mode is None else mode
     if mode not in ("auto", "window", "salted"):
-        raise ValueError(f"unknown latestWinsMode {mode!r}")
+        raise ValueError(f"unknown latest_wins mode {mode!r}")
     if mode == "auto":
-        per = _LW_SKEW_MEMO.get(df)
-        key = (tuple(key_cols), skew_threshold)
-        if per is not None and key in per:
-            skewed = per[key]
-        else:
+
+        def _skewed() -> bool:
             probe = _lw_probe(df, key_cols)
-            skewed = bool(
+            return bool(
                 probe and probe["tot"] and probe["mx"] / probe["tot"] > skew_threshold
             )
-            if per is None:
-                per = _LW_SKEW_MEMO.setdefault(df, {})
-            per[key] = skewed
+
+        skewed = memo(df, ("lw_skew", tuple(key_cols), skew_threshold), _skewed)
         mode = "salted" if skewed else "window"
     if mode == "salted":
         from .skew import salted_latest_per_key

@@ -39,10 +39,10 @@ ADC scan PQ exists to make cheap.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._cache import memo
 
 PQ_M = 8  # subspaces
 PQ_DSUB = 8  # dims per subspace (m · dsub = 64, the corpus dim)
@@ -79,29 +79,6 @@ def _d2(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
-#: collected-codebook memo (the ivf_assign _CENT_MEMO pattern): keyed by the
-#: codebook DataFrame object; entries die with their frame / session.
-_CB_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
-
-#: training-artifact memo (the kmeans_centroids precedent): PQ is
-#: train-once/encode-forever (fold_pq_codes docstring), so the sampled and
-#: trained codebooks — and ivf_pq_topk's residual frame, whose object
-#: identity keys the trained-codebook memo — are per-(input frame, params)
-#: session state, never per plan build. Query RESULTS are never memoized.
-_PQ_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
-
-
-def _df_memo(df: DataFrame, key: tuple, build):
-    per = _PQ_MEMO.get(df)
-    if per is not None and key in per:
-        return per[key]
-    out = build()
-    if per is None:
-        per = _PQ_MEMO.setdefault(df, {})
-    per[key] = out
-    return out
-
-
 def _collect_codebook(codebook: DataFrame) -> dict:
     """Collect a (s, j, cbv) codebook into {s: (j_sorted int32 array,
     codeword matrix float64 K×dsub)} for the encode kernel. The table is
@@ -111,22 +88,20 @@ def _collect_codebook(codebook: DataFrame) -> dict:
     shape pagerank / kmeans already have). Memoized per DataFrame object."""
     import numpy as np
 
-    packed = _CB_MEMO.get(codebook)
-    if packed is not None:
+    def _pack() -> dict:
+        by_s: dict = {}
+        for r in codebook.select("s", "j", "cbv").collect():
+            by_s.setdefault(r[0], []).append((r[1], list(r[2])))
+        packed = {}
+        for s, lst in by_s.items():
+            lst.sort(key=lambda t: t[0])
+            packed[s] = (
+                np.array([t[0] for t in lst], dtype=np.int32),
+                np.array([t[1] for t in lst], dtype=np.float64),
+            )
         return packed
-    rows = codebook.select("s", "j", "cbv").collect()
-    by_s: dict = {}
-    for r in rows:
-        by_s.setdefault(r[0], []).append((r[1], list(r[2])))
-    packed = {}
-    for s, lst in by_s.items():
-        lst.sort(key=lambda t: t[0])
-        packed[s] = (
-            np.array([t[0] for t in lst], dtype=np.int32),
-            np.array([t[1] for t in lst], dtype=np.float64),
-        )
-    _CB_MEMO[codebook] = packed
-    return packed
+
+    return memo(codebook, ("packed_codebook",), _pack)
 
 
 def _pq_nearest(vmat, packed):
@@ -198,7 +173,7 @@ def pq_codebook(df: DataFrame, id_col: str, vec_col: str, k: int = PQ_K) -> Data
             "s", "j", F.col("sv").alias("cbv")
         )
 
-    return _df_memo(df, ("cb", id_col, vec_col, k), _build)
+    return memo(df, ("pq_codebook", id_col, vec_col, k), _build)
 
 
 def pq_codebook_trained(
@@ -232,31 +207,26 @@ def pq_codebook_trained(
     chain. Fixed ``iters`` keeps the oracle mirrorable (generated CTE per
     round). Memoized per (input frame, params): training is eager jobs
     now, and PQ deployment semantics are train-once/encode-forever."""
-    memo_key = ("cbt", id_col, vec_col, k, iters, round_scale)
-    per = _PQ_MEMO.get(df)
-    if per is not None and memo_key in per:
-        return per[memo_key]
 
-    cb = pq_codebook(df, id_col, vec_col, k)
-    vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
-    if iters > 1:
-        # each Lloyd round is an eager job over the vectors; persist the
-        # training input across rounds (released in the finally below even
-        # if a round fails — ADVICE r12: eager collect jobs run between
-        # persist and unpersist, so an exception leaked the cache for the
-        # session) — real PQ trains on a bounded sample, so this is
-        # executor-memory-sized by policy
-        vecs = vecs.persist()
-    try:
-        cb = _train_rounds(df, cb, vecs, iters, round_scale)
-    finally:
+    def _train() -> DataFrame:
+        cb = pq_codebook(df, id_col, vec_col, k)
+        vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
         if iters > 1:
-            vecs.unpersist()
-    out = _literal_codebook(df.sparkSession, cb)
-    if per is None:
-        per = _PQ_MEMO.setdefault(df, {})
-    per[memo_key] = out
-    return out
+            # each Lloyd round is an eager job over the vectors; persist the
+            # training input across rounds (released in the finally below
+            # even if a round fails — ADVICE r12: eager collect jobs run
+            # between persist and unpersist, so an exception leaked the
+            # cache for the session) — real PQ trains on a bounded sample,
+            # so this is executor-memory-sized by policy
+            vecs = vecs.persist()
+        try:
+            cb = _train_rounds(df, cb, vecs, iters, round_scale)
+        finally:
+            if iters > 1:
+                vecs.unpersist()
+        return _literal_codebook(df.sparkSession, cb)
+
+    return memo(df, ("pq_trained", id_col, vec_col, k, iters, round_scale), _train)
 
 
 def _train_rounds(df, cb, vecs, iters, round_scale):
@@ -340,7 +310,7 @@ def _train_rounds(df, cb, vecs, iters, round_scale):
 def _literal_codebook(spark, cb: DataFrame) -> DataFrame:
     """Collect a codebook and rebuild it as a LocalTableScan (values
     unchanged — the collected doubles round-trip exactly), registering the
-    packed form in _CB_MEMO so kernels never re-collect it."""
+    packed form in its memo so kernels never re-collect it."""
     final = _collect_codebook(cb)
     lit_rows = [
         (int(s), int(j), [float(x) for x in cw])
@@ -348,7 +318,7 @@ def _literal_codebook(spark, cb: DataFrame) -> DataFrame:
         for j, cw in zip(final[s][0], final[s][1])
     ]
     out = spark.createDataFrame(lit_rows, "s int, j int, cbv array<double>")
-    _CB_MEMO[out] = final
+    memo(out, ("packed_codebook",), lambda: final)
     return out
 
 
@@ -539,8 +509,8 @@ def ivf_pq_topk(
     Centroid freeze (ADVICE r13): label_centroids collects and memoizes
     centroids per corpus DataFrame object at first plan build — executions
     against the same frame over mutated underlying files reuse the stale
-    centroids. Re-``load_table`` or call ``similarity.invalidate_centroids``
-    for long-lived sessions over mutable storage (see ivf_topk).
+    centroids. Re-``load_table`` or call ``_cache.forget(corpus)`` for
+    long-lived sessions over mutable storage (see ivf_topk).
     """
     from .similarity import ivf_assign, label_centroids, probe_cells
 
@@ -561,9 +531,7 @@ def ivf_pq_topk(
             ).alias("rvec"),
         )
 
-    resid = _df_memo(
-        corpus, ("resid", id_col, vec_col, label_col), _build_resid
-    )
+    resid = memo(corpus, ("pq_resid", id_col, vec_col, label_col), _build_resid)
     # pq_encode always emits the id as 'vec_id' — normalize the cell lookup
     # (and every downstream reference) to that name, or any non-default
     # id_col raises AnalysisException (ADVICE r6). r12: `cell` rides the

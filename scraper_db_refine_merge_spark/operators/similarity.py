@@ -17,10 +17,11 @@ lets an external oracle reproduce it.
 from __future__ import annotations
 
 import hashlib
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._cache import memo
 
 
 def _to_double(arr: Column) -> Column:
@@ -148,51 +149,12 @@ def _plane_component_value(plane: int, d: int) -> float:
     return (h / float(2**32)) * 2.0 - 1.0
 
 
-# detect_fixed_dim memo, keyed by DataFrame OBJECT identity (r11): the
-# probe is a real Spark job (~0.25 s at sf0.1), and the hot callers (q55
-# per bench build, every lsh_topk) pass the per-session load_table frame —
-# the SAME object each time, so the job runs once per session instead of
-# once per plan construction. Frames built ad hoc simply miss (new object)
-# and entries die with their frames. Same static-tables-per-session
-# contract as the load_table memo (sources/tables.py).
-_DIM_MEMO: "WeakKeyDictionary[DataFrame, dict[str, int | None]]" = WeakKeyDictionary()
-
-#: ivf_assign's collected-centroid memo (see its docstring): keyed by the
-#: centroid DataFrame object, entries die with it.
-_CENT_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
-
-#: label_centroids result memo (see its docstring): keyed by the input
-#: DataFrame object; entries die with their frame / session.
-_LC_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
-
-
-def invalidate_centroids(df: DataFrame | None = None) -> None:
-    """Drop memoized centroid state (ADVICE r13): label_centroids collects
-    and FREEZES centroids at first plan build per corpus DataFrame object —
-    long-lived sessions whose underlying files mutate call this (or
-    re-``load_table`` for a fresh frame) to force a re-train. ``df=None``
-    clears every memoized corpus; passing the corpus frame clears just
-    its entries (its derived literal centroid frames die with them)."""
-    if df is None:
-        _LC_MEMO.clear()
-    else:
-        _LC_MEMO.pop(df, None)
-
-
-#: corpus_count memo — same object-identity contract as _DIM_MEMO.
-_COUNT_MEMO: "WeakKeyDictionary[DataFrame, int]" = WeakKeyDictionary()
-
-
 def corpus_count(df: DataFrame) -> int:
     """``df.count()`` memoized per DataFrame object (the detect_fixed_dim
     contract: per-session static tables hit, ad-hoc frames miss, entries
     die with their frame). Feeds the adaptive-width policy — one count job
     per corpus frame per session, not per plan build."""
-    n = _COUNT_MEMO.get(df)
-    if n is None:
-        n = df.count()
-        _COUNT_MEMO[df] = n
-    return n
+    return memo(df, ("count",), df.count)
 
 
 def detect_fixed_dim(df: DataFrame, vec_col: str) -> int | None:
@@ -200,19 +162,24 @@ def detect_fixed_dim(df: DataFrame, vec_col: str) -> int | None:
     None. One narrow agg over the (pruned) vector column — memoized per
     (DataFrame object, column), and it licenses the literal-plane fast
     path below (which is only value-identical for vectors of exactly that
-    length)."""
-    per = _DIM_MEMO.get(df)
-    if per is not None and vec_col in per:
-        return per[vec_col]
-    row = df.agg(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
-    ).first()
-    dim = None
-    if row is not None and row["lo"] is not None and row["lo"] == row["hi"]:
-        dim = int(row["lo"])
-    _DIM_MEMO.setdefault(df, {})[vec_col] = dim
-    return dim
+    length).
+
+    Memoized on DataFrame OBJECT identity (r11): the probe is a real Spark
+    job (~0.25 s at sf0.1), and the hot callers (q55 per bench build, every
+    lsh_topk) pass the per-session load_table frame — the SAME object each
+    time, so the job runs once per session instead of once per plan
+    construction. Frames built ad hoc simply miss (new object)."""
+
+    def _probe() -> int | None:
+        row = df.agg(
+            F.min(F.size(F.col(vec_col))).alias("lo"),
+            F.max(F.size(F.col(vec_col))).alias("hi"),
+        ).first()
+        if row is not None and row["lo"] is not None and row["lo"] == row["hi"]:
+            return int(row["lo"])
+        return None
+
+    return memo(df, ("dim", vec_col), _probe)
 
 
 #: Plane-index stride per table in ADAPTIVE mode (also the adaptive width
@@ -440,13 +407,20 @@ def label_centroids(
     precedent: :func:`ivf_assign` collects the centroid table (r12), so
     without the memo every ivf_topk plan BUILD re-runs the corpus-wide
     centroid aggregation job for an identical result (q43: 0.7 s/build).
-    Returning the SAME DataFrame object also lets ivf_assign's _CENT_MEMO
-    reuse the collected rows. Static-inputs caveat as load_table's memo.
+    Returning the SAME DataFrame object also lets ivf_assign's collected-
+    rows memo hit. Static-inputs caveat as load_table's memo; a caller over
+    mutating files calls ``_cache.forget(df)`` to force a re-train.
     """
-    per = _LC_MEMO.get(df)
-    memo_key = (vec_col, label_col, scale)
-    if per is not None and memo_key in per:
-        return per[memo_key]
+    return memo(
+        df,
+        ("label_centroids", vec_col, label_col, scale),
+        lambda: _label_centroids_literal(df, vec_col, label_col, scale),
+    )
+
+
+def _label_centroids_literal(
+    df: DataFrame, vec_col: str, label_col: str, scale: int
+) -> DataFrame:
     built = _label_centroids_build(df, vec_col, label_col, scale)
     # r13 (VERDICT r12 item 2): LITERAL-ize (the pq._literal_codebook
     # pattern). The table is broadcast-sized by construction and the
@@ -459,10 +433,7 @@ def label_centroids(
     rows = built.select(label_col, "centroid").collect()
     out = df.sparkSession.createDataFrame(rows, built.schema)
     rows.sort(key=lambda r: r[0])
-    _CENT_MEMO.setdefault(out, {})[label_col] = rows
-    if per is None:
-        per = _LC_MEMO.setdefault(df, {})
-    per[memo_key] = out
+    memo(out, ("centroid_rows", label_col), lambda: rows)
     return out
 
 
@@ -489,15 +460,13 @@ def _collect_centroids(centroids: DataFrame, label_col: str) -> list:
     DataFrame object (the table is broadcast-sized by construction: label
     cardinality for label_centroids, k for kmeans_centroids). Shared by
     the assign kernel closure and the probe-selection expression."""
-    per = _CENT_MEMO.get(centroids)
-    if per is not None and label_col in per:
-        return per[label_col]
-    rows = centroids.select(F.col(label_col), F.col("centroid")).collect()
-    rows.sort(key=lambda r: r[0])
-    if per is None:
-        per = _CENT_MEMO.setdefault(centroids, {})
-    per[label_col] = rows
-    return rows
+
+    def _collect() -> list:
+        rows = centroids.select(F.col(label_col), F.col("centroid")).collect()
+        rows.sort(key=lambda r: r[0])
+        return rows
+
+    return memo(centroids, ("centroid_rows", label_col), _collect)
 
 
 def ivf_assign(
@@ -614,42 +583,39 @@ def _probe_selected_col(
     column is query-independent, and building its nested lambdas costs
     ~0.35 s of py4j round-trips per plan build otherwise. Returns None
     when the cells can't be rendered as a SQL literal."""
-    per = _CENT_MEMO.setdefault(cent, {})
-    key = ("probe_sel", label_col, nprobe, round_scale)
-    if key in per:
-        return per[key]
-    cells_col = _cells_literal_col(cent, rows, label_col)
-    if cells_col is None:
-        per[key] = None
-        return None
-    scored = F.transform(
-        cells_col,
-        lambda c: F.struct(
-            c["cell"].alias("cell"),
-            c["centroid"].alias("centroid"),
-            F.round(cosine(F.col("__qvec"), c["centroid"]), round_scale).alias("sim"),
-        ),
-    )
 
-    def _better(o, c):
-        # the (sim DESC NULLS LAST, cell ASC) total order as a strict
-        # comparator; Spark's >/= are NaN-greatest, matching desc()
-        return (
-            F.when(o["sim"].isNull() & c["sim"].isNull(), o["cell"] < c["cell"])
-            .when(o["sim"].isNull(), F.lit(False))
-            .when(c["sim"].isNull(), F.lit(True))
-            .when(o["sim"] > c["sim"], F.lit(True))
-            .when(o["sim"] == c["sim"], o["cell"] < c["cell"])
-            .otherwise(F.lit(False))
+    def _build():
+        cells_col = _cells_literal_col(cent, rows, label_col)
+        if cells_col is None:
+            return None
+        scored = F.transform(
+            cells_col,
+            lambda c: F.struct(
+                c["cell"].alias("cell"),
+                c["centroid"].alias("centroid"),
+                F.round(cosine(F.col("__qvec"), c["centroid"]), round_scale).alias("sim"),
+            ),
         )
 
-    sc2 = scored  # same expression; Catalyst subexpression-eliminates
-    selected = F.filter(
-        scored,
-        lambda c: F.size(F.filter(sc2, lambda o: _better(o, c))) < F.lit(nprobe),
-    )
-    per[key] = selected
-    return selected
+        def _better(o, c):
+            # the (sim DESC NULLS LAST, cell ASC) total order as a strict
+            # comparator; Spark's >/= are NaN-greatest, matching desc()
+            return (
+                F.when(o["sim"].isNull() & c["sim"].isNull(), o["cell"] < c["cell"])
+                .when(o["sim"].isNull(), F.lit(False))
+                .when(c["sim"].isNull(), F.lit(True))
+                .when(o["sim"] > c["sim"], F.lit(True))
+                .when(o["sim"] == c["sim"], o["cell"] < c["cell"])
+                .otherwise(F.lit(False))
+            )
+
+        sc2 = scored  # same expression; Catalyst subexpression-eliminates
+        return F.filter(
+            scored,
+            lambda c: F.size(F.filter(sc2, lambda o: _better(o, c))) < F.lit(nprobe),
+        )
+
+    return memo(cent, ("probe_sel", label_col, nprobe, round_scale), _build)
 
 
 def _cells_literal_col(cent: DataFrame, rows: list, label_col: str):
@@ -658,43 +624,39 @@ def _cells_literal_col(cent: DataFrame, rows: list, label_col: str):
     single F.expr parse per session). Returns None when a label type or a
     non-finite component can't be rendered — callers then keep the
     crossJoin+window probe plan."""
-    per = _CENT_MEMO.setdefault(cent, {})
-    key = ("cells_col", label_col)
-    if key in per:
-        return per[key]
-    lbl_t = cent.schema[label_col].dataType.simpleString()
-    structs = []
-    col = None
-    for r in rows:
-        lbl = r[0]
-        if isinstance(lbl, bool) or not isinstance(lbl, (int, str)):
-            break
-        if isinstance(lbl, str):
-            lit = "'" + lbl.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        else:
-            lit = str(lbl)
-        # a NULL centroid array, or a NULL/non-finite component (a label
-        # whose vectors are all NULL at some dim), can't be rendered —
-        # fall back to the window plan rather than crash the build
-        comps = [_sql_double(x) for x in r[1]] if r[1] is not None else [None]
-        if any(c is None for c in comps):
-            break
-        structs.append(
-            f"named_struct('cell', CAST({lit} AS {lbl_t}), "
-            f"'centroid', array({','.join(comps)}))"
-        )
-    else:
+
+    def _render():
+        lbl_t = cent.schema[label_col].dataType.simpleString()
+        structs = []
+        for r in rows:
+            lbl = r[0]
+            if isinstance(lbl, bool) or not isinstance(lbl, (int, str)):
+                return None
+            if isinstance(lbl, str):
+                lit = "'" + lbl.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            else:
+                lit = str(lbl)
+            # a NULL centroid array, or a NULL/non-finite component (a label
+            # whose vectors are all NULL at some dim), can't be rendered —
+            # fall back to the window plan rather than crash the build
+            comps = [_sql_double(x) for x in r[1]] if r[1] is not None else [None]
+            if any(c is None for c in comps):
+                return None
+            structs.append(
+                f"named_struct('cell', CAST({lit} AS {lbl_t}), "
+                f"'centroid', array({','.join(comps)}))"
+            )
         # ADVICE r13: the manual escaping above covers backslash/quote, but
         # an exotic string label (e.g. embedded control bytes the SQL lexer
         # rejects) could still fail the parse — treat a parse error as "not
         # renderable" and take the crossJoin+window fallback, like every
         # other unrenderable case, instead of crashing the plan build.
         try:
-            col = F.expr("array(" + ",".join(structs) + ")")
+            return F.expr("array(" + ",".join(structs) + ")")
         except Exception:
-            col = None
-    per[key] = col
-    return col
+            return None
+
+    return memo(cent, ("cells_col", label_col), _render)
 
 
 def probe_cells(
@@ -786,7 +748,7 @@ def ivf_topk(
     corpus DataFrame object — subsequent executions against the same frame
     reuse those centroids even if the underlying files mutate. For
     long-lived sessions over mutable storage, re-``load_table`` (a fresh
-    DataFrame object) or call :func:`invalidate_centroids` to force a
+    DataFrame object) or call ``_cache.forget(corpus)`` to force a
     re-train.
     """
     cent = label_centroids(corpus, vec_col, label_col)
@@ -875,34 +837,21 @@ def kmeans_centroids(
     re-train identical centroids per plan BUILD. Same static-inputs caveat
     as sources/tables.load_table's frame memo (a data-regenerating caller
     starts a new session, as the driver and all tools do)."""
-    from pyspark.sql import Window
 
-    per = _KM_MEMO.get(df)
-    memo_key = (id_col, vec_col, k, iters, round_scale)
-    if per is not None and memo_key in per:
-        return per[memo_key]
+    def _train() -> DataFrame:
+        key = F.md5(F.col(id_col).cast("string"))
+        seeds = df.select(
+            key.alias("__h"), F.col(id_col).alias("__sid"), F.col(vec_col)
+        ).orderBy("__h", "__sid").limit(k)
+        cents = seeds.withColumn(
+            "cell", F.row_number().over(Window.orderBy("__h", "__sid")) - 1
+        ).select("cell", F.col(vec_col).alias("centroid"))
+        for _ in range(iters):
+            assigned = ivf_assign(df, cents, id_col, vec_col, "cell", round_scale)
+            cents = label_centroids(assigned, vec_col, "cell")
+        return cents
 
-    key = F.md5(F.col(id_col).cast("string"))
-    seeds = df.select(key.alias("__h"), F.col(id_col).alias("__sid"), F.col(vec_col)).orderBy(
-        "__h", "__sid"
-    ).limit(k)
-    cents = seeds.withColumn(
-        "cell", F.row_number().over(Window.orderBy("__h", "__sid")) - 1
-    ).select("cell", F.col(vec_col).alias("centroid"))
-
-    for _ in range(iters):
-        assigned = ivf_assign(df, cents, id_col, vec_col, "cell", round_scale)
-        cents = label_centroids(assigned, vec_col, "cell")
-
-    if per is None:
-        per = _KM_MEMO.setdefault(df, {})
-    per[memo_key] = cents
-    return cents
-
-
-#: kmeans_centroids training memo (see its docstring). WeakKeyDictionary:
-#: entries die with their input DataFrame / session.
-_KM_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
+    return memo(df, ("kmeans", id_col, vec_col, k, iters, round_scale), _train)
 
 
 def brute_force_near_dup_pairs(

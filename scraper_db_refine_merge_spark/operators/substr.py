@@ -65,7 +65,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._cache import persist_tracked
+from ._cache import memo, persist_tracked
 
 
 def char_grams(
@@ -499,11 +499,6 @@ def suffix_rank_ladder(
 # --------------------------------------------------------------------------
 # occurrence profile with an automatic skew regime (r13, VERDICT r12 item 3)
 
-from weakref import WeakKeyDictionary
-
-#: probe-decision memo per (source frame → {(length, threshold, mod): bool})
-_OCC_SKEW_MEMO: "WeakKeyDictionary[DataFrame, dict]" = WeakKeyDictionary()
-
 #: keep ~1/OCC_PROBE_MOD of positions in the skew probe (row-level hash
 #: sample: a hot gram's rows thin uniformly, so its sample share estimates
 #: its true share)
@@ -558,36 +553,30 @@ def repeated_span_profile(
       — the right plan when one span dominates (exactly the corpora
       max_occ exists to profile).
 
-    ``mode=None`` reads ``spark.graft.substr.occProfileMode``
-    (auto|window|groupby, default auto). AUTO probes a ~1% row-level hash
+    ``mode=None`` means ``auto``, which probes a ~1% row-level hash
     sample of the positions (one small aggregation job, memoized per
     (source frame, params)): if the hottest sampled gram holds more than
     ``skew_threshold`` of sampled positions, take groupby. Both regimes
     produce IDENTICAL rows (the switch is observable only in the plan),
     so the oracle gate is regime-independent."""
     g = suffix_ngram_groups(df, id_col, text_col, length)
-    spark = df.sparkSession
-    if mode is None:
-        mode = spark.conf.get("spark.graft.substr.occProfileMode", "auto")
+    mode = "auto" if mode is None else mode
     if mode not in ("auto", "window", "groupby"):
-        raise ValueError(f"unknown occProfileMode {mode!r}")
+        raise ValueError(f"unknown repeated_span_profile mode {mode!r}")
     if mode == "auto":
-        per = _OCC_SKEW_MEMO.get(df)
-        key = (length, skew_threshold, OCC_PROBE_MOD, id_col, text_col)
-        if per is not None and key in per:
-            skewed = per[key]
-        else:
+
+        def _skewed() -> bool:
             probe = _occ_probe(g, OCC_PROBE_MOD)
             if probe is None or not probe["tot"] or probe["tot"] < OCC_PROBE_MIN_ROWS:
                 # sample too small to resolve the threshold → exact probe
                 # (bounded: the corpus is ≲ mod × min_rows positions)
                 probe = _occ_probe(g, 1)
-            skewed = bool(
+            return bool(
                 probe and probe["tot"] and probe["mx"] / probe["tot"] > skew_threshold
             )
-            if per is None:
-                per = _OCC_SKEW_MEMO.setdefault(df, {})
-            per[key] = skewed
+
+        key = ("occ_skew", length, skew_threshold, OCC_PROBE_MOD, id_col, text_col)
+        skewed = memo(df, key, _skewed)
         mode = "groupby" if skewed else "window"
 
     if mode == "window":

@@ -14,10 +14,11 @@ import os
 import shutil
 import tempfile
 import uuid
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators._cache import memo
 
 TABLE_NAMES = (
     "region",
@@ -108,43 +109,30 @@ def normalize_events(spark: SparkSession, sf_dir: str) -> str:
 # round-trip plus a footer/schema resolution — ~60 ms each, and the star
 # queries load five tables per build. DataFrames are immutable lazy plans,
 # so handing every caller the same object per (session, dir, table) is
-# semantically free; entries die with their session (WeakKeyDictionary).
+# semantically free; entries die with their session (operators/_cache.memo).
 # The test tables are static for a process lifetime; a data-regenerating
 # caller starts a new session (as the driver and all tools do).
-_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    per = _MEMO.get(spark)
-    if per is None:
-        per = _MEMO.setdefault(spark, {})
     # The env toggle is part of the memo key (ADVICE r10): flipping
     # SPARK_GRAFT_EVENTS_CACHE mid-session takes effect on the next call
     # instead of being silently shadowed by the first load's decision.
     cache_on = name == "events" and os.environ.get("SPARK_GRAFT_EVENTS_CACHE", "1") != "0"
-    key = (os.path.abspath(sf_dir), name, cache_on)
-    df = per.get(key)
-    if df is not None:
-        return df
-    if name == "events":
-        src = os.path.join(sf_dir, f"{name}.parquet")
-        if cache_on:
-            try:
-                df = spark.read.parquet(normalize_events(spark, sf_dir))
-            except Exception:
-                # Cache unavailable (read-only tmp, concurrent-writer race):
-                # serve the raw path NOW but do NOT memoize it — a transient
-                # failure must not pin the slower plan for the whole
-                # session; the next call retries the normalized cache.
-                return _load_events_raw(spark, src)
-        else:
-            df = _load_events_raw(spark, src)
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    per[key] = df
-    return df
+    key = ("table", os.path.abspath(sf_dir), name, cache_on)
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    if name != "events":
+        return memo(spark, key, lambda: spark.read.parquet(src))
+    if not cache_on:
+        return memo(spark, key, lambda: _load_events_raw(spark, src))
+    try:
+        return memo(spark, key, lambda: spark.read.parquet(normalize_events(spark, sf_dir)))
+    except Exception:
+        # Cache unavailable (read-only tmp, concurrent-writer race): serve
+        # the raw path NOW but do NOT memoize it — a transient failure must
+        # not pin the slower plan for the whole session; the next call
+        # retries the normalized cache.
+        return _load_events_raw(spark, src)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -160,9 +148,6 @@ def ensure_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> di
     session can hold views over several SF dirs (gen_recall, scale_smoke);
     registration happens once per (session, dir, table). Returns
     {table_name: view_name} for ``str.format``-ing into the SQL."""
-    per = _MEMO.get(spark)
-    if per is None:
-        per = _MEMO.setdefault(spark, {})
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     out = {}
     for name in names:
@@ -172,9 +157,11 @@ def ensure_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> di
         # SPARK_GRAFT_EVENTS_CACHE shadowing load_table itself fixed.
         cache_on = name == "events" and os.environ.get("SPARK_GRAFT_EVENTS_CACHE", "1") != "0"
         view = f"{name}_v{tag}" + ("" if cache_on or name != "events" else "_raw")
-        key = ("__view__", os.path.abspath(sf_dir), name, cache_on)
-        if key not in per:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-            per[key] = view
-        out[name] = per[key]
+        key = ("view", os.path.abspath(sf_dir), name, cache_on)
+        out[name] = memo(spark, key, lambda: _register_view(spark, sf_dir, name, view))
     return out
+
+
+def _register_view(spark: SparkSession, sf_dir: str, name: str, view: str) -> str:
+    load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+    return view

@@ -163,20 +163,26 @@ def test_derived_size_probe_is_false_not_null_on_null_words(spark):
     assert sorted((r["k"], r["hit"]) for r in got) == [("a", False), ("b", False)]
 
 
-def test_resolve_num_bits_memo_and_batch_count(spark):
+def test_resolve_num_bits_memo_starts_no_second_job(spark):
     """ADVICE r16: identical batch LINEAGE resolves without a second count
     job (semantic-hash memo — fresh select() objects per call, as
-    merge_upsert builds them), and a caller-supplied batch_count skips the
-    count entirely."""
-    from scraper_db_refine_merge_spark.operators.bloom import (
-        _AUTO_MIN_BITS,
-        resolve_num_bits,
-    )
+    merge_upsert builds them)."""
+    from scraper_db_refine_merge_spark.operators.bloom import resolve_num_bits
 
-    base = spark.range(70_000).select(F.col("id").alias("k"))
-    a = resolve_num_bits(base.select("k"), "auto")
-    # fresh, semantically identical frame: must hit the memo (same size)
-    b = resolve_num_bits(base.select("k"), "auto")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test_resolve_num_bits_memo"
+    base = spark.range(70_013).select(F.col("id").alias("k"))
+    sc.setJobGroup(group, "bloom sizing memo")
+    try:
+        a = resolve_num_bits(base.select("k"), "auto")
+        first_jobs = set(tracker.getJobIdsForGroup(group))
+        # fresh, semantically identical frame: must hit the memo
+        b = resolve_num_bits(base.select("k"), "auto")
+        second_jobs = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert first_jobs  # the first call sized the batch with a count job
+    assert second_jobs == first_jobs
     assert a == b
-    # supplied count: no job, sized from the argument
-    assert resolve_num_bits(base.select("k"), "auto", batch_count=10) == _AUTO_MIN_BITS

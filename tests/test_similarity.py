@@ -142,6 +142,27 @@ def test_detect_fixed_dim_and_bucket_path_parity(spark):
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, dyn.collect()))
 
 
+def test_forget_drops_only_the_named_frames_memos(spark):
+    """``_cache.forget(corpus)`` drops the frame's memos: the next
+    label_centroids call re-trains (a new frame, equal rows), while a frame
+    the call did not name keeps its entries."""
+    from scraper_db_refine_merge_spark.operators._cache import forget
+    from scraper_db_refine_merge_spark.operators.similarity import label_centroids
+
+    schema = "vec_id long, embedding array<double>, label string"
+    rows = [(1, [1.0, 0.0], "a"), (2, [0.8, 0.2], "a"), (3, [0.0, 1.0], "b")]
+    corpus = spark.createDataFrame(rows, schema)
+    other = spark.createDataFrame(rows[1:], schema)
+    cent = label_centroids(corpus)
+    other_cent = label_centroids(other)
+    assert label_centroids(corpus) is cent  # memo hit
+
+    forget(corpus)
+    fresh = label_centroids(corpus)
+    assert fresh is not cent
+    assert sorted(map(tuple, fresh.collect())) == sorted(map(tuple, cent.collect()))
+    assert label_centroids(other) is other_cent
+
 @pytest.mark.slow
 def test_lsh_topk_ragged_query_uses_dynamic_buckets(spark):
     """ADVICE r4 (medium): with a uniform-dim corpus and a query of a

@@ -6,19 +6,24 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
+from scraper_db_refine_merge_spark.operators._cache import forget, memo
 from scraper_db_refine_merge_spark.sources import tables
 
 
-def _memo_keys(spark, sf_dir):
-    per = tables._MEMO.get(spark) or {}
-    return {k for k in per if k[0] == os.path.abspath(sf_dir) and k[1] == "events"}
+def _memoized_events(spark, sf_dir, cache_on):
+    """The session's memoized events frame for one toggle value; raises
+    LookupError when there is none (a raising build stores nothing)."""
+
+    def missing():
+        raise LookupError(cache_on)
+
+    return memo(spark, ("table", os.path.abspath(sf_dir), "events", cache_on), missing)
 
 
 def test_events_cache_failure_not_memoized(spark, sf_dir, monkeypatch):
-    per = tables._MEMO.setdefault(spark, {})
-    for k in list(per):
-        if k[1] == "events":
-            del per[k]
+    forget(spark)
 
     def boom(s, d):
         raise OSError("transient: read-only tmp")
@@ -27,15 +32,18 @@ def test_events_cache_failure_not_memoized(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_EVENTS_CACHE", "1")
     df = tables.load_table(spark, sf_dir, "events")
     assert df.count() > 0  # raw fallback served the call
-    assert not _memo_keys(spark, sf_dir)  # ...but was NOT memoized
+    for cache_on in (True, False):  # ...but was NOT memoized
+        with pytest.raises(LookupError):
+            _memoized_events(spark, sf_dir, cache_on)
 
     # failure gone -> the very next call retries and memoizes the cache path
     monkeypatch.undo()
     monkeypatch.setenv("SPARK_GRAFT_EVENTS_CACHE", "1")
     df2 = tables.load_table(spark, sf_dir, "events")
     assert df2.count() == df.count()
-    keys = _memo_keys(spark, sf_dir)
-    assert keys and all(k[2] is True for k in keys)
+    assert _memoized_events(spark, sf_dir, True) is df2
+    with pytest.raises(LookupError):
+        _memoized_events(spark, sf_dir, False)
 
 
 def test_ensure_views_memoized_and_dir_scoped(spark, sf_dir):
@@ -58,8 +66,9 @@ def test_events_cache_env_toggle_in_memo_key(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_EVENTS_CACHE", "1")
     cached = tables.load_table(spark, sf_dir, "events")
     # distinct memo entries per toggle value; same values either way
-    keys = _memo_keys(spark, sf_dir)
-    assert {k[2] for k in keys} >= {False, True}
+    assert _memoized_events(spark, sf_dir, False) is raw
+    assert _memoized_events(spark, sf_dir, True) is cached
+    assert raw is not cached
     assert raw.count() == cached.count()
 
 
