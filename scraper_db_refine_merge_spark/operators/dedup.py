@@ -88,92 +88,14 @@ def spread_degenerate_scan(df: DataFrame, key_col: str) -> DataFrame:
     return df
 
 
-def _hashable_cols(df: DataFrame) -> list[str]:
-    """Columns Spark's hash functions accept (maps — incl. nested in
-    structs/arrays — are unhashable)."""
-    return [
-        f.name
-        for f in df.schema.fields
-        if "map<" not in f.dataType.simpleString()
-    ]
-
-
-def _lw_probe(df: DataFrame, key_cols: list[str]):
-    """(hottest key's rows, total rows) — ONE exact aggregation pass.
-
-    Unlike the substr position probe (where positions ≫ rows and a hash
-    sample cuts real work), a row sample here still scans the full
-    upstream and only thins the map-side combine — and a sample too small
-    to resolve the threshold would force a second, exact pass over the
-    same (possibly expensive, uncached) upstream plan. One exact
-    keyed-count pass costs the scan once and shuffles only (key, count)
-    partials; the decision is memoized per frame."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count("*").alias("__n"))
-        .agg(F.max("__n").alias("mx"), F.sum("__n").alias("tot"))
-        .first()
-    )
-
-
-def latest_wins(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[Column],
-    mode: str | None = None,
-    skew_threshold: float = 0.10,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Keep the newest row per business key (SURVEY W3/J4: upsert latest-wins,
-    reference database/data_migration.py:133-139). ``order_cols`` must
-    include a unique tie-break for determinism.
-
-    TWO REGIMES (r14, VERDICT r13 item 6 — the repeated_span_profile
-    treatment applied to W3): a bare ``row_number`` window funnels a hot
-    key's ENTIRE row set through one task (AQE does not split window
-    partitions), so a caller handing this a key where 10% of a corpus is
-    "unknown" built a straggler. ``mode``:
-
-    - ``window`` — the single-window plan (one exchange, no join): right
-      when keys are well distributed;
-    - ``salted`` — two-phase via :func:`skew.salted_latest_per_key`: a
-      deterministic whole-row salt splits each key over ``n_salts`` tasks,
-      winners reduce in a second tiny window. Identical rows to ``window``
-      whenever ``order_cols`` is a total order (pinned by test_skew).
-    - ``None`` or ``auto``: ONE exact keyed-count probe pass (memoized per
-      (frame, params) — see _lw_probe for why sampling doesn't pay here)
-      takes ``salted`` when the hottest key holds more than
-      ``skew_threshold`` of rows. Callers with an expensive uncached
-      upstream should persist it first: the probe is a second evaluation.
+def latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list[Column]) -> DataFrame:
+    """W3 latest-wins for any order (SURVEY W3/J4, reference
+    database/data_migration.py:133-139): the first row per business key
+    under ``order_cols``, by one ``row_number`` window. The order must be
+    total (end in a unique tie-break) for a deterministic winner. The
+    window sorts each key's rows in one task, so a hot key is one long
+    task; for an all-DESC order :func:`latest_wins_agg` avoids that.
     """
-    mode = "auto" if mode is None else mode
-    if mode not in ("auto", "window", "salted"):
-        raise ValueError(f"unknown latest_wins mode {mode!r}")
-    if mode == "auto":
-
-        def _skewed() -> bool:
-            probe = _lw_probe(df, key_cols)
-            return bool(
-                probe and probe["tot"] and probe["mx"] / probe["tot"] > skew_threshold
-            )
-
-        skewed = memo(df, ("lw_skew", tuple(key_cols), skew_threshold), _skewed)
-        mode = "salted" if skewed else "window"
-    if mode == "salted":
-        from .skew import salted_latest_per_key
-
-        # whole-row salt: identical rows are interchangeable under a total
-        # order, so same-salt collisions are harmless. Map-typed columns
-        # are unhashable in Spark — exclude them (and the keys, constant
-        # within a partition) from the salt; if nothing hashable remains,
-        # the salt degenerates to one bucket, which is just the window
-        # plan with an extra no-op reduction (still correct).
-        salt_from = [
-            c for c in _hashable_cols(df) if c not in key_cols
-        ] or list(key_cols)
-        return salted_latest_per_key(
-            df, key_cols, order_cols, salt_from=salt_from, n_salts=n_salts
-        )
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
@@ -200,14 +122,11 @@ def latest_wins_agg(
       partial pass) but pays TWO full local sorts (pre- and post-exchange)
       plus the Window machinery where this plan does one O(n) hash pass;
     - skew needs no probe and no salt: a hot key collapses to one row per
-      map task before the shuffle — finer-grained than any explicit
-      ``n_salts``, so the two-phase salted plan (two shuffles) and the
-      keyed-count probe pass of ``latest_wins(mode="auto")`` are both
-      subsumed for this ordering shape.
+      map task before the shuffle, a finer split than any explicit salt.
 
-    Column order and names are preserved. For mixed-direction orders keep
-    :func:`latest_wins` (windows express arbitrary SortOrders; inverting an
-    ASC tie-break inside ``max_by`` would need type-specific negation).
+    Column order and names are preserved. For other orders use
+    :func:`latest_per_key` (windows express arbitrary SortOrders; inverting
+    an ASC tie-break inside ``max_by`` would need type-specific negation).
     """
     payload = [c for c in df.columns if c not in key_cols]
     ordk = F.struct(*[F.col(c) for c in desc_cols])

@@ -3,21 +3,22 @@
 The reference's merge layer is Mongo bulk ``UpdateOne(upsert=True)`` keyed by
 event_id (data_migration.py:102-158, etl_sqlite_to_mongo.py:129-164,
 scrapers_v2/utils.py:94-180). Here a merge is latest-wins within the batch
-(W3, ``row_number`` over the key — mandatory before any MERGE to avoid a
-nondeterministic multi-match, SURVEY §7 hard-part 5), then left-anti +
-union against the target.
+(W3, ``dedup.latest_per_key``'s ``row_number`` over the key — mandatory
+before any MERGE to avoid a nondeterministic multi-match, SURVEY §7
+hard-part 5), then left-anti + union against the target.
 
 Each table shape commits through exactly one protocol:
 
-- PLAIN-DIRECTORY tables — the whole-table ``merge_upsert`` here,
-  ``rollup.fold_rollup`` and ``layout.compact``. These stay plain parquet
-  directories because their readers scan the path directly (streaming
-  consumers, report queries, benchmarks). They commit by staging the new
-  table beside the target and swapping it in with two renames
-  (``swap_plain_table``). The one unsafe moment — a crash between the two
-  renames, which leaves no table at the path — is repaired by the next
-  writer on entry (``recover_plain_table``): it renames the lone backup
-  back and drops stale staging directories before reading the table.
+- PLAIN-DIRECTORY tables — the whole-table ``merge_upsert`` and
+  ``insert_if_absent`` here, ``rollup.fold_rollup`` and
+  ``layout.compact``. These stay plain parquet directories because their
+  readers scan the path directly (streaming consumers, report queries,
+  benchmarks). They commit by staging the new table beside the target
+  and swapping it in with two renames (``swap_plain_table``). The one
+  unsafe moment — a crash between the two renames, which leaves no table
+  at the path — is repaired by the next writer on entry
+  (``recover_plain_table``): it renames the lone backup back and drops
+  stale staging directories before reading the table.
 - VERSIONED tables — ``merge_upsert_partitioned`` here and every
   streaming/store.py store. They commit through the store's CAS commit
   log (``_commits/c-<seq>``, exclusive create; see streaming/store.py):
@@ -40,9 +41,11 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .dedup import latest_per_key
 
 
 @dataclass
@@ -57,30 +60,9 @@ class MergeStats:
     target_rows_after: int
 
 
-def latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list[Column]) -> DataFrame:
-    """W3: newest row per business key; order must be a total order."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def _kept_rows(
-    target: DataFrame, deduped: DataFrame, key_cols: list[str], prefilter: str
-) -> DataFrame:
-    """Target rows not superseded by the batch. ``prefilter="bloom"`` routes
-    definitely-unmatched rows around the anti-join (operators.bloom) — same
-    result, far less shuffle when the batch exceeds broadcast size."""
-    if prefilter == "bloom":
-        from .bloom import pruned_left_anti
-
-        return pruned_left_anti(target, deduped.select(*key_cols), key_cols)
-    if prefilter != "none":
-        raise ValueError(f"unknown merge prefilter {prefilter!r}")
-    return target.join(deduped.select(*key_cols), key_cols, "left_anti")
-
-
 # ----------------------------------------------------------------------
 # Plain-directory commit: staging write + two-rename swap, shared by
-# merge_upsert, rollup.fold_rollup and layout.compact.
+# merge_upsert, insert_if_absent, rollup.fold_rollup and layout.compact.
 
 _BACKUP = ".__old__"
 _STAGING = ".__staging__"
@@ -159,7 +141,6 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     order_cols: list[Column] | None = None,
-    prefilter: str = "none",
 ) -> MergeStats:
     """Upsert ``updates`` into the plain parquet table at ``target_path``.
 
@@ -168,9 +149,12 @@ def merge_upsert(
     batch. Rewrites the whole table and commits it with
     ``swap_plain_table``.
 
-    ``prefilter="bloom"`` applies the broadcast Bloom prefilter before the
-    keep-side anti-join — identical output, shuffle volume proportional to
-    the match fraction instead of the table.
+    ``order_cols`` (default ``[key]``) ranks a key's rows within the
+    batch; the first one wins. Make it a total order within a key for a
+    deterministic winner: with the default, or any order whose columns are
+    equal across a key's rows, the row kept among in-batch rows that share
+    a key but differ in content is arbitrary. Byte-identical re-sends are
+    unaffected.
 
     MergeStats are always returned; they cost no job of their own. The
     target is read through ``updates.sparkSession``, not ``spark``: a
@@ -183,9 +167,10 @@ def merge_upsert(
     deduped, batch_keys = _counted(latest_per_key(updates, key_cols, order_cols))
     merged, target_counts = deduped, ()
     if recover_plain_table(target_path):
-        # observed once, before the bloom prefilter splits the target read
         target, before = _counted(session.read.parquet(target_path))
-        kept, after_anti = _counted(_kept_rows(target, deduped, key_cols, prefilter))
+        kept, after_anti = _counted(
+            target.join(deduped.select(*key_cols), key_cols, "left_anti")
+        )
         merged, target_counts = kept.unionByName(deduped), (before, after_anti)
 
     swap_plain_table(target_path, merged)
@@ -329,7 +314,6 @@ def merge_upsert_partitioned(
     key_cols: list[str],
     partition_col: str,
     order_cols: list[Column] | None = None,
-    prefilter: str = "none",
 ) -> list[str]:
     """Partition-pruned upsert into a versioned hive-partitioned table.
 
@@ -391,12 +375,10 @@ def merge_upsert_partitioned(
             )
         merged = deduped
     else:
-        # partition pruning: only touched partition directories are scanned;
-        # within them, the optional Bloom prefilter skips the anti-join for
-        # keys the batch provably doesn't carry.
+        # partition pruning: only touched partition directories are scanned
         target = _read_view_df(spark, target_path, prev_view)
         affected = target.filter(F.col(partition_col).isin(touched))
-        kept = _kept_rows(affected, deduped, key_cols, prefilter)
+        kept = affected.join(deduped.select(*key_cols), key_cols, "left_anti")
         merged = kept.unionByName(deduped.select(*kept.columns))
 
     _commit_view(target_path, merged, partition_col, prev_view)
@@ -407,13 +389,23 @@ def insert_if_absent(
     spark: SparkSession, target_path: str, new_rows: DataFrame, key_cols: list[str]
 ) -> int:
     """J9/U3 — anti-join insert (reference add_proxies_if_not_exist,
-    ventura_crawler.py:386-398). Returns number of rows appended."""
-    if os.path.exists(target_path):
-        existing = spark.read.parquet(target_path).select(*key_cols)
-        fresh = new_rows.join(existing, key_cols, "left_anti")
+    ventura_crawler.py:386-398). Returns the number of rows added.
+
+    Commits ``existing ∪ fresh`` with ``swap_plain_table`` after
+    ``recover_plain_table``, like every plain-directory writer: a crash
+    leaves the previous table, and a retry adds the same rows once. The
+    count is an observation on the commit job, so the anti-join runs once.
+    A call that adds no rows still rewrites the table. The table is read
+    through ``new_rows.sparkSession``, as in ``merge_upsert``.
+    """
+    session = new_rows.sparkSession
+    if recover_plain_table(target_path):
+        existing = session.read.parquet(target_path)
+        fresh, added = _counted(
+            new_rows.join(existing.select(*key_cols), key_cols, "left_anti")
+        )
+        merged = existing.unionByName(fresh)
     else:
-        fresh = new_rows
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(target_path)
-    return n
+        merged, added = _counted(new_rows)
+    swap_plain_table(target_path, merged)
+    return _count(added)

@@ -1,16 +1,12 @@
 """Skew mitigation operators.
 
 AQE's skew-join splitting handles sort-merge joins at runtime (enabled in
-session.py), but two shapes still need explicit salting at corpus scale:
+session.py), but these shapes still need explicit salting at corpus scale:
 
 - an equi-join against a side too big to broadcast where a handful of hot
   keys (the empty venue name, the "unknown" platform, a viral document
   fingerprint) concentrate in one task: ``salted_join`` spreads each hot
   key over ``n_salts`` tasks by replicating the build side;
-- per-key windows over hot keys (millions of rows for one key make
-  ``row_number`` a single-task sort): ``salted_latest_per_key`` runs the
-  W3 latest-wins dedup in two phases — salt-local winners, then a final
-  tiny reduction — so no task ever sorts a whole hot key;
 - per-key ORDER-dependent windows where a hash salt would break the
   sequence (gap sessionization): ``sessionize_two_phase`` salts by TIME
   BLOCK — order survives within blocks, and boundary fix-up runs over
@@ -23,14 +19,18 @@ session.py), but two shapes still need explicit salting at corpus scale:
   calendar-bounded summaries, so no task ever sorts one key's full
   history.
 
-Both are deterministic: salt comes from a hash of stable columns, never
+W3 latest-wins over hot keys needs no salt: for the newest-version
+(all-DESC) order, ``dedup.latest_wins_agg``'s partial aggregate collapses
+a hot key to one row per map task before the shuffle.
+
+All are deterministic: salt comes from a hash of stable columns, never
 ``rand()``, so retried tasks produce identical output (speculative
 execution and stage retries would otherwise corrupt exactly-once sinks).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -72,35 +72,6 @@ def salted_join(
     )
     out = s.join(r, [*on, "__salt"], how)
     return out.drop("__salt")
-
-
-def salted_latest_per_key(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[Column],
-    salt_from: list[str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase W3 latest-wins for hot keys.
-
-    Phase 1 picks a winner per (key, salt) — hot keys split across up to
-    ``n_salts`` tasks; phase 2 reduces the ≤ n_salts finalists per key.
-    ``order_cols`` must form a total order (include a unique tie-break) for
-    the result to equal the single-window ``latest_per_key``.
-    """
-    salted = with_salt(df, salt_from, n_salts)
-    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(*order_cols)
-    finalists = (
-        salted.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        finalists.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
-    )
 
 
 def sessionize_two_phase(

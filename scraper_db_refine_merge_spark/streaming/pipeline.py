@@ -63,6 +63,11 @@ def stream_ingest(
     the query starts, so all micro-batches of one ``availableNow`` run share
     one scrape time.
 
+    The merge orders a batch's rows by ``last_scraped`` descending, and that
+    is ``now`` on every row, so it does not rank them: among rows of one
+    micro-batch that share an ``event_id`` but differ in content, the row
+    kept is arbitrary. Byte-identical re-sends are unaffected.
+
     ``partition_by_event_date=True`` switches to the partition-pruned MERGE
     (operators.merge.merge_upsert_partitioned) over a table hive-partitioned
     by ``event_date``: a micro-batch only rewrites the date partitions it
@@ -96,10 +101,7 @@ def stream_ingest(
                 with_date,
                 key_cols=["event_id"],
                 partition_col="event_date",
-                order_cols=[
-                    F.col("scraping_metadata.last_scraped").desc(),
-                    F.col("event_id"),
-                ],
+                order_cols=[F.col("scraping_metadata.last_scraped").desc()],
             )
             if metrics_path:
                 metrics = spark.createDataFrame(
@@ -113,7 +115,7 @@ def stream_ingest(
             target_path,
             batch_df,
             key_cols=["event_id"],
-            order_cols=[F.col("scraping_metadata.last_scraped").desc(), F.col("event_id")],
+            order_cols=[F.col("scraping_metadata.last_scraped").desc()],
         )
         if metrics_path:
             # ST5 — run-level metrics emission (ventura_crawler.py:289-300)

@@ -333,19 +333,6 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     return df.hint("rebalance")
 
 
-def _link_tree(src: str, dst: str) -> None:
-    """Copy a directory tree with hardlinks where possible (same-FS file
-    clones are O(1) each), falling back to a real copy per file."""
-
-    def _link_or_copy(s: str, d: str) -> None:
-        try:
-            os.link(s, d)
-        except OSError:
-            shutil.copy2(s, d)
-
-    shutil.copytree(src, dst, copy_function=_link_or_copy)
-
-
 def store_commit(
     df: DataFrame,
     target_path: str,
@@ -364,27 +351,6 @@ def store_commit(
     version = _new_version(target_path)
     vd = os.path.join(target_path, version)
     _sized_for_write(df).write.mode("overwrite").parquet(vd)
-    _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep)
-    return vd
-
-
-def store_commit_many(
-    dfs: dict[str, DataFrame],
-    target_path: str,
-    markers: dict[str, str] | None = None,
-    keep: int = 1,
-) -> str:
-    """Commit SEVERAL named tables as ONE atomic snapshot (one version dir
-    with a parquet subdir per name, one log entry). The primitive
-    for multi-table state that must stay mutually consistent — e.g. the
-    incremental MinHash index's signatures + shingle sets + pair log,
-    where a crash between separate per-table commits would leave pairs
-    acknowledged that the signature index doesn't know about."""
-    version = _new_version(target_path)
-    vd = os.path.join(target_path, version)
-    for name, df in dfs.items():
-        _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(vd, name))
     _write_markers(vd, markers)
     _commit_pointer(target_path, version, keep)
     return vd
@@ -414,8 +380,7 @@ def store_commit_parts(
     the same atomic commit — the primitive for derived-state rewrites
     (index re-widening, store_compact's squash) where one table must be
     rebuilt while its siblings keep accumulating. A table may appear in
-    only one of the two dicts. For replacing EVERY table as a plain
-    snapshot use ``store_commit_many``.
+    only one of the two dicts.
     """
     replace_parts = replace_parts or {}
     overlap = set(new_parts) & set(replace_parts)
@@ -430,34 +395,16 @@ def store_commit_parts(
     if prior is not None:
         pm = _manifest_of(prior)
         if pm is None:
-            # Format-upgrade path (ADVICE r6, medium): the live snapshot was
-            # written by store_commit/store_commit_many — no manifest. An
-            # empty starting manifest would silently DROP all prior state
-            # (readers would see only the new batch, and GC would then
-            # delete the old snapshot dirs). Migrate instead: each prior
-            # table subdir becomes a part in the new manifest (hardlinked —
-            # O(#files), same filesystem by construction — so GC of the old
-            # v-dir can't take the data with it).
-            pm = {}
-            table_dirs = [
-                n for n in os.listdir(prior)
-                if os.path.isdir(os.path.join(prior, n))
-            ]
-            if not table_dirs:
-                raise ValueError(
-                    f"store {target_path}: live snapshot {prior!r} is a "
-                    "single-DataFrame store_commit snapshot — it has no named "
-                    "tables to migrate into a parts manifest. Use store_commit "
-                    "to keep updating it, or rebuild the store with "
-                    "store_commit_parts from scratch."
-                )
-            for name in table_dirs:
-                pname = f"p-migrated-{uuid.uuid4().hex[:12]}"
-                _link_tree(
-                    os.path.join(prior, name),
-                    os.path.join(target_path, _PARTS, pname),
-                )
-                pm[name] = [pname]
+            # An empty starting manifest would silently DROP the prior
+            # state (readers would see only the new batch, and GC would
+            # then delete the old snapshot dir).
+            raise ValueError(
+                f"store {target_path}: live snapshot {prior!r} is a "
+                "single-DataFrame store_commit snapshot — it has no named "
+                "tables for a parts manifest. Use store_commit to keep "
+                "updating it, or rebuild the store with store_commit_parts "
+                "from scratch."
+            )
         manifest = {k: list(v) for k, v in pm.items()}
     for name, df in new_parts.items():
         pname = f"p-{uuid.uuid4().hex[:12]}"
@@ -495,8 +442,8 @@ def store_compact(
 
     Returns the committed snapshot dir; None for an empty store; the live
     dir unchanged when there is nothing to squash (already compact, or a
-    full-rewrite snapshot with no manifest). Same single-writer contract
-    as every commit. Time-travel note: compaction commits a NEW version —
+    single-frame ``store_commit`` snapshot with no manifest). Same
+    single-writer contract as every commit. Time-travel note: compaction commits a NEW version —
     with ``keep=1`` older snapshots (and the fine-grained parts they
     reference) are reclaimed, so run it only when replay-from-parts is no
     longer needed, or raise ``keep``.
@@ -533,17 +480,13 @@ def store_compact(
 def _read_part_of_dir(
     spark: SparkSession, target_path: str, vd: str, part: str
 ) -> DataFrame | None:
-    """Read one named table of snapshot dir ``vd``. Understands both
-    layouts: manifest snapshots (union of the listed immutable ``parts/``
-    dirs) and full-rewrite snapshots (one parquet subdir per table)."""
-    manifest = _manifest_of(vd)
-    if manifest is not None:
-        plist = manifest.get(part) or []
-        if not plist:
-            return None
-        return spark.read.parquet(*[os.path.join(target_path, _PARTS, p) for p in plist])
-    p = os.path.join(vd, part)
-    return spark.read.parquet(p) if os.path.isdir(p) else None
+    """Read one named table of snapshot dir ``vd``: the union of the
+    immutable ``parts/`` dirs its manifest lists. A snapshot without a
+    manifest (``store_commit``) has no named tables."""
+    plist = (_manifest_of(vd) or {}).get(part) or []
+    if not plist:
+        return None
+    return spark.read.parquet(*[os.path.join(target_path, _PARTS, p) for p in plist])
 
 
 def store_read_part(spark: SparkSession, target_path: str, part: str) -> DataFrame | None:

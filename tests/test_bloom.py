@@ -15,11 +15,6 @@ from scraper_db_refine_merge_spark.operators.bloom import (
     bloom_might_contain,
     pruned_left_anti,
 )
-from scraper_db_refine_merge_spark.operators.merge import (
-    merge_upsert,
-    merge_upsert_partitioned,
-    read_partitioned_table,
-)
 
 BITS = 1 << 14  # small filter → measurable fp rate, still zero fn
 HASHES = 5
@@ -72,42 +67,6 @@ def test_definite_branch_bypasses_the_join(spark):
     plan = pruned_left_anti(target, batch, ["k"], BITS, HASHES)._jdf.queryExecution().executedPlan().toString()
     anti_joins = plan.count("LeftAnti")
     assert anti_joins == 1, plan
-
-
-def test_merge_upsert_bloom_prefilter_identical_result(spark, tmp_path):
-    plain_t = str(tmp_path / "plain")
-    bloom_t = str(tmp_path / "bloom")
-    base = spark.createDataFrame(
-        [(f"e{i}", float(i), 1) for i in range(100)], "event_id string, v double, ver int"
-    )
-    batch = spark.createDataFrame(
-        [(f"e{i}", float(i) * 10, 2) for i in range(50, 120)],
-        "event_id string, v double, ver int",
-    )
-    for path, pf in ((plain_t, "none"), (bloom_t, "bloom")):
-        merge_upsert(spark, path, base, ["event_id"], [F.desc("ver")])
-        merge_upsert(spark, path, batch, ["event_id"], [F.desc("ver")], prefilter=pf)
-    cols = ["event_id", "v", "ver"]
-    assert _rows(spark.read.parquet(bloom_t), cols) == _rows(spark.read.parquet(plain_t), cols)
-
-
-def test_partitioned_merge_bloom_prefilter_identical_result(spark, tmp_path):
-    plain_t = str(tmp_path / "pplain")
-    bloom_t = str(tmp_path / "pbloom")
-    base = spark.createDataFrame(
-        [(f"e{i}", f"2024-01-{(i % 3) + 1:02d}", float(i)) for i in range(60)],
-        "event_id string, day string, v double",
-    )
-    batch = spark.createDataFrame(
-        [(f"e{i}", f"2024-01-{(i % 3) + 1:02d}", float(i) * 10) for i in range(40, 80)],
-        "event_id string, day string, v double",
-    )
-    for path, pf in ((plain_t, "none"), (bloom_t, "bloom")):
-        merge_upsert_partitioned(spark, path, base, ["event_id"], "day")
-        merge_upsert_partitioned(spark, path, batch, ["event_id"], "day", prefilter=pf)
-    cols = ["event_id", "day", "v"]
-    plain, bloom = (read_partitioned_table(spark, t) for t in (plain_t, bloom_t))
-    assert _rows(bloom, cols) == _rows(plain, cols)
 
 
 def test_auto_num_bits_scales_with_batch_and_stays_exact(spark):

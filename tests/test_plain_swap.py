@@ -1,8 +1,8 @@
-"""Plain-directory tables (merge_upsert, fold_rollup, compact) commit by a
-staging write plus two renames (operators/merge.py swap_plain_table). A
-writer killed between the renames leaves no table at the path; the next
-writer must put the last committed table back and then produce exactly
-what an uncrashed run produces."""
+"""Plain-directory tables (merge_upsert, insert_if_absent, fold_rollup,
+compact) commit by a staging write plus two renames (operators/merge.py
+swap_plain_table). A writer killed between the renames leaves no table at
+the path; the next writer must put the last committed table back and then
+produce exactly what an uncrashed run produces."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scraper_db_refine_merge_spark.operators.layout import compact
-from scraper_db_refine_merge_spark.operators.merge import merge_upsert
+from scraper_db_refine_merge_spark.operators.merge import insert_if_absent, merge_upsert
 from scraper_db_refine_merge_spark.operators.rollup import fold_rollup
 
 _SCHEMA = "event_id string, grp int, v double, ver int"
@@ -31,6 +31,10 @@ def _merge(spark, path):
     return merge_upsert(spark, path, _batch(spark), ["event_id"], [F.desc("ver")])
 
 
+def _insert(spark, path):
+    return insert_if_absent(spark, path, _batch(spark), ["event_id"])
+
+
 def _rollup(spark, path):
     fold_rollup(spark, path, _batch(spark), key_cols=["grp"], sum_cols=["v"])
 
@@ -45,6 +49,10 @@ WRITERS = {
     "merge_upsert": (
         lambda spark, p: merge_upsert(spark, p, _base(spark), ["event_id"], [F.desc("ver")]),
         _merge,
+    ),
+    "insert_if_absent": (
+        lambda spark, p: insert_if_absent(spark, p, _base(spark), ["event_id"]),
+        _insert,
     ),
     "fold_rollup": (
         lambda spark, p: fold_rollup(spark, p, _base(spark), key_cols=["grp"], sum_cols=["v"]),

@@ -96,8 +96,11 @@ def test_word_shingles_is_shuffle_free(spark, sf_dir, tmp_path):
 
     # split layout (≥ cores/4 files): gate no-ops, operator is shuffle-free
     split_dir = str(tmp_path / "docs_split")
-    docs.repartition(max(2, n // 2), "doc_id").write.parquet(split_dir)
+    # range bounds are sampled from the ids, so every partition gets rows
+    # and becomes a file; a hash repartition can leave some empty
+    docs.repartitionByRange(max(2, n // 2), "doc_id").write.parquet(split_dir)
     split = spark.read.parquet(split_dir)
+    assert split.rdd.getNumPartitions() >= max(2, n // 4), "split input too few scan tasks"
     assert _plan(dd.word_shingles(split, "doc_id", "text")).count("Exchange") == 0
 
     # degenerate single-task scan: exactly the one gated spread exchange

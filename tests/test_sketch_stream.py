@@ -276,41 +276,48 @@ def test_store_retention_and_time_travel(spark, tmp_path):
     assert [tuple(r) for r in store_read(spark, target).collect()] == [(3,)]
 
 
-def test_store_commit_many_is_one_atomic_snapshot(spark, tmp_path):
-    """Multi-part commits: all named tables land in ONE version dir behind
-    one pointer; a partially-written never-committed snapshot is invisible
-    for every part."""
+def test_store_commit_parts_is_one_atomic_snapshot(spark, tmp_path):
+    """Multi-table commits: every named table's new part lands under ONE
+    manifest behind one log entry; a partially-written never-committed
+    snapshot is invisible for every table and is GC'd by the next commit."""
+    import json
     import os
 
     from scraper_db_refine_merge_spark.streaming.store import (
-        store_commit_many,
+        store_commit_parts,
         store_read_part,
     )
 
     target = str(tmp_path / "store")
-    store_commit_many(
+    store_commit_parts(
         {
             "a": spark.createDataFrame([(1,)], "k long"),
             "b": spark.createDataFrame([(10,)], "k long"),
         },
         target,
     )
-    # orphan snapshot with only part "a" written (simulated crash)
+    # orphan snapshot whose manifest lists only a new part of "a"
+    # (simulated crash before the log entry)
     orphan = os.path.join(target, "v-000099-deadbeef")
-    spark.createDataFrame([(99,)], "k long").write.parquet(os.path.join(orphan, "a"))
+    orphan_part = os.path.join(target, "parts", "p-orphan")
+    spark.createDataFrame([(99,)], "k long").write.parquet(orphan_part)
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "_MANIFEST.json"), "w") as f:
+        json.dump({"a": ["p-orphan"]}, f)
     assert [tuple(r) for r in store_read_part(spark, target, "a").collect()] == [(1,)]
     assert [tuple(r) for r in store_read_part(spark, target, "b").collect()] == [(10,)]
-    # next commit updates both parts together and GCs the orphan
-    store_commit_many(
+    # next commit moves both tables together and GCs the orphan
+    store_commit_parts(
         {
             "a": spark.createDataFrame([(2,)], "k long"),
             "b": spark.createDataFrame([(20,)], "k long"),
         },
         target,
     )
-    assert [tuple(r) for r in store_read_part(spark, target, "a").collect()] == [(2,)]
-    assert [tuple(r) for r in store_read_part(spark, target, "b").collect()] == [(20,)]
+    assert sorted(r.k for r in store_read_part(spark, target, "a").collect()) == [1, 2]
+    assert sorted(r.k for r in store_read_part(spark, target, "b").collect()) == [10, 20]
     assert not os.path.exists(orphan)
+    assert not os.path.exists(orphan_part)
 
 
 def test_store_commit_parts_is_incremental_o_batch(spark, tmp_path):
@@ -438,44 +445,6 @@ def test_store_commit_under_aqe_off_plans_no_rebalance(spark, tmp_path, monkeypa
     off, on = plans
     assert "REBALANCE" not in off, off
     assert "REBALANCE" in on, on  # the spy sees the hint when AQE is on
-
-
-def test_store_commit_parts_migrates_commit_many_snapshot(spark, tmp_path):
-    """ADVICE r6 (medium): folding a parts commit onto a store whose live
-    snapshot came from store_commit_many must MIGRATE the prior tables into
-    the manifest (not silently start empty and let GC drop them)."""
-    import os
-
-    from scraper_db_refine_merge_spark.streaming.store import (
-        store_commit_many,
-        store_commit_parts,
-        store_read_part,
-    )
-
-    target = str(tmp_path / "store")
-    store_commit_many(
-        {
-            "pairs": spark.createDataFrame([(1,)], "k long"),
-            "sigs": spark.createDataFrame([(10,)], "k long"),
-        },
-        target,
-    )
-    store_commit_parts(
-        {
-            "pairs": spark.createDataFrame([(2,)], "k long"),
-            "sigs": spark.createDataFrame([(20,)], "k long"),
-        },
-        target,
-    )
-    # prior full-rewrite state visible through the manifest, new batch added
-    assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2]
-    assert sorted(r.k for r in store_read_part(spark, target, "sigs").collect()) == [10, 20]
-    # keep=1 GC'd the old v-dir; migrated data must survive it
-    store_commit_parts({"pairs": spark.createDataFrame([(3,)], "k long")}, target)
-    assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2, 3]
-    assert sorted(r.k for r in store_read_part(spark, target, "sigs").collect()) == [10, 20]
-    vdirs = [n for n in os.listdir(target) if n.startswith("v-")]
-    assert len(vdirs) == 1  # retention still applies
 
 
 def test_store_commit_parts_refuses_single_df_snapshot(spark, tmp_path):

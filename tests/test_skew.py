@@ -4,9 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scraper_db_refine_merge_spark.operators.dedup import latest_wins
 from pyspark.sql import Window
-from scraper_db_refine_merge_spark.operators.skew import salted_join, salted_latest_per_key
+from scraper_db_refine_merge_spark.operators.skew import salted_join
 from scraper_db_refine_merge_spark.sources.tables import load_table
 
 
@@ -31,22 +30,6 @@ def test_salted_join_rejects_outer_modes(spark):
     for how in ("right", "full", "full_outer", "right_outer"):
         with pytest.raises(ValueError, match="salted_join"):
             salted_join(a, b, on=["k"], how=how, salt_from=["v"])
-
-
-def test_salted_latest_per_key_equals_single_window(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
-    order = [F.col("ts").desc(), F.col("event_id").asc()]
-    plain = latest_wins(e, ["user_id"], order, mode="window")
-    salted = salted_latest_per_key(
-        e, ["user_id"], order, salt_from=["event_id"], n_salts=8
-    )
-    # identical total order (ts desc, event_id asc) on both paths → identical
-    # winner per user regardless of how ties land across salt buckets
-    p = {r["user_id"]: r["event_id"] for r in plain.select("user_id", "event_id").collect()}
-    s = {r["user_id"]: r["event_id"] for r in salted.select("user_id", "event_id").collect()}
-    assert set(p) == set(s)
-    diffs = {u for u in p if p[u] != s[u]}
-    assert not diffs, f"winners differ for users {sorted(diffs)[:5]}"
 
 
 def test_sessionize_two_phase_equals_single_window(spark, sf_dir):
@@ -236,62 +219,13 @@ def test_funnel_two_phase_boundary_state_is_bounded(spark, sf_dir):
     assert agg_lines and all("__block" in ln for ln in agg_lines), agg_lines
 
 
-def test_latest_wins_auto_salts_hot_keys(spark):
-    """r14 (VERDICT r13 item 6): latest_wins auto-probes key skew — a key
-    holding >10% of rows switches the plan to the salted two-phase window,
-    with rows identical to the plain window."""
-    import pytest
-
-    from scraper_db_refine_merge_spark.operators import dedup as dd
-    from scraper_db_refine_merge_spark.operators._cache import memo
-
-    def skew_decision(frame):
-        # the memoized probe decision; a second probe would fail the test
-        return memo(frame, ("lw_skew", ("k",), 0.10), lambda: pytest.fail("no memo"))
-
-    # 4000 rows, 80% on one hot key; ~1% probe sample resolves this easily
-    rows = [(("hot" if i % 5 != 0 else f"k{i}"), i, float(i)) for i in range(4000)]
-    df = spark.createDataFrame(rows, "k string, seq long, v double")
-    order = [F.col("seq").desc()]
-
-    auto = dd.latest_wins(df, ["k"], order)  # mode=None -> auto
-    window = dd.latest_wins(df, ["k"], order, mode="window")
-    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, window.collect()))
-    # the probe classified the frame as skewed → salted regime
-    assert skew_decision(df) is True
-    # plan-observable: the salted path carries the __salt column
-    assert "__salt" in auto._jdf.queryExecution().analyzed().toString()
-
-    # well-distributed keys stay on the single-window plan
-    flat = spark.createDataFrame(
-        [(f"k{i % 997}", i, float(i)) for i in range(4000)],
-        "k string, seq long, v double",
-    )
-    auto_flat = dd.latest_wins(flat, ["k"], order)
-    assert skew_decision(flat) is False
-    assert "__salt" not in auto_flat._jdf.queryExecution().analyzed().toString()
-
-
-def test_latest_wins_salted_handles_map_columns(spark):
-    """Map columns are unhashable in Spark — the whole-row salt must skip
-    them instead of crashing the plan build."""
-    from scraper_db_refine_merge_spark.operators import dedup as dd
-
-    df = spark.createDataFrame(
-        [("a", 1, {"x": "1"}), ("a", 2, {"y": "2"}), ("b", 1, {})],
-        "k string, seq long, m map<string,string>",
-    )
-    out = dd.latest_wins(df, ["k"], [F.col("seq").desc()], mode="salted")
-    got = {(r["k"], r["seq"]) for r in out.collect()}
-    assert got == {("a", 2), ("b", 1)}
-
-
 def test_latest_wins_agg_equals_window_forms(spark):
     """r16: the max_by aggregation form of W3 latest-wins must be
-    row-identical to BOTH window forms on a skew-injected frame, including
-    the degenerate orderings the window's DESC NULLS LAST implies: NULL
-    order keys rank below any value, an all-NULL leading key falls through
-    to the tie-break, and column order/names are preserved."""
+    row-identical to the row_number window form (latest_per_key) on a
+    skew-injected frame, including the degenerate orderings the window's
+    DESC NULLS LAST implies: NULL order keys rank below any value, an
+    all-NULL leading key falls through to the tie-break, and column
+    order/names are preserved."""
     from scraper_db_refine_merge_spark.operators import dedup as dd
 
     rows = []
@@ -305,13 +239,11 @@ def test_latest_wins_agg_equals_window_forms(spark):
 
     agg = dd.latest_wins_agg(df, ["k"], ["ts", "seq"])
     order = [F.col("ts").desc(), F.col("seq").desc()]
-    window = dd.latest_wins(df, ["k"], order, mode="window")
-    salted = dd.latest_wins(df, ["k"], order, mode="salted")
+    window = dd.latest_per_key(df, ["k"], order)
 
     assert agg.columns == df.columns
     got = sorted(map(tuple, agg.collect()))
     assert got == sorted(map(tuple, window.collect()))
-    assert got == sorted(map(tuple, salted.collect()))
     # the all-NULL key resolved through the tie-break, like the window
     assert [r for r in got if r[1] == "allnull"] == [(9002, "allnull", None, 2.0)]
     # plan-observable: one aggregation, no Window operator anywhere
