@@ -437,7 +437,6 @@ def minhash_dedup_pairs(
     num_hashes: int = MINHASH_NUM_HASHES,
     band_size: int | str = MINHASH_BAND_SIZE,
     max_shingle_freq: int | None = None,
-    persist_shingles=None,
     max_band_successors: int | None = None,
 ) -> DataFrame:
     """MinHash/LSH near-dup pipeline: shingle → signature → band-join →
@@ -456,14 +455,6 @@ def minhash_dedup_pairs(
     candidate docs before the pair join, so Jaccard cost scales with the
     candidate count, not the corpus — the property that keeps this linear-ish
     at 10^9 docs (all-pairs verify would be quadratic).
-
-    ``persist_shingles``: the shingle set feeds four consumers (signatures,
-    sizes, both sides of the intersection join). Default None recomputes the
-    narrow scan→explode pipeline per consumer — measurably faster than
-    cache-materialization at bench scale (no extra jobs, stays in codegen).
-    On a multi-TB corpus pass ``StorageLevel.DISK_ONLY`` instead: four scans
-    of the raw table would dominate, and memory-cached deserialized rows of
-    a corpus-sized shingle set would not fit.
 
     Cache lifecycle: the internal signature/candidate persists are tracked —
     a long-lived session calls ``operators._cache.release_caches()`` after
@@ -485,8 +476,6 @@ def minhash_dedup_pairs(
         band_size = adaptive_band_size(corpus_count(df))
         num_hashes = n_bands * band_size
     sh = word_shingles(df, id_col, text_col, k, max_shingle_freq)
-    if persist_shingles is not None:
-        sh = persist_tracked(sh, persist_shingles)
     # The signature table is one row per doc (8 lane mins + count) — a
     # sliver of the corpus — and feeds candidate generation AND both size
     # lookups. persist it so the md5-per-shingle aggregation (the pipeline's
@@ -504,31 +493,24 @@ def minhash_dedup_pairs(
 
     # Candidate-restriction made physical: each shingle side carries only
     # candidate docs' shingles into the pair join, so at corpus scale the
-    # verify cost is O(candidate shingles), not O(all shingles). The size
-    # lookups are restricted the same way. NO forced broadcasts anywhere in
-    # the verify stage (VERDICT r4 item 1): the candidate id sets and the
-    # per-doc sizes table both GROW with the corpus, so a broadcast hint is
-    # an eventual OOM; AQE broadcasts them at runtime while they are
-    # genuinely small and switches to hash-partitioned joins beyond that.
-    # Candidate doc ids via a 2-element explode + ONE distinct (r10 q25
-    # profiling): the previous per-side distinct + unionByName + distinct
-    # ran THREE id-keyed shuffles and seven driver-side plan ops for the
-    # same set — the explode form is one shuffle and one op, which matters
-    # both at corpus scale (two fewer exchanges of a corpus-growing id set)
-    # and on the bench (q25's warm time was ~2/3 driver-side plan
-    # construction/analysis).
+    # verify cost is O(candidate shingles), not O(all shingles). NO forced
+    # broadcasts anywhere in the verify stage (VERDICT r4 item 1): the
+    # candidate id set GROWS with the corpus, so a broadcast hint is an
+    # eventual OOM; AQE broadcasts it at runtime while it is genuinely
+    # small and switches to hash-partitioned joins beyond that. Candidate
+    # doc ids via a 2-element explode + ONE distinct (r10 q25 profiling): a
+    # per-side distinct + unionByName + distinct ran THREE id-keyed
+    # shuffles and seven driver-side plan ops for the same set.
     cand_doc_ids = cand.selectExpr("explode(array(a_id, b_id)) AS doc").distinct()
-    if persist_shingles is not None or max_shingle_freq is not None:
-        # Materialized shingles (reuse the cache), or a frequency cap
-        # (whose counts must come from the FULL corpus shingle set):
-        # semi-join AFTER shingling.
+    if max_shingle_freq is not None:
+        # a frequency cap's counts must come from the FULL corpus shingle
+        # set: semi-join AFTER shingling
         cand_sh = sh.join(cand_doc_ids, "doc", "semi")
     else:
-        # No materialized shingles → push the restriction UPSTREAM of the
-        # explode: semi-join the RAW docs to the union of candidate ids,
-        # tokenize+explode ONCE (candidates are a sliver of the corpus) —
-        # one restricted pass instead of two full corpus passes (measured
-        # ~2× on q25 at sf0.1).
+        # push the restriction UPSTREAM of the explode: semi-join the RAW
+        # docs to the candidate ids, tokenize+explode ONCE (candidates are
+        # a sliver of the corpus) — one restricted pass instead of two
+        # full corpus passes (measured ~2× on q25 at sf0.1).
         dc = df.join(
             cand_doc_ids.selectExpr(f"doc AS `{id_col}`"), id_col, "semi"
         )
@@ -537,19 +519,30 @@ def minhash_dedup_pairs(
         # would no-op; skipping it saves the per-evaluation probe (an RDD
         # conversion of the join plan, paid twice per bench invocation).
         cand_sh = word_shingles(dc, id_col, text_col, k, spread=False)
-    # Verify via per-doc shingle ARRAYS + array_intersect, not an exploded
-    # (pair × shingle) equi-join (VERDICT r6 item 2 — q25's verify-join
-    # constants were the one volume query above the 2× envelope). The old
-    # shape shuffled |pairs|·|shingles-per-doc| exploded rows through a
-    # pair-keyed aggregation and then joined sizes twice; this shape
-    # aggregates candidate shingles ONCE per doc (map-side combined,
-    # candidate-restricted) and ships each doc's array to its pairs, where
-    # intersection/union sizes are a single JVM hash-set pass per pair —
-    # no per-shingle shuffle, no size lookups (|array| IS n_shingles,
-    # identical to the signature count: same distinct set). Measured
-    # 1.75→1.1 s warm at sf0.1 (oracle 0.8 s). Arrays are bounded by
-    # single-document shingle counts — the same per-doc envelope every
-    # verify strategy must hold in memory.
+    return _verified_pairs(cand, cand_sh, threshold)
+
+
+def _verified_pairs(
+    cand: DataFrame, cand_sh: DataFrame, threshold: float
+) -> DataFrame:
+    """The verify step of both MinHash paths (:func:`minhash_dedup_pairs`
+    and :func:`fold_minhash_index`): candidate pairs ``(a_id, b_id)`` →
+    ``(a_id, b_id, intersection, jaccard)`` with exact Jaccard ≥
+    ``threshold``, from ``cand_sh`` — the (doc, shingle) rows of the
+    candidate docs.
+
+    Per-doc shingle ARRAYS + array_intersect, not an exploded (pair ×
+    shingle) equi-join (VERDICT r6 item 2 — q25's verify-join constants
+    were the one volume query above the 2× envelope). The exploded shape
+    shuffled |pairs|·|shingles-per-doc| rows through a pair-keyed
+    aggregation and then joined sizes twice; this shape aggregates
+    candidate shingles ONCE per doc (map-side combined) and ships each
+    doc's array to its pairs, where intersection/union sizes are a single
+    JVM hash-set pass per pair — no per-shingle shuffle, no size lookups
+    (|array| IS n_shingles: same distinct set). Measured 1.75→1.1 s warm
+    at sf0.1 (oracle 0.8 s). Arrays are bounded by single-document
+    shingle counts — the same per-doc envelope every verify strategy must
+    hold in memory."""
     arrs = persist_tracked(
         cand_sh.groupBy("doc").agg(F.expr("collect_list(shingle) AS __arr"))
     )
@@ -802,7 +795,36 @@ def simhash_near_pairs(
 
 
 # ----------------------------------------------------------------------
-# Incremental MinHash index
+# Incremental near-dup indexes (MinHash pairs, contamination blocklist)
+
+#: band count of a fold_minhash_index store: the width (``band_size``)
+#: moves, the band count does not — recall comes from OR over bands.
+FOLD_MINHASH_BANDS = MINHASH_NUM_HASHES // MINHASH_BAND_SIZE
+
+
+def _frozen_width(
+    target_root: str, marker: str, width: int | None, default: int, caller: str
+) -> int:
+    """The width rule every stored index shares: the first fold freezes the
+    width in the store marker ``marker``, and every later fold or scan
+    reads it from there. ``width=None`` adopts the frozen width (``default``
+    on a fresh store); an explicit width that differs from the frozen one
+    raises — one index cannot mix widths, and a scan at another width
+    matches nothing. Moving the width is an explicit, atomic rebuild
+    (:func:`reindex_minhash_width`, :func:`reindex_contamination_k`)."""
+    from ..streaming.store import store_marker
+
+    frozen = store_marker(target_root, marker)
+    if frozen is None:
+        return default if width is None else width
+    if width is not None and width != int(frozen):
+        raise ValueError(
+            f"{caller}: width {width} differs from the frozen width {frozen} "
+            f"of the index at {target_root!r} — one index cannot mix widths. "
+            f"Pass None to adopt the frozen width, or rebuild the index at "
+            f"the new width first."
+        )
+    return int(frozen)
 
 
 def fold_minhash_index(
@@ -813,34 +835,30 @@ def fold_minhash_index(
     text_col: str,
     k: int = 5,
     threshold: float = 0.4,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    band_size: int | str = MINHASH_BAND_SIZE,
-    auto_widen: bool = False,
+    band_size: int | None = None,
 ) -> DataFrame:
     """Fold a batch of NEW documents into a persistent MinHash near-dup
     index and return the accumulated pair log.
 
-    ``band_size="auto"`` (r14): batch 0 sizes the band width from the
-    adaptive ladder and FREEZES it as a store marker — the band structure
-    must stay constant across folds, so the ladder never re-evaluates on
-    later folds. ``auto_widen=True`` additionally re-evaluates the ladder
-    against the ACCUMULATED doc count after each fold and, when the index
-    has outgrown its frozen width, rebuilds the signature table from the
-    stored shingles at the wider width (:func:`reindex_minhash_width`) —
-    one atomic replace commit, O(corpus) by necessity but amortized over
-    the ~2^16× growth between ladder rungs. Pairs already verified stay
-    (exact Jaccard doesn't depend on banding); the whole-corpus-equality
-    invariant then holds piecewise per width era — pairs discovered after
-    a widening follow the wider structure's recall curve.
-
     The 100 TB ingestion shape: when data lands, its near-dups are found
     against the existing corpus WITHOUT recomputing it — the batch's
     signatures band-join the STORED band index, and exact-Jaccard verify
-    reads only candidate docs' stored shingle sets. Each qualifying pair is
-    discovered exactly once, when its later member arrives (old–old pairs
-    never re-join), so the accumulated pair log after folding batches
-    b0..bn equals ``minhash_dedup_pairs`` over the concatenated corpus —
-    the invariant q113 gates against the whole-corpus oracle.
+    reads only candidate docs' stored shingle sets. Banding and verify are
+    :func:`minhash_dedup_pairs`' own (``_band_rows``, ``_verified_pairs``).
+    Each qualifying pair is discovered exactly once, when its later member
+    arrives (old–old pairs never re-join), so the accumulated pair log
+    after folding batches b0..bn equals ``minhash_dedup_pairs`` over the
+    concatenated corpus — the invariant q113 gates against the
+    whole-corpus oracle.
+
+    Width: the band structure must stay constant across folds (old and new
+    signatures share lane columns), so the band width follows
+    :func:`_frozen_width` under the ``_minhash_width`` marker —
+    ``band_size=None`` adopts the store's width (MINHASH_BAND_SIZE on a
+    fresh store), a different explicit width raises. The band count is
+    always FOLD_MINHASH_BANDS, so the signature has
+    ``FOLD_MINHASH_BANDS·band_size`` lanes. Growing the width is the
+    explicit rebuild :func:`reindex_minhash_width`.
 
     Index layout: ONE crash-safe versioned store (streaming/store.py) whose
     manifest snapshot lists three accumulated tables committed atomically
@@ -854,24 +872,13 @@ def fold_minhash_index(
     WRITE path too. State grows with the corpus, as any dedup index must;
     every join here is id-/band-keyed with no broadcast hints.
     """
-    from ..streaming.store import store_commit_parts, store_marker, store_read_part
+    from ..streaming.store import store_commit_parts, store_read_part
 
-    markers = None
-    if band_size == "auto":
-        # Frozen-width contract (r14): band structure must be CONSTANT
-        # across folds (sig_old ∪ sig_new must share lane columns), so auto
-        # resolves once — batch 0 sizes the ladder and the choice commits
-        # as a marker; later folds read the marker, never the count. Width
-        # growth is an explicit, atomic rebuild: reindex_minhash_width
-        # (or fold with auto_widen=True to trigger it from the ladder).
-        n_bands = max(1, num_hashes // MINHASH_BAND_SIZE)
-        frozen = store_marker(target_root, "_minhash_width")
-        if frozen:
-            num_hashes, band_size = (int(x) for x in frozen.split(":"))
-        else:
-            band_size = adaptive_band_size(new_docs.count())
-            num_hashes = n_bands * band_size
-        markers = {"_minhash_width": f"{num_hashes}:{band_size}"}
+    band_size = _frozen_width(
+        target_root, "_minhash_width", band_size, MINHASH_BAND_SIZE,
+        "fold_minhash_index",
+    )
+    num_hashes = FOLD_MINHASH_BANDS * band_size
 
     sh_new = word_shingles(new_docs, id_col, text_col, k)
     sig_new = minhash_signatures(sh_new, num_hashes).persist()
@@ -881,26 +888,10 @@ def fold_minhash_index(
     sig_all = sig_new if sig_old is None else sig_old.unionByName(sig_new)
     sh_all = sh_new if sh_old is None else sh_old.unionByName(sh_new)
 
-    def bands(sig):
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|", *[F.col(f"h{b * band_size + i}") for i in range(band_size)]
-                    ).alias("band_sig"),
-                )
-                for b in range(num_hashes // band_size)
-            ]
-        )
-        return sig.select("doc", F.explode(arr).alias("b")).select(
-            "doc", F.col("b.band").alias("band"), F.col("b.band_sig").alias("band_sig")
-        )
-
     # candidates: NEW docs vs the whole (old ∪ new) band index; pair once,
     # unordered-normalized so cross-batch arrival order cannot flip ids
-    bn = bands(sig_new).alias("n")
-    ba = bands(sig_all).alias("a")
+    bn = _band_rows(sig_new, num_hashes, band_size).alias("n")
+    ba = _band_rows(sig_all, num_hashes, band_size).alias("a")
     cand = (
         bn.join(
             ba,
@@ -915,34 +906,9 @@ def fold_minhash_index(
         .distinct()
         .persist()
     )
-    a_ids = cand.select("a_id").distinct()
-    b_ids = cand.select("b_id").distinct()
-    sh_a = sh_all.select(F.col("doc").alias("a_id"), "shingle").join(a_ids, "a_id", "semi")
-    sh_b = sh_all.select(F.col("doc").alias("b_id"), "shingle").join(b_ids, "b_id", "semi")
-    sizes = sig_all.select("doc", "n_shingles")
-    sa = sizes.select(F.col("doc").alias("a_id"), F.col("n_shingles").alias("na")).join(
-        a_ids, "a_id", "semi"
-    )
-    sb = sizes.select(F.col("doc").alias("b_id"), F.col("n_shingles").alias("nb")).join(
-        b_ids, "b_id", "semi"
-    )
-    new_pairs = (
-        cand.join(sh_a, "a_id")
-        .join(sh_b, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("intersection"))
-        .join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("intersection").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("intersection")).cast("double"),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "intersection", "jaccard")
+    cand_doc_ids = cand.selectExpr("explode(array(a_id, b_id)) AS doc").distinct()
+    new_pairs = _verified_pairs(
+        cand, sh_all.join(cand_doc_ids, "doc", "semi"), threshold
     )
 
     # ONE atomic manifest commit for all three tables: pairs acknowledged,
@@ -954,41 +920,30 @@ def fold_minhash_index(
     store_commit_parts(
         {"pairs": new_pairs, "shingles": sh_new, "sigs": sig_new},
         target_root,
-        markers=markers,
+        markers={"_minhash_width": str(band_size)},
     )
     sig_new.unpersist()
     cand.unpersist()
-    if auto_widen and markers is not None:
-        total = store_read_part(spark, target_root, "sigs").count()
-        want = adaptive_band_size(total)
-        if want > band_size:
-            reindex_minhash_width(
-                spark, target_root, want, n_bands=num_hashes // band_size
-            )
     return store_read_part(spark, target_root, "pairs")
 
 
-def reindex_minhash_width(
-    spark,
-    target_root: str,
-    band_size: int,
-    n_bands: int = MINHASH_NUM_HASHES // MINHASH_BAND_SIZE,
-) -> None:
+def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
     """Re-widen a fold_minhash_index store's signatures (r14, the
     incremental-index answer to the adaptive-width policy): recompute the
-    ``sigs`` table from the STORED shingle sets at ``n_bands·band_size``
-    lanes and commit it as one atomic replace (``store_commit_parts``
-    ``replace_parts`` — shingles and the pair log are untouched, the
-    superseded signature parts are GC'd after the pointer commit, and the
-    ``_minhash_width`` marker moves with the new table).
+    ``sigs`` table from the STORED shingle sets at
+    ``FOLD_MINHASH_BANDS·band_size`` lanes and commit it as one atomic
+    replace (``store_commit_parts`` ``replace_parts`` — shingles and the
+    pair log are untouched, the superseded signature parts are GC'd after
+    the pointer commit, and the ``_minhash_width`` marker moves with the
+    new table, so later default folds adopt the new width).
 
     Why it exists: the fold index freezes its band structure at batch 0,
     so an index born at 10⁶ docs still runs 32-bit band signatures at 10⁹
-    — exactly the collider regime adaptive_band_size exists to avoid, and
-    the one case the one-shot auto mode can't reach. The stored shingle
-    sets make the rebuild possible without the original corpus. Pairs
-    already in the log remain valid (they were verified with exact
-    Jaccard); future folds discover under the wider structure.
+    — exactly the collider regime :func:`adaptive_band_size` exists to
+    avoid. The stored shingle sets make the rebuild possible without the
+    original corpus. Pairs already in the log remain valid (they were
+    verified with exact Jaccard); future folds discover under the wider
+    structure.
     """
     from ..streaming.store import store_commit_parts, store_read_part
 
@@ -1000,12 +955,11 @@ def reindex_minhash_width(
     # later Jaccard involving it UNDERestimates (missed duplicates). Min
     # lanes are idempotent — only the count needs the distinct (ADVICE r14).
     sh = sh.dropDuplicates(["doc", "shingle"])
-    num_hashes = n_bands * band_size
-    sigs = minhash_signatures(sh, num_hashes)
+    sigs = minhash_signatures(sh, FOLD_MINHASH_BANDS * band_size)
     store_commit_parts(
         {},
         target_root,
-        markers={"_minhash_width": f"{num_hashes}:{band_size}"},
+        markers={"_minhash_width": str(band_size)},
         replace_parts={"sigs": sigs},
     )
 
@@ -1013,41 +967,19 @@ def reindex_minhash_width(
 def adaptive_shingle_k(n_blocked: int) -> int:
     """Contamination shingle width from accumulated blocklist size: k=5
     through 2^25 blocked shingles (≈33 M — far beyond any benchmark suite),
-    +1 word per further 2^13× growth.
+    +1 word per further 2^13× growth — the width to pass to
+    :func:`reindex_contamination_k` once a blocklist outgrows its own.
 
     Rationale: expected incidental (non-contaminated) k-gram collisions
     scale with |blocklist| / |k-gram space|, and each +1 word multiplies
     the space by the effective working vocabulary — conservatively ≥ 2^13
     (Heaps'-law vocabularies are 10^4-10^5) — so one rung absorbs 2^13× of
     blocklist growth at constant expected-collision mass. Integer-only so
-    the trigger is deterministic and oracle-mirrorable, like
+    the policy is deterministic and oracle-mirrorable, like
     adaptive_band_size / adaptive_num_planes."""
     if n_blocked <= (1 << 25):
         return 5
     return 5 + ((n_blocked - 1).bit_length() - 26) // 13 + 1
-
-
-def _contamination_texts_complete(target_root: str) -> bool:
-    """Does the store's ``texts`` table cover EVERY fold? (r16 ADVICE,
-    medium.) The ``_contamination_texts_complete`` marker is authoritative
-    once present — ``false`` is permanent (a keep_texts=False fold's
-    protected docs are unrecoverable). Pre-marker stores are inferred from
-    the live manifest: every fold appends exactly one ``blocked`` part and
-    one ``texts`` part iff it kept texts, so a texts list SHORTER than the
-    blocked list proves at least one fold skipped texts (reindex collapses
-    ``blocked`` to one part, which can only shrink the blocked side — the
-    inference errs toward blocking a reindex, never toward allowing a
-    partial rebuild)."""
-    from ..streaming.store import _manifest_of, store_marker, store_version_dir
-
-    marker = store_marker(target_root, "_contamination_texts_complete")
-    if marker is not None:
-        return marker == "true"
-    vd = store_version_dir(target_root)
-    if vd is None:
-        return True  # fresh store: nothing folded yet
-    manifest = _manifest_of(vd) or {}
-    return len(manifest.get("texts") or []) >= len(manifest.get("blocked") or [])
 
 
 def fold_contamination_index(
@@ -1057,8 +989,6 @@ def fold_contamination_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int | None = None,
-    keep_texts: bool = True,
-    auto_widen: bool = False,
 ) -> None:
     """Fold a batch of PROTECTED (benchmark/eval) documents' distinct
     k-shingle hashes into a persistent contamination blocklist — the
@@ -1072,105 +1002,50 @@ def fold_contamination_index(
     over all protected docs (set union is associative/commutative/
     idempotent — the oracle states exactly that).
 
-    Width contract (r15, VERDICT r14 item 4 — the last fold family without
-    a growth path): ``k`` freezes at batch 0 as the ``_contamination_k``
-    marker; a later fold passing a DIFFERENT k raises instead of silently
-    mixing widths in one blocklist. ``k=None`` (the default, r16 ADVICE)
-    adopts the frozen width — so repeated default-argument folds keep
-    working after an ``auto_widen`` rebuild moved the marker — and falls
-    back to 5 on a fresh store. Unlike the MinHash index, a wider k is NOT
-    derivable from the stored hashes (k-grams don't compose into
-    (k+1)-grams), so each fold also stores its batch's (doc, text) rows as
-    a ``texts`` part (``keep_texts=True``, the default) — the re-fold
-    input :func:`reindex_contamination_k` rebuilds from.
-    ``keep_texts=False`` keeps the old raw-text-never-stored property and
-    PERMANENTLY forfeits the growth path for the whole store: the
-    ``_contamination_texts_complete`` marker flips to ``false`` on the
-    first such fold and never flips back (r16 ADVICE, medium — a LATER
-    keep_texts=True fold must not make the partial ``texts`` table look
-    rebuildable: reindexing from it would silently drop the untracked
-    folds' blocked hashes, under-blocking a decontamination gate).
-    ``auto_widen=True`` re-evaluates :func:`adaptive_shingle_k` against
-    the ACCUMULATED blocklist size after each fold and triggers the
-    rebuild when outgrown; combining it with an incomplete texts table
-    (this fold or any earlier one passing ``keep_texts=False``) raises
-    loudly UP FRONT — before any commit — rather than failing later
-    inside the triggered rebuild.
+    Width: ``k`` follows :func:`_frozen_width` under the
+    ``_contamination_k`` marker — ``k=None`` adopts the store's width (5 on
+    a fresh store), a different explicit k raises instead of mixing widths
+    in one blocklist. A wider k is NOT derivable from the stored hashes
+    (k-grams don't compose into (k+1)-grams), so each fold also stores its
+    batch's (doc, text) rows as a ``texts`` part — the input
+    :func:`reindex_contamination_k` rebuilds from.
     """
-    from ..streaming.store import store_commit_parts, store_marker, store_read_part
+    from ..streaming.store import store_commit_parts
 
-    frozen = store_marker(target_root, "_contamination_k")
-    will_be_complete = _contamination_texts_complete(target_root) and keep_texts
-    if auto_widen and not will_be_complete:
-        raise ValueError(
-            "fold_contamination_index: auto_widen=True needs the COMPLETE "
-            "protected texts to rebuild from, but this store's texts table "
-            "is (or would become) partial — a fold passed keep_texts=False. "
-            "Re-fold every protected suite from source with keep_texts=True "
-            "into a fresh store to regain the growth path."
-        )
-    if frozen is not None:
-        if k is not None and k != int(frozen):
-            raise ValueError(
-                f"fold_contamination_index: k={k} differs from the store's "
-                f"frozen width {frozen} — one blocklist cannot mix shingle "
-                f"widths. Pass k=None to adopt the frozen width, or "
-                f"reindex_contamination_k({target_root!r}, {k}) to migrate."
-            )
-        k = int(frozen)
-    elif k is None:
-        k = 5
+    k = _frozen_width(
+        target_root, "_contamination_k", k, 5, "fold_contamination_index"
+    )
     sh = (
         word_shingles(protected_docs, id_col, text_col, k=k)
         .select(F.md5(F.col("shingle")).alias("h"))
         .distinct()
     )
-    tables = {"blocked": sh}
-    if keep_texts:
-        tables["texts"] = protected_docs.select(
-            F.col(id_col).alias("doc"), F.col(text_col).alias("text")
-        )
-    store_commit_parts(
-        tables,
-        target_root,
-        markers={
-            "_contamination_k": str(k),
-            "_contamination_texts_complete": "true" if will_be_complete else "false",
-        },
+    texts = protected_docs.select(
+        F.col(id_col).alias("doc"), F.col(text_col).alias("text")
     )
-    if auto_widen:
-        total = store_read_part(spark, target_root, "blocked").distinct().count()
-        want = adaptive_shingle_k(total)
-        if want > k:
-            reindex_contamination_k(spark, target_root, want)
+    store_commit_parts(
+        {"blocked": sh, "texts": texts},
+        target_root,
+        markers={"_contamination_k": str(k)},
+    )
 
 
 def reindex_contamination_k(spark, target_root: str, new_k: int) -> None:
-    """Rebuild a contamination blocklist at a wider shingle width from the
-    stored protected texts — the growth path :func:`adaptive_shingle_k`
-    triggers (mirrors reindex_minhash_width): one atomic
+    """Rebuild a contamination blocklist at another shingle width from the
+    stored protected texts (mirrors reindex_minhash_width): one atomic
     ``replace_parts`` commit swaps the whole ``blocked`` table and moves
-    the ``_contamination_k`` marker; the ``texts`` parts are untouched, so
-    the operation is repeatable in either direction.
-
-    Refuses unless the texts table is COMPLETE (r16 ADVICE, medium): a
-    store that ever folded with ``keep_texts=False`` has texts for only
-    SOME folds, and rebuilding from the partial table would atomically
-    replace the whole blocklist with shingles from only the retained
-    batches — silently un-blocking the untracked protected docs in a
-    decontamination gate."""
+    the ``_contamination_k`` marker, so later default folds and scans
+    adopt ``new_k``; the ``texts`` parts are untouched, so the operation
+    is repeatable in either direction. Refuses a store with no texts."""
     from ..streaming.store import store_commit_parts, store_read_part
 
     texts = store_read_part(spark, target_root, "texts")
-    if texts is None or not _contamination_texts_complete(target_root):
+    if texts is None:
         raise ValueError(
-            f"reindex_contamination_k: the stored texts at {target_root!r} "
-            "are missing or PARTIAL — at least one fold passed "
-            "keep_texts=False, and a wider k is not derivable from shingle "
-            "hashes alone (rebuilding from partial texts would silently "
-            "drop the untracked folds' blocked hashes). Re-fold every "
-            "protected suite from source at the new width into a fresh "
-            "store."
+            f"reindex_contamination_k: no stored texts at {target_root!r} — "
+            "a wider k is not derivable from shingle hashes alone. Re-fold "
+            "every protected suite from source at the new width into a "
+            "fresh store."
         )
     # re-ingested docs appear once per fold in the texts union; the
     # DISTINCT blocklist would absorb exact duplicates anyway, but dedup
@@ -1184,12 +1059,7 @@ def reindex_contamination_k(spark, target_root: str, new_k: int) -> None:
     store_commit_parts(
         {},
         target_root,
-        # only reachable when texts are complete — re-assert the marker so
-        # the rebuilt snapshot (whose markers are per-version) keeps it
-        markers={
-            "_contamination_k": str(new_k),
-            "_contamination_texts_complete": "true",
-        },
+        markers={"_contamination_k": str(new_k)},
         replace_parts={"blocked": blocked},
     )
 
@@ -1205,31 +1075,21 @@ def contamination_scan(
     """(doc_id, n_blocked): corpus documents sharing ≥1 distinct k-shingle
     with the accumulated blocklist, with the count of blocked shingles.
 
-    ``k`` defaults to the store's frozen ``_contamination_k`` marker —
-    scanning at any other width silently matches nothing, so an explicit
-    mismatching k raises (r15, same contract as the fold side).
+    ``k`` follows the fold's width rule (:func:`_frozen_width`): None
+    adopts the index's frozen width — scanning at any other width silently
+    matches nothing, so an explicit mismatching k raises.
 
     One shuffle on the 32-byte shingle hash; the blocklist side is
     DISTINCT'd across parts (batches may overlap), so a hot stop-shingle
     contributes at most one row per corpus occurrence — bounded, no pair
     explosion (the q143 join shape).
     """
-    from ..streaming.store import store_marker, store_read_part
+    from ..streaming.store import store_read_part
 
     blocked = store_read_part(spark, target_root, "blocked")
     if blocked is None:
         raise ValueError(f"no contamination index at {target_root}")
-    frozen = store_marker(target_root, "_contamination_k")
-    if frozen is not None:
-        if k is not None and k != int(frozen):
-            raise ValueError(
-                f"contamination_scan: k={k} differs from the index's frozen "
-                f"width {frozen} — a cross-width scan matches nothing. Omit "
-                f"k to adopt the frozen width."
-            )
-        k = int(frozen)
-    elif k is None:
-        k = 5
+    k = _frozen_width(target_root, "_contamination_k", k, 5, "contamination_scan")
     blocked = blocked.distinct()
     sh = word_shingles(corpus, id_col, text_col, k=k).select(
         F.col("doc").alias(id_col), F.md5(F.col("shingle")).alias("h")

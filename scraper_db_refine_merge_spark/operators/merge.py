@@ -40,6 +40,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -263,10 +264,15 @@ def read_partitioned_table(spark: SparkSession, target_path: str) -> DataFrame |
 
 
 def _commit_view(
-    target_path: str, merged: DataFrame, partition_col: str, prev_view: str | None
+    target_path: str,
+    merged: DataFrame,
+    partition_col: str,
+    prev_view: str | None,
+    touched: list,
 ) -> None:
-    """Commit ``merged`` (the touched partitions' full new contents) plus
-    the previous view's untouched partitions as one new immutable view."""
+    """Commit ``merged`` (the ``touched`` partitions' full new contents)
+    plus the previous view's untouched partitions as one new immutable
+    view. A touched partition ``merged`` holds no row of is dropped."""
     from ..streaming.store import _commit_pointer, _new_version
 
     data_root = os.path.join(target_path, _PT_DATA)
@@ -277,9 +283,16 @@ def _commit_view(
     # hive writer percent-escapes special chars (':', '%', '=', …), so a
     # name constructed from str(value) can silently miss the staged dir
     # (new data dropped, stale data kept). Untouched partitions keep the
-    # previous view's data path; touched ones point at this commit.
-    mapping = _view_mapping(prev_view) if prev_view is not None else {}
+    # previous view's data path; touched ones point at this commit, or
+    # leave the view when the merge emptied them (their keys all moved to
+    # other partitions). The previous names are decoded, never built.
     prefix = f"{partition_col}="
+    touched_names = {str(v) for v in touched}
+    mapping = {
+        name: rel
+        for name, rel in (_view_mapping(prev_view) if prev_view else {}).items()
+        if unquote(name[len(prefix):]) not in touched_names
+    }
     for name in os.listdir(data_dir):
         if name.startswith(prefix) and os.path.isdir(os.path.join(data_dir, name)):
             mapping[name] = os.path.relpath(os.path.join(data_dir, name), target_path)
@@ -318,10 +331,15 @@ def merge_upsert_partitioned(
     """Partition-pruned upsert into a versioned hive-partitioned table.
 
     The whole-table ``merge_upsert`` rewrite is O(table) per batch — wrong
-    cost model at 100 TB. Here only partitions that the batch actually
-    touches are read, merged, and committed; every other partition is never
-    opened. Merge cost scales with the batch's data locality (a day's
-    re-scrape rewrites that day), not with table size.
+    cost model at 100 TB. Here only the touched partitions are rewritten:
+    those the batch writes, plus those that hold one of the batch's keys
+    (a key whose partition value changed leaves its old partition, so
+    that partition loses the key's old row). Finding the second set reads
+    the key and partition columns of the whole table, a column-pruned
+    semi-join against the batch keys; every other column of an untouched
+    partition is never read, and its files are never rewritten. Rewrite
+    cost scales with the batch's data locality (a day's re-scrape rewrites
+    that day), not with table size.
 
     Requirements: the partition column must be a stable string/date key.
 
@@ -338,22 +356,8 @@ def merge_upsert_partitioned(
     """
     order_cols = order_cols or [F.col(key_cols[0])]
     deduped = latest_per_key(updates, key_cols, order_cols)
-
-    # The batch's touched partitions: small by construction (a batch has
-    # temporal/source locality), so collect() is a driver-sized list.
-    touched = [
-        r[0] for r in deduped.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return []
-    # A NULL partition value would be written as __HIVE_DEFAULT_PARTITION__
-    # and isin(touched) can't prune NULLs. Callers must coalesce to a
-    # sentinel first (stream_ingest does).
-    if any(v is None for v in touched):
-        raise ValueError(
-            f"merge_upsert_partitioned: NULL values in partition column "
-            f"{partition_col!r}; coalesce to a sentinel before merging"
-        )
+    keys = deduped.select(*key_cols)
+    touched_rows = deduped.select(partition_col)
 
     from ..streaming.store import _COMMITLOG, _version_dir_for_write
 
@@ -373,15 +377,42 @@ def merge_upsert_partitioned(
                 "directory without a commit log — not a table this function "
                 "created; merge into a fresh path instead"
             )
+        target = None
+    else:
+        target = _read_view_df(spark, target_path, prev_view)
+        # A key can move partitions between commits; its old row stays in
+        # the old partition unless that one is rewritten too. So partitions
+        # holding a batch key are touched as well: a semi-join that reads
+        # only the key and partition columns, in the same job as the
+        # batch's own partitions.
+        touched_rows = touched_rows.unionByName(
+            target.select(*key_cols, partition_col)
+            .join(keys, key_cols, "semi")
+            .select(partition_col)
+        )
+    # small by construction (a batch has temporal/source locality), so
+    # collect() is a driver-sized list
+    touched = [r[0] for r in touched_rows.distinct().collect()]
+    if not touched:
+        return []
+    # A NULL partition value would be written as __HIVE_DEFAULT_PARTITION__
+    # and isin(touched) can't prune NULLs. Callers must coalesce to a
+    # sentinel first (stream_ingest does).
+    if any(v is None for v in touched):
+        raise ValueError(
+            f"merge_upsert_partitioned: NULL values in partition column "
+            f"{partition_col!r}; coalesce to a sentinel before merging"
+        )
+
+    if target is None:
         merged = deduped
     else:
         # partition pruning: only touched partition directories are scanned
-        target = _read_view_df(spark, target_path, prev_view)
         affected = target.filter(F.col(partition_col).isin(touched))
-        kept = affected.join(deduped.select(*key_cols), key_cols, "left_anti")
+        kept = affected.join(keys, key_cols, "left_anti")
         merged = kept.unionByName(deduped.select(*kept.columns))
 
-    _commit_view(target_path, merged, partition_col, prev_view)
+    _commit_view(target_path, merged, partition_col, prev_view, touched)
     return sorted(str(v) for v in touched)
 
 

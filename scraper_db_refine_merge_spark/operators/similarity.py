@@ -1340,21 +1340,27 @@ def semantic_dedup(
     oracle — reference analog: the canonicalization linkage election of
     database/data_quality.py, lifted from key-equality to embedding space.
 
-    r13 (VERDICT r12 item 1): the within-cell election is ONE grouped
-    Arrow kernel per cell (``groupBy(cell).applyInPandas``) instead of a
-    cell equi-join — the join materialized cell² pair ROWS (each carrying
-    two full vectors) through the exchange and scored each with the
-    interpreted HOF cosine (~35 µs/pair); the kernel ships each vector
-    through the shuffle ONCE, scores the cell tile with the
+    r13 (VERDICT r12 item 1): the within-cell election is ONE cogrouped
+    Arrow kernel per cell (:func:`_cross_dropped_ids` with the cell rows
+    on both sides — the election :func:`fold_semantic_index` and
+    :func:`reindex_semantic` run too) instead of a cell equi-join — the
+    join materialized cell² pair ROWS (each carrying two full vectors)
+    through the exchange and scored each with the interpreted HOF cosine
+    (~35 µs/pair); the kernel scores the cell tile with the
     brute_force_near_dup_pairs sequential-dim numpy kernel (bit-identical
     floats, pinned by the unchanged q138/q141 oracle hashes), and emits
-    only the dropped ids. Peak task memory is the cell matrix plus one
+    only the dropped ids. Peak task memory is the cell matrices plus one
     chunk×cell tile (a-axis chunked), so a skew-bloated cell degrades to
     more chunk passes, not OOM."""
     cells = kmeans_cells(df, id_col, vec_col, k, iters, round_scale)
-    dropped = _cell_dropped_ids(
-        cells.select("cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")),
+    sides = cells.select(
+        "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+    )
+    dropped = _cross_dropped_ids(
+        sides,
+        sides,
         df.schema[id_col].dataType.simpleString(),
+        "__dropped_id",
         threshold,
         round_scale,
     )
@@ -1364,85 +1370,6 @@ def semantic_dedup(
         id_col,
         "cell",
         F.when(F.col("__dropped_id").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("kept"),
-    )
-
-
-def _cell_dropped_ids(
-    rows: DataFrame, id_dt: str, threshold: float, round_scale: int
-) -> DataFrame:
-    """(cell, __id, __vec) → distinct ``__dropped_id``: ids with a
-    smaller-id neighbor at rounded cosine ≥ threshold in their cell.
-
-    Parity with the replaced join + HOF-filter plan: sequential-over-dims
-    accumulation (``_seq_norm`` order), half-away-from-zero rounding, and
-    Spark's NaN-greatest comparison — a pair whose cosine is NaN from a
-    NaN ELEMENT did qualify (``NaN >= t`` is TRUE) and still does. Two
-    deliberate divergences for corrupt data (r13 review): a pair touching
-    a null-element vector was NULL ≥ t → filtered, so those rows are
-    flagged JVM-side and excluded (the Arrow boundary would otherwise
-    blur them into NaN = qualify); and a ZERO-NORM vector — where the HOF
-    plan raised DIVIDE_BY_ZERO under the session's ANSI default — takes
-    the kernel family's degenerate-pair NULL contract instead
-    (_pair_cosine_scores): it never qualifies, rather than silently
-    deleting every larger-id vector in its cell or killing the job."""
-    import numpy as np
-    import pandas as pd
-
-    scale = 10**round_scale
-    flagged = rows.withColumn("__pnull", F.expr("exists(__vec, x -> x is null)"))
-
-    def _elect(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"__dropped_id": pdf["__id"][:0]})
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["__id"].to_numpy()
-        ok = ~pdf["__pnull"].fillna(True).to_numpy(dtype=bool)
-        lens = np.array(
-            [len(v) if v is not None else -1 for v in pdf["__vec"]]
-        )
-        out = []
-        # a length-mismatched pair's zip_with cosine was NULL → never
-        # qualified: score only within equal-length groups
-        for L in np.unique(lens[ok & (lens >= 0)]):
-            idx = np.nonzero(ok & (lens == L))[0]
-            if len(idx) < 2:
-                continue
-            vids = ids[idx]
-            mat = np.array(
-                [list(pdf["__vec"].iloc[i]) for i in idx], dtype=np.float64
-            )
-            norms = _seq_norm(mat, L)
-            # zero-norm vectors never qualify (the degenerate-pair NULL
-            # contract — the HOF plan raised DIVIDE_BY_ZERO here); NaN
-            # ELEMENTS give NaN norms, not zero, and keep qualifying
-            # under NaN-greatest like the HOF did
-            zn = norms == 0
-            dropped = np.zeros(len(idx), dtype=bool)
-            # a-axis chunking bounds the pair tile: chunk×cell doubles
-            chunk = max(1, 4_000_000 // len(idx))
-            for lo in range(0, len(idx), chunk):
-                hi = min(lo + chunk, len(idx))
-                acc = np.zeros((hi - lo, len(idx)))
-                for d in range(L):  # sequential over dims: order parity
-                    acc += mat[lo:hi, d, None] * mat[None, :, d]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    sims = acc / (norms[lo:hi, None] * norms[None, :])
-                    sims = (
-                        np.floor(np.abs(sims) * scale + 0.5) / scale * np.sign(sims)
-                    )
-                # Spark comparison is NaN-greatest: NaN >= t qualified
-                qual = (sims >= threshold) | np.isnan(sims)
-                qual &= ~(zn[lo:hi, None] | zn[None, :])
-                qual &= vids[lo:hi, None] < vids[None, :]
-                dropped |= qual.any(axis=0)
-            if dropped.any():
-                out.append(pd.DataFrame({"__dropped_id": vids[dropped]}))
-        return pd.concat(out, ignore_index=True) if out else empty
-
-    # ids are unique across cells and the kernel emits each at most once —
-    # no distinct needed (the replaced pair join required one)
-    return flagged.groupBy("cell").applyInPandas(
-        _elect, f"__dropped_id {id_dt}"
     )
 
 
@@ -1522,11 +1449,25 @@ def _cross_dropped_ids(
     threshold: float,
     round_scale: int,
 ) -> DataFrame:
-    """Per-cell new×universe election for :func:`fold_semantic_index`:
-    emit ``greatest(new_id, uni_id)`` of every qualifying within-cell pair
-    (rounded cosine ≥ threshold, Spark NaN-greatest comparison; pairs
-    touching a null-element / NULL / length-mismatched vector never
-    qualify — the replaced HOF-filter semantics, see _cell_dropped_ids)."""
+    """Per-cell new×universe election of every semantic-dedup path
+    (:func:`semantic_dedup` and :func:`reindex_semantic` pass the same
+    rows on both sides, :func:`fold_semantic_index` the new batch against
+    new ∪ stored): emit ``greatest(new_id, uni_id)`` of every qualifying
+    within-cell pair, once per cell.
+
+    Parity with the replaced join + HOF-filter plan: sequential-over-dims
+    accumulation (``_seq_norm`` order), half-away-from-zero rounding, and
+    Spark's NaN-greatest comparison — a pair whose cosine is NaN from a
+    NaN ELEMENT did qualify (``NaN >= t`` is TRUE) and still does. Two
+    deliberate divergences for corrupt data (r13 review): a pair touching
+    a null-element / NULL / length-mismatched vector was NULL ≥ t →
+    filtered, so those rows are flagged JVM-side and never qualify (the
+    Arrow boundary would otherwise blur them into NaN = qualify); and a
+    ZERO-NORM vector — where the HOF plan raised DIVIDE_BY_ZERO under the
+    session's ANSI default — takes the kernel family's degenerate-pair
+    NULL contract instead (_pair_cosine_scores): it never qualifies,
+    rather than silently deleting every larger-id vector in its cell or
+    killing the job."""
     import numpy as np
     import pandas as pd
 
@@ -1560,7 +1501,7 @@ def _cross_dropped_ids(
             lm = np.array([list(lpdf["__vec"].iloc[i]) for i in li], dtype=np.float64)
             rm = np.array([list(rpdf["__rvec"].iloc[i]) for i in ri], dtype=np.float64)
             ln, rn = _seq_norm(lm, L), _seq_norm(rm, L)
-            # zero-norm → never qualifies (see _cell_dropped_ids)
+            # zero-norm → never qualifies (see the docstring)
             lzn, rzn = ln == 0, rn == 0
             lv, rv = l_ids[li], r_ids[ri]
             chunk = max(1, 4_000_000 // len(ri))

@@ -70,8 +70,9 @@ def stream_ingest(
 
     ``partition_by_event_date=True`` switches to the partition-pruned MERGE
     (operators.merge.merge_upsert_partitioned) over a table hive-partitioned
-    by ``event_date``: a micro-batch only rewrites the date partitions it
-    touches. This is the production shape — re-scrapes have temporal
+    by ``event_date``: a micro-batch only rewrites the date partitions its
+    rows land in and those holding its keys, so an event whose start date
+    a re-scrape corrected leaves its old partition. This is the production shape — re-scrapes have temporal
     locality, so merge cost tracks the batch, not the table. The default
     whole-table MERGE reports richer stats and suits small tables.
     """

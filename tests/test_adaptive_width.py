@@ -208,7 +208,7 @@ _NEAR = "the quick brown fox jumps over the lazy dog near the riverbank tonight"
 
 
 @pytest.mark.slow
-def test_fold_auto_freezes_width_and_reindex_widens(spark, tmp_path):
+def test_fold_freezes_width_and_reindex_widens(spark, tmp_path):
     from scraper_db_refine_merge_spark.streaming.store import (
         store_marker,
         store_read_part,
@@ -219,12 +219,17 @@ def test_fold_auto_freezes_width_and_reindex_widens(spark, tmp_path):
     root = str(tmp_path / "mh")
     dd.fold_minhash_index(
         spark, root, _docs(spark, [(1, _BASE), (2, "pack my box with five dozen liquor jugs right now ok")]),
-        "doc_id", "text", threshold=0.2, band_size="auto",
+        "doc_id", "text", threshold=0.2, band_size=2,
     )
-    assert store_marker(root, "_minhash_width") == "8:2"  # frozen at batch 0
+    assert store_marker(root, "_minhash_width") == "2"  # frozen at batch 0
+    with pytest.raises(ValueError, match="frozen width"):
+        dd.fold_minhash_index(
+            spark, root, _docs(spark, [(3, _NEAR)]),
+            "doc_id", "text", threshold=0.2, band_size=3,
+        )
     dd.fold_minhash_index(
         spark, root, _docs(spark, [(3, _NEAR)]),
-        "doc_id", "text", threshold=0.2, band_size="auto",
+        "doc_id", "text", threshold=0.2, band_size=2,
     )
     pairs_before = sorted(
         map(tuple, store_read_part(spark, root, "pairs").collect())
@@ -232,7 +237,7 @@ def test_fold_auto_freezes_width_and_reindex_widens(spark, tmp_path):
     assert (1, 3) in {(a, b) for (a, b, *_r) in pairs_before}  # cross-fold dup found
 
     dd.reindex_minhash_width(spark, root, band_size=3)
-    assert store_marker(root, "_minhash_width") == "12:3"
+    assert store_marker(root, "_minhash_width") == "3"
     sigs = store_read_part(spark, root, "sigs")
     assert [c for c in sigs.columns if c.startswith("h")] == [f"h{j}" for j in range(12)]
     # atomic replace: ONE sigs part, pair log untouched
@@ -240,38 +245,34 @@ def test_fold_auto_freezes_width_and_reindex_widens(spark, tmp_path):
     assert len(m["sigs"]) == 1
     assert sorted(map(tuple, store_read_part(spark, root, "pairs").collect())) == pairs_before
 
-    # future folds read the widened marker and keep discovering dups
+    # future folds at the widened width keep discovering dups
     dd.fold_minhash_index(
         spark, root, _docs(spark, [(4, _BASE + " again")]),
-        "doc_id", "text", threshold=0.2, band_size="auto",
+        "doc_id", "text", threshold=0.2, band_size=3,
     )
     got = {(a, b) for (a, b, *_r) in map(tuple, store_read_part(spark, root, "pairs").collect())}
     assert (1, 4) in got and (3, 4) in got
 
 
 @pytest.mark.slow
-def test_fold_auto_widen_triggers_from_ladder(spark, tmp_path, monkeypatch):
+def test_default_fold_adopts_reindexed_width(spark, tmp_path):
+    """The width rule: every fold freezes its width in the store, so a
+    default-argument fold after reindex_minhash_width adopts the rebuilt
+    width instead of banding 8-lane signatures against 12-lane ones."""
     from scraper_db_refine_merge_spark.streaming.store import store_marker, store_read_part
 
-    # ladder double: width 2 below 3 docs, 3 at >= 3 accumulated docs
-    monkeypatch.setattr(dd, "adaptive_band_size", lambda n, *a, **k: 2 if n < 3 else 3)
-    root = str(tmp_path / "mh2")
+    root = str(tmp_path / "mh")
     dd.fold_minhash_index(
-        spark, root, _docs(spark, [(1, _BASE), (2, _NEAR)]),
-        "doc_id", "text", threshold=0.2, band_size="auto", auto_widen=True,
+        spark, root, _docs(spark, [(1, _BASE)]), "doc_id", "text", threshold=0.2
     )
-    # batch 0: froze at 2 lanes... but the post-commit total (2 docs) is
-    # still below the rung — no widening yet
-    assert store_marker(root, "_minhash_width") == "8:2"
+    dd.reindex_minhash_width(spark, root, band_size=3)
     out = dd.fold_minhash_index(
-        spark, root, _docs(spark, [(3, _BASE + " again")]),
-        "doc_id", "text", threshold=0.2, band_size="auto", auto_widen=True,
+        spark, root, _docs(spark, [(2, _NEAR)]), "doc_id", "text", threshold=0.2
     )
-    # total hit 3 → the index re-widened itself after the fold
-    assert store_marker(root, "_minhash_width") == "12:3"
+    assert store_marker(root, "_minhash_width") == "3"
     sigs = store_read_part(spark, root, "sigs")
     assert [c for c in sigs.columns if c.startswith("h")] == [f"h{j}" for j in range(12)]
-    assert {(a, b) for (a, b, *_r) in map(tuple, out.collect())} >= {(1, 2), (1, 3)}
+    assert (1, 2) in {(r["a_id"], r["b_id"]) for r in out.collect()}
 
 
 @pytest.mark.slow
@@ -284,8 +285,7 @@ def test_reindex_dedups_reingested_shingles(spark, tmp_path):
     root = str(tmp_path / "mh")
     for _ in range(2):  # same doc folded twice
         dd.fold_minhash_index(
-            spark, root, _docs(spark, [(1, _BASE)]),
-            "doc_id", "text", threshold=0.2, band_size="auto",
+            spark, root, _docs(spark, [(1, _BASE)]), "doc_id", "text", threshold=0.2
         )
     dd.reindex_minhash_width(spark, root, band_size=3)
     sigs = {r["doc"]: r["n_shingles"] for r in store_read_part(spark, root, "sigs").collect()}
@@ -298,7 +298,7 @@ def test_reindex_dedups_reingested_shingles(spark, tmp_path):
 # ----------------------------------------------------------------------
 # r15 (VERDICT r14 item 4): the contamination blocklist was the last fold
 # family without a width growth path — k was burned into the stored hashes
-# with nothing recording it. Freeze / mismatch-raise / rewiden / trigger,
+# with nothing recording it. Freeze / mismatch-raise / rewiden,
 # mirroring the MinHash tests above.
 
 _PROT1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -360,33 +360,6 @@ def test_contamination_reindex_rebuilds_blocklist_at_wider_k(spark, tmp_path):
     assert {r["doc_id"] for r in dd.contamination_scan(spark, root, corpus).collect()} == {10}
 
 
-def test_contamination_auto_widen_triggers_from_ladder(spark, tmp_path, monkeypatch):
-    from scraper_db_refine_merge_spark.streaming.store import store_marker
-
-    # ladder double: 5 below 15 accumulated blocked shingles, 6 at >= 15
-    # (fold 1 stores 6 shingles, fold 2 brings the union to 18)
-    monkeypatch.setattr(dd, "adaptive_shingle_k", lambda n: 5 if n < 15 else 6)
-    root = str(tmp_path / "contam")
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(1, _PROT1)]), auto_widen=True
-    )
-    assert store_marker(root, "_contamination_k") == "5"  # 6 shingles: below
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(2, _PROT2 + " twelve thirteen fourteen fifteen sixteen")]),
-        k=None, auto_widen=True,
-    )
-    assert store_marker(root, "_contamination_k") == "6"  # outgrown → rebuilt
-
-
-def test_contamination_keep_texts_false_blocks_reindex(spark, tmp_path):
-    root = str(tmp_path / "contam")
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(1, _PROT1)]), keep_texts=False
-    )
-    with pytest.raises(ValueError, match="keep_texts=False"):
-        dd.reindex_contamination_k(spark, root, 7)
-
-
 def test_adaptive_shingle_k_ladder_values():
     assert dd.adaptive_shingle_k(1) == 5
     assert dd.adaptive_shingle_k(1 << 25) == 5
@@ -430,107 +403,24 @@ def test_cosine_near_dup_auto_tables_resolves_base_at_auto_width(spark):
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, fixed.collect()))
 
 
-def test_contamination_mixed_folds_block_reindex(spark, tmp_path):
-    """r16 ADVICE (medium): keep_texts=False on ANY fold poisons the texts
-    table permanently — a LATER keep_texts=True fold must not make the
-    partial table look rebuildable (reindexing from it would silently drop
-    the untracked fold's blocked hashes: under-blocking in a
-    decontamination gate)."""
+def test_contamination_default_k_adopts_frozen_after_auto_widen(spark, tmp_path):
+    """The default fold signature keeps working after the blocklist was
+    re-widened: k=None (adopt-frozen) is the default, so a default fold
+    after reindex_contamination_k adopts the rebuilt width instead of
+    raising a width mismatch."""
     from scraper_db_refine_merge_spark.streaming.store import store_marker
 
     root = str(tmp_path / "contam")
     dd.fold_contamination_index(spark, root, _docs(spark, [(1, _PROT1)]))
+    dd.reindex_contamination_k(spark, root, 6)
+    assert store_marker(root, "_contamination_k") == "6"
+    # a default-argument fold: adopts 6, no raise
     dd.fold_contamination_index(
-        spark, root, _docs(spark, [(2, _PROT2)]), keep_texts=False
-    )
-    assert store_marker(root, "_contamination_texts_complete") == "false"
-    # texts is non-None (fold 1 and 3 stored theirs) but PARTIAL
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(3, "extra words for the third fold here")])
-    )
-    assert store_marker(root, "_contamination_texts_complete") == "false"
-    with pytest.raises(ValueError, match="keep_texts=False"):
-        dd.reindex_contamination_k(spark, root, 7)
-
-
-def test_contamination_auto_widen_refuses_partial_texts_up_front(spark, tmp_path):
-    """auto_widen needs the complete texts to rebuild from; combining it
-    with keep_texts=False (this fold or an earlier one) raises BEFORE any
-    commit — the loud-early form of the r15 documented-away growth gap."""
-    from scraper_db_refine_merge_spark.streaming.store import store_versions
-
-    root = str(tmp_path / "contam")
-    with pytest.raises(ValueError, match="auto_widen"):
-        dd.fold_contamination_index(
-            spark, root, _docs(spark, [(1, _PROT1)]),
-            keep_texts=False, auto_widen=True,
-        )
-    assert store_versions(root) == []  # nothing committed
-
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(1, _PROT1)]), keep_texts=False
-    )
-    n_before = len(store_versions(root))
-    with pytest.raises(ValueError, match="auto_widen"):
-        dd.fold_contamination_index(
-            spark, root, _docs(spark, [(2, _PROT2)]), auto_widen=True
-        )
-    assert len(store_versions(root)) == n_before
-
-
-def test_contamination_default_k_adopts_frozen_after_auto_widen(spark, tmp_path, monkeypatch):
-    """r16 ADVICE (low): the default fold signature must keep working after
-    auto_widen moved the frozen width — k=None (adopt-frozen) is the
-    default, so the exact call that enabled auto-widening doesn't start
-    raising a width-mismatch after its own rebuild."""
-    from scraper_db_refine_merge_spark.streaming.store import store_marker
-
-    monkeypatch.setattr(dd, "adaptive_shingle_k", lambda n: 5 if n < 15 else 6)
-    root = str(tmp_path / "contam")
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(1, _PROT1)]), auto_widen=True
-    )
-    dd.fold_contamination_index(
-        spark, root,
-        _docs(spark, [(2, _PROT2 + " twelve thirteen fourteen fifteen sixteen")]),
-        auto_widen=True,
-    )
-    assert store_marker(root, "_contamination_k") == "6"  # widened
-    # the SAME default-argument call again: adopts 6, no raise
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(3, "yet more protected words arriving later")]),
-        auto_widen=True,
+        spark, root, _docs(spark, [(3, "yet more protected words arriving later")])
     )
     assert store_marker(root, "_contamination_k") == "6"
-
-
-@pytest.mark.slow
-def test_contamination_legacy_store_completeness_inferred_from_manifest(spark, tmp_path):
-    """Pre-marker stores (folded before r16) carry no completeness marker;
-    completeness is inferred from the live manifest part counts — a texts
-    list shorter than the blocked list proves a fold skipped texts."""
-    import os
-
-    from scraper_db_refine_merge_spark.streaming.store import store_version_dir
-
-    root = str(tmp_path / "contam")
-    dd.fold_contamination_index(spark, root, _docs(spark, [(1, _PROT1)]))
-    dd.fold_contamination_index(
-        spark, root, _docs(spark, [(2, _PROT2)]), keep_texts=False
-    )
-    # simulate a legacy store: strip the r16 marker from the live snapshot
-    os.remove(os.path.join(store_version_dir(root), "_contamination_texts_complete"))
-    assert dd._contamination_texts_complete(root) is False
-    with pytest.raises(ValueError, match="PARTIAL"):
-        dd.reindex_contamination_k(spark, root, 7)
-
-    # a legacy store whose every fold kept texts infers complete
-    root2 = str(tmp_path / "contam2")
-    dd.fold_contamination_index(spark, root2, _docs(spark, [(1, _PROT1)]))
-    dd.fold_contamination_index(spark, root2, _docs(spark, [(2, _PROT2)]))
-    os.remove(os.path.join(store_version_dir(root2), "_contamination_texts_complete"))
-    assert dd._contamination_texts_complete(root2) is True
-    dd.reindex_contamination_k(spark, root2, 7)  # allowed
+    corpus = _docs(spark, [(10, "x yet more protected words arriving later y")])
+    assert {r["doc_id"] for r in dd.contamination_scan(spark, root, corpus).collect()} == {10}
 
 
 def test_capped_shingles_equal_freq_join_reference(spark):

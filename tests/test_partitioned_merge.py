@@ -89,6 +89,30 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
     assert out == {"e1": 99.0, "e2": 2.0, "e3": 3.0, "e4": 4.0, "e5": 5.0}
 
 
+def test_partitioned_merge_key_moving_partition_keeps_one_row(spark, tmp_path):
+    """A key whose partition value changes between commits must leave its
+    old partition: the partition holding the key's old row is rewritten
+    (here emptied and dropped from the view) alongside the new one."""
+    target = str(tmp_path / "moves")
+    merge_upsert_partitioned(
+        spark, target,
+        _mk_batch(spark, [("e1", "2024-01-01", 1.0), ("e2", "2024-01-03", 2.0)]),
+        key_cols=["event_id"], partition_col="day",
+    )
+    untouched = _files_with_mtimes(target, "day=2024-01-03")
+    touched = merge_upsert_partitioned(
+        spark, target,
+        _mk_batch(spark, [("e1", "2024-01-02", 9.0)]),
+        key_cols=["event_id"], partition_col="day",
+    )
+    t = read_partitioned_table(spark, target)
+    assert t.filter(F.col("event_id") == "e1").count() == 1
+    assert touched == ["2024-01-01", "2024-01-02"]
+    assert _table(spark, target) == {("e1", "2024-01-02", 9.0), ("e2", "2024-01-03", 2.0)}
+    assert sorted(_mapping(target)) == ["day=2024-01-02", "day=2024-01-03"]
+    assert _files_with_mtimes(target, "day=2024-01-03") == untouched
+
+
 def test_partitioned_merge_rejects_null_partition_values(spark, tmp_path):
     """NULL partition values would land in __HIVE_DEFAULT_PARTITION__ and
     can't be pruned by isin(touched) — must be rejected at entry."""

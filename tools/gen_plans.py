@@ -166,23 +166,13 @@ def main() -> None:
         "\n  pointer replace) — the oracle gate now proves compaction is"
         "\n  read-identical every round; read cost no longer grows with"
         "\n  fold count."
-        "\n- merge_upsert_partitioned commits fresh targets via a pointer"
-        "\n  layout (immutable symlink views over immutable data commits,"
-        "\n  one atomic os.replace) — crash between partition swaps can no"
-        "\n  longer leave a mixed table; untouched partitions re-link, not"
-        "\n  rewrite. Legacy plain-hive targets keep the in-place swap."
-        "\n- latest_wins auto-routes hot-key frames (>10% share, measured"
-        "\n  by one exact keyed-count pass over the frame — memoized per"
-        "\n  frame; persist expensive upstreams first, see the latest_wins"
-        "\n  docstring) through the salted two-phase window —"
-        "\n  plan-observable via __salt, rows identical."
     )
     print(
         "\nRound-13 notes (the round's reworks; see ROADMAP 13a-13j for the"
         "\nfull record):"
         "\n- semantic_dedup / fold_semantic_index (q138/q141): the"
-        "\n  within-cell election is ONE grouped/cogrouped Arrow kernel per"
-        "\n  cell (groupBy(cell).applyInPandas) — the replaced cell"
+        "\n  within-cell election is ONE cogrouped Arrow kernel per"
+        "\n  cell (groupBy(cell).cogroup(...).applyInPandas) — the replaced cell"
         "\n  equi-join materialized cell^2 pair ROWS (each carrying two"
         "\n  full vectors) through the exchange and paid the interpreted"
         "\n  HOF cosine per pair. Kernel = sequential-dim accumulation,"
