@@ -872,7 +872,7 @@ def fold_minhash_index(
     WRITE path too. State grows with the corpus, as any dedup index must;
     every join here is id-/band-keyed with no broadcast hints.
     """
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
     band_size = _frozen_width(
         target_root, "_minhash_width", band_size, MINHASH_BAND_SIZE,
@@ -883,8 +883,8 @@ def fold_minhash_index(
     sh_new = word_shingles(new_docs, id_col, text_col, k)
     sig_new = minhash_signatures(sh_new, num_hashes).persist()
 
-    sh_old = store_read_part(spark, target_root, "shingles")
-    sig_old = store_read_part(spark, target_root, "sigs")
+    sh_old = read_table(spark, target_root, "shingles")
+    sig_old = read_table(spark, target_root, "sigs")
     sig_all = sig_new if sig_old is None else sig_old.unionByName(sig_new)
     sh_all = sh_new if sh_old is None else sh_old.unionByName(sh_new)
 
@@ -924,7 +924,7 @@ def fold_minhash_index(
     )
     sig_new.unpersist()
     cand.unpersist()
-    return store_read_part(spark, target_root, "pairs")
+    return read_table(spark, target_root, "pairs")
 
 
 def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
@@ -945,9 +945,9 @@ def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
     verified with exact Jaccard); future folds discover under the wider
     structure.
     """
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
-    sh = store_read_part(spark, target_root, "shingles")
+    sh = read_table(spark, target_root, "shingles")
     if sh is None:
         raise ValueError(f"reindex_minhash_width: no index at {target_root!r}")
     # A doc re-ingested across folds has duplicate (doc, shingle) rows in the
@@ -962,24 +962,6 @@ def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
         markers={"_minhash_width": str(band_size)},
         replace_parts={"sigs": sigs},
     )
-
-
-def adaptive_shingle_k(n_blocked: int) -> int:
-    """Contamination shingle width from accumulated blocklist size: k=5
-    through 2^25 blocked shingles (≈33 M — far beyond any benchmark suite),
-    +1 word per further 2^13× growth — the width to pass to
-    :func:`reindex_contamination_k` once a blocklist outgrows its own.
-
-    Rationale: expected incidental (non-contaminated) k-gram collisions
-    scale with |blocklist| / |k-gram space|, and each +1 word multiplies
-    the space by the effective working vocabulary — conservatively ≥ 2^13
-    (Heaps'-law vocabularies are 10^4-10^5) — so one rung absorbs 2^13× of
-    blocklist growth at constant expected-collision mass. Integer-only so
-    the policy is deterministic and oracle-mirrorable, like
-    adaptive_band_size / adaptive_num_planes."""
-    if n_blocked <= (1 << 25):
-        return 5
-    return 5 + ((n_blocked - 1).bit_length() - 26) // 13 + 1
 
 
 def fold_contamination_index(
@@ -1037,9 +1019,9 @@ def reindex_contamination_k(spark, target_root: str, new_k: int) -> None:
     the ``_contamination_k`` marker, so later default folds and scans
     adopt ``new_k``; the ``texts`` parts are untouched, so the operation
     is repeatable in either direction. Refuses a store with no texts."""
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
-    texts = store_read_part(spark, target_root, "texts")
+    texts = read_table(spark, target_root, "texts")
     if texts is None:
         raise ValueError(
             f"reindex_contamination_k: no stored texts at {target_root!r} — "
@@ -1084,9 +1066,9 @@ def contamination_scan(
     contributes at most one row per corpus occurrence — bounded, no pair
     explosion (the q143 join shape).
     """
-    from ..streaming.store import store_read_part
+    from ..streaming.store import read_table
 
-    blocked = store_read_part(spark, target_root, "blocked")
+    blocked = read_table(spark, target_root, "blocked")
     if blocked is None:
         raise ValueError(f"no contamination index at {target_root}")
     k = _frozen_width(target_root, "_contamination_k", k, 5, "contamination_scan")

@@ -217,16 +217,16 @@ def fold_components(
     the batch, not with the ever-growing pair log. (A batch that merges two
     old clusters collapses them through their representatives in the first
     hop.) The refreshed assignment commits through the crash-safe versioned
-    store (streaming/store.py: immutable snapshot + one atomic pointer
-    replace; local/atomic-rename filesystems only).
+    store (streaming/store.py: one immutable part behind one put-if-absent
+    commit-log entry; no rename, so object stores work too).
 
     Equivalence with the from-scratch computation over the concatenated
     pair history is the tested invariant (tests/test_graph.py).
     """
-    from ..streaming.store import store_commit, store_read
+    from ..streaming.store import read_table, store_commit
 
     e = new_pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    prior = store_read(spark, target_path)
+    prior = read_table(spark, target_path)
     if prior is not None:
         # EVERY prior row becomes an edge — a singleton component (node ==
         # component) yields a harmless self-edge, which keeps the node in
@@ -236,7 +236,8 @@ def fold_components(
         e = e.unionByName(star)
     out = connected_components(e, "s", "d", max_iter=max_iter)
     # keep_versions > 1 retains prior assignment snapshots for time travel
-    # (store_read_version) — "which cluster was this doc in before batch N
-    # folded?" is the provenance question canonical-selection audits ask.
-    committed = store_commit(out, target_path, keep=keep_versions)
-    return spark.read.parquet(committed)
+    # (read_table(..., version=seq)) — "which cluster was this doc in
+    # before batch N folded?" is the provenance question canonical-selection
+    # audits ask.
+    store_commit(out, target_path, keep=keep_versions)
+    return read_table(spark, target_path)

@@ -141,13 +141,13 @@ def fold_bigram_index(
     (w1, w2, cnt) part and a ``tokens`` (distinct w) part via the
     manifest store (store_commit_parts, ADVICE r5 shape): per-batch commit
     I/O is O(batch statistics), the accumulated index is the union of
-    parts, and both tables move under one atomic pointer. This is the
+    parts, and both tables move under one commit-log entry. This is the
     ingestion form of q126: when data lands, corpus LM scores stay
     current WITHOUT re-tokenizing the existing corpus.
 
     ``keep_versions > 1`` retains that many committed manifests — each an
     immutable view of the index as of its fold — enabling snapshot diffs
-    (``lm_index_drift``) and as-of scoring via ``store_read_part_version``.
+    (``lm_index_drift``) and as-of scoring via ``read_table(..., version=seq)``.
     Retention GC keeps every part any retained manifest references, so an
     old snapshot's statistics can never be deleted out from under it.
     """
@@ -180,10 +180,10 @@ def lm_index_drift(spark, target_root: str, seq_a: int, seq_b: int) -> DataFrame
     corpus-monitoring pipeline alerts on (vocabulary churn, topic drift)
     between ingestion runs.
     """
-    from ..streaming.store import store_read_part_version
+    from ..streaming.store import read_table
 
     def read_part(part, seq):
-        df = store_read_part_version(spark, target_root, part, seq)
+        df = read_table(spark, target_root, part, version=seq)
         if df is None:
             # Mirror contamination_scan's missing-index error (ADVICE r7):
             # a GC'd snapshot / never-committed seq otherwise surfaces as
@@ -229,10 +229,10 @@ def lm_scores_from_index(
     """Score ``docs`` with the FOLDED index's statistics. After folding
     batches b0..bn, scores equal ``bigram_lm_scores`` over the
     concatenated corpus — the mergeability invariant q129 gates."""
-    from ..streaming.store import store_read_part
+    from ..streaming.store import read_table
 
-    bi_parts = store_read_part(spark, target_root, "bigrams")
-    tok_parts = store_read_part(spark, target_root, "tokens")
+    bi_parts = read_table(spark, target_root, "bigrams")
+    tok_parts = read_table(spark, target_root, "tokens")
     if bi_parts is None or tok_parts is None:
         # mirror contamination_scan's missing-index error (the ADVICE r7
         # class): never let a missing store surface as NoneType.groupBy

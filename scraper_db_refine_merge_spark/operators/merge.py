@@ -19,13 +19,13 @@ Each table shape commits through exactly one protocol:
   at the path — is repaired by the next writer on entry
   (``recover_plain_table``): it renames the lone backup back and drops
   stale staging directories before reading the table.
-- VERSIONED tables — ``merge_upsert_partitioned`` here and every
-  streaming/store.py store. They commit through the store's CAS commit
-  log (``_commits/c-<seq>``, exclusive create; see streaming/store.py):
-  immutable data directories, one manifest view per version, and one
-  put-if-absent log entry as the only mutation readers can observe. No
-  rename and no symlink anywhere on this path, so it holds on object
-  stores as well as POSIX.
+- VERSIONED tables — ``merge_upsert_partitioned`` here. Its target is a
+  streaming/store.py versioned table: a commit log whose entries name
+  manifests of immutable ``parts/`` dirs, read back with
+  ``store.read_table``. A merge writes the touched partitions as one new
+  part and commits a manifest that replaces only those partitions'
+  entries, behind one put-if-absent log entry. No rename and no symlink
+  anywhere on this path, so it holds on object stores as well as POSIX.
 
 MergeStats come from the commit job itself: row-count observations
 (``DataFrame.observe``) on the batch, its latest-per-key rows, the target
@@ -35,16 +35,13 @@ write, so no job runs only to count.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
 from dataclasses import dataclass
-from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .dedup import latest_per_key
 
@@ -187,139 +184,6 @@ def merge_upsert(
     )
 
 
-# ----------------------------------------------------------------------
-# Versioned partitioned tables (merge_upsert_partitioned)
-#
-#   target_path/
-#       _commits/c-<seq>      <- CAS commit log (streaming/store.py): the
-#                                newest intact entry names the live view
-#       v-<seq>-<uuid>/       <- immutable VIEW: _VIEW_MANIFEST.json holds
-#                                the table schema and maps hive
-#                                partition-dir name -> target-relative data
-#                                path ("data/<commit>/day=x")
-#       data/<commit>/        <- immutable per-commit data (the batch write)
-#
-# A commit writes the touched partitions under data/, writes a new view
-# whose manifest mixes them with the previous view's untouched partitions,
-# and then performs exactly ONE committing operation: the exclusive create
-# of the next log entry (store.put_pointer). A crash at any earlier point
-# leaves readers on the previous view; orphans are GC'd by the next
-# successful commit.
-
-_PT_DATA = "data"
-_PT_MANIFEST = "_VIEW_MANIFEST.json"
-
-
-def _read_manifest(view_dir: str) -> dict:
-    with open(os.path.join(view_dir, _PT_MANIFEST)) as f:
-        return json.load(f)
-
-
-def _view_mapping(view_dir: str) -> dict[str, str]:
-    """partition-dir name → target-relative data path of one view."""
-    return _read_manifest(view_dir)["partitions"]
-
-
-def _read_view_df(spark: SparkSession, target_path: str, view_dir: str) -> DataFrame:
-    """The view as a DataFrame: partitions grouped by data commit (one
-    basePath per group) and unioned — group count is bounded by live
-    commits, which GC keeps at ≤ the number of merges since each
-    partition's last rewrite. Every group reads with the schema the writer
-    recorded, so the partition column keeps its written type instead of
-    whatever each group's directory names would infer to."""
-    manifest = _read_manifest(view_dir)
-    mapping = manifest["partitions"]
-    if not mapping:
-        # a commit always maps >=1 touched partition, so an empty manifest
-        # is a hand-truncated/corrupt view — indexing dfs[0] below would
-        # surface it as a bare IndexError (r16 ADVICE)
-        raise RuntimeError(
-            f"partitioned merge view {view_dir}: _VIEW_MANIFEST.json maps no "
-            "partitions — corrupt or hand-truncated view. Point the top "
-            "_commits/c-* entry at the latest intact v-*/ dir or delete the "
-            "table to reset."
-        )
-    groups: dict[str, list[str]] = {}
-    for rel in mapping.values():
-        path = os.path.join(target_path, rel)
-        groups.setdefault(os.path.dirname(path), []).append(path)
-    schema = StructType.fromJson(manifest["schema"])
-    dfs = [
-        spark.read.schema(schema).option("basePath", root).parquet(*sorted(paths))
-        for root, paths in sorted(groups.items())
-    ]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def read_partitioned_table(spark: SparkSession, target_path: str) -> DataFrame | None:
-    """The live snapshot of a partitioned merge target, or None if nothing
-    has been committed (or the commit log names no intact view)."""
-    from ..streaming.store import store_version_dir
-
-    view = store_version_dir(target_path)
-    return None if view is None else _read_view_df(spark, target_path, view)
-
-
-def _commit_view(
-    target_path: str,
-    merged: DataFrame,
-    partition_col: str,
-    prev_view: str | None,
-    touched: list,
-) -> None:
-    """Commit ``merged`` (the ``touched`` partitions' full new contents)
-    plus the previous view's untouched partitions as one new immutable
-    view. A touched partition ``merged`` holds no row of is dropped."""
-    from ..streaming.store import _commit_pointer, _new_version
-
-    data_root = os.path.join(target_path, _PT_DATA)
-    data_dir = os.path.join(data_root, uuid.uuid4().hex[:8])
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(data_dir)
-
-    # The staged write's OWN directory names define the touched set — the
-    # hive writer percent-escapes special chars (':', '%', '=', …), so a
-    # name constructed from str(value) can silently miss the staged dir
-    # (new data dropped, stale data kept). Untouched partitions keep the
-    # previous view's data path; touched ones point at this commit, or
-    # leave the view when the merge emptied them (their keys all moved to
-    # other partitions). The previous names are decoded, never built.
-    prefix = f"{partition_col}="
-    touched_names = {str(v) for v in touched}
-    mapping = {
-        name: rel
-        for name, rel in (_view_mapping(prev_view) if prev_view else {}).items()
-        if unquote(name[len(prefix):]) not in touched_names
-    }
-    for name in os.listdir(data_dir):
-        if name.startswith(prefix) and os.path.isdir(os.path.join(data_dir, name)):
-            mapping[name] = os.path.relpath(os.path.join(data_dir, name), target_path)
-
-    version = _new_version(target_path)
-    view_dir = os.path.join(target_path, version)
-    os.makedirs(view_dir)
-    # the schema as a partitioned read returns it: partition column last
-    schema = StructType(
-        [f for f in merged.schema if f.name != partition_col] + [merged.schema[partition_col]]
-    )
-    with open(os.path.join(view_dir, _PT_MANIFEST), "w") as f:
-        json.dump({"schema": schema.jsonValue(), "partitions": mapping}, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-
-    # THE commit (one log entry), then GC of every other view; data
-    # commits the new view no longer references go after it. Readers
-    # resolve the log at read time; the single-writer contract makes
-    # post-commit GC safe for the sequential reader/writer harness.
-    _commit_pointer(target_path, version, keep=1)
-    live_data = {rel.split(os.sep)[1] for rel in mapping.values()}
-    for name in os.listdir(data_root):
-        if name not in live_data:
-            shutil.rmtree(os.path.join(data_root, name), ignore_errors=True)
-
-
 def merge_upsert_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -343,32 +207,42 @@ def merge_upsert_partitioned(
 
     Requirements: the partition column must be a stable string/date key.
 
-    Atomicity: the commit is one commit-log entry (layout above), so a
-    crash anywhere mid-merge leaves readers on the previous snapshot,
-    matching the reference's per-doc-atomic Mongo upsert (database/
-    data_migration.py:102-158) at whole-commit granularity. Read the table
-    back with :func:`read_partitioned_table`. A non-empty directory
-    without a commit log (e.g. written by ``partitionBy`` directly) is
-    refused with ``ValueError`` rather than silently re-laid-out under
-    readers that scan it.
+    Atomicity: the touched partitions' new contents are written as one
+    part (``parts/p-<id>/<col>=<v>``), and one commit-log entry publishes
+    a manifest that lists them in place of the old entries of those
+    partitions (streaming/store.py). A touched partition the merge emptied
+    leaves the manifest. A crash anywhere mid-merge leaves readers on the
+    previous version, matching the reference's per-doc-atomic Mongo upsert
+    (database/data_migration.py:102-158) at whole-commit granularity.
+    Read the table back with ``store.read_table(spark, target_path)``. A
+    non-empty directory without a commit log (e.g. written by
+    ``partitionBy`` directly) is refused with ``ValueError`` rather than
+    silently re-laid-out under readers that scan it.
 
     Returns the list of partition values rewritten.
     """
+    from ..streaming.store import (
+        _COMMITLOG,
+        _PARTS,
+        _commit_partitions,
+        _version_dir_for_write,
+        read_table,
+    )
+
     order_cols = order_cols or [F.col(key_cols[0])]
     deduped = latest_per_key(updates, key_cols, order_cols)
     keys = deduped.select(*key_cols)
     touched_rows = deduped.select(partition_col)
 
-    from ..streaming.store import _COMMITLOG, _version_dir_for_write
-
     # raises StoreCorruptPointerError when a log exists but names no intact
-    # view: treating the table as fresh would commit merged=deduped and GC
-    # would then delete every untouched partition (ADVICE r14)
-    prev_view = _version_dir_for_write(target_path)
-    if prev_view is None:
+    # version: treating the table as fresh would commit merged=deduped and
+    # GC would then delete every untouched partition (ADVICE r14)
+    _version_dir_for_write(target_path)
+    target = read_table(spark, target_path)
+    if target is None:
         # a crashed FIRST commit leaves only this layout's own entries,
         # which the commit below GCs; anything else is someone's data
-        own = (_PT_DATA, _COMMITLOG)
+        own = (_PARTS, _COMMITLOG)
         if os.path.isdir(target_path) and any(
             n not in own and not n.startswith("v-") for n in os.listdir(target_path)
         ):
@@ -377,9 +251,7 @@ def merge_upsert_partitioned(
                 "directory without a commit log — not a table this function "
                 "created; merge into a fresh path instead"
             )
-        target = None
     else:
-        target = _read_view_df(spark, target_path, prev_view)
         # A key can move partitions between commits; its old row stays in
         # the old partition unless that one is rewritten too. So partitions
         # holding a batch key are touched as well: a semi-join that reads
@@ -412,7 +284,7 @@ def merge_upsert_partitioned(
         kept = affected.join(keys, key_cols, "left_anti")
         merged = kept.unionByName(deduped.select(*kept.columns))
 
-    _commit_view(target_path, merged, partition_col, prev_view, touched)
+    _commit_partitions(merged, target_path, partition_col, touched)
     return sorted(str(v) for v in touched)
 
 

@@ -589,13 +589,13 @@ def fold_pq_codes(spark, target_root: str, new_vectors: DataFrame, id_col: str, 
     previously issued code), then each arriving batch is encoded against
     it and appended as an immutable ``codes`` part via the manifest store
     — commit I/O is O(batch), the accumulated code table is the union of
-    parts, and codebook + codes move under one atomic pointer. Pair this
+    parts, and codebook + codes move under one commit-log entry. Pair this
     with a partitionBy(cell) rewrite of the code parts for the IVF-PQ
     probe layout (tests/test_pq.py pins the pruning).
     """
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
-    cb = store_read_part(spark, target_root, "codebook")
+    cb = read_table(spark, target_root, "codebook")
     parts = {}
     if cb is None:
         cb = pq_codebook(new_vectors, id_col, vec_col)
@@ -606,9 +606,9 @@ def fold_pq_codes(spark, target_root: str, new_vectors: DataFrame, id_col: str, 
 
 def pq_codes_from_index(spark, target_root: str) -> DataFrame:
     """The accumulated (vec_id, s, code) table of a folded PQ index."""
-    from ..streaming.store import store_read_part
+    from ..streaming.store import read_table
 
-    codes = store_read_part(spark, target_root, "codes")
+    codes = read_table(spark, target_root, "codes")
     if codes is None:
         # mirror contamination_scan's missing-index error (ADVICE r7 class)
         raise ValueError(f"no committed PQ index at {target_root}")

@@ -1404,16 +1404,16 @@ def fold_semantic_index(
     - Commit I/O is O(batch): centroids once, per-batch ``vectors`` and
       ``dropped`` parts under one atomic manifest pointer.
     """
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
-    cents = store_read_part(spark, target_root, "centroids")
+    cents = read_table(spark, target_root, "centroids")
     parts = {}
     if cents is None:
         cents = kmeans_centroids(new_vectors, id_col, vec_col, k, iters, round_scale)
         parts["centroids"] = cents
     assigned = ivf_assign(new_vectors, cents, id_col, vec_col, "cell", round_scale)
 
-    stored = store_read_part(spark, target_root, "vectors")
+    stored = read_table(spark, target_root, "vectors")
     universe = assigned if stored is None else assigned.unionByName(stored)
     # r13: per-cell cogrouped Arrow kernel instead of the cell equi-join +
     # per-pair HOF cosine (the q138 rewrite, cross-shaped): each vector
@@ -1559,9 +1559,9 @@ def reindex_semantic(
     election wholesale. O(corpus) by necessity; the replace also compacts
     the per-fold parts as a side effect.
     """
-    from ..streaming.store import store_commit_parts, store_read_part
+    from ..streaming.store import read_table, store_commit_parts
 
-    stored = store_read_part(spark, target_root, "vectors")
+    stored = read_table(spark, target_root, "vectors")
     if stored is None:
         raise ValueError(f"reindex_semantic: no index at {target_root!r}")
     vecs = stored.select(id_col, vec_col)
@@ -1591,10 +1591,10 @@ def reindex_semantic(
 
 def semantic_index_state(spark, target_root: str, id_col: str = "vec_id") -> DataFrame:
     """Accumulated (id, cell, kept) of a folded semantic-dedup index."""
-    from ..streaming.store import store_read_part
+    from ..streaming.store import read_table
 
-    vecs = store_read_part(spark, target_root, "vectors")
-    dropped = store_read_part(spark, target_root, "dropped")
+    vecs = read_table(spark, target_root, "vectors")
+    dropped = read_table(spark, target_root, "dropped")
     d = dropped.select(F.col(id_col).alias("__dropped_id")).distinct()
     return vecs.join(d, vecs[id_col] == F.col("__dropped_id"), "left").select(
         id_col,

@@ -198,7 +198,7 @@ def q110_component_store_time_travel(spark: SparkSession, sf_dir: str) -> DataFr
     import tempfile
 
     from ..operators.graph import fold_components
-    from ..streaming.store import store_read_version
+    from ..streaming.store import read_table
     from .streamq import _harness_ids
 
     d = load_table(spark, sf_dir, "documents")
@@ -216,7 +216,7 @@ def q110_component_store_time_travel(spark: SparkSession, sf_dir: str) -> DataFr
     for batch in batches:
         df = spark.createDataFrame(batch, "a_id long, b_id long")
         fold_components(spark, target, df, keep_versions=3)
-    return store_read_version(spark, target, 2).select("node", "component")
+    return read_table(spark, target, version=2).select("node", "component")
 
 
 # --------------------------------------------------------------------------
@@ -276,7 +276,7 @@ def q116_component_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.graph import fold_components
-    from ..streaming.store import store_read_version
+    from ..streaming.store import read_table
     from .streamq import _harness_ids
 
     d = load_table(spark, sf_dir, "documents")
@@ -295,10 +295,10 @@ def q116_component_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = spark.createDataFrame(batch, "a_id long, b_id long")
         fold_components(spark, target, df, keep_versions=3)
 
-    old = store_read_version(spark, target, 2).select(
+    old = read_table(spark, target, version=2).select(
         F.col("node"), F.col("component").alias("old_component")
     )
-    new = store_read_version(spark, target, 3).select(
+    new = read_table(spark, target, version=3).select(
         F.col("node"), F.col("component").alias("new_component")
     )
     j = old.join(new, "node", "full_outer")

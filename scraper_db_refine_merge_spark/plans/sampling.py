@@ -1252,9 +1252,8 @@ def q162_contamination_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q163 — MANIFEST-LAYOUT partitioned merge under the oracle gate (r15,
 # VERDICT r14 item 5): two keyed upserts into a source-partitioned table
-# committed through manifest views and the CAS commit log (the one
-# versioned-table protocol), read back through the manifest resolver,
-# aggregated — the
+# committed through the versioned-table manifest and the CAS commit log,
+# read back through ``read_table``, aggregated — the
 # oracle states the latest-wins result over the same two logical batches
 # with no store at all, so the driver proves the layout's read/merge
 # equivalence every round.
@@ -1272,7 +1271,8 @@ def q162_contamination_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q163_partitioned_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..operators.merge import merge_upsert_partitioned, read_partitioned_table
+    from ..operators.merge import merge_upsert_partitioned
+    from ..streaming.store import read_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     target = tempfile.mkdtemp(prefix="q163_pm_") + "/t"
@@ -1285,7 +1285,7 @@ def q163_partitioned_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFra
     merge_upsert_partitioned(
         spark, target, b2, key_cols=["doc_id"], partition_col="source"
     )
-    t = read_partitioned_table(spark, target)
+    t = read_table(spark, target)
     return t.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.store import store_read as _store_read
+from ..streaming.store import read_table
 from ..operators.sketches import (
     CMS_DEPTH,
     CMS_WIDTH,
@@ -206,7 +206,7 @@ def q77_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return _store_read(spark, target).select("event_type", "bucket", "max_rho")
+    return read_table(spark, target).select("event_type", "bucket", "max_rho")
 
 
 # --------------------------------------------------------------------------
@@ -380,7 +380,7 @@ def q88_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return _store_read(spark, target).select("row", "bucket", "cnt")
+    return read_table(spark, target).select("row", "bucket", "cnt")
 
 
 # --------------------------------------------------------------------------
@@ -448,7 +448,7 @@ def q91_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return _store_read(spark, target).select("event_type", "h")
+    return read_table(spark, target).select("event_type", "h")
 
 
 # --------------------------------------------------------------------------
@@ -515,7 +515,7 @@ def q94_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return _store_read(spark, target).select("event_type", "bin", "n")
+    return read_table(spark, target).select("event_type", "bin", "n")
 
 
 # --------------------------------------------------------------------------
@@ -747,7 +747,7 @@ def q108_stream_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return _store_read(spark, target).select("event_type", "node", "cnt")
+    return read_table(spark, target).select("event_type", "node", "cnt")
 
 
 # --------------------------------------------------------------------------

@@ -653,7 +653,7 @@ _Q104_PROBE_DAYS = ["2024-01-05", "2024-01-15", "2024-01-25"]
 
 def q104_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import stream_asof_enrich
-    from ..streaming.store import store_read
+    from ..streaming.store import read_table
     from .analytics import scd2_history_raw
 
     e = load_table(spark, sf_dir, "events")
@@ -687,7 +687,7 @@ def q104_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(300)
 
-    return store_read(spark, target).select(
+    return read_table(spark, target).select(
         "user_id",
         F.date_format("pts", "yyyy-MM-dd HH:mm:ss").alias("probe_ts"),
         "version",

@@ -702,7 +702,7 @@ def q113_incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFram
     import os
     import tempfile
 
-    from ..streaming.store import store_compact, store_read_part
+    from ..streaming.store import read_table, store_compact
 
     d = load_table(spark, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="q113_mh_")
@@ -713,7 +713,7 @@ def q113_incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFram
             spark, target, batch, "doc_id", "text", k=5, threshold=0.2
         )
     store_compact(spark, target)
-    return store_read_part(spark, target, "pairs")
+    return read_table(spark, target, "pairs")
 
 
 QUERIES["q113_incremental_minhash_index"] = q113_incremental_minhash_index

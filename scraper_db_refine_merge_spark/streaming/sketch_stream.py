@@ -11,9 +11,9 @@ where a count-based metrics sink (ST5) needs idempotent writes.
 
 State size is O(groups × m) regardless of stream volume — the register
 table is re-written per batch through the crash-safe versioned store
-(streaming/store.py: immutable snapshot + single atomic pointer commit;
-local/atomic-rename filesystems only — see that module's docstring), which
-at 100 TB is a metadata-sized write, not a data rewrite.
+(streaming/store.py: one immutable part behind one put-if-absent
+commit-log entry; no rename, so object stores work too), which at 100 TB
+is a metadata-sized write, not a data rewrite.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, HLL_M, cms_registers, hll_registers
-from .store import store_commit, store_marker, store_read
+from .store import read_table, store_commit, store_marker
 
 
 def merge_register_tables(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -57,7 +57,7 @@ def stream_hll_registers(
         if batch_df.isEmpty():
             return
         regs = hll_registers(batch_df, group_cols, value_col, m=m)
-        prev = store_read(spark, target_path)
+        prev = read_table(spark, target_path)
         if prev is not None:
             regs = merge_register_tables(prev, regs, group_cols)
         store_commit(regs, target_path)
@@ -170,7 +170,7 @@ def stream_kmv_hashes(
         hashes = batch_df.select(
             *group_cols, _md5(F.col(value_col)).alias("h")
         ).distinct()
-        prev = store_read(spark, target_path)
+        prev = read_table(spark, target_path)
         hashes = merge_kmv_tables(
             prev if prev is not None else hashes.limit(0), hashes, group_cols, k
         )
@@ -200,7 +200,7 @@ def guarded_merge_sink(spark, target_path, build, merge):
         if applied is not None and batch_id <= int(applied):
             return  # at-least-once replay of an applied batch
         regs = build(batch_df)
-        prev = store_read(spark, target_path)
+        prev = read_table(spark, target_path)
         if prev is not None:
             regs = merge(prev, regs)
         store_commit(regs, target_path, markers={_APPLIED: str(batch_id)})

@@ -1,23 +1,47 @@
-"""Crash-safe versioned parquet store for incrementally-maintained state
-(sketch register tables, incremental connected-components assignments),
-and the commit protocol of every VERSIONED table — these stores and the
-partitioned merge (operators/merge.py merge_upsert_partitioned).
+"""Crash-safe versioned parquet tables: one layout, one commit protocol,
+one reader.
 
-The r4 pattern — rename(target, backup); rename(staging, target) — had a
-crash window between the two renames that left the store MISSING with
-orphaned backup/staging dirs (ADVICE r4). A versioned table instead has
-exactly ONE committing operation, and it is not a rename:
+Every versioned table — the sketch register stores, the incremental
+connected-components assignment, the fold indexes (near-dup, vector, LM)
+and the partitioned merge target (operators/merge.py
+``merge_upsert_partitioned``) — has the same layout:
 
     target_path/
         _commits/c-<seq>     <- commit log: entry N names version N
-        v-<seq>-<uuid>/      <- immutable parquet snapshot (+ marker files)
+        v-<seq>-<uuid>/      <- _MANIFEST.json + marker files, no data
+        parts/p-<id>/        <- immutable parquet written by one commit
 
-A writer materializes a new ``v-*`` snapshot, then commits it by an
-EXCLUSIVE CREATE of ``_commits/c-<seq>`` (``O_CREAT|O_EXCL`` here;
-conditional put / If-None-Match on a real object store — the
-put-if-absent primitive S3/GCS/ABFS all expose, and the same one Delta
-Lake's S3 LogStore builds on). No rename and no symlink is involved, so
-the protocol holds on object stores as well as POSIX.
+The manifest maps each table name to the immutable dirs under ``parts/``
+that hold its rows (Iceberg's manifest-of-data-files shape):
+
+    {"<table>": {"parts": ["p-<id>", ...]}}
+    {"<table>": {"parts": ["p-<id>/<col>=<v>", ...], "schema": {...}}}
+
+A hive-partitioned table (the second form) lists one partition dir per
+entry and records the schema it was written with, partition column last,
+so the partition column keeps its written type. Single-frame tables
+(``store_commit``, the partitioned merge) are the manifest's default
+table. ``read_table`` is the one reader, for the live version or any
+retained one.
+
+Writers are three edits of the prior manifest, committed by one code path
+(``_commit_tables``):
+
+- ``store_commit`` replaces the default table's list with one new part;
+- ``store_commit_parts`` appends one new part per table, or replaces a
+  table's list with one new part (``store_compact`` squashes that way);
+- ``merge_upsert_partitioned`` writes the touched partitions as one part
+  and replaces only those partitions' entries (``_commit_partitions``).
+
+Per-commit write I/O is the new parts only; untouched parts are shared by
+every version that lists them.
+
+A commit is an EXCLUSIVE CREATE of ``_commits/c-<seq>`` naming the new
+``v-*`` dir (``O_CREAT|O_EXCL`` here; conditional put / If-None-Match on
+a real object store — the put-if-absent primitive S3/GCS/ABFS all expose,
+and the same one Delta Lake's S3 LogStore builds on). No rename and no
+symlink is involved, so the protocol holds on object stores as well as
+POSIX.
 
 - Readers resolve the HIGHEST INTACT entry. Entries are immutable once
   written, so a crashed writer leaves at worst an empty/dangling TOP
@@ -25,25 +49,20 @@ the protocol holds on object stores as well as POSIX.
   committed state. A log that exists but names no intact version is
   corruption: readers get None, writers raise
   ``StoreCorruptPointerError`` instead of committing over it.
-- A crash before the put leaves the previous entry, and therefore the
-  previous snapshot, fully intact; orphaned snapshots and superseded log
-  entries are garbage-collected by the next successful commit.
+- A crash before the put leaves the previous version fully intact. GC
+  runs after each successful commit: ``v-*`` dirs outside the retention
+  window go, and so does every top-level ``parts/`` dir that no retained
+  manifest references (a crashed writer's parts, and parts only expired
+  versions listed).
 
 SINGLE-WRITER CONTRACT (ADVICE r5): at most one committer per store at a
 time. Two writers deriving the same next seq from the same prior
-snapshot collide on the same entry name; the loser's exclusive create
+version collide on the same entry name; the loser's exclusive create
 fails and it raises ``StoreConcurrentWriterError`` BEFORE its state
 becomes visible, so a lost update is a loud failure instead of silent
 state corruption. Streaming callers satisfy the contract by construction
 (foreachBatch serializes batches); batch callers (fold_components,
 fold_minhash_index) own one store per pipeline.
-
-Incremental multi-part snapshots (ADVICE r5): ``store_commit_parts``
-appends ONLY the new batch's rows as immutable part directories under
-``parts/`` and commits a MANIFEST listing the accumulated parts per table
-— per-commit write I/O is O(batch), not O(total state), while the log
-entry remains the single commit. GC keeps every part referenced by a
-retained manifest.
 """
 
 from __future__ import annotations
@@ -52,12 +71,16 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MANIFEST = "_MANIFEST.json"
 _PARTS = "parts"
 _COMMITLOG = "_commits"
+_DEFAULT = "default"  # the table of single-frame stores
 
 
 class StoreConcurrentWriterError(RuntimeError):
@@ -67,9 +90,9 @@ class StoreConcurrentWriterError(RuntimeError):
 
 
 class StoreCorruptPointerError(RuntimeError):
-    """A commit log exists but no entry names an intact snapshot (torn
+    """A commit log exists but no entry names an intact version (torn
     entries or dangling version names). Writers must NOT treat this as a
-    fresh store: committing would produce a truncated snapshot and
+    fresh store: committing would produce a truncated table and
     post-commit GC would then delete every prior commit — recoverable
     corruption (point the top entry at the latest intact v-*/ dir) turned
     into permanent loss."""
@@ -113,29 +136,16 @@ def resolve_pointer_name(target_path: str) -> str | None:
 
 
 def store_version_dir(target_path: str) -> str | None:
-    """Absolute path of the live snapshot dir, or None if no commit yet."""
+    """Absolute path of the live version dir, or None if no commit yet."""
     version = resolve_pointer_name(target_path)
-    if version is None:
-        return None
-    d = os.path.join(target_path, version)
-    return d if os.path.isdir(d) else None
-
-
-def store_exists(target_path: str) -> bool:
-    return store_version_dir(target_path) is not None
-
-
-def store_read(spark: SparkSession, target_path: str) -> DataFrame | None:
-    """The live snapshot as a DataFrame, or None if the store is empty."""
-    d = store_version_dir(target_path)
-    return spark.read.parquet(d) if d is not None else None
+    return None if version is None else os.path.join(target_path, version)
 
 
 def store_marker(target_path: str, name: str) -> str | None:
-    """Contents of marker file ``name`` in the live snapshot, or None.
+    """Contents of marker file ``name`` in the live version, or None.
 
-    Markers are written into the snapshot BEFORE the pointer commit, so a
-    marker and the state it describes become visible atomically (the
+    Markers are written into the version dir BEFORE the pointer commit, so
+    a marker and the state it describes become visible atomically (the
     exactly-once batch-id guard for non-idempotent sketch merges).
     """
     d = store_version_dir(target_path)
@@ -149,33 +159,21 @@ def store_marker(target_path: str, name: str) -> str | None:
 
 
 def store_versions(target_path: str) -> list[tuple[int, str]]:
-    """Committed snapshots as (seq, dirname), ascending — the time-travel
-    index. Only the current snapshot and those below its seq count as
+    """Committed versions as (seq, dirname), ascending — the time-travel
+    index. Only the current version and those below its seq count as
     committed: a crashed writer's orphan sits at or above the current seq
     (the retry derives the SAME seq as the crash) and is never listed."""
-    cur = store_version_dir(target_path)
-    if cur is None:
-        return []
-    cur_name = os.path.basename(cur)
-    cur_seq = _seq_of(cur_name)
-    if cur_seq is None:  # not a v-<seq>-<uuid> name: no time-travel index
+    cur = resolve_pointer_name(target_path)
+    cur_seq = None if cur is None else _seq_of(cur)
+    if cur_seq is None:  # no commit, or not a v-<seq>-<uuid> name
         return []
     out = []
     for name in os.listdir(target_path):
         if name.startswith("v-") and os.path.isdir(os.path.join(target_path, name)):
             seq = _seq_of(name)
-            if seq is not None and (seq < cur_seq or name == cur_name):
+            if seq is not None and (seq < cur_seq or name == cur):
                 out.append((seq, name))
     return sorted(out)
-
-
-def store_read_version(spark: SparkSession, target_path: str, seq: int) -> DataFrame | None:
-    """Time travel: snapshot ``seq`` (1-based commit number), or None if it
-    was garbage-collected or never committed."""
-    for s, name in store_versions(target_path):
-        if s == seq:
-            return spark.read.parquet(os.path.join(target_path, name))
-    return None
 
 
 def _seq_of(version_name: str) -> int | None:
@@ -186,48 +184,101 @@ def _seq_of(version_name: str) -> int | None:
         return None
 
 
+def _manifest_of(vd: str) -> dict[str, dict]:
+    """table name -> {"parts": [...], "schema"?: ...} of version dir ``vd``."""
+    mpath = os.path.join(vd, _MANIFEST)
+    if not os.path.exists(mpath):
+        return {}
+    with open(mpath) as f:
+        return json.load(f)
+
+
+def read_table(
+    spark: SparkSession,
+    target_path: str,
+    part: str | None = None,
+    version: int | None = None,
+) -> DataFrame | None:
+    """The one reader of a versioned table: table ``part`` (default: the
+    single-frame table) as of commit ``version`` (1-based; default: the
+    live version). None if nothing is committed, the version was
+    garbage-collected, or the manifest has no such table.
+
+    Each version resolves through its OWN manifest, so an old version sees
+    exactly the parts it committed — later appends are invisible to it,
+    which is what makes snapshot diffs (drift reports, CDC) exact. A
+    hive-partitioned table is read one group per part (one basePath each)
+    with the recorded schema, and the groups are unioned; the group count
+    is bounded by the merges since each partition's last rewrite."""
+    if version is None:
+        vd = store_version_dir(target_path)
+    else:
+        vd = next(
+            (os.path.join(target_path, n) for s, n in store_versions(target_path) if s == version),
+            None,
+        )
+    entry = None if vd is None else _manifest_of(vd).get(part or _DEFAULT)
+    if entry is None:
+        return None
+    if not entry["parts"]:
+        # every commit lists >=1 part per table it names
+        raise RuntimeError(
+            f"versioned table {target_path}: {_MANIFEST} of {os.path.basename(vd)} "
+            f"maps no parts for table {part or _DEFAULT!r} — corrupt or "
+            "hand-truncated manifest. Point the top _commits/c-* entry at the "
+            "latest intact v-*/ dir or delete the table to reset."
+        )
+    parts_root = os.path.join(target_path, _PARTS)
+    if "schema" not in entry:
+        return spark.read.parquet(*[os.path.join(parts_root, p) for p in entry["parts"]])
+    groups: dict[str, list[str]] = {}
+    for p in entry["parts"]:
+        top = p.split("/")[0]
+        groups.setdefault(top, []).append(os.path.join(parts_root, p))
+    schema = StructType.fromJson(entry["schema"])
+    return reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(schema)
+            .option("basePath", os.path.join(parts_root, top))
+            .parquet(*sorted(paths))
+            for top, paths in sorted(groups.items())
+        ],
+    )
+
+
 def _version_dir_for_write(target_path: str) -> str | None:
     """store_version_dir for WRITER paths: raises StoreCorruptPointerError
-    when a commit log exists but no entry names an intact snapshot, instead
+    when a commit log exists but no entry names an intact version, instead
     of letting the writer re-initialize over it (ADVICE r14, medium).
     Readers keep the safe None path in store_version_dir."""
     d = store_version_dir(target_path)
     if d is None and pointer_exists(target_path):
         raise StoreCorruptPointerError(
             f"store {target_path}: a commit log exists but no entry names an "
-            "intact snapshot directory — refusing to commit as if the store "
+            "intact version directory — refusing to commit as if the store "
             "were fresh. Point the top _commits/c-* entry at the latest "
             "intact v-*/ dir or delete the store directory to reset."
         )
     return d
 
 
-def _new_version(target_path: str) -> str:
-    os.makedirs(target_path, exist_ok=True)
+def _tables_for_write(target_path: str) -> dict[str, dict]:
+    """The live manifest a writer edits ({} for a fresh store)."""
     prior = _version_dir_for_write(target_path)
-    seq = (_seq_of(os.path.basename(prior)) or 0) + 1 if prior else 1
-    return f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    return {} if prior is None else _manifest_of(prior)
 
 
-def _write_markers(vd: str, markers: dict[str, str] | None) -> None:
-    for name, value in (markers or {}).items():
-        with open(os.path.join(vd, name), "w") as f:
-            f.write(value)
-
-
-def _manifest_of(vd: str) -> dict[str, list[str]] | None:
-    mpath = os.path.join(vd, _MANIFEST)
-    if not os.path.exists(mpath):
-        return None
-    with open(mpath) as f:
-        return json.load(f)
+def _new_part(target_path: str) -> tuple[str, str]:
+    """(manifest name, absolute dir) of a fresh immutable part."""
+    pname = f"p-{uuid.uuid4().hex[:12]}"
+    return pname, os.path.join(target_path, _PARTS, pname)
 
 
 def put_pointer(target_path: str, version: str) -> None:
-    """Commit ``version`` as the live snapshot name: exclusive create of
+    """Commit ``version`` as the live version name: exclusive create of
     its commit-log entry. The ONLY mutation readers can observe in any
-    versioned commit path — shared by this store and the partitioned merge
-    (operators/merge.py)."""
+    versioned commit."""
     log_dir = os.path.join(target_path, _COMMITLOG)
     os.makedirs(log_dir, exist_ok=True)
     entry = os.path.join(log_dir, f"c-{_seq_of(version) or 0:06d}")
@@ -246,7 +297,7 @@ def put_pointer(target_path: str, version: str) -> None:
         os.remove(entry)
     # THE commit: exclusive create = conditional put. On a real object
     # store this maps to If-None-Match; a losing racer fails HERE, before
-    # its snapshot is ever visible.
+    # its version is ever visible.
     try:
         fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
     except FileExistsError:
@@ -262,11 +313,11 @@ def put_pointer(target_path: str, version: str) -> None:
 
 
 def _commit_pointer(target_path: str, version: str, keep: int) -> None:
-    """THE commit: one log entry (``put_pointer``), then GC of superseded
-    log entries, snapshots beyond the retention window, crashed-writer
-    orphans (at or above the committed seq), and ``parts/`` directories no
-    retained manifest references (best-effort — a concurrent reader
-    holding an old dir open on POSIX keeps its fds)."""
+    """THE commit: one log entry (``put_pointer``), then GC (best-effort — a
+    concurrent reader holding an old dir open on POSIX keeps its fds):
+    superseded log entries, ``v-*`` dirs outside the retention window
+    (crashed writers' orphans at or above the committed seq included), and
+    every top-level ``parts/`` dir no retained manifest references."""
     put_pointer(target_path, version)
     # resolution only reads down from the top intact entry, and retained
     # history lives in the v-*/ dirs themselves: older entries are clutter
@@ -283,21 +334,40 @@ def _commit_pointer(target_path: str, version: str, keep: int) -> None:
     for name in os.listdir(target_path):
         if name.startswith("v-") and name not in keep_names:
             shutil.rmtree(os.path.join(target_path, name), ignore_errors=True)
-    # parts GC: drop part dirs referenced by NO retained manifest (orphans
-    # from crashed writers and parts owned only by retention-expired
-    # snapshots). Parts referenced by any kept version stay — snapshots
-    # share immutable parts, that is the whole point.
+    referenced = {
+        p.split("/")[0]
+        for name in keep_names
+        for entry in _manifest_of(os.path.join(target_path, name)).values()
+        for p in entry["parts"]
+    }
     parts_root = os.path.join(target_path, _PARTS)
-    if os.path.isdir(parts_root):
-        referenced: set[str] = set()
-        for name in keep_names:
-            m = _manifest_of(os.path.join(target_path, name))
-            if m:
-                for plist in m.values():
-                    referenced.update(plist)
-        for pname in os.listdir(parts_root):
-            if pname not in referenced:
-                shutil.rmtree(os.path.join(parts_root, pname), ignore_errors=True)
+    for pname in os.listdir(parts_root) if os.path.isdir(parts_root) else []:
+        if pname not in referenced:
+            shutil.rmtree(os.path.join(parts_root, pname), ignore_errors=True)
+
+
+def _commit_tables(
+    target_path: str,
+    tables: dict[str, dict],
+    markers: dict[str, str] | None = None,
+    keep: int = 1,
+) -> str:
+    """Write ``tables`` as the next version's manifest, plus ``markers``,
+    and commit it. Every writer ends here. Returns the version dir."""
+    prior = _version_dir_for_write(target_path)
+    seq = (_seq_of(os.path.basename(prior)) or 0) + 1 if prior else 1
+    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    vd = os.path.join(target_path, version)
+    os.makedirs(vd)
+    with open(os.path.join(vd, _MANIFEST), "w") as f:
+        json.dump(tables, f, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    for name, value in (markers or {}).items():
+        with open(os.path.join(vd, name), "w") as f:
+            f.write(value)
+    _commit_pointer(target_path, version, keep)
+    return vd
 
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
@@ -333,27 +403,32 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     return df.hint("rebalance")
 
 
+def _write_part(df: DataFrame, target_path: str) -> str:
+    """Write ``df`` as one new immutable part; returns its manifest name."""
+    pname, path = _new_part(target_path)
+    _sized_for_write(df).write.mode("overwrite").parquet(path)
+    return pname
+
+
 def store_commit(
     df: DataFrame,
     target_path: str,
     markers: dict[str, str] | None = None,
     keep: int = 1,
 ) -> str:
-    """Write ``df`` as a new snapshot and commit it (one log entry).
+    """Write ``df`` as one new part, replace the default table's parts
+    with it, and commit (one log entry).
 
-    Returns the committed snapshot dir. Marker filenames should start with
-    ``_`` so Spark's parquet reader ignores them as metadata files.
-    ``keep``: how many committed snapshots to retain (newest-first,
+    Returns the committed version dir. Marker filenames should start with
+    ``_``. ``keep``: how many committed versions to retain (newest-first,
     current always included) — retention >1 enables time travel via
-    ``store_read_version`` (snapshots are immutable, so an old reader and
-    the GC never race on content, only on whole-directory lifetime).
+    ``read_table(..., version=seq)`` (parts are immutable, so an old
+    reader and the GC never race on content, only on whole-directory
+    lifetime).
     """
-    version = _new_version(target_path)
-    vd = os.path.join(target_path, version)
-    _sized_for_write(df).write.mode("overwrite").parquet(vd)
-    _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep)
-    return vd
+    tables = _tables_for_write(target_path)
+    tables[_DEFAULT] = {"parts": [_write_part(df, target_path)]}
+    return _commit_tables(target_path, tables, markers, keep)
 
 
 def store_commit_parts(
@@ -363,24 +438,24 @@ def store_commit_parts(
     keep: int = 1,
     replace_parts: dict[str, DataFrame] | None = None,
 ) -> str:
-    """Incremental multi-part commit (ADVICE r5): write ONLY the new
-    batch's rows — one immutable ``parts/p-*`` directory per table — and
-    commit a manifest that lists each table's ACCUMULATED parts (prior
-    manifest's lists + the new part). Readers union the listed parts.
+    """Incremental multi-table commit (ADVICE r5): write ONLY the new
+    batch's rows — one immutable part per table — and commit a manifest
+    that APPENDS each new part to its table's list. Readers union the
+    listed parts.
 
     Per-commit write I/O is O(new batch), not O(total state) — the fix for
-    fold-style callers whose accumulated tables grow with the corpus. The
-    atomicity story is unchanged: all tables' new parts land under one
-    manifest behind one log entry, so mutually-consistent multi-table
-    state still moves together; a crash before the pointer commit leaves
-    only unreferenced part dirs that the next successful commit GCs.
+    fold-style callers whose accumulated tables grow with the corpus. All
+    tables' new parts land under one manifest behind one log entry, so
+    mutually-consistent multi-table state moves together.
 
-    Tables are APPEND-ONLY through ``new_parts``. ``replace_parts`` (r14)
-    REPLACES the named tables' whole part list with the one new part, in
-    the same atomic commit — the primitive for derived-state rewrites
-    (index re-widening, store_compact's squash) where one table must be
-    rebuilt while its siblings keep accumulating. A table may appear in
-    only one of the two dicts.
+    ``replace_parts`` (r14) REPLACES the named tables' whole part list
+    with the one new part, in the same atomic commit — the primitive for
+    derived-state rewrites (index re-widening; ``store_compact`` squashes
+    the same way) where one table must be rebuilt while its siblings keep
+    accumulating.
+    The rewrite is written before the manifest drops the old parts (the
+    write is the action that reads them). A table may appear in only one
+    of the two dicts.
     """
     replace_parts = replace_parts or {}
     overlap = set(new_parts) & set(replace_parts)
@@ -389,125 +464,80 @@ def store_commit_parts(
             f"store_commit_parts: tables {sorted(overlap)} passed as both "
             "new_parts (append) and replace_parts (rewrite)"
         )
-    os.makedirs(os.path.join(target_path, _PARTS), exist_ok=True)
-    prior = _version_dir_for_write(target_path)
-    manifest: dict[str, list[str]] = {}
-    if prior is not None:
-        pm = _manifest_of(prior)
-        if pm is None:
-            # An empty starting manifest would silently DROP the prior
-            # state (readers would see only the new batch, and GC would
-            # then delete the old snapshot dir).
-            raise ValueError(
-                f"store {target_path}: live snapshot {prior!r} is a "
-                "single-DataFrame store_commit snapshot — it has no named "
-                "tables for a parts manifest. Use store_commit to keep "
-                "updating it, or rebuild the store with store_commit_parts "
-                "from scratch."
-            )
-        manifest = {k: list(v) for k, v in pm.items()}
+    tables = _tables_for_write(target_path)
     for name, df in new_parts.items():
-        pname = f"p-{uuid.uuid4().hex[:12]}"
-        _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(target_path, _PARTS, pname))
-        manifest.setdefault(name, []).append(pname)
+        tables.setdefault(name, {"parts": []})["parts"].append(_write_part(df, target_path))
     for name, df in replace_parts.items():
-        # materialize the rewrite BEFORE the manifest drops the old parts:
-        # the write is the action that reads them; after the pointer commit
-        # the superseded parts become GC-able
-        pname = f"p-rewrite-{uuid.uuid4().hex[:12]}"
-        _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(target_path, _PARTS, pname))
-        manifest[name] = [pname]
-    version = _new_version(target_path)
-    vd = os.path.join(target_path, version)
-    os.makedirs(vd)
-    with open(os.path.join(vd, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
-    _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep)
-    return vd
+        tables[name] = {"parts": [_write_part(df, target_path)]}
+    return _commit_tables(target_path, tables, markers, keep)
 
 
 def store_compact(
     spark: SparkSession, target_path: str, keep: int = 1
 ) -> str | None:
     """Squash a multi-part store's accumulated parts (r14, VERDICT r13
-    item 5): N folds leave N part dirs per table, so replay/read cost grows
+    item 5): N folds leave N parts per table, so replay/read cost grows
     with fold count — fine for a harness, wrong at a year of daily batches.
-    Each table whose manifest lists >1 parts is union-read and rewritten as
-    ONE part; the new manifest commits behind the usual single log
-    entry, and retention GC reclaims the small parts. Read results are
-    row-identical by construction (readers union the listed parts — the
-    union now has one member); markers are carried over so exactly-once
-    batch guards survive compaction.
+    Each table whose manifest lists >1 parts is read and rewritten as ONE
+    part; the new manifest commits behind the usual single log entry, and
+    retention GC reclaims the small parts. Read results are row-identical
+    by construction; markers are carried over so exactly-once batch guards
+    survive compaction. A hive-partitioned table keeps its one part per
+    partition.
 
-    Returns the committed snapshot dir; None for an empty store; the live
-    dir unchanged when there is nothing to squash (already compact, or a
-    single-frame ``store_commit`` snapshot with no manifest). Same
-    single-writer contract as every commit. Time-travel note: compaction commits a NEW version —
-    with ``keep=1`` older snapshots (and the fine-grained parts they
-    reference) are reclaimed, so run it only when replay-from-parts is no
-    longer needed, or raise ``keep``.
+    Returns the committed version dir; None for an empty store; the live
+    dir unchanged when there is nothing to squash. Same single-writer
+    contract as every commit. Time-travel note: compaction commits a NEW
+    version — with ``keep=1`` older versions (and the fine-grained parts
+    they reference) are reclaimed, so run it only when replay-from-parts
+    is no longer needed, or raise ``keep``.
     """
     prior = _version_dir_for_write(target_path)
     if prior is None:
         return None
-    manifest = _manifest_of(prior)
-    if manifest is None or all(len(v) <= 1 for v in manifest.values()):
+    tables = _manifest_of(prior)
+    squash = [n for n, e in tables.items() if len(e["parts"]) > 1 and "schema" not in e]
+    if not squash:
         return prior
-    parts_root = os.path.join(target_path, _PARTS)
-    new_manifest: dict[str, list[str]] = {}
-    for name, plist in manifest.items():
-        if len(plist) <= 1:
-            new_manifest[name] = list(plist)
-            continue
-        df = spark.read.parquet(*[os.path.join(parts_root, p) for p in plist])
-        pname = f"p-compact-{uuid.uuid4().hex[:12]}"
-        _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(parts_root, pname))
-        new_manifest[name] = [pname]
-    version = _new_version(target_path)
-    vd = os.path.join(target_path, version)
-    os.makedirs(vd)
-    with open(os.path.join(vd, _MANIFEST), "w") as f:
-        json.dump(new_manifest, f)
+    for name in squash:
+        tables[name] = {"parts": [_write_part(read_table(spark, target_path, name), target_path)]}
+    markers = {}
     for fname in os.listdir(prior):  # markers travel with their state
-        src = os.path.join(prior, fname)
-        if fname != _MANIFEST and os.path.isfile(src):
-            shutil.copy2(src, os.path.join(vd, fname))
-    _commit_pointer(target_path, version, keep)
-    return vd
+        if fname != _MANIFEST:
+            with open(os.path.join(prior, fname)) as f:
+                markers[fname] = f.read()
+    return _commit_tables(target_path, tables, markers, keep)
 
 
-def _read_part_of_dir(
-    spark: SparkSession, target_path: str, vd: str, part: str
-) -> DataFrame | None:
-    """Read one named table of snapshot dir ``vd``: the union of the
-    immutable ``parts/`` dirs its manifest lists. A snapshot without a
-    manifest (``store_commit``) has no named tables."""
-    plist = (_manifest_of(vd) or {}).get(part) or []
-    if not plist:
-        return None
-    return spark.read.parquet(*[os.path.join(target_path, _PARTS, p) for p in plist])
-
-
-def store_read_part(spark: SparkSession, target_path: str, part: str) -> DataFrame | None:
-    """Read one named table of the live multi-part snapshot, or None."""
-    d = store_version_dir(target_path)
-    if d is None:
-        return None
-    return _read_part_of_dir(spark, target_path, d, part)
-
-
-def store_read_part_version(
-    spark: SparkSession, target_path: str, part: str, seq: int
-) -> DataFrame | None:
-    """Time travel for multi-part snapshots: table ``part`` as of commit
-    ``seq`` (1-based), or None if GC'd / never committed. Manifest
-    snapshots resolve through their OWN manifest, so an old version sees
-    exactly the parts list it committed — later appends are invisible to
-    it, which is what makes snapshot diffs (drift reports, CDC) exact."""
-    for s, name in store_versions(target_path):
-        if s == seq:
-            return _read_part_of_dir(
-                spark, target_path, os.path.join(target_path, name), part
-            )
-    return None
+def _commit_partitions(
+    df: DataFrame, target_path: str, partition_col: str, touched: list
+) -> str:
+    """Partitioned rewrite (``merge_upsert_partitioned``): write ``df`` —
+    the full new contents of the ``touched`` partitions of the default
+    table — as one hive-partitioned part, and commit a manifest that lists
+    its partition dirs in place of the touched partitions' old entries. A
+    touched partition ``df`` holds no row of leaves the manifest."""
+    tables = _tables_for_write(target_path)
+    pname, path = _new_part(target_path)
+    df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    # The written part's OWN directory names define the new entries — the
+    # hive writer percent-escapes special chars (':', '%', '=', …), so a
+    # name constructed from str(value) can silently miss the written dir
+    # (new data dropped, stale data kept). Previous entries are decoded,
+    # never built.
+    prefix = f"{partition_col}="
+    touched_names = {str(v) for v in touched}
+    kept = [
+        p for p in tables.get(_DEFAULT, {"parts": []})["parts"]
+        if unquote(p.rsplit("/", 1)[1][len(prefix):]) not in touched_names
+    ]
+    written = [
+        f"{pname}/{name}" for name in sorted(os.listdir(path))
+        if name.startswith(prefix) and os.path.isdir(os.path.join(path, name))
+    ]
+    # the schema as a partitioned read returns it: partition column last
+    schema = StructType(
+        [f for f in df.schema if f.name != partition_col] + [df.schema[partition_col]]
+    )
+    tables[_DEFAULT] = {"parts": kept + written, "schema": schema.jsonValue()}
+    return _commit_tables(target_path, tables)

@@ -211,7 +211,7 @@ _NEAR = "the quick brown fox jumps over the lazy dog near the riverbank tonight"
 def test_fold_freezes_width_and_reindex_widens(spark, tmp_path):
     from scraper_db_refine_merge_spark.streaming.store import (
         store_marker,
-        store_read_part,
+        read_table,
         store_version_dir,
         _manifest_of,
     )
@@ -232,25 +232,25 @@ def test_fold_freezes_width_and_reindex_widens(spark, tmp_path):
         "doc_id", "text", threshold=0.2, band_size=2,
     )
     pairs_before = sorted(
-        map(tuple, store_read_part(spark, root, "pairs").collect())
+        map(tuple, read_table(spark, root, "pairs").collect())
     )
     assert (1, 3) in {(a, b) for (a, b, *_r) in pairs_before}  # cross-fold dup found
 
     dd.reindex_minhash_width(spark, root, band_size=3)
     assert store_marker(root, "_minhash_width") == "3"
-    sigs = store_read_part(spark, root, "sigs")
+    sigs = read_table(spark, root, "sigs")
     assert [c for c in sigs.columns if c.startswith("h")] == [f"h{j}" for j in range(12)]
     # atomic replace: ONE sigs part, pair log untouched
     m = _manifest_of(store_version_dir(root))
-    assert len(m["sigs"]) == 1
-    assert sorted(map(tuple, store_read_part(spark, root, "pairs").collect())) == pairs_before
+    assert len(m["sigs"]["parts"]) == 1
+    assert sorted(map(tuple, read_table(spark, root, "pairs").collect())) == pairs_before
 
     # future folds at the widened width keep discovering dups
     dd.fold_minhash_index(
         spark, root, _docs(spark, [(4, _BASE + " again")]),
         "doc_id", "text", threshold=0.2, band_size=3,
     )
-    got = {(a, b) for (a, b, *_r) in map(tuple, store_read_part(spark, root, "pairs").collect())}
+    got = {(a, b) for (a, b, *_r) in map(tuple, read_table(spark, root, "pairs").collect())}
     assert (1, 4) in got and (3, 4) in got
 
 
@@ -259,7 +259,7 @@ def test_default_fold_adopts_reindexed_width(spark, tmp_path):
     """The width rule: every fold freezes its width in the store, so a
     default-argument fold after reindex_minhash_width adopts the rebuilt
     width instead of banding 8-lane signatures against 12-lane ones."""
-    from scraper_db_refine_merge_spark.streaming.store import store_marker, store_read_part
+    from scraper_db_refine_merge_spark.streaming.store import read_table, store_marker
 
     root = str(tmp_path / "mh")
     dd.fold_minhash_index(
@@ -270,7 +270,7 @@ def test_default_fold_adopts_reindexed_width(spark, tmp_path):
         spark, root, _docs(spark, [(2, _NEAR)]), "doc_id", "text", threshold=0.2
     )
     assert store_marker(root, "_minhash_width") == "3"
-    sigs = store_read_part(spark, root, "sigs")
+    sigs = read_table(spark, root, "sigs")
     assert [c for c in sigs.columns if c.startswith("h")] == [f"h{j}" for j in range(12)]
     assert (1, 2) in {(r["a_id"], r["b_id"]) for r in out.collect()}
 
@@ -280,7 +280,7 @@ def test_reindex_dedups_reingested_shingles(spark, tmp_path):
     """ADVICE r14: a doc re-ingested across folds stores its (doc, shingle)
     rows twice; reindex must count DISTINCT shingles or the rebuilt
     n_shingles inflates and Jaccard underestimates for that doc."""
-    from scraper_db_refine_merge_spark.streaming.store import store_read_part
+    from scraper_db_refine_merge_spark.streaming.store import read_table
 
     root = str(tmp_path / "mh")
     for _ in range(2):  # same doc folded twice
@@ -288,7 +288,7 @@ def test_reindex_dedups_reingested_shingles(spark, tmp_path):
             spark, root, _docs(spark, [(1, _BASE)]), "doc_id", "text", threshold=0.2
         )
     dd.reindex_minhash_width(spark, root, band_size=3)
-    sigs = {r["doc"]: r["n_shingles"] for r in store_read_part(spark, root, "sigs").collect()}
+    sigs = {r["doc"]: r["n_shingles"] for r in read_table(spark, root, "sigs").collect()}
     one_shot = dd.minhash_signatures(
         dd.word_shingles(_docs(spark, [(1, _BASE)]), "doc_id", "text"), 12
     ).collect()[0]["n_shingles"]
@@ -329,7 +329,7 @@ def test_contamination_k_freezes_and_mismatch_raises(spark, tmp_path):
 def test_contamination_reindex_rebuilds_blocklist_at_wider_k(spark, tmp_path):
     from scraper_db_refine_merge_spark.streaming.store import (
         store_marker,
-        store_read_part,
+        read_table,
         store_version_dir,
         _manifest_of,
     )
@@ -342,8 +342,8 @@ def test_contamination_reindex_rebuilds_blocklist_at_wider_k(spark, tmp_path):
     assert store_marker(root, "_contamination_k") == "7"
     # atomic replace: ONE blocked part; texts parts untouched (2 folds)
     m = _manifest_of(store_version_dir(root))
-    assert len(m["blocked"]) == 1
-    assert len(m["texts"]) == 2
+    assert len(m["blocked"]["parts"]) == 1
+    assert len(m["texts"]["parts"]) == 2
 
     # rebuilt blocklist == one-shot fold at k=7 over the distinct docs
     # (the re-ingested doc 1 must not double anything)
@@ -351,21 +351,13 @@ def test_contamination_reindex_rebuilds_blocklist_at_wider_k(spark, tmp_path):
     dd.fold_contamination_index(
         spark, one_shot, _docs(spark, [(1, _PROT1), (2, _PROT2)]), k=7
     )
-    got = {r["h"] for r in store_read_part(spark, root, "blocked").collect()}
-    want = {r["h"] for r in store_read_part(spark, one_shot, "blocked").collect()}
+    got = {r["h"] for r in read_table(spark, root, "blocked").collect()}
+    want = {r["h"] for r in read_table(spark, one_shot, "blocked").collect()}
     assert got == want
 
     # a 7-word overlap still matches; the scan runs at the new frozen k
     corpus = _docs(spark, [(10, "pre alpha beta gamma delta epsilon zeta eta post")])
     assert {r["doc_id"] for r in dd.contamination_scan(spark, root, corpus).collect()} == {10}
-
-
-def test_adaptive_shingle_k_ladder_values():
-    assert dd.adaptive_shingle_k(1) == 5
-    assert dd.adaptive_shingle_k(1 << 25) == 5
-    assert dd.adaptive_shingle_k((1 << 25) + 1) == 6
-    assert dd.adaptive_shingle_k(1 << 38) == 6
-    assert dd.adaptive_shingle_k((1 << 38) + 1) == 7
 
 
 # ----------------------------------------------------------------------

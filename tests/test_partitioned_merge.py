@@ -8,12 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-import scraper_db_refine_merge_spark.operators.merge as m
 import scraper_db_refine_merge_spark.streaming.store as st
-from scraper_db_refine_merge_spark.operators.merge import (
-    merge_upsert_partitioned,
-    read_partitioned_table,
-)
+from scraper_db_refine_merge_spark.operators.merge import merge_upsert_partitioned
+from scraper_db_refine_merge_spark.streaming.store import read_table
 
 
 def _mk_batch(spark, rows):
@@ -23,16 +20,18 @@ def _mk_batch(spark, rows):
 def _table(spark, target):
     return {
         (r["event_id"], str(r["day"]), r["value"])
-        for r in read_partitioned_table(spark, target).collect()
+        for r in read_table(spark, target).collect()
     }
 
 
 def _mapping(target):
-    return m._view_mapping(st.store_version_dir(target))
+    """partition-dir name -> its part entry in the live manifest."""
+    entry = st._manifest_of(st.store_version_dir(target))[st._DEFAULT]
+    return {p.rsplit("/", 1)[1]: p for p in entry["parts"]}
 
 
 def _files_with_mtimes(target: str, part: str) -> dict[str, float]:
-    d = os.path.join(target, _mapping(target)[part])
+    d = os.path.join(target, st._PARTS, _mapping(target)[part])
     return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet")}
 
 
@@ -84,7 +83,7 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
     out = {
         r["event_id"]: r["value"]
-        for r in read_partitioned_table(spark, target).select("event_id", "value").collect()
+        for r in read_table(spark, target).select("event_id", "value").collect()
     }
     assert out == {"e1": 99.0, "e2": 2.0, "e3": 3.0, "e4": 4.0, "e5": 5.0}
 
@@ -92,7 +91,7 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
 def test_partitioned_merge_key_moving_partition_keeps_one_row(spark, tmp_path):
     """A key whose partition value changes between commits must leave its
     old partition: the partition holding the key's old row is rewritten
-    (here emptied and dropped from the view) alongside the new one."""
+    (here emptied and dropped from the manifest) alongside the new one."""
     target = str(tmp_path / "moves")
     merge_upsert_partitioned(
         spark, target,
@@ -105,7 +104,7 @@ def test_partitioned_merge_key_moving_partition_keeps_one_row(spark, tmp_path):
         _mk_batch(spark, [("e1", "2024-01-02", 9.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    t = read_partitioned_table(spark, target)
+    t = read_table(spark, target)
     assert t.filter(F.col("event_id") == "e1").count() == 1
     assert touched == ["2024-01-01", "2024-01-02"]
     assert _table(spark, target) == {("e1", "2024-01-02", 9.0), ("e2", "2024-01-03", 2.0)}
@@ -127,8 +126,8 @@ def test_partitioned_merge_rejects_null_partition_values(spark, tmp_path):
 
 
 def test_pointer_layout_upsert_roundtrip(spark, tmp_path):
-    """Fresh target → commit log + manifest view; upserts update/insert
-    across partitions; untouched partitions keep their data dir."""
+    """Fresh target → commit log + parts manifest; upserts update/insert
+    across partitions; untouched partitions keep their part entry."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
@@ -148,7 +147,7 @@ def test_pointer_layout_upsert_roundtrip(spark, tmp_path):
     assert _table(spark, target) == {
         ("e1", "d1", 10.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0), ("e4", "d4", 4.0),
     }
-    # untouched partition resolves to the SAME immutable data dir
+    # untouched partition resolves to the SAME immutable part dir
     assert st.store_version_dir(target) != view1
     assert _mapping(target)["day=d2"] == map1["day=d2"]
 
@@ -172,7 +171,7 @@ def test_plain_hive_target_is_refused(spark, tmp_path):
 
 def test_crashed_first_commit_retries_cleanly(spark, tmp_path, monkeypatch):
     """A writer dying before the first log entry leaves only this layout's
-    own orphans (data/, v-*/): the retry commits as a fresh table and GCs
+    own orphans (parts/, v-*/): the retry commits as a fresh table and GCs
     them."""
     target = str(tmp_path / "pt")
 
@@ -186,7 +185,7 @@ def test_crashed_first_commit_retries_cleanly(spark, tmp_path, monkeypatch):
             key_cols=["event_id"], partition_col="day",
         )
     monkeypatch.undo()
-    assert read_partitioned_table(spark, target) is None
+    assert read_table(spark, target) is None
 
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 2.0)]),
@@ -194,7 +193,7 @@ def test_crashed_first_commit_retries_cleanly(spark, tmp_path, monkeypatch):
     )
     assert _table(spark, target) == {("e1", "d1", 2.0)}
     assert len([d for d in os.listdir(target) if d.startswith("v-")]) == 1
-    assert len(os.listdir(os.path.join(target, m._PT_DATA))) == 1
+    assert len(os.listdir(os.path.join(target, st._PARTS))) == 1
 
 
 def test_pointer_layout_hive_escaped_partition_values(spark, tmp_path):
@@ -225,7 +224,7 @@ def test_pointer_layout_hive_escaped_partition_values(spark, tmp_path):
 # ----------------------------------------------------------------------
 # r15 (ADVICE r14, medium): a commit log naming no intact view must fail
 # the WRITER loudly — re-initializing over it would let post-commit GC
-# delete every prior view/data commit. Readers keep returning None (safe).
+# delete every prior version and part. Readers keep returning None (safe).
 
 
 @pytest.mark.parametrize("corruption", ["", "v-999999-deadbeef"])
@@ -245,7 +244,7 @@ def test_pointer_corruption_blocks_writer_not_reader(spark, tmp_path, corruption
 
     # reader: safe None, no raise
     assert st.store_version_dir(target) is None
-    assert read_partitioned_table(spark, target) is None
+    assert read_table(spark, target) is None
 
     # writer: refuses — and leaves every prior commit dir on disk
     dirs_before = sorted(os.listdir(target))
@@ -279,7 +278,7 @@ def test_store_pointer_corruption_blocks_writers(spark, tmp_path, corruption):
     with open(_sole_log_entry(target), "w") as f:
         f.write(corruption)
 
-    assert st.store_read(spark, target) is None  # reader: safe None
+    assert read_table(spark, target, "t") is None  # reader: safe None
 
     df = spark.createDataFrame([(2,)], "k long")
     with pytest.raises(st.StoreCorruptPointerError):
@@ -291,9 +290,9 @@ def test_store_pointer_corruption_blocks_writers(spark, tmp_path, corruption):
 
 
 # ----------------------------------------------------------------------
-# r15 (VERDICT r14 item 5): MANIFEST views — the symlink-free format for
-# filesystems without symlinks (object stores). It must behave identically
-# with os.symlink DISABLED end to end.
+# r15 (VERDICT r14 item 5): the parts manifest is the symlink-free format
+# for filesystems without symlinks (object stores). It must behave
+# identically with os.symlink DISABLED end to end.
 
 
 @pytest.fixture
@@ -307,8 +306,8 @@ def no_symlinks(monkeypatch):
 
 
 def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, no_symlinks):
-    """Manifest views on a symlink-free FS; upserts update/insert across
-    partitions; untouched partitions' data dirs are reused, not
+    """The parts manifest on a symlink-free FS; upserts update/insert
+    across partitions; untouched partitions' part dirs are reused, not
     rewritten."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
@@ -317,7 +316,7 @@ def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, no_symlinks
         key_cols=["event_id"], partition_col="day",
     )
     view1 = st.store_version_dir(target)
-    assert os.listdir(view1) == [m._PT_MANIFEST]
+    assert os.listdir(view1) == [st._MANIFEST]  # a version holds no data
     map1 = _mapping(target)
 
     touched = merge_upsert_partitioned(
@@ -330,7 +329,7 @@ def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, no_symlinks
         ("e1", "d1", 10.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0), ("e4", "d4", 4.0),
     }
     map2 = _mapping(target)
-    assert map2["day=d2"] == map1["day=d2"]  # untouched → same immutable data
+    assert map2["day=d2"] == map1["day=d2"]  # untouched → same immutable part
     assert map2["day=d1"] != map1["day=d1"]
 
 
@@ -346,22 +345,22 @@ def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatc
     before = _table(spark, target)
     view_before = st.store_version_dir(target)
 
-    real_dump = m.json.dump
+    real_dump = st.json.dump
 
     def crashing_dump(obj, fh, *a, **k):
-        if os.path.basename(fh.name) == m._PT_MANIFEST:
-            fh.write('{"day=d1": "data/tor')  # torn partial write
+        if os.path.basename(fh.name) == st._MANIFEST:
+            fh.write('{"default": {"parts": ["p-tor')  # torn partial write
             raise OSError("injected crash mid-manifest")
         return real_dump(obj, fh, *a, **k)
 
-    monkeypatch.setattr(m.json, "dump", crashing_dump)
+    monkeypatch.setattr(st.json, "dump", crashing_dump)
     with pytest.raises(OSError, match="injected crash"):
         merge_upsert_partitioned(
             spark, target,
             _mk_batch(spark, [("e1", "d1", 99.0), ("e4", "d4", 4.0)]),
             key_cols=["event_id"], partition_col="day",
         )
-    monkeypatch.setattr(m.json, "dump", real_dump)
+    monkeypatch.setattr(st.json, "dump", real_dump)
 
     assert st.store_version_dir(target) == view_before
     assert _table(spark, target) == before
@@ -389,7 +388,7 @@ def test_manifest_layout_pointer_corruption_blocks_writer(spark, tmp_path, no_sy
     with open(_sole_log_entry(target), "w") as f:
         f.write("v-000001-deadbeef")
     open(os.path.join(target, st._COMMITLOG, "c-000002"), "w").close()
-    assert read_partitioned_table(spark, target) is None
+    assert read_table(spark, target) is None
     with pytest.raises(st.StoreCorruptPointerError, match="no entry names an intact"):
         merge_upsert_partitioned(
             spark, target, _mk_batch(spark, [("e2", "d2", 2.0)]),
@@ -398,20 +397,20 @@ def test_manifest_layout_pointer_corruption_blocks_writer(spark, tmp_path, no_sy
 
 
 def test_manifest_empty_mapping_raises_descriptive_error(spark, tmp_path, no_symlinks):
-    """r16 ADVICE: a hand-truncated/corrupt _VIEW_MANIFEST.json mapping no
-    partitions must surface as a descriptive error, not a bare IndexError
-    from dfs[0]."""
+    """r16 ADVICE: a hand-truncated/corrupt _MANIFEST.json listing no
+    parts for the table must surface as a descriptive error, not a bare
+    error from an empty read."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
         _mk_batch(spark, [("e1", "d1", 1.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    mpath = os.path.join(st.store_version_dir(target), m._PT_MANIFEST)
+    mpath = os.path.join(st.store_version_dir(target), st._MANIFEST)
     with open(mpath) as f:
         manifest = json.load(f)
-    manifest["partitions"] = {}
+    manifest[st._DEFAULT]["parts"] = []
     with open(mpath, "w") as f:
         json.dump(manifest, f)
-    with pytest.raises(RuntimeError, match="maps no"):
-        read_partitioned_table(spark, target)
+    with pytest.raises(RuntimeError, match="maps no parts"):
+        read_table(spark, target)

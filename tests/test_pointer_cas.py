@@ -16,10 +16,8 @@ import os
 import pytest
 
 import scraper_db_refine_merge_spark.streaming.store as st
-from scraper_db_refine_merge_spark.operators.merge import (
-    merge_upsert_partitioned,
-    read_partitioned_table,
-)
+from scraper_db_refine_merge_spark.operators.merge import merge_upsert_partitioned
+from scraper_db_refine_merge_spark.streaming.store import read_table
 
 
 def _df(spark, rows):
@@ -27,7 +25,7 @@ def _df(spark, rows):
 
 
 def _rows(spark, target):
-    return {tuple(r) for r in st.store_read(spark, target).collect()}
+    return {tuple(r) for r in read_table(spark, target).collect()}
 
 
 @pytest.fixture
@@ -91,10 +89,10 @@ def test_store_commit_parts_and_compact_under_cas(spark, tmp_path, no_replace):
     target = str(tmp_path / "s")
     st.store_commit_parts({"t": _df(spark, [("a", 1)])}, target)
     st.store_commit_parts({"t": _df(spark, [("b", 2)])}, target)
-    got = {tuple(r) for r in st.store_read_part(spark, target, "t").collect()}
+    got = {tuple(r) for r in read_table(spark, target, "t").collect()}
     assert got == {("a", 1), ("b", 2)}
     st.store_compact(spark, target)
-    got = {tuple(r) for r in st.store_read_part(spark, target, "t").collect()}
+    got = {tuple(r) for r in read_table(spark, target, "t").collect()}
     assert got == {("a", 1), ("b", 2)}
 
 
@@ -103,7 +101,7 @@ def _mk_batch(spark, rows):
 
 
 def test_partitioned_merge_rename_and_symlink_free(spark, tmp_path, no_replace, monkeypatch):
-    """The full object-store commit path: manifest views + CAS log entry,
+    """The full object-store commit path: parts manifest + CAS log entry,
     with os.rename and os.symlink disabled as well. Two upserts,
     latest-wins read-back, one live log entry."""
     def refuse(*a, **k):
@@ -123,7 +121,7 @@ def test_partitioned_merge_rename_and_symlink_free(spark, tmp_path, no_replace, 
         key_cols=["event_id"], partition_col="day",
     )
     assert len(st._commitlog_entries(target)) == 1
-    got = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
+    got = {tuple(r) for r in read_table(spark, target).collect()}
     assert got == {("e1", 10.0, "d1"), ("e2", 2.0, "d2"), ("e3", 3.0, "d3")}
     assert st.store_version_dir(target).startswith(os.path.join(target, "v-"))
 
@@ -133,13 +131,13 @@ def test_partitioned_merge_crash_before_cas_put_leaves_previous_snapshot(
 ):
     """Crash injection at the CAS boundary: dying just before the
     conditional put leaves readers on the previous snapshot; the next
-    successful merge GCs the orphaned view/data."""
+    successful merge GCs the orphaned version and part."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 1.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    before = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
+    before = {tuple(r) for r in read_table(spark, target).collect()}
 
     real_put = st.put_pointer
 
@@ -152,12 +150,87 @@ def test_partitioned_merge_crash_before_cas_put_leaves_previous_snapshot(
             spark, target, _mk_batch(spark, [("e1", "d1", 99.0)]),
             key_cols=["event_id"], partition_col="day",
         )
-    assert {tuple(r) for r in read_partitioned_table(spark, target).collect()} == before
+    assert {tuple(r) for r in read_table(spark, target).collect()} == before
 
     monkeypatch.setattr(st, "put_pointer", real_put)
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 5.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    got = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
+    got = {tuple(r) for r in read_table(spark, target).collect()}
     assert got == {("e1", 5.0, "d1")}
+
+
+# ----------------------------------------------------------------------
+# GC: after every commit shape, parts/ holds exactly the top-level dirs
+# the retained manifests reference — nothing leaks, nothing live is lost.
+
+
+def _referenced_parts(target):
+    out = set()
+    for _, name in st.store_versions(target):
+        for entry in st._manifest_of(os.path.join(target, name)).values():
+            out.update(p.split("/")[0] for p in entry["parts"])
+    return out
+
+
+def _assert_gc_exact(spark, target, n_versions):
+    assert len(st.store_versions(target)) == n_versions
+    assert set(os.listdir(os.path.join(target, st._PARTS))) == _referenced_parts(target)
+    for seq, name in st.store_versions(target):  # every retained version reads
+        for table in st._manifest_of(os.path.join(target, name)):
+            assert read_table(spark, target, table, version=seq).count() > 0
+
+
+@pytest.mark.parametrize("keep", [1, 3])
+def test_gc_keeps_exactly_the_referenced_parts(spark, tmp_path, monkeypatch, keep):
+    target = str(tmp_path / "s")
+    shapes = [
+        lambda: st.store_commit(_df(spark, [("a", 1)]), target, keep=keep),  # snapshot
+        lambda: st.store_commit(_df(spark, [("a", 2)]), target, keep=keep),
+        lambda: st.store_commit_parts({"t": _df(spark, [("b", 1)])}, target, keep=keep),  # append
+        lambda: st.store_commit_parts({"t": _df(spark, [("b", 2)])}, target, keep=keep),
+        lambda: st.store_commit_parts(  # replace
+            {}, target, keep=keep, replace_parts={"t": _df(spark, [("b", 3)])}
+        ),
+        lambda: st.store_commit_parts({"t": _df(spark, [("b", 4)])}, target, keep=keep),
+        lambda: st.store_compact(spark, target, keep=keep),
+    ]
+    for n, commit in enumerate(shapes, 1):
+        commit()
+        _assert_gc_exact(spark, target, min(n, keep))
+    assert _rows(spark, target) == {("a", 2)}
+    assert {tuple(r) for r in read_table(spark, target, "t").collect()} == {("b", 3), ("b", 4)}
+
+    # a crashed writer's part: written, never committed, removed by the next commit
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before the log entry")
+
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected"):
+        mp.setattr(st, "put_pointer", crash)
+        st.store_commit_parts({"t": _df(spark, [("b", 5)])}, target, keep=keep)
+    assert set(os.listdir(os.path.join(target, st._PARTS))) > _referenced_parts(target)
+    st.store_commit(_df(spark, [("a", 3)]), target, keep=keep)
+    _assert_gc_exact(spark, target, keep)
+
+    # partitioned rewrite (its commits retain one version), then a crashed
+    # rewrite's orphan part
+    pt = str(tmp_path / "pt")
+    for rows in ([("e1", "d1", 1.0), ("e2", "d2", 2.0)], [("e1", "d1", 3.0)]):
+        merge_upsert_partitioned(
+            spark, pt, _mk_batch(spark, rows), key_cols=["event_id"], partition_col="day"
+        )
+        _assert_gc_exact(spark, pt, 1)
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected"):
+        mp.setattr(st, "put_pointer", crash)
+        merge_upsert_partitioned(
+            spark, pt, _mk_batch(spark, [("e2", "d2", 4.0)]),
+            key_cols=["event_id"], partition_col="day",
+        )
+    merge_upsert_partitioned(
+        spark, pt, _mk_batch(spark, [("e3", "d1", 5.0)]),
+        key_cols=["event_id"], partition_col="day",
+    )
+    _assert_gc_exact(spark, pt, 1)
+    got = {tuple(r) for r in read_table(spark, pt).collect()}
+    assert got == {("e1", 3.0, "d1"), ("e2", 2.0, "d2"), ("e3", 5.0, "d1")}

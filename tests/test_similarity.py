@@ -509,4 +509,4 @@ def test_reindex_semantic_equals_one_shot(spark, tmp_path):
     assert got == want
     # the atomic replace also compacted: one part per rebuilt table
     m = _manifest_of(store_version_dir(root))
-    assert all(len(m[t]) == 1 for t in ("centroids", "vectors", "dropped")), m
+    assert all(len(m[t]["parts"]) == 1 for t in ("centroids", "vectors", "dropped")), m

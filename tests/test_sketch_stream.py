@@ -13,7 +13,7 @@ from scraper_db_refine_merge_spark.streaming.sketch_stream import (
     merge_register_tables,
     stream_hll_registers,
 )
-from scraper_db_refine_merge_spark.streaming.store import store_read
+from scraper_db_refine_merge_spark.streaming.store import read_table
 
 
 def _regs_set(df):
@@ -53,12 +53,12 @@ def test_stream_registers_equal_batch_registers(spark, tmp_path):
         [(u, "x") for u in all_users], "user_id long, event_type string"
     )
     expected = hll_registers(batch_df, ["event_type"], "user_id")
-    assert _regs_set(store_read(spark, target)) == _regs_set(expected)
+    assert _regs_set(read_table(spark, target)) == _regs_set(expected)
 
 
 def _cms_cells(spark, target):
     return sorted(
-        tuple(r) for r in store_read(spark, str(target)).select("row", "bucket", "cnt").collect()
+        tuple(r) for r in read_table(spark, str(target)).select("row", "bucket", "cnt").collect()
     )
 
 
@@ -136,7 +136,7 @@ def test_stream_kmv_equals_batch_and_replay_is_noop(spark, tmp_path):
 
     def state():
         return sorted(
-            tuple(r) for r in store_read(spark, str(target)).select("event_type", "h").collect()
+            tuple(r) for r in read_table(spark, str(target)).select("event_type", "h").collect()
         )
 
     streamed = state()
@@ -160,30 +160,35 @@ def test_stream_kmv_equals_batch_and_replay_is_noop(spark, tmp_path):
 def test_store_commit_is_atomic_and_crash_safe(spark, tmp_path):
     """The versioned store's only committing operation is the commit-log
     entry: a writer dying at ANY earlier point (simulated by a fully
-    written but never-committed snapshot dir) leaves the previous state
-    live, and the next successful commit garbage-collects the orphan."""
+    written part and version dir that no log entry names) leaves the
+    previous state live, and the next successful commit garbage-collects
+    the orphans."""
     import os
 
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit,
-        store_read,
         store_version_dir,
     )
 
     target = str(tmp_path / "store")
     df1 = spark.createDataFrame([(1, "a")], "k long, v string")
     store_commit(df1, target)
-    assert [tuple(r) for r in store_read(spark, target).collect()] == [(1, "a")]
+    assert [tuple(r) for r in read_table(spark, target).collect()] == [(1, "a")]
 
-    # simulate a crash mid-write: snapshot exists, log entry never made
-    orphan = os.path.join(target, "v-deadbeefdead")
-    spark.createDataFrame([(9, "x")], "k long, v string").write.parquet(orphan)
-    assert [tuple(r) for r in store_read(spark, target).collect()] == [(1, "a")]
+    # simulate a crash mid-write: part and manifest exist, log entry never made
+    orphan = os.path.join(target, "v-000002-deadbeef")
+    orphan_part = os.path.join(target, "parts", "p-orphan")
+    spark.createDataFrame([(9, "x")], "k long, v string").write.parquet(orphan_part)
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "_MANIFEST.json"), "w") as f:
+        json.dump({"default": {"parts": ["p-orphan"]}}, f)
+    assert [tuple(r) for r in read_table(spark, target).collect()] == [(1, "a")]
 
     # next real commit wins and GCs the orphan
     store_commit(spark.createDataFrame([(2, "b")], "k long, v string"), target)
-    assert [tuple(r) for r in store_read(spark, target).collect()] == [(2, "b")]
+    assert [tuple(r) for r in read_table(spark, target).collect()] == [(2, "b")]
     assert not os.path.exists(orphan)
+    assert not os.path.exists(orphan_part)
     assert store_version_dir(target) is not None
 
 
@@ -244,7 +249,7 @@ def test_stream_asof_enrich_replay_is_guarded(spark, tmp_path):
         q.awaitTermination(300)
         return sorted(
             (r["user_id"], str(r["pts"]), r["version"], r["band"])
-            for r in store_read(spark, target).collect()
+            for r in read_table(spark, target).collect()
         )
 
     got = run("ck1")
@@ -257,12 +262,11 @@ def test_stream_asof_enrich_replay_is_guarded(spark, tmp_path):
 
 
 def test_store_retention_and_time_travel(spark, tmp_path):
-    """keep>1 retains immutable snapshots; store_read_version reads any
+    """keep>1 retains immutable snapshots; read_table(version=) reads any
     retained commit; GC drops commits beyond the window; the pointer
     always serves the newest."""
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit,
-        store_read_version,
         store_versions,
     )
 
@@ -271,9 +275,9 @@ def test_store_retention_and_time_travel(spark, tmp_path):
         store_commit(spark.createDataFrame([(i,)], "k long"), target, keep=2)
 
     assert [s for s, _ in store_versions(target)] == [2, 3]
-    assert store_read_version(spark, target, 1) is None  # GC'd
-    assert [tuple(r) for r in store_read_version(spark, target, 2).collect()] == [(2,)]
-    assert [tuple(r) for r in store_read(spark, target).collect()] == [(3,)]
+    assert read_table(spark, target, version=1) is None  # GC'd
+    assert [tuple(r) for r in read_table(spark, target, version=2).collect()] == [(2,)]
+    assert [tuple(r) for r in read_table(spark, target).collect()] == [(3,)]
 
 
 def test_store_commit_parts_is_one_atomic_snapshot(spark, tmp_path):
@@ -285,7 +289,6 @@ def test_store_commit_parts_is_one_atomic_snapshot(spark, tmp_path):
 
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit_parts,
-        store_read_part,
     )
 
     target = str(tmp_path / "store")
@@ -303,9 +306,9 @@ def test_store_commit_parts_is_one_atomic_snapshot(spark, tmp_path):
     spark.createDataFrame([(99,)], "k long").write.parquet(orphan_part)
     os.makedirs(orphan)
     with open(os.path.join(orphan, "_MANIFEST.json"), "w") as f:
-        json.dump({"a": ["p-orphan"]}, f)
-    assert [tuple(r) for r in store_read_part(spark, target, "a").collect()] == [(1,)]
-    assert [tuple(r) for r in store_read_part(spark, target, "b").collect()] == [(10,)]
+        json.dump({"a": {"parts": ["p-orphan"]}}, f)
+    assert [tuple(r) for r in read_table(spark, target, "a").collect()] == [(1,)]
+    assert [tuple(r) for r in read_table(spark, target, "b").collect()] == [(10,)]
     # next commit moves both tables together and GCs the orphan
     store_commit_parts(
         {
@@ -314,8 +317,8 @@ def test_store_commit_parts_is_one_atomic_snapshot(spark, tmp_path):
         },
         target,
     )
-    assert sorted(r.k for r in store_read_part(spark, target, "a").collect()) == [1, 2]
-    assert sorted(r.k for r in store_read_part(spark, target, "b").collect()) == [10, 20]
+    assert sorted(r.k for r in read_table(spark, target, "a").collect()) == [1, 2]
+    assert sorted(r.k for r in read_table(spark, target, "b").collect()) == [10, 20]
     assert not os.path.exists(orphan)
     assert not os.path.exists(orphan_part)
 
@@ -329,7 +332,6 @@ def test_store_commit_parts_is_incremental_o_batch(spark, tmp_path):
 
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit_parts,
-        store_read_part,
     )
 
     target = str(tmp_path / "store")
@@ -363,8 +365,8 @@ def test_store_commit_parts_is_incremental_o_batch(spark, tmp_path):
     assert _snapshot(first_parts) == before
     assert len(os.listdir(parts_root)) == 4
     # readers see the union across parts
-    assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2]
-    assert sorted(r.k for r in store_read_part(spark, target, "sigs").collect()) == [10, 20]
+    assert sorted(r.k for r in read_table(spark, target, "pairs").collect()) == [1, 2]
+    assert sorted(r.k for r in read_table(spark, target, "sigs").collect()) == [10, 20]
 
 
 def test_store_parts_gc_drops_unreferenced_orphans(spark, tmp_path):
@@ -374,7 +376,6 @@ def test_store_parts_gc_drops_unreferenced_orphans(spark, tmp_path):
 
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit_parts,
-        store_read_part,
     )
 
     target = str(tmp_path / "store")
@@ -383,7 +384,7 @@ def test_store_parts_gc_drops_unreferenced_orphans(spark, tmp_path):
     spark.createDataFrame([(99,)], "k long").write.parquet(orphan)
     store_commit_parts({"pairs": spark.createDataFrame([(2,)], "k long")}, target)
     assert not os.path.exists(orphan)
-    assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2]
+    assert sorted(r.k for r in read_table(spark, target, "pairs").collect()) == [1, 2]
 
 
 def test_store_single_writer_violation_raises(spark, tmp_path, monkeypatch):
@@ -447,22 +448,6 @@ def test_store_commit_under_aqe_off_plans_no_rebalance(spark, tmp_path, monkeypa
     assert "REBALANCE" in on, on  # the spy sees the hint when AQE is on
 
 
-def test_store_commit_parts_refuses_single_df_snapshot(spark, tmp_path):
-    """A store_commit (single-DataFrame) snapshot has no named tables to
-    migrate — the parts commit must raise, not proceed with empty state."""
-    import pytest as _pytest
-
-    from scraper_db_refine_merge_spark.streaming.store import (
-        store_commit,
-        store_commit_parts,
-    )
-
-    target = str(tmp_path / "store")
-    store_commit(spark.createDataFrame([(1,)], "k long"), target)
-    with _pytest.raises(ValueError, match="single-DataFrame"):
-        store_commit_parts({"pairs": spark.createDataFrame([(2,)], "k long")}, target)
-
-
 def test_release_all_threads_drains_worker_caches(spark):
     """ADVICE r6: caches persisted by pooled worker threads (which never
     call release_caches themselves) are drained by the main thread's
@@ -493,7 +478,7 @@ def test_release_all_threads_drains_worker_caches(spark):
 
 def test_store_parts_retention_time_travel_and_gc(spark, tmp_path):
     """VERDICT r6 item 5: retained manifests are readable AS OF their
-    commit via store_read_part_version — each resolves its OWN parts list
+    commit via read_table(version=) — each resolves its OWN parts list
     (later appends invisible) — and retention GC keeps every part some
     retained manifest references while dropping parts owned only by
     expired snapshots."""
@@ -501,7 +486,6 @@ def test_store_parts_retention_time_travel_and_gc(spark, tmp_path):
 
     from scraper_db_refine_merge_spark.streaming.store import (
         store_commit_parts,
-        store_read_part_version,
     )
 
     target = str(tmp_path / "store")
@@ -511,9 +495,9 @@ def test_store_parts_retention_time_travel_and_gc(spark, tmp_path):
         )
     # keep=2 retains v2+v3: v1 GC'd, but v1's PART survives (v2/v3 still
     # reference it — parts are shared, GC is by manifest reference)
-    assert store_read_part_version(spark, target, "t", 1) is None
-    v2 = sorted(r.k for r in store_read_part_version(spark, target, "t", 2).collect())
-    v3 = sorted(r.k for r in store_read_part_version(spark, target, "t", 3).collect())
+    assert read_table(spark, target, "t", version=1) is None
+    v2 = sorted(r.k for r in read_table(spark, target, "t", version=2).collect())
+    v3 = sorted(r.k for r in read_table(spark, target, "t", version=3).collect())
     assert v2 == [1, 2] and v3 == [1, 2, 3]
     assert len(os.listdir(os.path.join(target, "parts"))) == 3
 
@@ -638,7 +622,6 @@ def test_store_compact_squashes_parts_read_identical(spark, tmp_path):
         store_compact,
         store_commit_parts,
         store_marker,
-        store_read_part,
         store_version_dir,
     )
 
@@ -654,15 +637,15 @@ def test_store_compact_squashes_parts_read_identical(spark, tmp_path):
         )
     parts_root = os.path.join(root, "parts")
     assert len(os.listdir(parts_root)) == 8  # 4 folds x 2 tables
-    before_a = sorted(map(tuple, store_read_part(spark, root, "a").collect()))
-    before_b = sorted(map(tuple, store_read_part(spark, root, "b").collect()))
+    before_a = sorted(map(tuple, read_table(spark, root, "a").collect()))
+    before_b = sorted(map(tuple, read_table(spark, root, "b").collect()))
 
     vd = store_compact(spark, root)
     assert vd == store_version_dir(root)
     # one part per table; fine-grained parts GC'd (keep=1)
     assert len(os.listdir(parts_root)) == 2
-    assert sorted(map(tuple, store_read_part(spark, root, "a").collect())) == before_a
-    assert sorted(map(tuple, store_read_part(spark, root, "b").collect())) == before_b
+    assert sorted(map(tuple, read_table(spark, root, "a").collect())) == before_a
+    assert sorted(map(tuple, read_table(spark, root, "b").collect())) == before_b
     # markers travel with the compacted state (exactly-once guards survive)
     assert store_marker(root, "_batch") == "3"
     # idempotent: nothing left to squash → live dir unchanged, no new commit

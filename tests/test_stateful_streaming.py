@@ -151,16 +151,13 @@ def test_stream_ingest_partitioned_merge(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    from scraper_db_refine_merge_spark.operators.merge import (
-        _view_mapping,
-        read_partitioned_table,
-    )
-    from scraper_db_refine_merge_spark.streaming.store import store_version_dir
+    from scraper_db_refine_merge_spark.streaming import store as st
 
-    t = read_partitioned_table(spark, target)
+    t = st.read_table(spark, target)
     rows = {r["title"]: r for r in t.collect()}
     assert set(rows) == {"Party A", "Party B"}
     assert rows["Party A"]["content"]["full_description"] == "v2"  # latest won
     # hive partitions in the live snapshot's manifest: one per event date
-    parts = sorted(_view_mapping(store_version_dir(target)))
+    entry = st._manifest_of(st.store_version_dir(target))[st._DEFAULT]
+    parts = sorted(p.rsplit("/", 1)[1] for p in entry["parts"])
     assert parts == ["event_date=2025-05-05", "event_date=2025-05-06"]

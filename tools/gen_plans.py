@@ -130,7 +130,7 @@ def main() -> None:
         "\n  whitespace class (strings.python_strip / PY_WS_RE2 — \\x85 was"
         "\n  missing from \\p{Z}); plans are unchanged in shape, only the"
         "\n  regex literals inside string expressions widened."
-        "\n- q162 (contamination reindex) and q163 (manifest-view merge)"
+        "\n- q162 (contamination reindex) and q163 (partitioned merge)"
         "\n  execute store folds/commits at PLAN BUILD time like the other"
         "\n  fold gates — their printed plans are the final read."
         "\n- q164/q165 (weighted sampling): ONE range-partitioned prefix"
@@ -162,8 +162,8 @@ def main() -> None:
         "\n  (25.8x the window plan at 256 cells) — >32-cell tables now"
         "\n  take the crossJoin+window fallback they should."
         "\n- q113/q129/q131/q141 COMPACT their fold store before the final"
-        "\n  read (store_compact: one part per table behind one atomic"
-        "\n  pointer replace) — the oracle gate now proves compaction is"
+        "\n  read (store_compact: one part per table behind one commit-log"
+        "\n  entry) — the oracle gate now proves compaction is"
         "\n  read-identical every round; read cost no longer grows with"
         "\n  fold count."
     )

@@ -9,11 +9,12 @@ compared round-over-round in ROADMAP like BENCH_LOCAL.
 
 Operations timed (documents table at sf0.1 = 5k docs; 10x = 50k):
 - merge_fresh             merge_upsert_partitioned into a fresh target
-                          (manifest view + CAS commit log)
+                          (parts manifest + CAS commit log)
 - merge_upsert            second batch touching 1/5 of the keys
-- read_partitioned        full read-back through the committed view
+- read_partitioned        full read-back of the partitioned table
+                          through read_table
 - parts_fold_x4           4 incremental store_commit_parts folds
-- parts_read              union-read of the accumulated parts
+- parts_read              read_table union-read of the accumulated parts
 - store_compact           squash the 4-fold store to one part per table
 - reindex_minhash         band-width rebuild from stored shingles
 - reindex_contamination   k-width rebuild from stored texts
@@ -35,10 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from scraper_db_refine_merge_spark.operators import dedup as dd  # noqa: E402
-from scraper_db_refine_merge_spark.operators.merge import (  # noqa: E402
-    merge_upsert_partitioned,
-    read_partitioned_table,
-)
+from scraper_db_refine_merge_spark.operators.merge import merge_upsert_partitioned  # noqa: E402
 from scraper_db_refine_merge_spark.session import get_spark  # noqa: E402
 from scraper_db_refine_merge_spark.sources.tables import load_table  # noqa: E402
 from scraper_db_refine_merge_spark.streaming import store as st  # noqa: E402
@@ -101,7 +99,7 @@ def run_factor(spark, factor: int) -> dict[str, float]:
             spark, tgt, batch2, key_cols=["doc_id"], partition_col="source"
         )
     )
-    out["read_partitioned"] = _min2(lambda: read_partitioned_table(spark, tgt).count())
+    out["read_partitioned"] = _min2(lambda: st.read_table(spark, tgt).count())
 
     # ---- incremental parts store: 4 folds, read, compact (timed once —
     # compaction mutates; the store is rebuilt per timing elsewhere only
@@ -118,7 +116,7 @@ def run_factor(spark, factor: int) -> dict[str, float]:
 
     out["parts_fold_x4"] = _once(_fold4)
     out["parts_read"] = _min2(
-        lambda: st.store_read_part(spark, ps, "t").count()
+        lambda: st.read_table(spark, ps, "t").count()
     )
     out["store_compact"] = _once(lambda: st.store_compact(spark, ps))
 

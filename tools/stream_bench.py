@@ -109,9 +109,9 @@ def main() -> None:
     )
     q.awaitTermination()
     dt = time.perf_counter() - t0
-    from scraper_db_refine_merge_spark.operators.merge import read_partitioned_table
+    from scraper_db_refine_merge_spark.streaming.store import read_table
 
-    final_rows = read_partitioned_table(spark, target + "_part").count()
+    final_rows = read_table(spark, target + "_part").count()
     mp = spark.read.parquet(metrics + "_part")
     parts = mp.groupBy().sum("partitions_rewritten").first()[0]
     print(
