@@ -197,15 +197,5 @@ def dateutil_fallback_udf():
 # F5-F7 sanity derivations (quality_scorer.py:216-247; docs rules CP001-CP003)
 
 
-def day_of_week(ts: Column) -> Column:
-    return F.date_format(ts, "EEEE")
-
-
 def duration_hours(start_ts: Column, end_ts: Column) -> Column:
     return (end_ts.cast("double") - start_ts.cast("double")) / 3600.0
-
-
-def plausible_duration(start_ts: Column, end_ts: Column, max_days: int = 7) -> Column:
-    """CP-rule: event duration under ``max_days`` and non-negative."""
-    secs = end_ts.cast("double") - start_ts.cast("double")
-    return (secs >= 0) & (secs < max_days * 86400.0)

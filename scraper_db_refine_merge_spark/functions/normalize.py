@@ -2,16 +2,14 @@
 timezone-from-location.
 
 Small literal maps become ``create_map`` lookups (broadcast-free: the map is
-a literal inside the expression, shipped with the task binary). For maps that
-grow beyond literals, the same functions accept a DataFrame to broadcast-join
-instead.
+a literal inside the expression, shipped with the task binary).
 """
 
 from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # schema_adapter_enhanced.py:272-288
@@ -142,19 +140,3 @@ def timezone_from_location(location: Column) -> Column:
     for city, tz in reversed(list(TIMEZONE_MAP.items())):
         expr = F.when(loc.contains(city), tz).otherwise(expr)
     return expr
-
-
-def normalize_with_mapping_table(
-    df: DataFrame, col: str, mapping: DataFrame, key_col: str = "key", value_col: str = "value"
-) -> DataFrame:
-    """Large-dictionary variant: broadcast-join a mapping table and coalesce.
-    The scale path when the dictionary outgrows a literal map. Keys strip
-    like the literal-map variants (python_strip — reference str.strip())."""
-    from .strings import python_strip
-
-    joined = df.join(
-        F.broadcast(mapping.withColumnRenamed(key_col, "__k").withColumnRenamed(value_col, "__v")),
-        F.lower(python_strip(F.col(col))) == F.col("__k"),
-        "left",
-    )
-    return joined.withColumn(col, F.coalesce(F.col("__v"), F.col(col))).drop("__k", "__v")

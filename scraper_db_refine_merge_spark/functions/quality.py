@@ -59,10 +59,6 @@ def _cat_flags(*parts: Column) -> Column:
     return F.concat(*parts)
 
 
-def _empty_flags() -> Column:
-    return F.array().cast("array<string>")
-
-
 # ----------------------------------------------------------------------
 # Title (quality_scorer.py:93-139)
 

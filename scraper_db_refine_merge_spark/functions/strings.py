@@ -104,12 +104,6 @@ def extract_price(price_text: Column) -> Column:
 VALID_CURRENCIES = ("EUR", "USD", "GBP", "JPY", "INR", "AUD", "CAD", "CHF")
 
 
-def normalize_currency_amount(amount: Column) -> Column:
-    """Strip currency symbols/spaces/commas from a string amount → double."""
-    cleaned = F.regexp_replace(amount.cast("string"), r"[€$£¥₹\s,]", "")
-    return F.nullif(cleaned, F.lit("")).cast("double")
-
-
 def normalize_currency_code(currency: Column) -> Column:
     """Uppercase + ISO-4217 whitelist, default EUR."""
     up = F.upper(currency)
@@ -201,10 +195,6 @@ def is_sold_out(status_text: Column) -> Column:
     for w in _SOLDOUT_WORDS:
         out = out | t.contains(w)
     return out
-
-
-def has_ticket_info(price: Column, url: Column) -> Column:
-    return price.isNotNull() | url.isNotNull()
 
 
 # ----------------------------------------------------------------------

@@ -24,18 +24,6 @@ def date_distribution(events: DataFrame) -> DataFrame:
     )
 
 
-def distinct_promoters(events: DataFrame) -> DataFrame:
-    """A3 — distinct host names across the nested stages array
-    (mongo_queries.py:50-53): explode venue.stages[].host.host_name."""
-    return (
-        events.select(F.explode("venue.stages").alias("stage"))
-        .select(F.col("stage.host.host_name").alias("host_name"))
-        .filter(F.col("host_name").isNotNull())
-        .distinct()
-        .orderBy("host_name")
-    )
-
-
 def quality_statistics(events: DataFrame) -> DataFrame:
     """A4 — one-row multi-stat aggregate incl. per-field averages
     (query_examples.py:146-163)."""

@@ -145,6 +145,26 @@ def q76_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.withColumn("harmonic_numerator", F.col("harmonic_numerator").cast("string"))
 
 
+def _sketch_replay(spark: SparkSession, sf_dir: str, row, sink, cols: list[str]) -> DataFrame:
+    """Replay three user batches (ids, 2·ids, ids % 97, each user as
+    ``row(u)``) through ``sink(landing, target, checkpoint)`` and return
+    the final sketch state's ``cols``."""
+    import os
+    import tempfile
+
+    from ..streaming.runner import drain, land_batches
+    from .streamq import _harness_ids
+
+    ids = _harness_ids(load_table(spark, sf_dir, "documents"))
+    root = tempfile.mkdtemp(prefix="sketch_stream_")
+    landing = os.path.join(root, "landing")
+    users = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
+    land_batches(landing, [[row(u) for u in us] for us in users])
+    target = os.path.join(root, "state")
+    drain(sink(landing, target, os.path.join(root, "ckpt")))
+    return read_table(spark, target).select(*cols)
+
+
 # --------------------------------------------------------------------------
 # q77 — STREAMING HLL (streaming/sketch_stream.py): three JSON batches of
 # user ids (full set / doubled ids / heavy-dup residues) replayed through
@@ -171,42 +191,17 @@ def q76_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q77_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    import tempfile
-
     from ..streaming.sketch_stream import stream_hll_registers
-    from .streamq import _harness_ids
 
-    d = load_table(spark, sf_dir, "documents")
-    ids = _harness_ids(d)
-
-    root = tempfile.mkdtemp(prefix="q77_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
-    for i, users in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u, "event_type": "a" if u % 2 == 0 else "b"}) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "registers")
-    q = stream_hll_registers(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        ["event_type"],
-        "user_id",
-        schema="user_id long, event_type string",
-        m=HLL_M,
+    return _sketch_replay(
+        spark, sf_dir,
+        lambda u: {"user_id": u, "event_type": "a" if u % 2 == 0 else "b"},
+        lambda landing, target, ckpt: stream_hll_registers(
+            spark, landing, target, ckpt, ["event_type"], "user_id",
+            schema="user_id long, event_type string",
+        ),
+        ["event_type", "bucket", "max_rho"],
     )
-    q.awaitTermination(300)
-
-    return read_table(spark, target).select("event_type", "bucket", "max_rho")
 
 
 # --------------------------------------------------------------------------
@@ -346,48 +341,23 @@ def q83_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q88_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    import tempfile
-
     from ..streaming.sketch_stream import stream_cms_registers
-    from .streamq import _harness_ids
 
-    d = load_table(spark, sf_dir, "documents")
-    ids = _harness_ids(d)
-
-    root = tempfile.mkdtemp(prefix="q89_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
-    for i, users in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u}) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "registers")
-    q = stream_cms_registers(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        [],
-        "user_id",
-        schema="user_id long",
+    return _sketch_replay(
+        spark, sf_dir,
+        lambda u: {"user_id": u},
+        lambda landing, target, ckpt: stream_cms_registers(
+            spark, landing, target, ckpt, [], "user_id", schema="user_id long",
+        ),
+        ["row", "bucket", "cnt"],
     )
-    q.awaitTermination(300)
-
-    return read_table(spark, target).select("row", "bucket", "cnt")
 
 
 # --------------------------------------------------------------------------
 # q91 — STREAMING KMV (streaming/sketch_stream.py): the third merge
 # algebra in the family — union+distinct+re-top-k is IDEMPOTENT like
-# HLL's MAX (no batch-id guard needed), unlike CMS's guarded SUM. The
-# final per-group k-smallest-hash state must equal the batch-built KMV
+# HLL's MAX (the shared batch-id guard only skips redundant work), unlike
+# CMS's SUM, which needs it. The final per-group k-smallest-hash state must equal the batch-built KMV
 # over the union of all three replayed batches; the oracle ranks the
 # distinct md5 hashes directly.
 @_register(
@@ -413,42 +383,17 @@ def q88_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q91_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    import tempfile
-
     from ..streaming.sketch_stream import stream_kmv_hashes
-    from .streamq import _harness_ids
 
-    d = load_table(spark, sf_dir, "documents")
-    ids = _harness_ids(d)
-
-    root = tempfile.mkdtemp(prefix="q91_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
-    for i, users in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u, "event_type": "a" if u % 2 == 0 else "b"}) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "kmv")
-    q = stream_kmv_hashes(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        ["event_type"],
-        "user_id",
-        schema="user_id long, event_type string",
-        k=KMV_K,
+    return _sketch_replay(
+        spark, sf_dir,
+        lambda u: {"user_id": u, "event_type": "a" if u % 2 == 0 else "b"},
+        lambda landing, target, ckpt: stream_kmv_hashes(
+            spark, landing, target, ckpt, ["event_type"], "user_id",
+            schema="user_id long, event_type string",
+        ),
+        ["event_type", "h"],
     )
-    q.awaitTermination(300)
-
-    return read_table(spark, target).select("event_type", "h")
 
 
 # --------------------------------------------------------------------------
@@ -476,46 +421,17 @@ def q91_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q94_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    import tempfile
-
     from ..streaming.sketch_stream import stream_histogram_sketch
-    from .streamq import _harness_ids
 
-    d = load_table(spark, sf_dir, "documents")
-    ids = _harness_ids(d)
-
-    root = tempfile.mkdtemp(prefix="q94_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
-    for i, users in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in users:
-                row = {
-                    "event_type": "a" if u % 2 == 0 else "b",
-                    "value": ((u * 7) % 500) + 0.5,
-                }
-                f.write(json.dumps(row) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "hist")
-    q = stream_histogram_sketch(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        ["event_type"],
-        "value",
-        schema="event_type string, value double",
-        width=25.0,
+    return _sketch_replay(
+        spark, sf_dir,
+        lambda u: {"event_type": "a" if u % 2 == 0 else "b", "value": ((u * 7) % 500) + 0.5},
+        lambda landing, target, ckpt: stream_histogram_sketch(
+            spark, landing, target, ckpt, ["event_type"], "value",
+            schema="event_type string, value double", width=25.0,
+        ),
+        ["event_type", "bin", "n"],
     )
-    q.awaitTermination(300)
-
-    return read_table(spark, target).select("event_type", "bin", "n")
 
 
 # --------------------------------------------------------------------------
@@ -709,45 +625,17 @@ def _q108_oracle() -> str:
 
 @_register("q108_stream_qdigest", _q108_oracle())
 def q108_stream_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    import tempfile
-
     from ..streaming.sketch_stream import stream_qdigest
-    from .streamq import _harness_ids
 
-    d = load_table(spark, sf_dir, "documents")
-    ids = _harness_ids(d)
-
-    root = tempfile.mkdtemp(prefix="q108_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [ids, [m * 2 for m in ids], [m % 97 for m in ids]]
-    for i, users in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in users:
-                row = {
-                    "event_type": "a" if u % 2 == 0 else "b",
-                    "v": ((u * 7) % 500) * 100 + 50,
-                }
-                f.write(json.dumps(row) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "qdigest")
-    q = stream_qdigest(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        ["event_type"],
-        "v",
-        schema="event_type string, v long",
+    return _sketch_replay(
+        spark, sf_dir,
+        lambda u: {"event_type": "a" if u % 2 == 0 else "b", "v": ((u * 7) % 500) * 100 + 50},
+        lambda landing, target, ckpt: stream_qdigest(
+            spark, landing, target, ckpt, ["event_type"], "v",
+            schema="event_type string, v long",
+        ),
+        ["event_type", "node", "cnt"],
     )
-    q.awaitTermination(300)
-
-    return read_table(spark, target).select("event_type", "node", "cnt")
 
 
 # --------------------------------------------------------------------------

@@ -2,7 +2,7 @@
 
 A deterministic batch replay of the REAL streaming path: three raw JSON
 batches derived from ``documents`` land in a temp directory, Structured
-Streaming (``stream_ingest``: readStream → refine → foreachBatch MERGE,
+Streaming (``stream_ingest``: JSON file stream → refine → foreachBatch MERGE,
 availableNow, maxFilesPerTrigger=1) ingests them in mtime order, and the
 query returns the final merged table state. Batches 1/2 re-scrape subsets
 (doc_id % 3 == 0, then % 5 == 0) with new descriptions, so the final state
@@ -23,7 +23,6 @@ engine over files.
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 from datetime import datetime, timezone
@@ -33,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from ..streaming.pipeline import stream_ingest
+from ..streaming.runner import drain, json_stream, land_batches, start
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -58,6 +58,22 @@ def _harness_ids(d: DataFrame) -> list[int]:
     ]
 
 
+def _row(m: int, hhmm: str, key: str = "doc_id") -> dict:
+    """One replay row of 2025-06-01 at ``hhmm``."""
+    return {"ts": f"2025-06-01T{hhmm}:00+00:00", key: m}
+
+
+def _replay_to_parquet(spark, prefix, batches, schema, plan) -> DataFrame:
+    """Land ``batches``, stream them through ``plan`` into an append-mode
+    parquet sink and return the drained sink."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    landing = os.path.join(root, "landing")
+    land_batches(landing, batches)
+    target = os.path.join(root, "sink")
+    drain(start(plan(json_stream(spark, landing, schema)), os.path.join(root, "ckpt"), target))
+    return spark.read.parquet(target)
+
+
 def _raw_row(m: int, version: int) -> dict:
     title = f"Stream Festival {m}" if m % 7 == 0 else f"Stream Event {m}"
     venue = "amnesia" if m % 3 == 0 else ("Main Room" if m % 3 == 1 else "hi ibiza")
@@ -80,31 +96,21 @@ def q57_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="q57_stream_")
     landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    batches = [
-        (0, ids),
-        (1, [m for m in ids if m % 3 == 0]),
-        (2, [m for m in ids if m % 5 == 0]),
-    ]
-    for version, members in batches:
-        path = os.path.join(landing, f"batch_{version}.json")
-        with open(path, "w") as f:
-            for m in members:
-                f.write(json.dumps(_raw_row(m, version)) + "\n")
-        t = 1_700_000_000 + version * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
+    members = [ids, [m for m in ids if m % 3 == 0], [m for m in ids if m % 5 == 0]]
+    land_batches(landing, [[_raw_row(m, v) for m in ms] for v, ms in enumerate(members)])
 
     target = os.path.join(root, "events")
-    q = stream_ingest(
-        spark,
-        landing,
-        target,
-        os.path.join(root, "ckpt"),
-        source_platform="stream.example.com",
-        max_files_per_trigger=1,
-        now=_NOW,
+    drain(
+        stream_ingest(
+            spark,
+            landing,
+            target,
+            os.path.join(root, "ckpt"),
+            source_platform="stream.example.com",
+            max_files_per_trigger=1,
+            now=_NOW,
+        )
     )
-    q.awaitTermination(300)
 
     t = spark.read.parquet(target)
     return t.select(
@@ -152,13 +158,6 @@ def q60_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ids = _harness_ids(d)
 
-    root = tempfile.mkdtemp(prefix="q60_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-
-    def _row(m: int, hhmm: str) -> str:
-        return json.dumps({"ts": f"2025-06-01T{hhmm}:00+00:00", "doc_id": m})
-
     batches = [
         [_row(m, "00:30" if m % 2 == 0 else "01:30") for m in ids] + [_row(-1, "04:30")],
         [_row(m, "02:45") for m in ids if m % 5 == 0] + [_row(-2, "06:30")],
@@ -166,31 +165,12 @@ def q60_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [_row(m, "05:15") for m in ids if m % 7 == 0]
         + [_row(-3, "23:30")],
     ]
-    for i, lines in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "counts")
-    raw = (
-        spark.readStream.schema("ts timestamp, doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
+    t = _replay_to_parquet(
+        spark, "q60_stream_", batches, "ts timestamp, doc_id long",
+        lambda raw: windowed_event_counts(
+            raw, ts_col="ts", window_len="1 hour", watermark="2 hours"
+        ),
     )
-    agg = windowed_event_counts(raw, ts_col="ts", window_len="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    t = spark.read.parquet(target)
     return t.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         F.col("event_count").cast("bigint").alias("event_count"),
@@ -266,13 +246,6 @@ def q62_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ids = _harness_ids(d)
 
-    root = tempfile.mkdtemp(prefix="q62_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-
-    def _row(m: int, hhmm: str) -> str:
-        return json.dumps({"ts": f"2025-06-01T{hhmm}:00+00:00", "doc_id": m})
-
     batches = [
         [_row(m, "01:00") for m in ids]
         + [_row(m, "01:00") for m in ids if m % 5 == 0]
@@ -280,31 +253,10 @@ def q62_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         [_row(-2, "11:00")],
         [_row(m, "10:30") for m in ids if m % 3 == 0] + [_row(-3, "23:00")],
     ]
-    for i, lines in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "emitted")
-    raw = (
-        spark.readStream.schema("ts timestamp, doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
+    t = _replay_to_parquet(
+        spark, "q62_stream_", batches, "ts timestamp, doc_id long",
+        lambda raw: dedup_stream(raw, ["doc_id"], ts_col="ts", watermark="1 hour"),
     )
-    q = (
-        dedup_stream(raw, ["doc_id"], ts_col="ts", watermark="1 hour")
-        .writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    t = spark.read.parquet(target)
     return t.groupBy("doc_id").agg(F.count("*").alias("n_emitted"))
 
 
@@ -394,55 +346,30 @@ def q65_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ids = _harness_ids(d)
 
-    root = tempfile.mkdtemp(prefix="q65_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-
-    def _row(m: int, hhmm: str) -> str:
-        return json.dumps({"ts": f"2025-06-01T{hhmm}:00+00:00", "uid": m})
+    def _uid(m: int, hhmm: str) -> dict:
+        return _row(m, hhmm, key="uid")
 
     batches = [
-        [_row(m, "01:00") for m in ids]
-        + [_row(m, "01:10") for m in ids]
-        + [_row(m, "02:30") for m in ids if m % 2 == 0]
-        + [_row(-1, "10:00")],
-        [_row(-2, "23:00")],
+        [_uid(m, "01:00") for m in ids]
+        + [_uid(m, "01:10") for m in ids]
+        + [_uid(m, "02:30") for m in ids if m % 2 == 0]
+        + [_uid(-1, "10:00")],
+        [_uid(-2, "23:00")],
     ]
-    for i, lines in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "sessions")
-    raw = (
-        spark.readStream.schema("ts timestamp, uid long")
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
+    return _replay_to_parquet(
+        spark, "q65_stream_", batches, "ts timestamp, uid long",
+        lambda raw: (
+            raw.withWatermark("ts", "10 minutes")
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "uid")
+            .agg(F.count("*").alias("n"))
+            .select(
+                "uid",
+                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+                "n",
+            )
+        ),
     )
-    agg = (
-        raw.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "uid")
-        .agg(F.count("*").alias("n"))
-        .select(
-            "uid",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n",
-        )
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    return spark.read.parquet(target)
 
 
 QUERIES["q65_stream_session_windows"] = q65_stream_session_windows
@@ -483,58 +410,34 @@ def q80_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ids = _harness_ids(d)
 
+    def _user(u: int, hhmm: str) -> dict:
+        return _row(u, hhmm, key="user_id")
+
     root = tempfile.mkdtemp(prefix="q80_stream_")
     clicks_dir = os.path.join(root, "clicks")
     purch_dir = os.path.join(root, "purchases")
-    os.makedirs(clicks_dir)
-    os.makedirs(purch_dir)
-
-    def _row(u: int, hhmm: str) -> str:
-        return json.dumps({"user_id": u, "ts": f"2025-06-01T{hhmm}:00+00:00"})
-
-    click_batches = [
-        [_row(m, "01:00") for m in ids] + [_row(-1, "05:00")],
-        [_row(m, "05:10") for m in ids if m % 5 == 0] + [_row(-2, "05:30")],
-        [_row(-3, "23:00")],
-    ]
-    purch_batches = [
-        [_row(m, "01:30") for m in ids if m % 2 == 0] + [_row(-11, "05:00")],
-        [_row(-12, "05:30")],
-        [_row(m, "01:40") for m in ids if m % 3 == 0]  # late → dropped
-        + [_row(m, "05:40") for m in ids if m % 5 == 0]
-        + [_row(-13, "23:00")],
-    ]
-    for dir_, batches in ((clicks_dir, click_batches), (purch_dir, purch_batches)):
-        for i, lines in enumerate(batches):
-            path = os.path.join(dir_, f"batch_{i}.json")
-            with open(path, "w") as f:
-                f.write("\n".join(lines) + "\n")
-            t = 1_700_000_000 + i * 60
-            os.utime(path, (t, t))
+    land_batches(clicks_dir, [
+        [_user(m, "01:00") for m in ids] + [_user(-1, "05:00")],
+        [_user(m, "05:10") for m in ids if m % 5 == 0] + [_user(-2, "05:30")],
+        [_user(-3, "23:00")],
+    ])
+    land_batches(purch_dir, [
+        [_user(m, "01:30") for m in ids if m % 2 == 0] + [_user(-11, "05:00")],
+        [_user(-12, "05:30")],
+        [_user(m, "01:40") for m in ids if m % 3 == 0]  # late → dropped
+        + [_user(m, "05:40") for m in ids if m % 5 == 0]
+        + [_user(-13, "23:00")],
+    ])
 
     schema = "user_id long, ts timestamp"
-    clicks = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(clicks_dir)
-        .withColumnRenamed("ts", "click_ts")
-    )
-    purchases = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(purch_dir)
-        .withColumnRenamed("ts", "purchase_ts")
-    )
+    clicks = json_stream(spark, clicks_dir, schema).withColumnRenamed("ts", "click_ts")
+    purchases = json_stream(spark, purch_dir, schema).withColumnRenamed("ts", "purchase_ts")
     joined = stream_interval_join(
         clicks, purchases, "user_id", "click_ts", "purchase_ts",
         window="1 hour", watermark="2 hours",
     )
     target = os.path.join(root, "joined")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(start(joined, os.path.join(root, "ckpt"), target))
 
     t = spark.read.parquet(target)
     return t.select(
@@ -571,53 +474,25 @@ def q101_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ids = _harness_ids(d)
 
-    root = tempfile.mkdtemp(prefix="q101_stream_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-
-    def _row(m: int, hhmm: str) -> str:
-        return json.dumps({"ts": f"2025-06-01T{hhmm}:00+00:00", "doc_id": m})
-
     batches = [
         [_row(m, f"0{1 + m % 3}:00") for m in ids] + [_row(-1, "10:00")],
         [_row(-2, "23:00")],
     ]
-    for i, lines in enumerate(batches):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
-
-    target = os.path.join(root, "counts")
-    raw = (
-        spark.readStream.schema("ts timestamp, doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-    )
     dim = d.select("doc_id", "lang")
-    agg = (
-        raw.withWatermark("ts", "2 hours")
-        .join(dim, "doc_id")  # stream-static inner join, batch side per micro-batch
-        .groupBy(F.window("ts", "1 hour").alias("w"), "lang")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "lang",
-            "n",
-        )
+    return _replay_to_parquet(
+        spark, "q101_stream_", batches, "ts timestamp, doc_id long",
+        lambda raw: (
+            raw.withWatermark("ts", "2 hours")
+            .join(dim, "doc_id")  # stream-static inner join, batch side per micro-batch
+            .groupBy(F.window("ts", "1 hour").alias("w"), "lang")
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+                "lang",
+                "n",
+            )
+        ),
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", target)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    return spark.read.parquet(target)
 
 
 QUERIES["q101_stream_static_join"] = q101_stream_static_join
@@ -667,25 +542,22 @@ def q104_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="q104_stream_")
     landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    for i, day in enumerate(_Q104_PROBE_DAYS):
-        path = os.path.join(landing, f"batch_{i}.json")
-        with open(path, "w") as f:
-            for u in uids:
-                f.write(json.dumps({"user_id": u, "pts": f"{day}T12:00:00+00:00"}) + "\n")
-        t = 1_700_000_000 + i * 60  # strict mtime order → batch order
-        os.utime(path, (t, t))
+    land_batches(landing, [
+        [{"user_id": u, "pts": f"{day}T12:00:00+00:00"} for u in uids]
+        for day in _Q104_PROBE_DAYS
+    ])
 
     target = os.path.join(root, "enriched")
-    q = stream_asof_enrich(
-        spark,
-        landing,
-        scd2_history_raw(e),
-        target,
-        os.path.join(root, "ckpt"),
-        schema="user_id long, pts timestamp",
+    drain(
+        stream_asof_enrich(
+            spark,
+            landing,
+            scd2_history_raw(e),
+            target,
+            os.path.join(root, "ckpt"),
+            schema="user_id long, pts timestamp",
+        )
     )
-    q.awaitTermination(300)
 
     return read_table(spark, target).select(
         "user_id",

@@ -57,29 +57,23 @@ def stream_asof_enrich(
     schema: str,
     key: str = "user_id",
     ts_col: str = "pts",
-    max_files_per_trigger: int = 1,
 ):
     """Streaming SCD2 / as-of dimension enrichment in foreachBatch: each
     micro-batch of probe rows joins the versioned ``history`` table
     (raw [vf, vt) interval bounds, NULL vt = current version) AS-OF the
     probe's event time — the streaming analog of upsert-with-history
     lookup (reference database/data_migration.py:133-139 generalized).
+    Returns the started StreamingQuery (one landing file per micro-batch).
 
     Per micro-batch this is a batch equi-join on ``key`` with the interval
     post-filter — Spark plans the static side as a batch relation inside
     every micro-batch (AQE broadcasts it while it is genuinely small; no
     forced hint, the history is user-cardinality-sized). Appending enriched
     rows is NOT idempotent, so the sink runs under the same batch-id guard
-    as the CMS sink (guarded_merge_sink: marker commits atomically with the
-    snapshot), making replays no-ops — exactly-once end to end.
+    as the sketch sinks (guarded_merge_sink: marker commits atomically with
+    the snapshot), making replays no-ops — exactly-once end to end.
     """
-    from .sketch_stream import guarded_merge_sink
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(landing_dir)
-    )
+    from .sketch_stream import stream_guarded_merge
 
     def _build(batch_df: DataFrame) -> DataFrame:
         t = F.col(ts_col)
@@ -88,12 +82,8 @@ def stream_asof_enrich(
             .filter((F.col("vf") <= t) & (F.col("vt").isNull() | (t < F.col("vt"))))
         )
 
-    def _merge(prev: DataFrame, cur: DataFrame) -> DataFrame:
-        return prev.unionByName(cur)
-
-    return (
-        raw.writeStream.foreachBatch(guarded_merge_sink(spark, target_path, _build, _merge))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_guarded_merge(
+        spark, landing_dir, target_path, checkpoint_dir, schema,
+        _build,
+        lambda prev, cur: prev.unionByName(cur),
     )

@@ -4,8 +4,9 @@ The reference is batch + incremental re-scrape with upsert semantics
 (data_migration.py:133-139, unified_scraper.py:622-642). Structured
 Streaming generalizes it:
 
-- ST1: ``readStream`` over a landing directory → refine (planned once per
-  query, on the stream) → ``foreachBatch`` keyed MERGE (latest wins).
+- ST1: a file stream over a landing directory (streaming/runner.py) →
+  refine (planned once per query, on the stream) → ``foreachBatch`` keyed
+  MERGE (latest wins).
   foreachBatch is the correct sink because MERGE is not an append-only
   streaming sink; each micro-batch applies W3 dedup then the upsert.
 - ST2: freshness predicate / TTL (ventura_crawler.py:260-287) as both a
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators.merge import merge_upsert
 from ..refine import refine
+from .runner import json_stream, start
 
 RAW_STREAM_SCHEMA = (
     "title string, url string, venue string, date_text string, "
@@ -76,11 +78,7 @@ def stream_ingest(
     locality, so merge cost tracks the batch, not the table. The default
     whole-table MERGE reports richer stats and suits small tables.
     """
-    raw = (
-        spark.readStream.schema(RAW_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(landing_dir)
-    )
+    raw = json_stream(spark, landing_dir, RAW_STREAM_SCHEMA, max_files_per_trigger)
     refined = refine(raw, source_platform, now=now or datetime.now(timezone.utc))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -137,12 +135,7 @@ def stream_ingest(
             )
             metrics.write.mode("append").parquet(metrics_path)
 
-    return (
-        refined.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(refined, checkpoint_dir, _apply)
 
 
 def fresh_rows(df: DataFrame, ts_col: str, max_age_hours: float, now: datetime | None = None) -> DataFrame:
@@ -158,10 +151,10 @@ def refresh_queue(events: DataFrame, now: datetime | None = None) -> DataFrame:
     future events) + explicit refresh flags (ST4) → rows needing re-scrape."""
     now = now or datetime.now(timezone.utc)
     scraped = F.try_to_timestamp(F.col("scraping_metadata.last_scraped"))
-    start = F.try_to_timestamp(F.col("datetime.start_date"))
+    start_ts = F.try_to_timestamp(F.col("datetime.start_date"))
     now_l = F.lit(now.replace(tzinfo=None)).cast("timestamp")
     df001 = scraped < F.lit((now - timedelta(days=7)).replace(tzinfo=None)).cast("timestamp")
-    df002 = (start > now_l) & (
+    df002 = (start_ts > now_l) & (
         scraped < F.lit((now - timedelta(days=30)).replace(tzinfo=None)).cast("timestamp")
     )
     flagged = F.coalesce(F.col("system_flags.needs_refresh"), F.lit(False))

@@ -340,3 +340,24 @@ def test_q124_longest_run_semi_anti_restricted(spark, sf_dir):
     p = _plan(df)
     assert "CartesianProduct" not in p
     assert "LeftSemi" in p and "LeftAnti" in p
+
+
+def test_streams_start_only_through_the_runner():
+    """Every file stream is landed, read, started and drained by
+    streaming/runner.py, so a change to how streams start (the state
+    partition count, say) is an edit in one function. No other package
+    module may touch the Structured Streaming entry points or set file
+    mtimes by hand."""
+    import pathlib
+
+    import scraper_db_refine_merge_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pattern = re.compile(r"\.readStream\b|\.writeStream\b|awaitTermination|os\.utime\b")
+    hits = sorted(
+        f"{path.relative_to(root)}:{n}"
+        for path in root.rglob("*.py")
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    )
+    assert hits and all(h.startswith("streaming/runner.py:") for h in hits), hits

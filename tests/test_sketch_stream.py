@@ -4,11 +4,11 @@ at-least-once safety (re-merging a batch is a no-op)."""
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import functions as F
 
 from scraper_db_refine_merge_spark.operators.sketches import hll_registers
+from scraper_db_refine_merge_spark.streaming.runner import drain, land_batches
 from scraper_db_refine_merge_spark.streaming.sketch_stream import (
     merge_register_tables,
     stream_hll_registers,
@@ -29,25 +29,41 @@ def test_remerging_same_batch_is_noop(spark):
     assert _regs_set(regs) == _regs_set(twice)
 
 
+def test_remerging_same_kmv_state_is_noop(spark):
+    """KMV merge (union + distinct + re-top-k) is idempotent: merging a
+    state with itself returns it unchanged."""
+    from scraper_db_refine_merge_spark.operators.sketches import KMV_K, _md5
+    from scraper_db_refine_merge_spark.streaming.sketch_stream import merge_kmv_tables
+
+    hashes = spark.range(200).select(
+        F.lit("t").alias("event_type"), _md5(F.col("id")).alias("h")
+    )
+    x = merge_kmv_tables(hashes.limit(0), hashes, ["event_type"], KMV_K)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("event_type", "h").collect())
+
+    assert len(rows(x)) == KMV_K
+    assert rows(merge_kmv_tables(x, x, ["event_type"], KMV_K)) == rows(x)
+
+
+_USER_BATCHES = [range(0, 100), range(50, 150), range(0, 30)]
+_ALL_USERS = [u for users in _USER_BATCHES for u in users]
+
+
 def test_stream_registers_equal_batch_registers(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    batches = [range(0, 100), range(50, 150), range(0, 30)]
-    all_users = []
-    for i, users in enumerate(batches):
-        with open(landing / f"b{i}.json", "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u, "event_type": "x"}) + "\n")
-        t = 1_700_000_000 + i * 60
-        os.utime(landing / f"b{i}.json", (t, t))
-        all_users.extend(users)
+    landing = str(tmp_path / "landing")
+    land_batches(landing, [[{"user_id": u, "event_type": "x"} for u in us] for us in _USER_BATCHES])
+    all_users = _ALL_USERS
 
     target = str(tmp_path / "regs")
-    q = stream_hll_registers(
-        spark, str(landing), target, str(tmp_path / "ckpt"),
-        ["event_type"], "user_id", schema="user_id long, event_type string",
+    drain(
+        stream_hll_registers(
+            spark, landing, target, str(tmp_path / "ckpt"),
+            ["event_type"], "user_id", schema="user_id long, event_type string",
+        ),
+        timeout_s=120,
     )
-    q.awaitTermination(120)
 
     batch_df = spark.createDataFrame(
         [(u, "x") for u in all_users], "user_id long, event_type string"
@@ -72,24 +88,17 @@ def test_stream_cms_equals_batch_and_replay_is_guarded(spark, tmp_path):
     from scraper_db_refine_merge_spark.operators.sketches import cms_registers
     from scraper_db_refine_merge_spark.streaming.sketch_stream import stream_cms_registers
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    batches = [range(0, 100), range(50, 150), range(0, 30)]
-    all_users = []
-    for i, users in enumerate(batches):
-        with open(landing / f"b{i}.json", "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u}) + "\n")
-                all_users.append(u)
-        t = 1_700_000_000 + i * 60
-        os.utime(landing / f"b{i}.json", (t, t))
+    landing = str(tmp_path / "landing")
+    land_batches(landing, [[{"user_id": u} for u in us] for us in _USER_BATCHES])
+    all_users = _ALL_USERS
 
     target = tmp_path / "registers"
-    q = stream_cms_registers(
-        spark, str(landing), str(target), str(tmp_path / "ckpt1"), [], "user_id",
-        schema="user_id long",
+    drain(
+        stream_cms_registers(
+            spark, landing, str(target), str(tmp_path / "ckpt1"), [], "user_id",
+            schema="user_id long",
+        )
     )
-    q.awaitTermination(300)
 
     batch_df = spark.createDataFrame([(u,) for u in all_users], "user_id long")
     expected = sorted(
@@ -100,39 +109,34 @@ def test_stream_cms_equals_batch_and_replay_is_guarded(spark, tmp_path):
     assert streamed == expected
 
     # full replay: fresh checkpoint, same landing files
-    q2 = stream_cms_registers(
-        spark, str(landing), str(target), str(tmp_path / "ckpt2"), [], "user_id",
-        schema="user_id long",
+    drain(
+        stream_cms_registers(
+            spark, landing, str(target), str(tmp_path / "ckpt2"), [], "user_id",
+            schema="user_id long",
+        )
     )
-    q2.awaitTermination(300)
     assert _cms_cells(spark, target) == expected
 
 
 def test_stream_kmv_equals_batch_and_replay_is_noop(spark, tmp_path):
-    """KMV merge (union + distinct + re-top-k) is idempotent, so the sink
-    needs no batch-id guard: streamed state equals the batch KMV over the
-    union, and a full replay with a fresh checkpoint leaves it unchanged."""
+    """KMV merge (union + distinct + re-top-k) is idempotent, and the sink
+    also runs under the shared batch-id guard: streamed state equals the
+    batch KMV over the union, and a full replay with a fresh checkpoint
+    leaves it unchanged."""
     from scraper_db_refine_merge_spark.operators.sketches import KMV_K, kmv_sketch
     from scraper_db_refine_merge_spark.streaming.sketch_stream import stream_kmv_hashes
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    batches = [range(0, 100), range(50, 150), range(0, 30)]
-    all_users = []
-    for i, users in enumerate(batches):
-        with open(landing / f"b{i}.json", "w") as f:
-            for u in users:
-                f.write(json.dumps({"user_id": u, "event_type": "x"}) + "\n")
-                all_users.append(u)
-        t = 1_700_000_000 + i * 60
-        os.utime(landing / f"b{i}.json", (t, t))
+    landing = str(tmp_path / "landing")
+    land_batches(landing, [[{"user_id": u, "event_type": "x"} for u in us] for us in _USER_BATCHES])
+    all_users = _ALL_USERS
 
     target = tmp_path / "kmv"
-    q = stream_kmv_hashes(
-        spark, str(landing), str(target), str(tmp_path / "ck1"),
-        ["event_type"], "user_id", schema="user_id long, event_type string", k=KMV_K,
+    drain(
+        stream_kmv_hashes(
+            spark, landing, str(target), str(tmp_path / "ck1"),
+            ["event_type"], "user_id", schema="user_id long, event_type string",
+        )
     )
-    q.awaitTermination(300)
 
     def state():
         return sorted(
@@ -149,11 +153,12 @@ def test_stream_kmv_equals_batch_and_replay_is_noop(spark, tmp_path):
     kth = kmv_sketch(batch_df, ["event_type"], "user_id", k=KMV_K).first()["kth_hash"]
     assert max(h for _, h in streamed) == kth
 
-    q2 = stream_kmv_hashes(
-        spark, str(landing), str(target), str(tmp_path / "ck2"),
-        ["event_type"], "user_id", schema="user_id long, event_type string", k=KMV_K,
+    drain(
+        stream_kmv_hashes(
+            spark, landing, str(target), str(tmp_path / "ck2"),
+            ["event_type"], "user_id", schema="user_id long, event_type string",
+        )
     )
-    q2.awaitTermination(300)
     assert state() == streamed
 
 
@@ -208,8 +213,6 @@ def test_stream_asof_enrich_replay_is_guarded(spark, tmp_path):
     """The as-of enrichment sink appends (non-idempotent), so a full
     replay with a fresh checkpoint must be a no-op via the batch-id
     guard — and each probe matches exactly its as-of version."""
-    import json as _json
-
     from pyspark.sql import functions as F2
 
     from scraper_db_refine_merge_spark.streaming.joins import stream_asof_enrich
@@ -227,26 +230,22 @@ def test_stream_asof_enrich_replay_is_guarded(spark, tmp_path):
         F2.to_timestamp("vf").alias("vf"), F2.to_timestamp("vt").alias("vt"),
     )
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
+    landing = str(tmp_path / "landing")
     batches = [
         [(1, "2024-01-05T00:00:00+00:00"), (2, "2024-01-05T00:00:00+00:00")],
         [(1, "2024-01-15T00:00:00+00:00"), (2, "2024-01-02T00:00:00+00:00")],  # 2nd pre-history: dropped
     ]
-    for i, rows in enumerate(batches):
-        with open(landing / f"b{i}.json", "w") as f:
-            for u, ts in rows:
-                f.write(_json.dumps({"user_id": u, "pts": ts}) + "\n")
-        os.utime(landing / f"b{i}.json", (1_700_000_000 + i * 60,) * 2)
+    land_batches(landing, [[{"user_id": u, "pts": ts} for u, ts in rows] for rows in batches])
 
     target = str(tmp_path / "enriched")
 
     def run(ck):
-        q = stream_asof_enrich(
-            spark, str(landing), hist, target, str(tmp_path / ck),
-            schema="user_id long, pts timestamp",
+        drain(
+            stream_asof_enrich(
+                spark, landing, hist, target, str(tmp_path / ck),
+                schema="user_id long, pts timestamp",
+            )
         )
-        q.awaitTermination(300)
         return sorted(
             (r["user_id"], str(r["pts"]), r["version"], r["band"])
             for r in read_table(spark, target).collect()

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import json
-import os
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -23,6 +21,7 @@ from scraper_db_refine_merge_spark.streaming.pipeline import (
     stream_ingest,
     windowed_event_counts,
 )
+from scraper_db_refine_merge_spark.streaming.runner import drain, land_batches
 
 NOW = datetime(2025, 5, 1, 12, 0, 0, tzinfo=timezone.utc)
 
@@ -42,25 +41,20 @@ def _raw_event(i: int, title: str) -> dict:
 
 @pytest.mark.slow
 def test_stream_ingest_upserts(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
+    landing = str(tmp_path / "landing")
     target = str(tmp_path / "events_table")
     metrics = str(tmp_path / "metrics")
     ckpt1, ckpt2 = str(tmp_path / "ck1"), str(tmp_path / "ck2")
 
-    with open(landing / "batch1.json", "w") as f:
-        for i in range(5):
-            f.write(json.dumps(_raw_event(i, f"Stream Party {i}")) + "\n")
-    q = stream_ingest(spark, str(landing), target, ckpt1, metrics_path=metrics)
-    q.awaitTermination(120)
+    batch1 = [_raw_event(i, f"Stream Party {i}") for i in range(5)]
+    land_batches(landing, [batch1])
+    drain(stream_ingest(spark, landing, target, ckpt1, metrics_path=metrics), timeout_s=120)
     assert spark.read.parquet(target).count() == 5
 
     # re-scrape: same (title, date_text) → same event_id → upsert, plus 2 new
-    with open(landing / "batch2.json", "w") as f:
-        for i in range(3, 8):
-            f.write(json.dumps(_raw_event(i, f"Stream Party {i}")) + "\n")
-    q2 = stream_ingest(spark, str(landing), target, ckpt2, metrics_path=metrics)
-    q2.awaitTermination(120)
+    # (batch 0 is re-landed byte-identical)
+    land_batches(landing, [batch1, [_raw_event(i, f"Stream Party {i}") for i in range(3, 8)]])
+    drain(stream_ingest(spark, landing, target, ckpt2, metrics_path=metrics), timeout_s=120)
 
     final = spark.read.parquet(target)
     # ckpt2 is fresh so batch2 re-reads both files → still 8 unique events
@@ -78,31 +72,22 @@ def test_stream_ingest_merge_stats_per_batch(spark, tmp_path):
     the merge's observations fire; read in the outer session they never
     fire and the second batch waits forever — hence the bounded wait. With
     ``now=None`` the whole run shares one scrape time."""
-    landing = tmp_path / "landing"
-    landing.mkdir()
+    landing = str(tmp_path / "landing")
     target = str(tmp_path / "events_table")
     metrics = str(tmp_path / "metrics")
     # file 0: events 0-3 plus a byte-identical copy of event 1;
     # file 1: re-scrapes of 2 and 3, new 4 and 5, plus a copy of event 5
     files = [[0, 1, 2, 3, 1], [2, 3, 4, 5, 5]]
-    for version, members in enumerate(files):
-        path = landing / f"batch_{version}.json"
-        with open(path, "w") as f:
-            for i in members:
-                row = _raw_event(i, f"Stream Party {i}") | {"description": f"v{version}"}
-                f.write(json.dumps(row) + "\n")
-        t = 1_700_000_000 + version * 60  # the file source orders by mtime
-        os.utime(path, (t, t))
+    land_batches(landing, [
+        [_raw_event(i, f"Stream Party {i}") | {"description": f"v{version}"} for i in members]
+        for version, members in enumerate(files)
+    ])
 
     q = stream_ingest(
-        spark, str(landing), target, str(tmp_path / "ck"), metrics_path=metrics,
+        spark, landing, target, str(tmp_path / "ck"), metrics_path=metrics,
         max_files_per_trigger=1,
     )
-    q.awaitTermination(240)
-    finished = not q.isActive
-    if not finished:
-        q.stop()
-    assert finished, "stream did not finish within 240 s"
+    drain(q, timeout_s=240)  # raises if unfinished or failed
     assert q.exception() is None
 
     cols = ["incoming", "within_batch_duplicates", "updated", "inserted", "target_rows_after"]

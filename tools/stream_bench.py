@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scraper_db_refine_merge_spark.session import get_spark  # noqa: E402
 from scraper_db_refine_merge_spark.streaming.pipeline import stream_ingest  # noqa: E402
+from scraper_db_refine_merge_spark.streaming.runner import drain, land_batches  # noqa: E402
 
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "stream_bench"
@@ -28,32 +29,29 @@ SCRATCH = os.path.join(
 
 
 def gen_files(landing: str, n_files: int, rows: int) -> int:
-    os.makedirs(landing, exist_ok=True)
-    total = 0
+    batches = []
     for f in range(n_files):
         keys = [f * rows + i for i in range(rows)]
         if f > 0:  # plus ~10% re-scrapes of the PREVIOUS file's events
             keys += [(f - 1) * rows + i for i in range(0, rows, 10)]
-        path = os.path.join(landing, f"batch_{f:04d}.json")
-        with open(path, "w") as out:
-            for key in keys:
-                row = {
-                    "title": f"Event {key} Night",
-                    "url": f"www.example.com/events/{key}",
-                    "venue": ["amnesia", "hi ibiza", "dc-10", "pacha"][key % 4],
-                    # temporal locality: dates follow the key's HOME file
-                    # (re-scrapes keep their original date → same event_id)
-                    "date_text": f"{((key // rows) * 4 + key % 4) % 28 + 1} May 2025",
-                    "lineup": [{"name": f"Artist {key % 97}", "role": "headliner"}],
-                    "price_text": f"from €{10 + key % 80}",
-                    "genres": ["techno" if key % 2 else "tech house"],
-                    "description": f"Description {key}",
-                    "scraped_at": f"2025-05-01T{f % 24:02d}:00:00Z",
-                }
-                out.write(json.dumps(row) + "\n")
-                total += 1
-        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))  # stable batch order
-    return total
+        batches.append([
+            {
+                "title": f"Event {key} Night",
+                "url": f"www.example.com/events/{key}",
+                "venue": ["amnesia", "hi ibiza", "dc-10", "pacha"][key % 4],
+                # temporal locality: dates follow the key's HOME file
+                # (re-scrapes keep their original date → same event_id)
+                "date_text": f"{((key // rows) * 4 + key % 4) % 28 + 1} May 2025",
+                "lineup": [{"name": f"Artist {key % 97}", "role": "headliner"}],
+                "price_text": f"from €{10 + key % 80}",
+                "genres": ["techno" if key % 2 else "tech house"],
+                "description": f"Description {key}",
+                "scraped_at": f"2025-05-01T{f % 24:02d}:00:00Z",
+            }
+            for key in keys
+        ])
+    land_batches(landing, batches)
+    return sum(map(len, batches))
 
 
 def main() -> None:
@@ -74,7 +72,7 @@ def main() -> None:
     q = stream_ingest(
         spark, landing, target, ckpt, metrics_path=metrics, max_files_per_trigger=2
     )
-    q.awaitTermination()
+    drain(q)
     dt = time.perf_counter() - t0
     final_rows = spark.read.parquet(target).count()
     m = spark.read.parquet(metrics)
@@ -107,7 +105,7 @@ def main() -> None:
         max_files_per_trigger=2,
         partition_by_event_date=True,
     )
-    q.awaitTermination()
+    drain(q)
     dt = time.perf_counter() - t0
     from scraper_db_refine_merge_spark.streaming.store import read_table
 
