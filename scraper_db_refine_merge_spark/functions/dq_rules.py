@@ -36,6 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .quality import timestamp_sql, truthy_sql
 from .strings import VALID_CURRENCIES
 
 _URL_RE = r"(?i)^https?://[^\s/]+\.[^\s/]+"
@@ -61,18 +62,8 @@ class Rule:
     predicate_sql: Callable[[datetime], str]  # SQL boolean expr; True = PASS
 
 
-def _truthy(c: str) -> str:
-    return f"({c} IS NOT NULL AND {c} != '')"
-
-
 def _valid_iso(c: str) -> str:
     return f"({c} IS NULL OR try_to_timestamp({c}) IS NOT NULL)"
-
-
-def _ts_lit(dt: datetime) -> str:
-    # naive literal, parsed in the pinned-UTC session tz — value-identical
-    # to the old F.lit(naive).cast("timestamp") form
-    return f"TIMESTAMP '{dt.replace(tzinfo=None):%Y-%m-%d %H:%M:%S.%f}'"
 
 
 # NULL-collection convention: the old Column predicates wrapped collections
@@ -83,31 +74,31 @@ def _ts_lit(dt: datetime) -> str:
 RULES: list[Rule] = [
     # --- Completeness (C001-C011)
     Rule("C001", "Critical", "event_id", "unique non-empty event id",
-         lambda now: f"({_truthy('event_id')} AND __event_id_count = 1)"),
+         lambda now: f"({truthy_sql('event_id')} AND __event_id_count = 1)"),
     Rule("C002", "Critical", "title", "non-empty title",
-         lambda now: _truthy("title")),
+         lambda now: truthy_sql("title")),
     Rule("C003", "Critical", "datetime.start_date", "valid start date",
-         lambda now: f"({_truthy('`datetime`.start_date')}"
+         lambda now: f"({truthy_sql('`datetime`.start_date')}"
          " AND try_to_timestamp(`datetime`.start_date) IS NOT NULL)"),
     Rule("C004", "Critical", "scraping_metadata.source_url", "valid source url",
-         lambda now: f"({_truthy('scraping_metadata.source_url')}"
+         lambda now: f"({truthy_sql('scraping_metadata.source_url')}"
          f" AND scraping_metadata.source_url RLIKE '{_URL_SQL}')"),
     Rule("C005", "High", "venue.name", "primary location identifier present",
-         lambda now: f"({_truthy('venue.name')} OR {_truthy('venue.address.full_address')})"),
+         lambda now: f"({truthy_sql('venue.name')} OR {truthy_sql('venue.address.full_address')})"),
     Rule("C006", "Medium", "content", "description present",
-         lambda now: f"({_truthy('content.full_description')}"
-         f" OR {_truthy('content.short_description')})"),
+         lambda now: f"({truthy_sql('content.full_description')}"
+         f" OR {truthy_sql('content.short_description')})"),
     Rule("C007", "Medium", "content.keywords", "content keywords/hashtags present",
          lambda now: "((content.keywords IS NOT NULL AND size(content.keywords) > 0)"
          " OR (content.hashtags IS NOT NULL AND size(content.hashtags) > 0))"),
     Rule("C008", "Medium", "ticketing", "price info present for paid events",
          lambda now: "((ticketing.is_free != false)"
          " OR (ticketing.tiers IS NOT NULL AND size(ticketing.tiers) > 0)"
-         f" OR {_truthy('ticketing.tickets_url')})"),
+         f" OR {truthy_sql('ticketing.tickets_url')})"),
     Rule("C009", "Critical", "scraping_metadata.source_platform", "source platform present",
-         lambda now: _truthy("scraping_metadata.source_platform")),
+         lambda now: truthy_sql("scraping_metadata.source_platform")),
     Rule("C010", "Critical", "scraping_metadata.last_scraped", "valid scraped timestamp",
-         lambda now: f"({_truthy('scraping_metadata.last_scraped')}"
+         lambda now: f"({truthy_sql('scraping_metadata.last_scraped')}"
          " AND try_to_timestamp(scraping_metadata.last_scraped) IS NOT NULL)"),
     Rule("C011", "Medium", "acts", "performer information present",
          lambda now: "(acts IS NOT NULL AND size(acts) > 0)"),
@@ -163,7 +154,7 @@ RULES: list[Rule] = [
     Rule("CP003", "Medium", "datetime.start_date", "start within [-1y, +3y]",
          lambda now: "(try_to_timestamp(`datetime`.start_date) IS NULL"
          " OR try_to_timestamp(`datetime`.start_date) BETWEEN"
-         f" {_ts_lit(now - timedelta(days=365))} AND {_ts_lit(now + timedelta(days=3 * 365))})"),
+         f" {timestamp_sql(now - timedelta(days=365))} AND {timestamp_sql(now + timedelta(days=3 * 365))})"),
     Rule("CP004", "Medium", "venue.address", "city/country consistency",
          lambda now: "(venue.address.city IS NULL OR venue.address.country IS NULL"
          " OR NOT (contains(lower(venue.address.city), 'ibiza')"
@@ -183,12 +174,12 @@ RULES: list[Rule] = [
     Rule("DF001", "High", "scraping_metadata.last_scraped", "scraped within 7 days",
          lambda now: "(try_to_timestamp(scraping_metadata.last_scraped) IS NULL"
          " OR try_to_timestamp(scraping_metadata.last_scraped)"
-         f" >= {_ts_lit(now - timedelta(days=7))})"),
+         f" >= {timestamp_sql(now - timedelta(days=7))})"),
     Rule("DF002", "Medium", "scraping_metadata.last_scraped", "future events freshly scraped",
          lambda now: "(try_to_timestamp(`datetime`.start_date) IS NULL"
-         f" OR try_to_timestamp(`datetime`.start_date) <= {_ts_lit(now)}"
+         f" OR try_to_timestamp(`datetime`.start_date) <= {timestamp_sql(now)}"
          " OR try_to_timestamp(scraping_metadata.last_scraped)"
-         f" >= {_ts_lit(now - timedelta(days=30))})"),
+         f" >= {timestamp_sql(now - timedelta(days=30))})"),
 ]
 
 RULES_BY_ID = {r.rule_id: r for r in RULES}

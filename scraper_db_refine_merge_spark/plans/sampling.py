@@ -220,7 +220,7 @@ def q50_refine_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q52 — the D1 title scorer under the oracle gate: the SAME score_title_info
+# q52 — the D1 title scorer under the oracle gate: the SAME score_title_info_sql
 # expression refine's quality stage uses, over title variants derived from
 # documents (null / too-short / ALL-CAPS / date-bearing / plain), mirrored
 # branch-for-branch in SQL. Flags are emitted as a joined string so the
@@ -277,7 +277,7 @@ def q50_refine_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q52_title_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.quality import score_title_info
+    from ..functions.quality import score_title_info_sql
 
     d = load_table(spark, sf_dir, "documents")
     mod5 = F.col("doc_id") % 5
@@ -288,11 +288,12 @@ def q52_title_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(mod5 == 3, F.concat(F.lit("Party 2025 "), F.substring("text", 1, 10)))
         .otherwise(F.substring("text", 1, 40))
     )
-    scored = score_title_info(title)
-    return d.select(
-        "doc_id",
-        scored["score"].alias("title_score"),
-        F.array_join(scored["flags"], ",").alias("title_flags"),
+    # the scorer input must be a leaf (see q53): project the title first
+    scored = d.select("doc_id", title.alias("__title")).selectExpr(
+        "doc_id", score_title_info_sql("__title") + " AS __ts"
+    )
+    return scored.selectExpr(
+        "doc_id", "__ts.score AS title_score", "array_join(__ts.flags, ',') AS title_flags"
     )
 
 
@@ -416,7 +417,7 @@ _Q53_VENUE_CASES = """
         FROM scored
     )
     SELECT doc_id, venue_score, venue_flags, datetime_score, datetime_flags,
-           -- Python-round: decide on the binary value (see quality.python_round)
+           -- Python-round: decide on the binary value (see quality.python_round_sql)
            CASE WHEN scaled - floor(scaled) = 0.5
                 THEN (CASE WHEN CAST(floor(scaled) AS BIGINT) % 2 = 0
                            THEN floor(scaled) ELSE floor(scaled) + 1 END) / 1000.0
@@ -493,11 +494,9 @@ def q53_quality_overall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly once. Values identical (projection composition); the
     # optimizer still collapses what it wants AFTER analysis.
     base = d.selectExpr("doc_id", f"{venue} AS __venue", f"{dtc} AS __dt")
-    # SQL twins of the scorers (r12): the Column builders cost ~0.6 s of
-    # py4j round trips per build (census profile: 4362 send_commands);
-    # the twins parse in one round trip with identical expressions —
-    # parity pinned by test_quality_scorer.test_sql_twins_match_column_scorers
-    # and this query's unchanged oracle hash.
+    # The scorers are SQL strings: one JVM parse per stage instead of a
+    # Column-builder tree (~0.6 s of py4j round trips per build, census
+    # profile: 4362 send_commands) — the same scorers refine runs.
     scored = base.selectExpr(
         "doc_id",
         score_venue_info_sql("__venue") + " AS __vs",
@@ -634,8 +633,7 @@ def q54_acts_ticketing_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # structs, become attribute leaves. Build 4.4 s -> sub-second; fixture
     # constructors are SQL strings too (r12).
     base = d.selectExpr("doc_id", f"{acts} AS __acts", f"{ticketing} AS __tick")
-    # SQL twins — see q53's comment; parity pinned by the twins test and
-    # this query's unchanged oracle hash.
+    # SQL-string scorers — see q53's comment.
     scored = base.selectExpr(
         "doc_id",
         score_acts_info_sql("__acts") + " AS __as",

@@ -272,9 +272,7 @@ def refine(
     )
 
     # D1/D2 — quality scoring over the assembled structures
-    scored = with_data_quality(
-        base, F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), now
-    )
+    scored = with_data_quality(base, now)
 
     # Gold-layer derived columns (query accelerators; SURVEY §1.5)
     return (

@@ -565,7 +565,7 @@ def test_py_ws_class_exhaustive(spark):
     assert got == {i for i in cps if chr(i).isspace()}
 
 
-# score_title_info word/special features ≡ reference quality_scorer.py:122,126
+# score_title_info_sql word/special features ≡ reference quality_scorer.py:122,126
 # (len(title.split()) and re.findall(r'[^a-zA-Z0-9\s\-&]')) — the r15 sweep
 # moved both off Java \s; '\tword' used to double-count via a leading empty
 # split element.
@@ -583,19 +583,16 @@ def _py_title_feats(t):
 @given(st.lists(_ws_text, min_size=1, max_size=60))
 @example(["\tword", "a\xa0b", "x\x85y", "one two", "  lone  "])
 def test_title_feats_differential(spark, values):
-    from scraper_db_refine_merge_spark.functions.strings import _PY_WS, _PY_WS_CHARS, python_strip
+    from scraper_db_refine_merge_spark.functions.quality import (
+        _title_specials_sql,
+        _title_words_sql,
+    )
 
     values = [v for v in values if v]
     if not values:
         return
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    stripped = python_strip(F.col("v"))
-    out = df.select(
-        F.when(stripped == "", F.lit(0))
-        .otherwise(F.size(F.split(stripped, f"{_PY_WS}+")))
-        .alias("words"),
-        F.length(F.regexp_replace(F.col("v"), f"[a-zA-Z0-9&\\-{_PY_WS_CHARS}]", "")).alias(
-            "specials"
-        ),
+    out = df.selectExpr(
+        _title_words_sql("v") + " AS words", _title_specials_sql("v") + " AS specials"
     ).collect()
     assert [(r.words, r.specials) for r in out] == [_py_title_feats(v) for v in values]

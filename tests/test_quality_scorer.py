@@ -17,7 +17,7 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 from scraper_db_refine_merge_spark import schemas as SC
 from scraper_db_refine_merge_spark.functions.quality import (
     quality_level,
-    score_title_info,
+    score_title_info_sql,
     weak_fields,
     with_data_quality,
 )
@@ -205,9 +205,7 @@ GOLDEN = {
 @pytest.fixture(scope="module")
 def scored(spark):
     df = spark.createDataFrame(FIXTURES, EVENT_SCHEMA)
-    out = with_data_quality(
-        df, F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), NOW
-    ).select("name", F.col("data_quality").alias("dq")).collect()
+    out = with_data_quality(df, NOW).select("name", F.col("data_quality").alias("dq")).collect()
     return {r["name"]: r["dq"] for r in out}
 
 
@@ -249,7 +247,7 @@ TITLE_CASES = [
 
 def test_title_branch_values(spark):
     df = spark.createDataFrame([(t,) for t, _ in TITLE_CASES], "title string")
-    rows = df.select("title", score_title_info(F.col("title")).alias("s")).collect()
+    rows = df.selectExpr("title", score_title_info_sql("title") + " AS s").collect()
     got = {r["title"]: r["s"]["score"] for r in rows}
     for title, expected in TITLE_CASES:
         assert got[title] == pytest.approx(expected, abs=1e-9), repr(title)
@@ -271,44 +269,3 @@ def test_quality_level_bands_and_weak_fields(spark):
     )
     wf = spark.range(1).select(weak_fields(fqs).alias("wf")).first()["wf"]
     assert wf == ["venue", "datetime", "ticketing"]
-
-
-def test_sql_twins_match_column_scorers(spark):
-    """r12: the SQL-string twins (used by plan-hot callers q53/q54) must be
-    value-identical to the Column scorers on every golden fixture — scores,
-    flags, and the python-round overall."""
-    from scraper_db_refine_merge_spark.functions import quality as Q
-
-    df = spark.createDataFrame(FIXTURES, EVENT_SCHEMA)
-    col = df.select(
-        "name",
-        Q.score_title_info(F.col("title")).alias("t"),
-        Q.score_venue_info(F.col("venue")).alias("v"),
-        Q.score_datetime_info(F.col("datetime"), now=NOW).alias("d"),
-        Q.score_acts_info(F.col("acts")).alias("a"),
-        Q.score_ticketing_info(F.col("ticketing")).alias("k"),
-    ).withColumn(
-        "o",
-        Q.overall_score(
-            F.col("t.score"), F.col("v.score"), F.col("d.score"),
-            F.col("a.score"), F.col("k.score"),
-        ),
-    )
-    sql = df.selectExpr(
-        "name",
-        Q.score_title_info_sql("title") + " AS t",
-        Q.score_venue_info_sql("venue") + " AS v",
-        Q.score_datetime_info_sql("`datetime`", now=NOW) + " AS d",
-        Q.score_acts_info_sql("acts") + " AS a",
-        Q.score_ticketing_info_sql("ticketing") + " AS k",
-    ).selectExpr(
-        "*",
-        Q.overall_score_sql("t.score", "v.score", "d.score", "a.score", "k.score")
-        + " AS o",
-    )
-    a = {r["name"]: r for r in col.collect()}
-    b = {r["name"]: r for r in sql.collect()}
-    assert set(a) == set(b) and a
-    for n in a:
-        for f in ("t", "v", "d", "a", "k", "o"):
-            assert a[n][f] == b[n][f], (n, f, a[n][f], b[n][f])

@@ -102,12 +102,26 @@ def test_refine_structures(refined):
 def test_refine_plans_each_deep_helper_once(spark, tmp_path):
     """Plan-size guard: the title-date regex (title scorer) and the venue
     alias map (venue-name normalization) each appear once in the optimized
+    plan, and each field scorer's missing-section flag once in the analyzed
     plan. Composing deep helpers without a projection boundary inlines them
-    at every use — 10 and 11 copies before the boundaries were cut."""
+    at every use — 10 and 11 copies before the boundaries were cut. The SQL
+    scorers splice their input text at every use, so an input that is not a
+    leaf column (say, a scorer fed straight into the overall score) repeats
+    the same way."""
     raw = spark.read.schema(RAW_STREAM_SCHEMA).json(str(tmp_path))
-    plan = refine(raw, "p", now=NOW)._jdf.queryExecution().optimizedPlan().toString()
+    qe = refine(raw, "p", now=NOW)._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
     assert plan.count(r"\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}") == 1
     assert plan.count("hi ibiza") == 1
+    analyzed = qe.analyzed().toString()
+    for flag in (
+        "missing_title",
+        "missing_venue_data",
+        "missing_datetime_data",
+        "missing_acts_data",
+        "missing_ticketing_data",
+    ):
+        assert analyzed.count(flag) == 1, flag
 
 
 def test_deduplicate_events(refined):
