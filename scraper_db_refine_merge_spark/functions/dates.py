@@ -192,10 +192,3 @@ def dateutil_fallback_udf():
     from pyspark.sql.types import StringType
 
     return udf(dateutil_utc_iso, StringType())
-
-
-# F5-F7 sanity derivations (quality_scorer.py:216-247; docs rules CP001-CP003)
-
-
-def duration_hours(start_ts: Column, end_ts: Column) -> Column:
-    return (end_ts.cast("double") - start_ts.cast("double")) / 3600.0

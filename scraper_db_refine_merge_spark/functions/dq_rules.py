@@ -30,7 +30,7 @@ key, which the merge layer already partitions by).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -185,9 +185,7 @@ RULES: list[Rule] = [
 RULES_BY_ID = {r.rule_id: r for r in RULES}
 
 
-def evaluate_rules(
-    events: DataFrame, now: datetime | None = None, rules: list[Rule] | None = None
-) -> DataFrame:
+def evaluate_rules(events: DataFrame, now: datetime, rules: list[Rule] | None = None) -> DataFrame:
     """Adds ``dq_rule_results: array<struct<rule_id,severity,field,passed>>``.
 
     One projection built as ONE selectExpr string (one SQL parse instead of
@@ -197,7 +195,6 @@ def evaluate_rules(
     tiers) counts as a FAIL — an unevaluable rule must not count as passed,
     and the rollup's failure count and pass rate must agree on it.
     """
-    now = now or datetime.now(timezone.utc)
     rules = rules or RULES
     entries = ", ".join(
         f"named_struct('rule_id', '{r.rule_id}', 'severity', '{r.severity}',"

@@ -112,16 +112,6 @@ def normalize_venue_name(venue: Column) -> Column:
     )
 
 
-def normalize_genre(genre: Column) -> Column:
-    """Lookup else title-case (F16, schema_adapter_enhanced.py:375-381)."""
-    from .strings import python_strip
-
-    key = F.lower(python_strip(genre))
-    return F.when(genre.isNull() | (genre == ""), F.lit("")).otherwise(
-        F.coalesce(F.element_at(_literal_map(GENRE_MAP), key), _title_case(genre))
-    )
-
-
 def normalize_genres(genres: Column) -> Column:
     """Elementwise genre normalization over an array (HOF, no explode)."""
     from .strings import python_strip

@@ -126,26 +126,14 @@ _COMMON_ENTITIES = (
 
 
 def html_unescape(c: Column) -> Column:
-    """Common-entity unescape as a replace chain. Full ``html.unescape``
-    coverage (named entities beyond this table) intentionally not replicated —
-    use ``html_unescape_udf`` when exact parity on exotic entities matters."""
+    """Common-entity unescape as a replace chain over ``_COMMON_ENTITIES``.
+    Full ``html.unescape`` coverage is intentionally not replicated: named
+    entities beyond this table and numeric character references other
+    than ``&#39;``/``&#x27;`` pass through unchanged."""
     out = c
     for ent, ch in _COMMON_ENTITIES:
         out = F.replace(out, F.lit(ent), F.lit(ch))
-    # numeric entities &#NNNN; via regexp: decode decimal code points
     return out
-
-
-def html_unescape_udf():
-    from pyspark.sql.functions import udf
-    from pyspark.sql.types import StringType
-
-    def _un(s: str | None) -> str | None:
-        import html
-
-        return html.unescape(s) if s is not None else None
-
-    return udf(_un, StringType())
 
 
 # ----------------------------------------------------------------------

@@ -73,8 +73,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "et", "les", "des"],
 }
 
-ENGLISH_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in")
-
 
 def tokens(c: Column) -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
@@ -88,21 +86,6 @@ def token_count(c: Column) -> Column:
 def regex_token_count(c: Column, pattern: str = r"[a-z0-9]+|[^a-z0-9\s]") -> Column:
     """BPE-ish token count: alphanumeric runs plus individual symbols."""
     return F.regexp_count(F.lower(c), F.lit(pattern))
-
-
-def stopword_count(c: Column, stopwords=ENGLISH_STOPWORDS) -> Column:
-    toks = tokens(c)
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-
-
-def stopword_ratio(c: Column, stopwords=ENGLISH_STOPWORDS) -> Column:
-    return stopword_count(c, stopwords) / F.greatest(token_count(c), F.lit(1))
-
-
-def punct_ratio(c: Column) -> Column:
-    """Share of characters that are neither alphanumeric nor whitespace."""
-    stripped = F.regexp_replace(c, r"[a-zA-Z0-9\s]", "")
-    return F.length(stripped) / F.greatest(F.length(c), F.lit(1))
 
 
 def language_guess(c: Column) -> Column:
@@ -121,34 +104,6 @@ def language_guess(c: Column) -> Column:
     )
     best = F.array_max(F.filter(scored, lambda s: s["hits"] > 0))
     return F.when(best.isNull(), F.lit("und")).otherwise(best["lang"])
-
-
-def text_quality_score(c: Column) -> Column:
-    """Composite 0-1 quality score: length band (40%), token count band (30%),
-    stopword presence (15%), punctuation sanity (15%).
-
-    Mirrors the reference's banded scoring style (quality_scorer.py:93-139:
-    thresholded heuristics summed with weights), adapted to corpus text.
-    """
-    n_chars = F.length(c)
-    n_toks = token_count(c)
-    len_score = (
-        F.when(n_chars >= 200, 1.0).when(n_chars >= 50, 0.7).when(n_chars >= 10, 0.4).otherwise(0.0)
-    )
-    tok_score = F.when(n_toks >= 30, 1.0).when(n_toks >= 10, 0.7).when(n_toks >= 3, 0.4).otherwise(0.0)
-    stop_score = F.when(stopword_ratio(c) > 0, 1.0).otherwise(0.0)
-    punct_score = F.when(punct_ratio(c) <= 0.2, 1.0).otherwise(0.0)
-    return F.round(len_score * 0.4 + tok_score * 0.3 + stop_score * 0.15 + punct_score * 0.15, 4)
-
-
-def quality_band(score: Column) -> Column:
-    """Reference's band labels (quality_scorer.py:412-451 / api_server bands)."""
-    return (
-        F.when(score >= 0.9, "excellent")
-        .when(score >= 0.8, "good")
-        .when(score >= 0.7, "fair")
-        .otherwise("poor")
-    )
 
 
 def content_fingerprint(c: Column) -> Column:

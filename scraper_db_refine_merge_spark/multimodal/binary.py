@@ -2,11 +2,13 @@
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The Spark-side architecture is real and tested — schema, partitioning,
-batch shapes, UDF signatures. The actual codecs (image decode, audio
-resample, video frame extraction) are STUBBED: the container ships no
-imaging/audio libraries, so ``decode_image`` raises NotImplementedError
-unless a decoder is importable, and ``fake_feature_extractor`` provides a
-deterministic md5-derived stand-in so the pipeline is end-to-end testable.
+batch shapes, UDF signatures. The codecs are not: the environment ships
+no imaging or audio library, so ``extract_features`` emits a
+deterministic md5-derived stand-in embedding (the blob's digest expanded
+to ``FEATURE_DIM`` floats) and ``sample_video_frames`` cuts the blob at
+fixed byte offsets. A real encoder or frame decoder slots into the same
+``mapInPandas`` iterator without changing the plan shape, partitioning or
+memory profile.
 
 Design for 100 TB of media:
 - binary payloads live in their own column so column pruning skips them for
@@ -72,118 +74,6 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def pil_available() -> bool:
-    try:
-        from PIL import Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image(content: bytes):
-    """Decode an image blob to a PIL Image. Raises NotImplementedError when
-    no imaging library ships in the environment (this container has none —
-    the rest of the pipeline falls back to the deterministic stand-in)."""
-    try:
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - the expected path here
-        raise NotImplementedError(
-            "image decoding requires an imaging library (e.g. Pillow); "
-            "not available in this environment"
-        ) from e
-    import io
-
-    return Image.open(io.BytesIO(content))
-
-
-def decode_bmp(content: bytes):
-    """(width, height, luma_rows) for an UNCOMPRESSED BI_RGB 24/32-bit
-    BMP — pure stdlib ``struct`` (~no dependencies), the in-container REAL
-    decode path for the image lane (VERDICT r12 item 6; the audio lane's
-    PCM-WAV precedent). Rows are top-first lists of 0..255 luminance ints
-    (integer BT.601: (299R + 587G + 114B) // 1000 — Pillow's ``L``
-    formula), handling bottom-up and top-down files and 4-byte row
-    padding. Compressed formats and exotic headers still raise
-    NotImplementedError — those genuinely need an imaging library."""
-    import struct
-
-    if len(content) < 54 or content[:2] != b"BM":
-        raise NotImplementedError("not an uncompressed BMP blob")
-    (pix_off,) = struct.unpack_from("<I", content, 10)
-    (hdr_size,) = struct.unpack_from("<I", content, 14)
-    if hdr_size < 40:
-        raise NotImplementedError("BMP core-header variant unsupported")
-    width, height = struct.unpack_from("<ii", content, 18)
-    _planes, bpp = struct.unpack_from("<HH", content, 26)
-    (comp,) = struct.unpack_from("<I", content, 30)
-    if comp != 0 or bpp not in (24, 32) or width <= 0 or height == 0:
-        raise NotImplementedError(
-            f"unsupported BMP (bpp={bpp}, compression={comp})"
-        )
-    topdown = height < 0
-    h = abs(height)
-    bytespp = bpp // 8
-    stride = ((width * bytespp + 3) // 4) * 4
-    if len(content) < pix_off + h * stride:
-        raise NotImplementedError("truncated BMP pixel array")
-    rows = []
-    for r in range(h):
-        base = pix_off + (r if topdown else h - 1 - r) * stride
-        row = []
-        for c in range(width):
-            b0 = base + c * bytespp
-            bl, gr, rd = content[b0], content[b0 + 1], content[b0 + 2]
-            row.append((299 * rd + 587 * gr + 114 * bl) // 1000)
-        rows.append(row)
-    return width, h, rows
-
-
-def _box_thumb(rows, width: int, height: int, side: int):
-    """``side``×``side`` box-mean downsample of a luminance grid — the
-    deterministic thumbnail for the stdlib decode path (Pillow's resample
-    kernels are not reproduced; the feature contract is dim/range/
-    determinism, not cross-decoder equality)."""
-    out = []
-    for ty in range(side):
-        y0 = ty * height // side
-        y1 = max((ty + 1) * height // side, y0 + 1)
-        for tx in range(side):
-            x0 = tx * width // side
-            x1 = max((tx + 1) * width // side, x0 + 1)
-            acc = n = 0
-            for y in range(min(y0, height - 1), min(y1, height)):
-                r = rows[y]
-                for x in range(min(x0, width - 1), min(x1, width)):
-                    acc += r[x]
-                    n += 1
-            out.append(acc / n)
-    return out
-
-
-def real_image_features(content: bytes, dim: int = FEATURE_DIM):
-    """Real decode + feature path: (width, height, features) where
-    features is an 8×8 grayscale thumbnail flattened to ``dim`` floats in
-    [-1, 1] — a genuine content-based embedding (perceptual-hash-style),
-    deterministic for a given image. Decoder: Pillow when importable (any
-    format it reads); otherwise the stdlib BMP parser (r13) — so this
-    container has a TESTED real path for uncompressed BMP, and only
-    compressed formats keep the NotImplementedError gate."""
-    side = 8
-    if pil_available():
-        img = decode_image(content)
-        width, height = img.size
-        thumb = img.convert("L").resize((side, side))
-        px = list(thumb.getdata())  # side*side values in 0..255
-    else:
-        width, height, rows = decode_bmp(content)
-        px = _box_thumb(rows, width, height, side)
-    feats = [float(p) / 255.0 * 2.0 - 1.0 for p in px]
-    if len(feats) < dim:  # dim > 64: tile deterministically
-        feats = (feats * (dim // len(feats) + 1))[:dim]
-    return width, height, [float(x) for x in feats[:dim]]
-
-
 def _expand_digest(digest: bytes, dim: int) -> list[float]:
     """Expand a 16-byte digest into ``dim`` floats in [-1, 1] by re-hashing
     (digest + counter) — fixed-size inputs, so expansion cost is O(dim)
@@ -197,16 +87,7 @@ def _expand_digest(digest: bytes, dim: int) -> list[float]:
     return [float(x) for x in out[:dim]]
 
 
-def _fake_features(content: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic md5-derived pseudo-embedding (stands in for a real
-    encoder; stable across runs for testing). The content is hashed ONCE
-    and dims expand from the digest (r12: the old form re-hashed the full
-    blob dim/16 times — measured 4x the large-input hashing work in the
-    q44 kernel for the same dim/range/determinism contract)."""
-    return _expand_digest(hashlib.md5(content).digest(), dim)
-
-
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     Real plumbing: partition-parallel ``mapInPandas`` with bounded batches;
@@ -249,193 +130,6 @@ def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFra
     return cols.mapInPandas(_extract, FEATURES_SCHEMA)
 
 
-IMAGE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("content_hash", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def extract_image_features(media: DataFrame, use_decoder: str = "auto") -> DataFrame:
-    """Image decode + dims + content features over the binary column.
-
-    ``use_decoder``: "auto" really decodes blobs the environment can read
-    (any Pillow format when Pillow is importable; uncompressed BMP via the
-    stdlib parser otherwise — r13) and falls back to the deterministic md5
-    stand-in per blob (width/height NULL), the audio lane's per-blob
-    pattern; "always" requires every blob to decode (tasks fail loudly);
-    "never" forces the stand-in — the replay-stable mode the oracle-gated
-    queries use. Same Arrow-batched ``mapInPandas`` plumbing either way:
-    swapping the encoder never changes the plan shape, partitioning, or
-    memory profile.
-    """
-    if use_decoder not in ("auto", "always", "never"):
-        raise ValueError(f"unknown use_decoder {use_decoder!r}")
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "content_hash": [], "features": []}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                blob = bytes(content)
-                w = h = None
-                if use_decoder == "always":
-                    w, h, feats = real_image_features(blob)
-                elif use_decoder == "never":
-                    feats = _fake_features(blob)
-                else:
-                    try:
-                        w, h, feats = real_image_features(blob)
-                    except (NotImplementedError, OSError, ValueError):
-                        # NotImplementedError: the stdlib lane's non-BMP /
-                        # compressed gate; OSError covers Pillow's
-                        # UnidentifiedImageError + truncated-file errors,
-                        # ValueError its corrupt-header class (r13 review:
-                        # with Pillow installed a bad blob raised OSError,
-                        # never NotImplementedError, and killed the task
-                        # instead of falling back)
-                        w = h = None
-                        feats = _fake_features(blob)
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["content_hash"].append(hashlib.md5(blob).hexdigest())
-                out["features"].append(feats)
-            yield pd.DataFrame(out)
-
-    cols = media.filter(F.col("media_type") == "image").select("media_id", "content")
-    return cols.mapInPandas(_extract, IMAGE_FEATURES_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("duration_ms", LongType()),
-        StructField("content_hash", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def decode_audio(content: bytes) -> tuple[int, int, int, list[float]]:
-    """Decode a PCM WAV blob via stdlib ``wave`` (no external library):
-    (sample_rate, n_channels, n_frames, mono_samples in [-1, 1]).
-
-    Unlike the image path (which needs Pillow), audio decode of the dominant
-    archival format is genuinely implemented — compressed codecs (mp3/ogg/
-    flac) still raise NotImplementedError, the container ships no decoder
-    for them (same documented limitation as multimodal images).
-    """
-    import array
-    import io
-    import sys
-    import wave
-
-    try:
-        w = wave.open(io.BytesIO(content))
-    except (wave.Error, EOFError) as e:
-        raise NotImplementedError(
-            "only uncompressed PCM WAV is decodable with the stdlib; "
-            "compressed audio codecs need an audio library not present here"
-        ) from e
-    with w:
-        sr, nch, sw, nf = w.getframerate(), w.getnchannels(), w.getsampwidth(), w.getnframes()
-        raw = w.readframes(nf)
-    if sw == 1:  # unsigned 8-bit
-        samples = [(b - 128) / 128.0 for b in raw]
-    elif sw in (2, 4):  # signed little-endian PCM
-        a = array.array("h" if sw == 2 else "i")
-        a.frombytes(raw)
-        if sys.byteorder == "big":  # pragma: no cover - x86/arm are little
-            a.byteswap()
-        scale = float(1 << (8 * sw - 1))
-        samples = [s / scale for s in a]
-    else:
-        raise NotImplementedError(f"unsupported PCM sample width {sw}")
-    if nch > 1:  # interleaved → mono mix
-        n = len(samples) // nch
-        samples = [sum(samples[i * nch : (i + 1) * nch]) / nch for i in range(n)]
-    return sr, nch, nf, samples
-
-
-def real_audio_features(
-    content: bytes, dim: int = FEATURE_DIM
-) -> tuple[int, int, int, list[float]]:
-    """(sample_rate, n_channels, duration_ms, features): RMS energy over
-    ``dim`` equal time windows, mapped to [-1, 1] — a real content-derived
-    temporal-envelope embedding, deterministic for a given blob."""
-    import math
-
-    sr, nch, nf, samples = decode_audio(content)
-    duration_ms = round(nf * 1000 / sr) if sr else 0
-    feats: list[float] = []
-    n = len(samples)
-    for wi in range(dim):
-        lo, hi = wi * n // dim, (wi + 1) * n // dim
-        if hi <= lo:
-            feats.append(-1.0)
-            continue
-        rms = math.sqrt(sum(s * s for s in samples[lo:hi]) / (hi - lo))
-        feats.append(min(rms, 1.0) * 2.0 - 1.0)
-    return sr, nch, duration_ms, [float(x) for x in feats]
-
-
-def extract_audio_features(media: DataFrame, use_decoder: str = "auto") -> DataFrame:
-    """Audio decode + temporal-envelope features over the binary column —
-    exact plumbing parity with ``extract_image_features``.
-
-    ``use_decoder``: "auto" really decodes blobs that parse as PCM WAV and
-    falls back to the md5 stand-in otherwise; "always" requires every blob
-    to decode (loud failure); "never" forces the stand-in (replay-stable
-    mode for the oracle-gated query). The Arrow-batched ``mapInPandas``
-    plan — partitioning, batch shape, memory profile — is identical in all
-    three modes."""
-    if use_decoder not in ("auto", "always", "never"):
-        raise ValueError(f"unknown use_decoder {use_decoder!r}")
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [],
-                "sample_rate": [],
-                "n_channels": [],
-                "duration_ms": [],
-                "content_hash": [],
-                "features": [],
-            }
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                blob = bytes(content)
-                sr = nch = dur = None
-                if use_decoder == "always":
-                    sr, nch, dur, feats = real_audio_features(blob)
-                elif use_decoder == "never":
-                    feats = _fake_features(blob)
-                else:
-                    try:
-                        sr, nch, dur, feats = real_audio_features(blob)
-                    except NotImplementedError:
-                        feats = _fake_features(blob)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(sr)
-                out["n_channels"].append(nch)
-                out["duration_ms"].append(dur)
-                out["content_hash"].append(hashlib.md5(blob).hexdigest())
-                out["features"].append(feats)
-            yield pd.DataFrame(out)
-
-    cols = media.filter(F.col("media_type") == "audio").select("media_id", "content")
-    return cols.mapInPandas(_extract, AUDIO_FEATURES_SCHEMA)
-
-
 def sample_video_frames(media: DataFrame, every_n_bytes: int = 1 << 16) -> DataFrame:
     """Frame-sampling plumbing for video rows: emits one row per pseudo-frame
     (offset markers over the blob). The real frame decoder slots into the
@@ -469,14 +163,4 @@ def sample_video_frames(media: DataFrame, every_n_bytes: int = 1 << 16) -> DataF
         media.filter(F.col("media_type") == "video")
         .select("media_id", "content")
         .mapInPandas(_frames, frame_schema)
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — column pruning means the binary pages are
-    never read (verify via .explain: ReadSchema excludes `content`)."""
-    return media.groupBy("media_type").agg(
-        F.count("*").alias("n"),
-        F.sum("metadata.size_bytes").alias("total_bytes"),
-        F.avg("metadata.size_bytes").alias("avg_bytes"),
     )

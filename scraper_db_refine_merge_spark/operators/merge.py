@@ -10,15 +10,15 @@ hard-part 5), then left-anti + union against the target.
 Each table shape commits through exactly one protocol:
 
 - PLAIN-DIRECTORY tables — the whole-table ``merge_upsert`` and
-  ``insert_if_absent`` here, ``rollup.fold_rollup`` and
-  ``layout.compact``. These stay plain parquet directories because their
-  readers scan the path directly (streaming consumers, report queries,
-  benchmarks). They commit by staging the new table beside the target
-  and swapping it in with two renames (``swap_plain_table``). The one
-  unsafe moment — a crash between the two renames, which leaves no table
-  at the path — is repaired by the next writer on entry
-  (``recover_plain_table``): it renames the lone backup back and drops
-  stale staging directories before reading the table.
+  ``insert_if_absent`` here, and ``rollup.fold_rollup``. These stay
+  plain parquet directories because their readers scan the path
+  directly (streaming consumers, report queries, benchmarks). They
+  commit by staging the new table beside the target and swapping it in
+  with two renames (``swap_plain_table``). The one unsafe moment — a
+  crash between the two renames, which leaves no table at the path — is
+  repaired by the next writer on entry (``recover_plain_table``): it
+  renames the lone backup back and drops stale staging directories
+  before reading the table.
 - VERSIONED tables — ``merge_upsert_partitioned`` here. Its target is a
   streaming/store.py versioned table: a commit log whose entries name
   manifests of immutable ``parts/`` dirs, read back with
@@ -60,12 +60,13 @@ class MergeStats:
 
 # ----------------------------------------------------------------------
 # Plain-directory commit: staging write + two-rename swap, shared by
-# merge_upsert, insert_if_absent, rollup.fold_rollup and layout.compact.
+# merge_upsert, insert_if_absent and rollup.fold_rollup.
 
 _BACKUP = ".__old__"
 _STAGING = ".__staging__"
 # staging suffixes a crashed writer may have left: this module's, plus the
-# ones fold_rollup and compact staged under before they shared this helper
+# ones fold_rollup and the since-deleted plain-table compaction staged
+# under before they shared this helper
 _STALE_STAGING = (_STAGING, ".__rollup__", ".__compact__")
 
 

@@ -100,68 +100,6 @@ def pack_greedy(
     return out.drop("__shard") if shard_col is None else out
 
 
-def pack_first_fit(
-    df: DataFrame,
-    order_col: str,
-    token_col: str,
-    ctx: int,
-    shard_col: str | None = None,
-    max_open_bins: int | None = None,
-) -> DataFrame:
-    """Greedy FIRST-FIT packing: each document (in order) goes into the
-    lowest-indexed OPEN bin with room; a new bin opens when none fits.
-    Strictly better utilization than next-fit (``pack_greedy`` closes its
-    single bin on the first miss; first-fit keeps bins open) — classic
-    first-fit guarantees ≤ 1.7·OPT bins vs 2·OPT for next-fit.
-
-    ``max_open_bins`` bounds the open list (oldest bin closes permanently
-    when the list is full) — this is the streaming form production packers
-    use so state stays O(max_open_bins) however long the shard is; None
-    keeps every non-full bin open (exact first-fit).
-
-    Same execution model as ``pack_greedy``: sequential per shard via one
-    Arrow-batched ``applyInPandas`` pass, shards packed in parallel. An
-    over-ctx document still gets its own bin.
-
-    Returns (order_col, token_col[, shard_col], bin).
-    """
-    import pandas as pd
-
-    cols = [order_col, token_col] + ([shard_col] if shard_col else [])
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        bins: list[int] = []
-        open_bins: list[list[int]] = []  # [bin_id, used], insertion order
-        next_id = 0
-        for t in pdf[token_col]:
-            t = int(t)
-            placed = None
-            for slot in open_bins:
-                if slot[1] + t <= ctx:
-                    slot[1] += t
-                    placed = slot[0]
-                    break
-            if placed is None:
-                placed = next_id
-                open_bins.append([next_id, t])
-                next_id += 1
-                if max_open_bins is not None and len(open_bins) > max_open_bins:
-                    open_bins.pop(0)  # oldest closes permanently
-            bins.append(placed)
-        pdf["bin"] = pd.Series(bins, dtype="int64")
-        return pdf
-
-    src = df.select(*cols).filter(F.col(token_col) > 0)
-    gcol = shard_col
-    if gcol is None:
-        gcol = "__shard"
-        src = src.withColumn(gcol, F.lit(0).cast("long"))
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields)
-    out = src.groupBy(gcol).applyInPandas(_pack, schema + ", bin long")
-    return out.drop("__shard") if shard_col is None else out
-
-
 def pack_bins_summary(packed: DataFrame, token_col: str) -> DataFrame:
     """Per-bin rollup of a ``pack_contiguous`` result, grouped by the bin
     each document STARTS in: document count, tokens started, straddlers."""

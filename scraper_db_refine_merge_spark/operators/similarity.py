@@ -1342,16 +1342,15 @@ def semantic_dedup(
 
     r13 (VERDICT r12 item 1): the within-cell election is ONE cogrouped
     Arrow kernel per cell (:func:`_cross_dropped_ids` with the cell rows
-    on both sides — the election :func:`fold_semantic_index` and
-    :func:`reindex_semantic` run too) instead of a cell equi-join — the
-    join materialized cell² pair ROWS (each carrying two full vectors)
-    through the exchange and scored each with the interpreted HOF cosine
-    (~35 µs/pair); the kernel scores the cell tile with the
-    brute_force_near_dup_pairs sequential-dim numpy kernel (bit-identical
-    floats, pinned by the unchanged q138/q141 oracle hashes), and emits
-    only the dropped ids. Peak task memory is the cell matrices plus one
-    chunk×cell tile (a-axis chunked), so a skew-bloated cell degrades to
-    more chunk passes, not OOM."""
+    on both sides — the election :func:`fold_semantic_index` runs too)
+    instead of a cell equi-join — the join materialized cell² pair ROWS
+    (each carrying two full vectors) through the exchange and scored each
+    with the interpreted HOF cosine (~35 µs/pair); the kernel scores the
+    cell tile with the brute_force_near_dup_pairs sequential-dim numpy
+    kernel (bit-identical floats, pinned by the unchanged q138/q141
+    oracle hashes), and emits only the dropped ids. Peak task memory is
+    the cell matrices plus one chunk×cell tile (a-axis chunked), so a
+    skew-bloated cell degrades to more chunk passes, not OOM."""
     cells = kmeans_cells(df, id_col, vec_col, k, iters, round_scale)
     sides = cells.select(
         "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
@@ -1450,10 +1449,10 @@ def _cross_dropped_ids(
     round_scale: int,
 ) -> DataFrame:
     """Per-cell new×universe election of every semantic-dedup path
-    (:func:`semantic_dedup` and :func:`reindex_semantic` pass the same
-    rows on both sides, :func:`fold_semantic_index` the new batch against
-    new ∪ stored): emit ``greatest(new_id, uni_id)`` of every qualifying
-    within-cell pair, once per cell.
+    (:func:`semantic_dedup` passes the same rows on both sides,
+    :func:`fold_semantic_index` the new batch against new ∪ stored): emit
+    ``greatest(new_id, uni_id)`` of every qualifying within-cell pair, once
+    per cell.
 
     Parity with the replaced join + HOF-filter plan: sequential-over-dims
     accumulation (``_seq_norm`` order), half-away-from-zero rounding, and
@@ -1529,63 +1528,6 @@ def _cross_dropped_ids(
         left.groupBy("cell")
         .cogroup(right.groupBy("cell"))
         .applyInPandas(_elect, f"{out_col} {id_dt}")
-    )
-
-
-def reindex_semantic(
-    spark,
-    target_root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 2,
-    threshold: float = 0.4,
-    round_scale: int = 5,
-) -> None:
-    """Rebuild a fold_semantic_index store from its own stored vectors
-    (r14, the semantic analog of dedup.reindex_minhash_width): retrain the
-    k-means centroids on the FULL accumulated corpus, re-cell every
-    vector, and re-run the election — committed as ONE atomic replace of
-    the ``centroids``/``vectors``/``dropped`` parts.
-
-    Why it exists: the fold freezes batch-0 centroids by design (re-fitting
-    would silently re-cell previously indexed vectors), so an index born on
-    a small unrepresentative batch keeps those cells forever — and ``k``
-    should grow with the corpus (SemDeDup runs k≈10⁵ at 5B vectors) the
-    same way the LSH widths do. A deliberate rebuild is the sanctioned way
-    to move both. Post-rebuild state equals the ONE-SHOT
-    :func:`semantic_dedup` over the accumulated corpus with these params
-    (pinned by test) — the monotone fold log is replaced by the fresh
-    election wholesale. O(corpus) by necessity; the replace also compacts
-    the per-fold parts as a side effect.
-    """
-    from ..streaming.store import read_table, store_commit_parts
-
-    stored = read_table(spark, target_root, "vectors")
-    if stored is None:
-        raise ValueError(f"reindex_semantic: no index at {target_root!r}")
-    vecs = stored.select(id_col, vec_col)
-    cents = kmeans_centroids(vecs, id_col, vec_col, k, iters, round_scale)
-    assigned = ivf_assign(vecs, cents, id_col, vec_col, "cell", round_scale)
-    sides = assigned.select(
-        "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    )
-    dropped = _cross_dropped_ids(
-        sides,
-        sides,
-        vecs.schema[id_col].dataType.simpleString(),
-        id_col,
-        threshold,
-        round_scale,
-    )
-    store_commit_parts(
-        {},
-        target_root,
-        replace_parts={
-            "centroids": cents,
-            "vectors": assigned,
-            "dropped": dropped.dropDuplicates(),
-        },
     )
 
 

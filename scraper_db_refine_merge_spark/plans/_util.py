@@ -35,8 +35,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEC = "decimal(18,2)"
-
 
 def cents(c: str | Column) -> Column:
     """Exact integer cents of a 2-decimal nonnegative double column."""
@@ -58,14 +56,6 @@ def money_avg(c: str | Column, scale: int = 4) -> Column:
     """Exact-sum / count in double, rounded; deterministic across engines."""
     col = F.col(c) if isinstance(c, str) else c
     return F.round((_dec_sum(cents(col)) / 100).cast("double") / F.count(col), scale)
-
-
-def disc_price_sum(price: str | Column, discount: str | Column) -> Column:
-    """Exact sum of price·(1−discount) — integer 1e-4-dollar units per row
-    (cents × (100 − discount_cents)), decimal-summed. Matches the oracle's
-    ``SUM(DECIMAL(price) * (1 - DECIMAL(discount)))`` exactly."""
-    units = cents(price) * (F.lit(100) - cents(discount))
-    return (_dec_sum(units) / 10000).cast("double")
 
 
 # ----------------------------------------------------------------------
@@ -94,11 +84,3 @@ def spark_disc_price_sum(price: str, discount: str) -> str:
         f"CAST(SUM(CAST({spark_cents(price)} * (100 - {spark_cents(discount)})"
         f" AS DECIMAL(38,0))) / 10000 AS DOUBLE)"
     )
-
-
-def sql_money_sum(c: str) -> str:
-    return f"CAST(SUM(CAST({c} AS DECIMAL(18,2))) AS DOUBLE)"
-
-
-def sql_money_avg(c: str, scale: int = 4) -> str:
-    return f"ROUND(CAST(SUM(CAST({c} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({c}), {scale})"

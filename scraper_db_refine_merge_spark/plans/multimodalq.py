@@ -18,11 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..multimodal.binary import (
-    extract_audio_features,
-    extract_features,
-    sample_video_frames,
-)
+from ..multimodal.binary import extract_features, sample_video_frames
 from ..sources.tables import load_table
 
 QUERIES: dict = {}
@@ -109,10 +105,9 @@ def q45_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q66 — audio feature extraction (multimodal/binary.py extract_audio_features)
-# in replay-stable stand-in mode: per-blob md5 + fixed feature width. The
-# real WAV decoder (stdlib wave) is covered by tests/test_audio.py — its
-# outputs depend on binary WAV fixtures DuckDB can't synthesize in SQL.
+# q66 — audio feature extraction: the audio rows that carry a blob run
+# through the same stand-in encoder as q44 (per-blob md5 + fixed feature
+# width); size_bytes is the blob length the extractor measures.
 @_register(
     "q66_audio_features",
     """
@@ -126,9 +121,8 @@ def q45_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q66_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_from_documents(spark, sf_dir)
-    feats = extract_audio_features(media, use_decoder="never")
-    sizes = media.select("media_id", F.col("metadata.size_bytes").alias("size_bytes"))
-    return feats.join(sizes, "media_id").select(
+    audio = media.filter((F.col("media_type") == "audio") & F.col("content").isNotNull())
+    return extract_features(audio).select(
         "media_id",
         "content_hash",
         F.size("features").alias("feat_dim"),

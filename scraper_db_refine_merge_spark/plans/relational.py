@@ -25,16 +25,11 @@ from pyspark.sql import functions as F
 from ..operators.pagination import paginate
 from ..sources.tables import ensure_views, load_table
 from ._util import (
-    DEC,
-    cents,
-    disc_price_sum,
     money_avg,
     money_sum,
     spark_disc_price_sum,
     spark_money_avg,
     spark_money_sum,
-    sql_money_avg,
-    sql_money_sum,
 )
 
 QUERIES: dict = {}

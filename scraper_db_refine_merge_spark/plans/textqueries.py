@@ -12,11 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     language_guess,
-    punct_ratio,
-    quality_band,
     search_blob,
-    stopword_count,
-    text_quality_score,
     text_search_relevance,
     token_count,
 )
@@ -159,13 +155,13 @@ _SQL_Q22_TOKS = "string_split_regex(lower(trim(text)), '[\\s\\x0b]+')"
 def q22_doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One spark.sql string (r11): the Column-helper form stacked ~0.2 s/run
     # (79% of q22's wall time) of py4j round-trips building split/filter/
-    # when chains. The SQL below is textually faithful to functions/text.py
-    # (tokens/stopword_count/punct_ratio/text_quality_score/quality_band/
-    # language_guess — which remain the library surface and keep their own
-    # tests via q50 and the functions suite): double literals carry the D
-    # suffix (a bare 0.5 is DECIMAL in Spark SQL), the lang structs are
-    # (hits, lang) with array_max tie-break on the code, and every ratio is
-    # the same int/int double division. Values are oracle-hash-gated.
+    # when chains. The SQL below is q22's own text-quality spec, stated
+    # identically in its DuckDB oracle; only its tokenizer and language
+    # guess mirror functions/text.py (tokens, language_guess). Double
+    # literals carry the D suffix (a bare 0.5 is DECIMAL in Spark SQL), the
+    # lang structs are (hits, lang) with array_max tie-break on the code,
+    # and every ratio is the same int/int double division. Values are
+    # oracle-hash-gated.
     v = ensure_views(spark, sf_dir, ("documents",))
     return spark.sql(
         r"""

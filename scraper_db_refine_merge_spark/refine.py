@@ -26,12 +26,12 @@ plan small.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.dates import parse_club_date, strip_day_name, to_utc_iso
+from .functions.dates import parse_club_date, to_utc_iso
 from .functions.ids import generate_unique_id
 from .functions.normalize import normalize_genres, normalize_venue_name, timezone_from_location
 from .functions.quality import with_data_quality
@@ -64,13 +64,13 @@ def _ensure_columns(df: DataFrame) -> DataFrame:
 def refine(
     df: DataFrame,
     source_platform: str,
-    now: datetime | None = None,
+    now: datetime,
     default_city: str = "Ibiza",
     default_country: str = "Spain",
 ) -> DataFrame:
     """Raw rows → unified event rows (a scan + map, SURVEY D4). Works on
-    batch and streaming frames alike."""
-    now = now or datetime.now(timezone.utc)
+    batch and streaming frames alike. ``now`` stamps the scrape and
+    audit timestamps and anchors the quality scorer's date checks."""
     now_iso = now.strftime("%Y-%m-%dT%H:%M:%S+00:00")
     df = _ensure_columns(df)
 

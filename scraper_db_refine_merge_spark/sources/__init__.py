@@ -1,3 +1,3 @@
-from .tables import TABLE_NAMES, load_table, load_tables
+from .tables import TABLE_NAMES, load_table
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables"]
+__all__ = ["TABLE_NAMES", "load_table"]

@@ -135,10 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return _load_events_raw(spark, src)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def ensure_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict[str, str]:
     """Session-memoized temp views over :func:`load_table` frames, for
     queries built as ONE ``spark.sql()`` string (r11: profiling q04/q28

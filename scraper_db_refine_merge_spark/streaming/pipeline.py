@@ -138,18 +138,16 @@ def stream_ingest(
     return start(refined, checkpoint_dir, _apply)
 
 
-def fresh_rows(df: DataFrame, ts_col: str, max_age_hours: float, now: datetime | None = None) -> DataFrame:
+def fresh_rows(df: DataFrame, ts_col: str, max_age_hours: float, now: datetime) -> DataFrame:
     """ST2 — TTL cache predicate: rows scraped within the window
     (ventura_crawler.py:260-287)."""
-    now = now or datetime.now(timezone.utc)
     cutoff = (now - timedelta(hours=max_age_hours)).replace(tzinfo=None)
     return df.filter(F.try_to_timestamp(F.col(ts_col)) >= F.lit(cutoff).cast("timestamp"))
 
 
-def refresh_queue(events: DataFrame, now: datetime | None = None) -> DataFrame:
+def refresh_queue(events: DataFrame, now: datetime) -> DataFrame:
     """ST3 — staleness detection (DF001: scraped > 7d ago; DF002: stale
     future events) + explicit refresh flags (ST4) → rows needing re-scrape."""
-    now = now or datetime.now(timezone.utc)
     scraped = F.try_to_timestamp(F.col("scraping_metadata.last_scraped"))
     start_ts = F.try_to_timestamp(F.col("datetime.start_date"))
     now_l = F.lit(now.replace(tzinfo=None)).cast("timestamp")

@@ -10,7 +10,7 @@ have execution tests.
 Streaming-replay harness queries are excluded: their callables author input
 files and run a full Structured Streaming job eagerly at build time, so
 "analyze-only" doesn't exist for them; each has its own execution test
-(test_sketch_stream.py, test_stateful_streaming.py, test_streaming_*).
+(test_sketch_stream.py, test_streaming_*).
 """
 
 from __future__ import annotations

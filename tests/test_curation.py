@@ -79,93 +79,3 @@ def test_redaction_hash_stable_and_counts(spark, sf_dir):
     b = {r["doc_id"]: r for r in q69_pii_redaction(spark, sf_dir).collect()}
     assert a == b
     assert all(r["n_emails"] >= 1 and r["n_phones"] >= 1 for r in a.values())
-
-
-def test_pack_first_fit_differential_and_dominates_next_fit(spark):
-    """First-fit vs a plain-Python reference on a deterministic pseudo-
-    random workload (exact bin assignments), plus the packing-theory
-    invariants: no bin overflows (single-doc bins excepted), and first-fit
-    never uses more bins than next-fit on the same stream."""
-    from scraper_db_refine_merge_spark.operators.packing import pack_first_fit, pack_greedy
-
-    ctx = 100
-    # deterministic sizes incl. an over-ctx doc and awkward remainders
-    sizes = [((i * 37) % 90) + 8 for i in range(200)]
-    sizes[17] = 140  # over-ctx: own bin
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(sizes)], "doc_id long, n_tok long"
-    )
-
-    got = {
-        r["doc_id"]: r["bin"]
-        for r in pack_first_fit(df, "doc_id", "n_tok", ctx).collect()
-    }
-
-    # plain-Python first-fit reference
-    open_bins, expected, next_id = [], {}, 0
-    for i, t in enumerate(sizes):
-        placed = None
-        for slot in open_bins:
-            if slot[1] + t <= ctx:
-                slot[1] += t
-                placed = slot[0]
-                break
-        if placed is None:
-            placed = next_id
-            open_bins.append([next_id, t])
-            next_id += 1
-        expected[i] = placed
-    assert got == expected
-
-    # no overflow except single-doc over-ctx bins
-    fill: dict = {}
-    for i, b in got.items():
-        fill.setdefault(b, []).append(sizes[i])
-    for docs in fill.values():
-        assert sum(docs) <= ctx or len(docs) == 1
-
-    nf_bins = {
-        r["bin"] for r in pack_greedy(df, "doc_id", "n_tok", ctx).collect()
-    }
-    assert len(set(got.values())) <= len(nf_bins)
-
-
-def test_pack_first_fit_bounded_open_bins_and_shards(spark):
-    """max_open_bins caps packer state (the streaming form): a closed bin
-    never receives another doc, and sharded packing equals running the
-    packer per shard independently."""
-    from scraper_db_refine_merge_spark.operators.packing import pack_first_fit
-
-    ctx = 50
-    rows = [(i, ((i * 13) % 40) + 5, i % 3) for i in range(120)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tok long, shard int")
-
-    capped = pack_first_fit(df, "doc_id", "n_tok", ctx, max_open_bins=2)
-    seen_after_close: dict = {}
-    order = sorted(
-        ((r["doc_id"], r["bin"]) for r in capped.collect()), key=lambda x: x[0]
-    )
-    # bins must be assigned in a pattern consistent with ≤2 open at a time:
-    # once a bin with id b+2 exists, bin b can never appear again
-    max_seen = -1
-    closed = set()
-    for _, b in order:
-        assert b not in closed
-        if b > max_seen:
-            max_seen = b
-            closed |= {x for x in range(max_seen - 1)}
-
-    sharded = pack_first_fit(df, "doc_id", "n_tok", ctx, shard_col="shard")
-    for s in range(3):
-        sub = spark.createDataFrame(
-            [r for r in rows if r[2] == s], "doc_id long, n_tok long, shard int"
-        )
-        solo = {
-            r["doc_id"]: r["bin"]
-            for r in pack_first_fit(sub, "doc_id", "n_tok", ctx).collect()
-        }
-        got = {
-            r["doc_id"]: r["bin"]
-            for r in sharded.filter(F.col("shard") == s).collect()
-        }
-        assert got == solo

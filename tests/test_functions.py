@@ -17,7 +17,7 @@ from scraper_db_refine_merge_spark.functions.dates import (
 )
 from scraper_db_refine_merge_spark.functions.ids import composite_event_id, generate_unique_id
 from scraper_db_refine_merge_spark.functions.normalize import (
-    normalize_genre,
+    normalize_genres,
     normalize_venue_name,
     timezone_from_location,
 )
@@ -171,10 +171,10 @@ def test_normalizations(spark):
     assert _one(spark, normalize_venue_name(F.lit("dc-10"))) == "DC10"
     assert _one(spark, normalize_venue_name(F.lit("hi ibiza"))) == "Hï Ibiza"
     assert _one(spark, normalize_venue_name(F.lit("Las Dalias"))) == "Las Dalias"
-    assert _one(spark, normalize_genre(F.lit("tech house"))) == "Tech House"
-    assert _one(spark, normalize_genre(F.lit("dnb"))) == "Drum & Bass"
-    assert _one(spark, normalize_genre(F.lit("melodic-techno"))) == "Melodic Techno"
-    assert _one(spark, normalize_genre(F.lit("ambient dub"))) == "Ambient Dub"
+    assert _one(spark, normalize_genres(F.array(F.lit("tech house")))) == ["Tech House"]
+    assert _one(spark, normalize_genres(F.array(F.lit("dnb")))) == ["Drum & Bass"]
+    assert _one(spark, normalize_genres(F.array(F.lit("melodic-techno")))) == ["Melodic Techno"]
+    assert _one(spark, normalize_genres(F.array(F.lit("ambient dub")))) == ["Ambient Dub"]
     assert _one(spark, timezone_from_location(F.lit("Hï Ibiza, Ibiza"))) == "Europe/Madrid"
     assert _one(spark, timezone_from_location(F.lit("Fabric, LONDON"))) == "Europe/London"
     assert _one(spark, timezone_from_location(F.lit("nowhere"))) == "UTC"

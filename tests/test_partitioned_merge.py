@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import scraper_db_refine_merge_spark.streaming.store as st
 from scraper_db_refine_merge_spark.operators.merge import merge_upsert_partitioned
+from scraper_db_refine_merge_spark.streaming.runner import drain, land_batches
 from scraper_db_refine_merge_spark.streaming.store import read_table
 
 
@@ -414,3 +415,39 @@ def test_manifest_empty_mapping_raises_descriptive_error(spark, tmp_path, no_sym
         json.dump(manifest, f)
     with pytest.raises(RuntimeError, match="maps no parts"):
         read_table(spark, target)
+
+
+@pytest.mark.slow
+def test_stream_ingest_partitioned_merge(spark, tmp_path):
+    """Partition-pruned streaming MERGE: cross-batch re-scrape updates in
+    place, table lands hive-partitioned by event_date."""
+    from scraper_db_refine_merge_spark.streaming.pipeline import stream_ingest
+
+    landing = str(tmp_path / "landing")
+    base = {
+        "title": "Party A", "url": "u", "venue": "amnesia", "date_text": "5 May 2025",
+        "lineup": [], "price_text": "10€", "genres": [], "description": "v1",
+        "scraped_at": "2025-05-01T00:00:00Z",
+    }
+    rescrape = dict(base, description="v2", scraped_at="2025-05-02T00:00:00Z")
+    other = dict(base, title="Party B", date_text="6 May 2025")
+    land_batches(landing, [[base], [rescrape, other]])
+
+    target = str(tmp_path / "events")
+    q = stream_ingest(
+        spark, landing, target, str(tmp_path / "ck"),
+        metrics_path=str(tmp_path / "m"), max_files_per_trigger=1,
+        partition_by_event_date=True,
+    )
+    drain(q, timeout_s=120)
+
+    from scraper_db_refine_merge_spark.streaming import store as st
+
+    t = st.read_table(spark, target)
+    rows = {r["title"]: r for r in t.collect()}
+    assert set(rows) == {"Party A", "Party B"}
+    assert rows["Party A"]["content"]["full_description"] == "v2"  # latest won
+    # hive partitions in the live snapshot's manifest: one per event date
+    entry = st._manifest_of(st.store_version_dir(target))[st._DEFAULT]
+    parts = sorted(p.rsplit("/", 1)[1] for p in entry["parts"])
+    assert parts == ["event_date=2025-05-05", "event_date=2025-05-06"]

@@ -1,5 +1,5 @@
-"""Plain-directory tables (merge_upsert, insert_if_absent, fold_rollup,
-compact) commit by a staging write plus two renames (operators/merge.py
+"""Plain-directory tables (merge_upsert, insert_if_absent, fold_rollup)
+commit by a staging write plus two renames (operators/merge.py
 swap_plain_table). A writer killed between the renames leaves no table at
 the path; the next writer must put the last committed table back and then
 produce exactly what an uncrashed run produces."""
@@ -11,7 +11,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from scraper_db_refine_merge_spark.operators.layout import compact
 from scraper_db_refine_merge_spark.operators.merge import insert_if_absent, merge_upsert
 from scraper_db_refine_merge_spark.operators.rollup import fold_rollup
 
@@ -39,11 +38,6 @@ def _rollup(spark, path):
     fold_rollup(spark, path, _batch(spark), key_cols=["grp"], sum_cols=["v"])
 
 
-def _compact(spark, path):
-    res = compact(spark, path, target_file_bytes=1 << 30)
-    return res["compacted"], res["before"]["n_files"], res["after"]["n_files"]
-
-
 # writer -> (build the existing table, the write to crash and retry)
 WRITERS = {
     "merge_upsert": (
@@ -58,7 +52,6 @@ WRITERS = {
         lambda spark, p: fold_rollup(spark, p, _base(spark), key_cols=["grp"], sum_cols=["v"]),
         _rollup,
     ),
-    "compact": (lambda spark, p: _base(spark).repartition(4).write.parquet(p), _compact),
 }
 
 

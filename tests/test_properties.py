@@ -229,15 +229,16 @@ def _py_fuzzy(s, default_tz="Europe/Madrid"):
 # ----------------------------------------------------------------------
 # dictionary normalizations ≡ reference schema_adapter_enhanced.py
 # _normalize_venue_name (:272-288), FieldNormalizer.normalize_genre
-# (:343-381), detect_timezone_from_location (:383-397) — the r1 ROADMAP
-# item 7 remainder: adversarial keys (case, edge whitespace incl. unicode
+# (:343-381, through normalize_genres over a one-element array),
+# detect_timezone_from_location (:383-397) — the r1 ROADMAP item 7
+# remainder: adversarial keys (case, edge whitespace incl. unicode
 # spaces, near-misses) against plain-Python mirrors of the reference.
 
 from scraper_db_refine_merge_spark.functions.normalize import (  # noqa: E402
     GENRE_MAP,
     TIMEZONE_MAP,
     VENUE_MAP,
-    normalize_genre,
+    normalize_genres,
     normalize_venue_name,
     timezone_from_location,
 )
@@ -341,7 +342,7 @@ def test_normalize_genre_differential(spark, values):
     values = _in_parity_domain(spark, values)
     if not values:
         return
-    got = _run(spark, values, normalize_genre)
+    got = _run(spark, values, lambda c: F.element_at(normalize_genres(F.array(c)), 1))
     expected = [_py_norm_genre(v) for v in values]
     for v, g, e in zip(values, got, expected):
         assert g == e, (repr(v), g, e)
@@ -385,7 +386,7 @@ def test_fuzzy_chain_matches_dateutil_on_declared_formats(spark, dts):
 # Money-helper precondition (plans/_util.py r6): for nonnegative doubles that
 # are exact 2-decimal representations, the integer-cents fast path
 # floor(x*100 + 0.5) agrees with the DECIMAL(18,2)-cast semantics the
-# oracles use — the equivalence every money_sum/disc_price_sum result
+# oracles use — the equivalence every money_sum/spark_disc_price_sum result
 # depends on. Hypothesis drives integer cents directly (the generator's
 # domain), including repr-hostile values like n/100 that round down in
 # binary.

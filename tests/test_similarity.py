@@ -471,42 +471,3 @@ def test_arrow_kernels_survive_null_and_ragged_vectors(spark):
     got_nd = {(r["a_id"], r["b_id"]) for r in nd.collect()}
     assert got_nd <= got_pairs  # bucketed results ⊆ exact pairs
     assert not any(4 in p or 5 in p or 6 in p for p in got_nd)
-
-
-@pytest.mark.slow
-def test_reindex_semantic_equals_one_shot(spark, tmp_path):
-    """r14: reindex_semantic retrains/re-cells/re-elects from the STORED
-    vectors — post-rebuild state equals the one-shot semantic_dedup over
-    the accumulated corpus (here with a different k than the fold froze
-    at batch 0, the exact move the freeze forbids in place)."""
-    from pyspark.sql import functions as F
-
-    from scraper_db_refine_merge_spark.operators.similarity import (
-        fold_semantic_index,
-        reindex_semantic,
-        semantic_dedup,
-        semantic_index_state,
-    )
-    from scraper_db_refine_merge_spark.sources.tables import load_table
-    from scraper_db_refine_merge_spark.streaming.store import (
-        _manifest_of,
-        store_version_dir,
-    )
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings").filter(
-        F.col("vec_id") < 120
-    )
-    root = str(tmp_path / "sem")
-    for i in range(3):
-        fold_semantic_index(
-            spark, root, e.filter(F.col("vec_id") % 3 == i),
-            k=3, iters=1, threshold=0.4,
-        )
-    reindex_semantic(spark, root, k=5, iters=1, threshold=0.4)
-
-    got = sorted(map(tuple, semantic_index_state(spark, root).collect()))
-    want = sorted(map(tuple, semantic_dedup(e, k=5, iters=1, threshold=0.4).collect()))
-    assert got == want
-    # the atomic replace also compacted: one part per rebuilt table
-    m = _manifest_of(store_version_dir(root))
-    assert all(len(m[t]["parts"]) == 1 for t in ("centroids", "vectors", "dropped")), m

@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 from scraper_db_refine_merge_spark.multimodal.binary import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
-    decode_image,
     extract_features,
-    media_stats,
     sample_video_frames,
 )
 from scraper_db_refine_merge_spark.streaming.pipeline import (
@@ -168,57 +166,29 @@ def test_video_frame_sampling(media):
     assert [f["frame_index"] for f in sorted(frames, key=lambda f: f["frame_offset"])] == [0, 1, 2, 3]
 
 
+def _media_stats(media):
+    """Metadata-only aggregate over the media table's typed struct."""
+    return media.groupBy("media_type").agg(
+        F.count("*").alias("n"),
+        F.sum("metadata.size_bytes").alias("total_bytes"),
+    )
+
+
 def test_media_stats_prunes_blob(spark, media, tmp_path):
-    stats = {r["media_type"]: r["n"] for r in media_stats(media).collect()}
+    stats = {r["media_type"]: r["n"] for r in _media_stats(media).collect()}
     assert stats == {"image": 2, "audio": 1, "video": 1}
     # against a parquet scan, column pruning must exclude the blob column
     path = str(tmp_path / "media")
     media.write.parquet(path)
-    plan = media_stats(spark.read.parquet(path))._jdf.queryExecution().executedPlan().toString()
+    plan = _media_stats(spark.read.parquet(path))._jdf.queryExecution().executedPlan().toString()
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema and "content" not in read_schema[0]
 
 
-def test_decode_image_raises_without_pillow():
-    from scraper_db_refine_merge_spark.multimodal.binary import pil_available
+def test_q66_runs_at_smoke_sf(spark, sf_dir):
+    from scraper_db_refine_merge_spark.plans.multimodalq import q66_audio_features
 
-    if pil_available():
-        pytest.skip("Pillow present — covered by test_extract_image_features_real_decoder")
-    with pytest.raises(NotImplementedError):
-        decode_image(b"not an image")
-
-
-def test_extract_image_features_fallback(media):
-    """use_decoder='never': md5 stand-in features, NULL dims — the
-    replay-stable path that works in any environment."""
-    from scraper_db_refine_merge_spark.multimodal.binary import extract_image_features
-
-    rows = {r["media_id"]: r for r in extract_image_features(media, use_decoder="never").collect()}
-    assert set(rows) == {"img1", "img2"}  # image rows only
-    for r in rows.values():
-        assert r["width"] is None and r["height"] is None
-        assert len(r["features"]) == FEATURE_DIM
-        assert all(-1.0 <= x <= 1.0 for x in r["features"])
-
-
-def test_extract_image_features_real_decoder(spark):
-    """Real Pillow path: decode → true dims + 8×8 grayscale thumbnail
-    features. Skipped where the container ships no imaging library."""
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from scraper_db_refine_merge_spark.multimodal.binary import extract_image_features
-
-    buf = io.BytesIO()
-    Image.new("RGB", (20, 10), color=(255, 0, 0)).save(buf, format="PNG")
-    rows = [("real1", "image", "image/png", buf.getvalue(), ("https://x/r.png", None, None, None, len(buf.getvalue())))]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = extract_image_features(media, use_decoder="always").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["width"], r["height"]) == (20, 10)
-    assert len(r["features"]) == FEATURE_DIM
-    # uniform red image → uniform grayscale thumbnail → constant features
-    assert len(set(r["features"])) == 1
+    out = q66_audio_features(spark, sf_dir)
+    rows = out.collect()
+    assert len(rows) > 0
+    assert all(r["feat_dim"] == FEATURE_DIM for r in rows)
