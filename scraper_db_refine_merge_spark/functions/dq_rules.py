@@ -147,6 +147,7 @@ RULES: list[Rule] = [
          lambda now: "(`datetime`.end_date IS NULL OR `datetime`.start_date IS NULL"
          " OR try_to_timestamp(`datetime`.end_date)"
          " >= try_to_timestamp(`datetime`.start_date))"),
+    # SURVEY F7
     Rule("CP002", "Medium", "datetime", "plausible duration (< 7 days)",
          lambda now: "(`datetime`.end_date IS NULL OR `datetime`.start_date IS NULL"
          " OR (CAST(try_to_timestamp(`datetime`.end_date) AS DOUBLE)"
@@ -185,7 +186,7 @@ RULES: list[Rule] = [
 RULES_BY_ID = {r.rule_id: r for r in RULES}
 
 
-def evaluate_rules(events: DataFrame, now: datetime, rules: list[Rule] | None = None) -> DataFrame:
+def evaluate_rules(events: DataFrame, now: datetime) -> DataFrame:
     """Adds ``dq_rule_results: array<struct<rule_id,severity,field,passed>>``.
 
     One projection built as ONE selectExpr string (one SQL parse instead of
@@ -195,12 +196,11 @@ def evaluate_rules(events: DataFrame, now: datetime, rules: list[Rule] | None = 
     tiers) counts as a FAIL — an unevaluable rule must not count as passed,
     and the rollup's failure count and pass rate must agree on it.
     """
-    rules = rules or RULES
     entries = ", ".join(
         f"named_struct('rule_id', '{r.rule_id}', 'severity', '{r.severity}',"
         f" 'field', '{r.field}',"
         f" 'passed', coalesce({r.predicate_sql(now)}, false))"
-        for r in rules
+        for r in RULES
     )
     return (
         events.selectExpr(

@@ -1,4 +1,4 @@
-"""Dictionary normalizations (SURVEY F15-F17) — venue names, genres,
+"""Dictionary normalizations — venue names, genres,
 timezone-from-location.
 
 Small literal maps become ``create_map`` lookups (broadcast-free: the map is
@@ -102,6 +102,7 @@ def _title_case(c: Column) -> Column:
     )
 
 
+# SURVEY F15
 def normalize_venue_name(venue: Column) -> Column:
     """Lowercase-key lookup, identity fallback (F15). Key uses python_strip:
     the reference keys with str.strip(), so 'pacha\\t' must hit the map."""
@@ -112,6 +113,7 @@ def normalize_venue_name(venue: Column) -> Column:
     )
 
 
+# SURVEY F16
 def normalize_genres(genres: Column) -> Column:
     """Elementwise genre normalization over an array (HOF, no explode)."""
     from .strings import python_strip
@@ -123,6 +125,7 @@ def normalize_genres(genres: Column) -> Column:
     )
 
 
+# SURVEY F17
 def timezone_from_location(location: Column) -> Column:
     """City-substring → IANA tz, default UTC (F17)."""
     loc = F.lower(F.coalesce(location, F.lit("")))

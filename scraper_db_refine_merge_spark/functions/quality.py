@@ -1,5 +1,5 @@
 """Quality scoring engine as Spark SQL expressions
-(SURVEY D1/D2, D6, A10, A13, F18, F21, R1-R3).
+(SURVEY D1/D2, D6, A10, A13, F18, F21).
 
 Re-implements the reference's QualityScorer (database/quality_scorer.py:15-452)
 branch-for-branch as JVM-side expressions — no UDFs — so scoring 10^9 events
@@ -185,6 +185,7 @@ def score_venue_info_sql(v: str) -> str:
 # Datetime (quality_scorer.py:193-266)
 
 
+# SURVEY F6/F8
 def score_datetime_info_sql(d: str, now: datetime) -> str:
     past_cutoff = timestamp_sql(now - timedelta(days=30))
     future_cutoff = timestamp_sql(now + timedelta(days=2 * 365))
@@ -233,6 +234,7 @@ def score_datetime_info_sql(d: str, now: datetime) -> str:
 # Acts (quality_scorer.py:268-318)
 
 
+# SURVEY R1
 def score_acts_info_sql(a: str) -> str:
     missing = f"({a} IS NULL OR size({a}) = 0)"
     n = f"size({a})"
@@ -254,6 +256,7 @@ def score_acts_info_sql(a: str) -> str:
 # Ticketing (quality_scorer.py:320-388)
 
 
+# SURVEY R2
 def score_ticketing_info_sql(t: str) -> str:
     is_free = f"{t}.is_free"
     free_true = f"coalesce({is_free} = true, false)"
@@ -345,6 +348,7 @@ def overall_score_sql(
     return python_round_sql(f"({total} / {total_weight})", 3)
 
 
+# SURVEY R3
 def with_data_quality(df: DataFrame, now: datetime) -> DataFrame:
     """``df`` plus the ``data_quality`` struct column scored from its
     ``title``, ``venue``, ``datetime``, ``acts`` and ``ticketing`` columns

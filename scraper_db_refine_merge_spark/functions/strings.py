@@ -1,4 +1,4 @@
-"""String / price / URL scalar functions (SURVEY F9-F13, F20-F25).
+"""String / price / URL scalar functions.
 
 Each mirrors a reference helper; citations inline. All pure builtin
 expressions (regexp_extract/replace, when-chains) — the hot path stays in
@@ -41,6 +41,7 @@ def python_strip(c: Column) -> Column:
 _strip_ws = python_strip
 
 
+# SURVEY F11
 def normalize_whitespace(c: Column) -> Column:
     """strip + collapse all whitespace runs to ' ', empty → NULL
     (scrapers_v2/data_quality/cleaning.py:5-19). Strip AND collapse use the
@@ -62,6 +63,7 @@ def normalize_text_v2(c: Column) -> Column:
 _PRICE_RE = r"(?:from\s*)?([€$£])?\s*(\d+(?:[.,]\d{1,2})?)\s*([€$£]|[A-Za-z]{3})?"
 
 
+# SURVEY F9
 def extract_price(price_text: Column) -> Column:
     """Returns struct(amount double, currency string).
 
@@ -104,6 +106,7 @@ def extract_price(price_text: Column) -> Column:
 VALID_CURRENCIES = ("EUR", "USD", "GBP", "JPY", "INR", "AUD", "CAD", "CHF")
 
 
+# SURVEY F10
 def normalize_currency_code(currency: Column) -> Column:
     """Uppercase + ISO-4217 whitelist, default EUR."""
     up = F.upper(currency)
@@ -125,6 +128,7 @@ _COMMON_ENTITIES = (
 )
 
 
+# SURVEY F12
 def html_unescape(c: Column) -> Column:
     """Common-entity unescape as a replace chain over ``_COMMON_ENTITIES``.
     Full ``html.unescape`` coverage is intentionally not replicated: named
@@ -140,6 +144,7 @@ def html_unescape(c: Column) -> Column:
 # F13 — URL validate + normalize (schema_adapter_enhanced.py:89-105)
 
 
+# SURVEY F13
 def normalize_url(url: Column) -> Column:
     """Prefix https:// when schemeless; NULL when not scheme+host shaped."""
     with_scheme = F.when(
@@ -155,11 +160,13 @@ def normalize_url(url: Column) -> Column:
 # F20/F23 — hashing & snippets
 
 
+# SURVEY F20
 def url_hash(url: Column) -> Column:
     """md5 cache key (ventura_crawler.py:243,261)."""
     return F.md5(url)
 
 
+# SURVEY F23
 def snippet(c: Column, n: int = 150) -> Column:
     """Truncate with ellipsis (query_examples.py:255-258)."""
     return F.when(F.length(c) <= n, c).otherwise(F.concat(F.substring(c, 1, n), F.lit("...")))
@@ -171,12 +178,14 @@ def snippet(c: Column, n: int = 150) -> Column:
 _SOLDOUT_WORDS = ("sold out", "soldout", "sold-out", "agotado")
 
 
+# SURVEY F24
 def is_free(price: Column, status_text: Column) -> Column:
     """price==0 or 'free' in status text; any positive price overrides."""
     textual_free = F.coalesce(F.lower(status_text).contains("free"), F.lit(False))
     return F.when(price > 0, F.lit(False)).otherwise((price == 0) | textual_free)
 
 
+# SURVEY F24
 def is_sold_out(status_text: Column) -> Column:
     t = F.lower(F.coalesce(status_text, F.lit("")))
     out = F.lit(False)
@@ -189,6 +198,7 @@ def is_sold_out(status_text: Column) -> Column:
 # F25 — confidence decay (schema_adapter_enhanced.py:45-61)
 
 
+# SURVEY F25
 def confidence_score(n_errors: Column, n_warnings: Column, n_info: Column) -> Column:
     """1.0 × 0.7^errors × 0.9^warnings × 0.95^info."""
     return (
@@ -196,6 +206,7 @@ def confidence_score(n_errors: Column, n_warnings: Column, n_info: Column) -> Co
     )
 
 
+# SURVEY F19
 def classify_event_type(title: Column, venue: Column) -> Column:
     """F19 — keyword event-type classifier
     (schema_adapter_enhanced.py:570-583): festival/day_party/concert by

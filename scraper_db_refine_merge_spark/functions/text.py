@@ -83,9 +83,9 @@ def token_count(c: Column) -> Column:
     return F.size(tokens(c))
 
 
-def regex_token_count(c: Column, pattern: str = r"[a-z0-9]+|[^a-z0-9\s]") -> Column:
+def regex_token_count(c: Column) -> Column:
     """BPE-ish token count: alphanumeric runs plus individual symbols."""
-    return F.regexp_count(F.lower(c), F.lit(pattern))
+    return F.regexp_count(F.lower(c), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"))
 
 
 def language_guess(c: Column) -> Column:

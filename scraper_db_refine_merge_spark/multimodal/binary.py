@@ -130,9 +130,9 @@ def extract_features(media: DataFrame) -> DataFrame:
     return cols.mapInPandas(_extract, FEATURES_SCHEMA)
 
 
-def sample_video_frames(media: DataFrame, every_n_bytes: int = 1 << 16) -> DataFrame:
+def sample_video_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video rows: emits one row per pseudo-frame
-    (offset markers over the blob). The real frame decoder slots into the
+    (offset markers every 64 KiB of the blob). The real frame decoder slots into the
     same iterator; the exploded shape, ordering column, and partitioning are
     what production code needs to be correct at scale."""
     frame_schema = StructType(
@@ -143,6 +143,8 @@ def sample_video_frames(media: DataFrame, every_n_bytes: int = 1 << 16) -> DataF
             StructField("frame_hash", StringType()),
         ]
     )
+
+    every_n_bytes = 1 << 16
 
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

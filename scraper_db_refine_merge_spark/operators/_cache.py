@@ -61,10 +61,10 @@ def _registry() -> list:
     return st
 
 
-def persist_tracked(df: DataFrame, level=None) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """``df.persist()`` registered in the innermost active scope of the
     CALLING THREAD's cache registry."""
-    df = df.persist(level) if level is not None else df.persist()
+    df = df.persist()
     # Resolve the registry BEFORE taking the lock: _registry() itself
     # acquires _all_lock on a thread's first call, and the lock is not
     # reentrant. The append itself happens under _all_lock so _drain()'s

@@ -43,10 +43,9 @@ from ._cache import memo
 # lane 2 independent of lane 1 (xxhash64 over a different arity/input).
 _SEED2 = -1640531527
 
-DEFAULT_NUM_BITS = 1 << 23  # 8 Mi bits = 128 KiB broadcast; ~1% fp at 1M keys
-DEFAULT_NUM_HASHES = 5
+NUM_HASHES = 5
 
-# "auto" sizing bounds: floor keeps tiny batches from degenerate filters,
+# sizing bounds: floor keeps tiny batches from degenerate filters,
 # the cap bounds the broadcast at 2^26 bits = 8 MiB of words (past ~4M keys
 # the fp tail grows gracefully — false positives only route extra rows
 # through the anti-join, never change results).
@@ -55,8 +54,8 @@ _AUTO_MAX_BITS = 1 << 26
 _AUTO_BITS_PER_KEY = 16  # ~0.1% fp at k=5
 
 
-def resolve_num_bits(batch: DataFrame, num_bits: int | str) -> int:
-    """Resolve ``num_bits="auto"`` to a power of two ≈ 16 bits per batch key
+def resolve_num_bits(batch: DataFrame) -> int:
+    """The filter size: a power of two ≈ 16 bits per batch key
     (r16, guide §2.3/§3.2): the filter scales WITH the batch instead of a
     constant tuned for 1M keys — a 500-key decontamination list gets a 2^16
     filter (trivial assembly/broadcast), a 4M-key merge batch gets 2^26.
@@ -69,8 +68,6 @@ def resolve_num_bits(batch: DataFrame, num_bits: int | str) -> int:
     merge_upsert builds a fresh ``deduped.select(*key_cols)`` object per
     call and a per-object memo would always miss. A (rare) 32-bit hash
     collision would only reuse a wrong SIZE, never a wrong result."""
-    if num_bits != "auto":
-        return int(num_bits)
 
     def _bits() -> int:
         n = max(batch.count(), 1)
@@ -115,26 +112,20 @@ def _bit_val(pos: Column) -> Column:
     return F.try_element_at(_pow2(), (pos % 64).cast("int") + F.lit(1))
 
 
-def bloom_build(
-    batch: DataFrame,
-    key_cols: list[str],
-    num_bits: int | str = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> DataFrame:
+def bloom_build(batch: DataFrame, key_cols: list[str], num_bits: int) -> DataFrame:
     """Aggregate the batch's keys into a 1-row DataFrame with column
     ``__bf_words: array<bigint>`` of length ``num_bits/64``.
 
     Distributed end-to-end: partial ``bit_or`` combines map-side, the final
     assembly handles at most ``num_bits/64`` tiny rows. No driver bitmap.
     """
-    num_bits = resolve_num_bits(batch, num_bits)
     if num_bits % 64:
         raise ValueError("num_bits must be a multiple of 64")
     nwords = num_bits // 64
     h1, step = _lanes(key_cols, num_bits)
     positions = F.explode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)),
             lambda i: F.pmod(h1 + i * step, F.lit(num_bits)),
         )
     )
@@ -166,12 +157,7 @@ def bloom_build(
     )
 
 
-def bloom_might_contain(
-    key_cols: list[str],
-    words: Column,
-    num_bits: int | None = None,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> Column:
+def bloom_might_contain(key_cols: list[str], words: Column, num_bits: int | None = None) -> Column:
     """Boolean probe: False ⇒ the key is definitely not in the built batch.
 
     Never NULL (NULL key components hash like the build side hashes them),
@@ -187,7 +173,7 @@ def bloom_might_contain(
     h1, step = _lanes(key_cols, nb)
     nb_col = F.lit(nb) if isinstance(nb, int) else nb
     cond = F.lit(True)
-    for i in range(num_hashes):
+    for i in range(NUM_HASHES):
         pos = F.pmod(h1 + F.lit(i) * step, nb_col)
         word = F.coalesce(
             F.try_element_at(words, _word_ix(pos) + F.lit(1)), F.lit(0).cast("long")
@@ -197,13 +183,7 @@ def bloom_might_contain(
     return F.coalesce(cond, F.lit(False))
 
 
-def pruned_left_anti(
-    target: DataFrame,
-    batch: DataFrame,
-    key_cols: list[str],
-    num_bits: int | str = "auto",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> DataFrame:
+def pruned_left_anti(target: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame:
     """``target LEFT ANTI JOIN batch USING key_cols`` with Bloom pruning.
 
     Row-for-row identical to the plain anti-join (order aside): the
@@ -212,14 +192,14 @@ def pruned_left_anti(
     and false negatives cannot occur. NULL-keyed target rows survive either
     branch, matching anti-join's null-unsafe equality.
 
-    ``num_bits`` defaults to ``"auto"`` (r16): sized from the batch's key
-    count (resolve_num_bits) so build/probe use one consistent size.
+    The filter is sized from the batch's key count (resolve_num_bits, r16)
+    so build/probe use one consistent size.
     """
-    num_bits = resolve_num_bits(batch, num_bits)
-    bf = bloom_build(batch, key_cols, num_bits, num_hashes)
+    num_bits = resolve_num_bits(batch)
+    bf = bloom_build(batch, key_cols, num_bits)
     tagged = target.crossJoin(F.broadcast(bf)).withColumn(
         "__bf_maybe",
-        bloom_might_contain(key_cols, F.col("__bf_words"), num_bits, num_hashes),
+        bloom_might_contain(key_cols, F.col("__bf_words"), num_bits),
     ).drop("__bf_words")
     definite = tagged.filter(~F.col("__bf_maybe")).drop("__bf_maybe")
     maybe = tagged.filter(F.col("__bf_maybe")).drop("__bf_maybe")

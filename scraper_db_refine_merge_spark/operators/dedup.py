@@ -282,24 +282,27 @@ def jaccard_pairs(
 
 MINHASH_NUM_HASHES = 8
 MINHASH_BAND_SIZE = 2
+#: the band count: a wider band (``band_size``) adds lanes, never bands —
+#: recall comes from OR over bands.
+MINHASH_BANDS = MINHASH_NUM_HASHES // MINHASH_BAND_SIZE
 
 #: adaptive_band_size target: expected ACCIDENTAL colliders per doc per
 #: band = n / 2^(16·band_size) ≤ 2^-ADAPTIVE_BAND_MARGIN_BITS.
 ADAPTIVE_BAND_MARGIN_BITS = 4
 
 
-def adaptive_band_size(n: int, lo: int = MINHASH_BAND_SIZE, hi: int = 8) -> int:
+def adaptive_band_size(n: int) -> int:
     """Corpus-adaptive band width (VERDICT r13 item 1, the MinHash analog
-    of :func:`similarity.adaptive_num_planes`): the smallest ``band_size ≥
-    lo`` whose 16·band_size-bit band-signature space keeps expected
-    accidental colliders per doc per band ≤ 2^-4 — i.e. ``n ≤
+    of :func:`similarity.adaptive_num_planes`): the smallest ``band_size``
+    in [MINHASH_BAND_SIZE, 8] whose 16·band_size-bit band-signature space
+    keeps expected accidental colliders per doc per band ≤ 2^-4 — i.e. ``n ≤
     2^(16·band_size − 4)``. The default stays 2 (32-bit signatures) up to
     n = 2^28 ≈ 268M docs — every harness scale — and grows to 3 lanes at
     true corpus scale, where 32-bit birthday collisions would flood the
     capped emitters' buckets with verification-failing colliders. Pure
     integer arithmetic so an oracle can mirror the ladder exactly."""
-    b = lo
-    while b < hi and n > (1 << (16 * b - ADAPTIVE_BAND_MARGIN_BITS)):
+    b = MINHASH_BAND_SIZE
+    while b < 8 and n > (1 << (16 * b - ADAPTIVE_BAND_MARGIN_BITS)):
         b += 1
     return b
 
@@ -434,7 +437,6 @@ def minhash_dedup_pairs(
     text_col: str,
     k: int = 5,
     threshold: float = 0.4,
-    num_hashes: int = MINHASH_NUM_HASHES,
     band_size: int | str = MINHASH_BAND_SIZE,
     max_shingle_freq: int | None = None,
     max_band_successors: int | None = None,
@@ -464,17 +466,16 @@ def minhash_dedup_pairs(
     corpus count (:func:`adaptive_band_size`) — 2 lanes (32-bit signatures)
     through n = 2^28 docs, then wider, holding accidental band colliders
     ≈ constant so the capped emitter's chain-connectivity contract
-    survives corpus growth. The band COUNT stays ``num_hashes //
-    MINHASH_BAND_SIZE`` (default 4 — recall comes from OR over bands), so
-    the total signature width scales to bands·band_size lanes. Resolved at
-    plan build and memoized per corpus frame — the corpus_count freeze
-    caveat applies (re-``load_table`` over mutated storage)."""
+    survives corpus growth. The band COUNT stays MINHASH_BANDS (4 —
+    recall comes from OR over bands), so the signature has
+    MINHASH_BANDS·band_size lanes. Resolved at plan build and memoized per
+    corpus frame — the corpus_count freeze caveat applies
+    (re-``load_table`` over mutated storage)."""
     if band_size == "auto":
         from .similarity import corpus_count
 
-        n_bands = max(1, num_hashes // MINHASH_BAND_SIZE)
         band_size = adaptive_band_size(corpus_count(df))
-        num_hashes = n_bands * band_size
+    num_hashes = MINHASH_BANDS * band_size
     sh = word_shingles(df, id_col, text_col, k, max_shingle_freq)
     # The signature table is one row per doc (8 lane mins + count) — a
     # sliver of the corpus — and feeds candidate generation AND both size
@@ -701,7 +702,7 @@ def longest_shared_run(
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit long
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc SimHash fingerprint over word tokens.
 
     Token hash = first 15 hex chars of md5 (60 bits). Each bit contributes
@@ -732,19 +733,19 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
             f"sum(CASE WHEN (shiftright(th, {j}) & 1) = 1 THEN cnt ELSE -cnt END)"
             f" AS lane{j}"
         )
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     lanes = toks.groupBy("doc").agg(*lane_aggs)
     fingerprint_sql = " + ".join(
         f"shiftleft(CASE WHEN lane{j} > 0 THEN CAST(1 AS BIGINT)"
         f" ELSE CAST(0 AS BIGINT) END, {j})"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     return lanes.selectExpr("doc", f"({fingerprint_sql}) AS simhash")
 
 
 def simhash_near_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, bits: int = SIMHASH_BITS
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
 
@@ -755,9 +756,9 @@ def simhash_near_pairs(
     all-pairs scan. Smaller chunks (higher max_hamming) admit more false
     candidates; the verify step keeps the result exact either way.
     """
-    sh = simhash(df, id_col, text_col, bits)
+    sh = simhash(df, id_col, text_col)
     n_chunks = max_hamming + 1
-    base, extra = divmod(bits, n_chunks)
+    base, extra = divmod(SIMHASH_BITS, n_chunks)
     # chunk i covers [offset, offset + width): first `extra` chunks one wider
     widths = [base + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
@@ -796,11 +797,6 @@ def simhash_near_pairs(
 
 # ----------------------------------------------------------------------
 # Incremental near-dup indexes (MinHash pairs, contamination blocklist)
-
-#: band count of a fold_minhash_index store: the width (``band_size``)
-#: moves, the band count does not — recall comes from OR over bands.
-FOLD_MINHASH_BANDS = MINHASH_NUM_HASHES // MINHASH_BAND_SIZE
-
 
 def _frozen_width(
     target_root: str, marker: str, width: int | None, default: int, caller: str
@@ -856,8 +852,8 @@ def fold_minhash_index(
     :func:`_frozen_width` under the ``_minhash_width`` marker —
     ``band_size=None`` adopts the store's width (MINHASH_BAND_SIZE on a
     fresh store), a different explicit width raises. The band count is
-    always FOLD_MINHASH_BANDS, so the signature has
-    ``FOLD_MINHASH_BANDS·band_size`` lanes. Growing the width is the
+    always MINHASH_BANDS, so the signature has
+    ``MINHASH_BANDS·band_size`` lanes. Growing the width is the
     explicit rebuild :func:`reindex_minhash_width`.
 
     Index layout: ONE crash-safe versioned store (streaming/store.py) whose
@@ -878,7 +874,7 @@ def fold_minhash_index(
         target_root, "_minhash_width", band_size, MINHASH_BAND_SIZE,
         "fold_minhash_index",
     )
-    num_hashes = FOLD_MINHASH_BANDS * band_size
+    num_hashes = MINHASH_BANDS * band_size
 
     sh_new = word_shingles(new_docs, id_col, text_col, k)
     sig_new = minhash_signatures(sh_new, num_hashes).persist()
@@ -931,7 +927,7 @@ def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
     """Re-widen a fold_minhash_index store's signatures (r14, the
     incremental-index answer to the adaptive-width policy): recompute the
     ``sigs`` table from the STORED shingle sets at
-    ``FOLD_MINHASH_BANDS·band_size`` lanes and commit it as one atomic
+    ``MINHASH_BANDS·band_size`` lanes and commit it as one atomic
     replace (``store_commit_parts`` ``replace_parts`` — shingles and the
     pair log are untouched, the superseded signature parts are GC'd after
     the pointer commit, and the ``_minhash_width`` marker moves with the
@@ -955,7 +951,7 @@ def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
     # later Jaccard involving it UNDERestimates (missed duplicates). Min
     # lanes are idempotent — only the count needs the distinct (ADVICE r14).
     sh = sh.dropDuplicates(["doc", "shingle"])
-    sigs = minhash_signatures(sh, FOLD_MINHASH_BANDS * band_size)
+    sigs = minhash_signatures(sh, MINHASH_BANDS * band_size)
     store_commit_parts(
         {},
         target_root,
@@ -965,16 +961,12 @@ def reindex_minhash_width(spark, target_root: str, band_size: int) -> None:
 
 
 def fold_contamination_index(
-    spark,
-    target_root: str,
-    protected_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int | None = None,
+    spark, target_root: str, protected_docs: DataFrame, k: int | None = None
 ) -> None:
     """Fold a batch of PROTECTED (benchmark/eval) documents' distinct
     k-shingle hashes into a persistent contamination blocklist — the
-    incremental form of the q143/q49 decontamination family: benchmark
+    incremental form of the q143/q49 decontamination family (documents
+    keyed ``doc_id`` with their ``text``): benchmark
     suites arrive over time, and re-shingling the whole protected set per
     arrival is O(total); this is O(batch).
 
@@ -998,13 +990,11 @@ def fold_contamination_index(
         target_root, "_contamination_k", k, 5, "fold_contamination_index"
     )
     sh = (
-        word_shingles(protected_docs, id_col, text_col, k=k)
+        word_shingles(protected_docs, "doc_id", "text", k=k)
         .select(F.md5(F.col("shingle")).alias("h"))
         .distinct()
     )
-    texts = protected_docs.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("text")
-    )
+    texts = protected_docs.select(F.col("doc_id").alias("doc"), F.col("text").alias("text"))
     store_commit_parts(
         {"blocked": sh, "texts": texts},
         target_root,
@@ -1046,20 +1036,12 @@ def reindex_contamination_k(spark, target_root: str, new_k: int) -> None:
     )
 
 
-def contamination_scan(
-    spark,
-    target_root: str,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int | None = None,
-) -> DataFrame:
-    """(doc_id, n_blocked): corpus documents sharing ≥1 distinct k-shingle
-    with the accumulated blocklist, with the count of blocked shingles.
-
-    ``k`` follows the fold's width rule (:func:`_frozen_width`): None
-    adopts the index's frozen width — scanning at any other width silently
-    matches nothing, so an explicit mismatching k raises.
+def contamination_scan(spark, target_root: str, corpus: DataFrame) -> DataFrame:
+    """(doc_id, n_blocked): corpus documents (``doc_id``, ``text``) sharing
+    ≥1 distinct k-shingle with the accumulated blocklist, with the count
+    of blocked shingles. ``k`` is the index's frozen width
+    (:func:`_frozen_width`) — a scan at any other width would match
+    nothing.
 
     One shuffle on the 32-byte shingle hash; the blocklist side is
     DISTINCT'd across parts (batches may overlap), so a hot stop-shingle
@@ -1071,14 +1053,14 @@ def contamination_scan(
     blocked = read_table(spark, target_root, "blocked")
     if blocked is None:
         raise ValueError(f"no contamination index at {target_root}")
-    k = _frozen_width(target_root, "_contamination_k", k, 5, "contamination_scan")
+    k = _frozen_width(target_root, "_contamination_k", None, 5, "contamination_scan")
     blocked = blocked.distinct()
-    sh = word_shingles(corpus, id_col, text_col, k=k).select(
-        F.col("doc").alias(id_col), F.md5(F.col("shingle")).alias("h")
+    sh = word_shingles(corpus, "doc_id", "text", k=k).select(
+        F.col("doc").alias("doc_id"), F.md5(F.col("shingle")).alias("h")
     )
     return (
         sh.join(blocked, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_blocked"))
     )
 

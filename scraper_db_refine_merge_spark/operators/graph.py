@@ -120,11 +120,11 @@ def connected_components(
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
 
-def dup_clusters(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -> DataFrame:
-    """(doc_id, cluster_id, cluster_size) for every doc in a near-dup pair
-    list; cluster_id = min doc id of the cluster (the canonical survivor
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) for every doc in an (a_id, b_id)
+    near-dup pair list; cluster_id = min doc id of the cluster (the canonical survivor
     under keep-smallest-id policy)."""
-    cc = connected_components(pairs, a_col, b_col)
+    cc = connected_components(pairs, "a_id", "b_id")
     sizes = cc.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return cc.join(sizes, "component").select(
         F.col("node").alias("doc_id"),
@@ -133,25 +133,19 @@ def dup_clusters(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -> 
     )
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 2,
-    scale: int = 1_000_000_000_000,
-    damping_pct: int = 85,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """PageRank with FIXED-POINT integer arithmetic — the engine's pattern
     for putting an iterative algorithm under a cross-engine oracle.
 
     Floating-point PageRank is not oracle-able: each iteration SUMs
     contributions in partition order, and double addition is not
     associative, so two engines (or two runs) drift in the last ulp and
-    the drift compounds per iteration. Here ranks are BIGINTs scaled by
-    ``scale``; per-edge contribution is ``rank div outdeg`` and the update
-    is ``(15·r0) div 100 + (85·Σcontrib) div 100`` — every operation is
-    exact integer arithmetic, so ANY execution order, partitioning, or
-    engine produces identical bits. (The div-truncation loses mass
+    the drift compounds per iteration. Here ranks over the (src, dst)
+    ``edges`` are BIGINTs scaled by 10^12; per-edge contribution is
+    ``rank div outdeg`` and the update is ``(15·r0) div 100 +
+    (85·Σcontrib) div 100`` — every operation is exact integer
+    arithmetic, so ANY execution order, partitioning, or engine produces
+    identical bits. (The div-truncation loses mass
     vs. textbook PageRank — ranking order is preserved; documented
     semantics.)
 
@@ -168,7 +162,8 @@ def pagerank_fixed_point(
     # deg and nodes again, and without a cut the whole upstream edge
     # construction (often a near-dup pair join) re-executes per reference —
     # exchange reuse is plan-shape-dependent, not guaranteed
-    e = _materialize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    scale = 1_000_000_000_000
+    e = _materialize(edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).distinct())
     nodes = _materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -190,7 +185,7 @@ def pagerank_fixed_point(
         )
         rank = nodes.join(contrib, "node", "left").select(
             "node",
-            (base + F.expr(f"{damping_pct} * coalesce(contrib, 0) div 100").cast("long")).alias("r"),
+            (base + F.expr("85 * coalesce(contrib, 0) div 100").cast("long")).alias("r"),
         )
     return rank.select("node", F.col("r").alias("rank_scaled"))
 
@@ -199,13 +194,10 @@ def fold_components(
     spark,
     target_path: str,
     new_pairs: DataFrame,
-    src: str = "a_id",
-    dst: str = "b_id",
-    max_iter: int = 25,
     keep_versions: int = 1,
 ) -> DataFrame:
-    """Incremental connected components: fold a batch of new near-dup pairs
-    into a stored (node, component) assignment without re-reading historical
+    """Incremental connected components: fold a batch of new (a_id, b_id)
+    near-dup pairs into a stored (node, component) assignment without re-reading historical
     PAIRS.
 
     The stored assignment is itself a spanning forest — each (node,
@@ -225,7 +217,7 @@ def fold_components(
     """
     from ..streaming.store import read_table, store_commit
 
-    e = new_pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = new_pairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("d"))
     prior = read_table(spark, target_path)
     if prior is not None:
         # EVERY prior row becomes an edge — a singleton component (node ==
@@ -234,7 +226,7 @@ def fold_components(
         # silently dropped singleton components on refresh (ADVICE r4).
         star = prior.select(F.col("node").alias("s"), F.col("component").alias("d"))
         e = e.unionByName(star)
-    out = connected_components(e, "s", "d", max_iter=max_iter)
+    out = connected_components(e, "s", "d")
     # keep_versions > 1 retains prior assignment snapshots for time travel
     # (read_table(..., version=seq)) — "which cluster was this doc in
     # before batch N folded?" is the provenance question canonical-selection

@@ -66,12 +66,10 @@ def doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def bigram_lm_scores(
-    df: DataFrame, id_col: str, text_col: str, scale: int = LM_SCALE
-) -> DataFrame:
+def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, n_bigrams, lm_score): mean add-one-smoothed bigram
-    probability per document, in integer ``scale``-ths (nano-probabilities
-    at the default) — the corpus-trained fluency score.
+    probability per document, in integer ``LM_SCALE``-ths
+    (nano-probabilities) — the corpus-trained fluency score.
 
     V = distinct tokens in the corpus (the smoothing vocabulary).
     """
@@ -82,12 +80,10 @@ def bigram_lm_scores(
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("w")
     )
     v = toks.agg(F.count_distinct("w").alias("v"))
-    return _score_with_counts(bi, c12, c1, v, scale)
+    return _score_with_counts(bi, c12, c1, v)
 
 
-def _score_with_counts(
-    bi: DataFrame, c12: DataFrame, c1: DataFrame, v: DataFrame, scale: int
-) -> DataFrame:
+def _score_with_counts(bi: DataFrame, c12: DataFrame, c1: DataFrame, v: DataFrame) -> DataFrame:
     """Score (doc, w1, w2) bigram occurrences against count tables — shared
     by the whole-corpus scorer and the incremental-index scorer (their
     results must be identical when the counts are, which is exactly the
@@ -95,7 +91,7 @@ def _score_with_counts(
 
     LEFT joins with coalesce(…, 0) (ADVICE r6): a bigram absent from the
     count tables is a genuinely UNSEEN event and add-one smoothing assigns
-    it ``scale / (c1 + V)`` (or ``scale / V`` when the prefix itself is
+    it ``LM_SCALE / (c1 + V)`` (or ``LM_SCALE / V`` when the prefix itself is
     unseen) — an inner join would silently drop it and undercount
     ``n_bigrams``. For the gated score-the-folded-corpus case every doc
     bigram exists in the counts, so both forms agree; the left join makes
@@ -103,16 +99,16 @@ def _score_with_counts(
 
     Overflow headroom (ROADMAP r6 1a(e) probe, verified r7): the numerator
     is widened to DECIMAL(38,0) BEFORE the multiply — as a BIGINT product,
-    ``(c12+1)·scale`` wraps silently once a bigram count passes ~9.2e18/scale
-    (≈9e9 at the default nano-scale; a 100 TB corpus exceeds that for stop
+    ``(c12+1)·LM_SCALE`` wraps silently once a bigram count passes
+    ~9.2e18/LM_SCALE (≈9e9 at the nano-scale; a 100 TB corpus exceeds that for stop
     bigrams). Spark's ``div`` on a decimal dividend truncates toward zero
     exactly like BIGINT ``div`` / DuckDB HUGEINT ``//`` (differential-tested
     in tests/test_lm.py), and the QUOTIENT always fits BIGINT because
-    c12 ≤ c1 bounds it by ``scale``. The decimal widening touches only the
+    c12 ≤ c1 bounds it by ``LM_SCALE``. The decimal widening touches only the
     per-bigram multiply; sums stay BIGINT (unit ≤ scale, docs are bounded).
     """
     unit = F.expr(
-        f"(CAST(coalesce(c12, 0) + 1 AS DECIMAL(38,0)) * {scale}) div (coalesce(c1, 0) + v)"
+        f"(CAST(coalesce(c12, 0) + 1 AS DECIMAL(38,0)) * {LM_SCALE}) div (coalesce(c1, 0) + v)"
     )
     scored = (
         bi.join(c12, ["w1", "w2"], "left")
@@ -223,8 +219,7 @@ def lm_index_drift(spark, target_root: str, seq_a: int, seq_b: int) -> DataFrame
 
 
 def lm_scores_from_index(
-    spark, target_root: str, docs: DataFrame, id_col: str, text_col: str,
-    scale: int = LM_SCALE,
+    spark, target_root: str, docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Score ``docs`` with the FOLDED index's statistics. After folding
     batches b0..bn, scores equal ``bigram_lm_scores`` over the
@@ -241,20 +236,13 @@ def lm_scores_from_index(
     c1 = bi_parts.groupBy("w1").agg(F.sum("cnt").alias("c1"))
     v = tok_parts.agg(F.count_distinct("w").alias("v"))
     bi = doc_bigrams(docs, id_col, text_col)
-    return _score_with_counts(bi, c12, c1, v, scale)
+    return _score_with_counts(bi, c12, c1, v)
 
 
 DSIR_BUCKETS = 1024
 
 
-def dsir_weights(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    target_filter,
-    buckets: int = DSIR_BUCKETS,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def dsir_weights(df: DataFrame, id_col: str, text_col: str, target_filter) -> DataFrame:
     """DSIR-style importance weights (Xie et al., "Data Selection for
     Language Models via Importance Resampling", NeurIPS 2023): score every
     document by how much its hashed-unigram distribution looks like a
@@ -263,9 +251,9 @@ def dsir_weights(
     Features are md5-hashed unigram buckets (the paper's hashed n-grams).
     Per bucket b: p_t(b) = (ct_b+1)/(T+B), p_r(b) = (cr_b+1)/(R+B)
     (add-one smoothing, B = bucket count); a token in bucket b contributes
-    ``unit = floor(((ct_b+1)·(R+B)) / ((cr_b+1)·(T+B)) · scale + 0.5)``
+    ``unit = floor(((ct_b+1)·(R+B)) / ((cr_b+1)·(T+B)) · 10^6 + 0.5)``
     and a document's weight is ``sum(unit) div n_tokens`` — the mean
-    importance ratio in integer micro-units. (The paper multiplies
+    importance ratio in integer micro-units (B = ``DSIR_BUCKETS``). (The paper multiplies
     per-feature log-ratios; the mean ratio is the transcendental-free
     monotone surrogate, same reasoning as q126 — ln() is not cross-engine
     bit-stable.) The ratio arithmetic is a FIXED IEEE expression tree over
@@ -283,7 +271,8 @@ def dsir_weights(
         target_filter.alias("__target"),
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("w"),
     ).withColumn(
-        "b", F.pmod(F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long"), F.lit(buckets))
+        "b",
+        F.pmod(F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long"), F.lit(DSIR_BUCKETS)),
     )
     # ONE explode+md5 corpus pass (r11: the previous ct/cr/totals trio plus
     # the final join re-exploded and re-hashed every token FOUR times).
@@ -308,9 +297,9 @@ def dsir_weights(
         .select(
             "b",
             F.floor(
-                ((F.col("ct") + 1).cast("double") * (F.col("R") + buckets).cast("double"))
-                / ((F.col("cr") + 1).cast("double") * (F.col("T") + buckets).cast("double"))
-                * F.lit(float(scale))
+                ((F.col("ct") + 1).cast("double") * (F.col("R") + DSIR_BUCKETS).cast("double"))
+                / ((F.col("cr") + 1).cast("double") * (F.col("T") + DSIR_BUCKETS).cast("double"))
+                * F.lit(1_000_000.0)
                 + F.lit(0.5)
             ).cast("long").alias("unit"),
         )

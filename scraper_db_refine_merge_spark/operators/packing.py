@@ -7,13 +7,10 @@ lands in is a pure function of the cumulative token count before it, so
 the whole operation is a window cumsum + integer division — no UDFs, no
 driver state.
 
-Scale: a single global ``Window.orderBy`` is one-partition-sequential —
-correct but not parallel. Production packing shards first (a hash prefix,
-a date, a source) and packs within shards: every shard's stream is
-independent, so the window runs ``partitionBy(shard)`` and the cluster
-packs all shards concurrently. ``pack_contiguous`` supports both; the
-oracle-gated catalog query uses the unsharded form for cross-engine
-determinism, tests cover shard-parallel equivalence.
+Scale: both packers walk ONE global stream, which is one-partition-
+sequential — correct but not parallel. Packing within shards (a hash
+prefix, a date, a source) would let the cluster pack shards concurrently;
+no caller shards, so the catalog packs the whole corpus as one stream.
 """
 
 from __future__ import annotations
@@ -27,18 +24,15 @@ def pack_contiguous(
     order_col: str,
     token_col: str,
     ctx: int,
-    shard_col: str | None = None,
 ) -> DataFrame:
     """Assign each document its packing position in the concatenated token
     stream: ``offset`` (tokens before it), ``first_bin``/``last_bin`` (the
     ctx-sized windows its tokens span) and ``straddles``.
 
     Zero-token documents are dropped (they occupy no stream positions).
-    ``order_col`` must be a total order within each shard for deterministic
-    output.
+    ``order_col`` must be a total order for deterministic output.
     """
-    w = Window.orderBy(order_col) if shard_col is None else Window.partitionBy(shard_col).orderBy(order_col)
-    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, -1)
     tok = F.col(token_col)
     out = (
         df.filter(tok > 0)
@@ -55,23 +49,18 @@ def pack_greedy(
     order_col: str,
     token_col: str,
     ctx: int,
-    shard_col: str | None = None,
 ) -> DataFrame:
     """Greedy NEXT-FIT packing: walk documents in order, close the current
     bin when the next document doesn't fit. Unlike concat-and-chunk, no
     document straddles bins (an over-ctx document still gets its own bin).
 
     The walk is inherently sequential — per-row state (current bin, tokens
-    used) — so it runs as ``applyInPandas`` per shard: one Python pass per
-    shard, shards packed in parallel across the cluster. With
-    ``shard_col=None`` everything is ONE group (use only for oracle-sized
-    determinism tests; production always shards).
+    used) — so it runs as ONE ``applyInPandas`` group: one Python pass over
+    the whole stream.
 
-    Returns (order_col, token_col[, shard_col], bin).
+    Returns (order_col, token_col, bin).
     """
     import pandas as pd
-
-    cols = [order_col, token_col] + ([shard_col] if shard_col else [])
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
@@ -90,14 +79,13 @@ def pack_greedy(
         pdf["bin"] = pd.Series(bins, dtype="int64")
         return pdf
 
-    src = df.select(*cols).filter(F.col(token_col) > 0)
-    gcol = shard_col
-    if gcol is None:
-        gcol = "__shard"
-        src = src.withColumn(gcol, F.lit(0).cast("long"))
+    src = (
+        df.select(order_col, token_col)
+        .filter(F.col(token_col) > 0)
+        .withColumn("__shard", F.lit(0).cast("long"))
+    )
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields)
-    out = src.groupBy(gcol).applyInPandas(_pack, schema + ", bin long")
-    return out.drop("__shard") if shard_col is None else out
+    return src.groupBy("__shard").applyInPandas(_pack, schema + ", bin long").drop("__shard")
 
 
 def pack_bins_summary(packed: DataFrame, token_col: str) -> DataFrame:

@@ -154,8 +154,8 @@ def _vmat_fixed(vs, expected_dim):
     return out
 
 
-def pq_codebook(df: DataFrame, id_col: str, vec_col: str, k: int = PQ_K) -> DataFrame:
-    """(s, j, cbv): per-subspace codewords = subvectors of the k
+def pq_codebook(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(s, j, cbv): per-subspace codewords = subvectors of the ``PQ_K``
     md5-priority sample vectors. Config-constant size (m·k rows).
     Memoized per (input frame, params) so the encode kernel's collect
     (one corpus top-k job) runs once per session, not per plan build."""
@@ -165,7 +165,7 @@ def pq_codebook(df: DataFrame, id_col: str, vec_col: str, k: int = PQ_K) -> Data
         seeds = (
             df.select(F.col(id_col).alias("__sid"), vec_col)
             .orderBy(pri, "__sid")  # TakeOrdered — per-partition top-k merge
-            .limit(k)
+            .limit(PQ_K)
             # row_number window runs over the k surviving rows only — bounded
             .withColumn("j", F.row_number().over(Window.orderBy(pri, "__sid")) - 1)
         )
@@ -173,16 +173,14 @@ def pq_codebook(df: DataFrame, id_col: str, vec_col: str, k: int = PQ_K) -> Data
             "s", "j", F.col("sv").alias("cbv")
         )
 
-    return memo(df, ("pq_codebook", id_col, vec_col, k), _build)
+    return memo(df, ("pq_codebook", id_col, vec_col), _build)
 
 
 def pq_codebook_trained(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = PQ_K,
     iters: int = 2,
-    round_scale: int = 6,
 ) -> DataFrame:
     """Per-subspace k-means (Lloyd) refinement of the sampled codebook —
     the training step real PQ deployments run (Jégou 2011 §III trains each
@@ -192,7 +190,7 @@ def pq_codebook_trained(
     Same derandomized machinery as q51's coarse quantizer, applied per
     subspace: md5-priority init, raw sequential-fold d2 assignment with
     codeword-index tie-break, exact-DECIMAL per-dimension means rounded to
-    ``round_scale`` (order-independent across partial aggregations). A
+    6 places (order-independent across partial aggregations). A
     codeword that attracts no subvectors keeps its previous value
     (left-join + coalesce) — deterministic, never drops a code point.
 
@@ -209,7 +207,7 @@ def pq_codebook_trained(
     now, and PQ deployment semantics are train-once/encode-forever."""
 
     def _train() -> DataFrame:
-        cb = pq_codebook(df, id_col, vec_col, k)
+        cb = pq_codebook(df, id_col, vec_col)
         vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
         if iters > 1:
             # each Lloyd round is an eager job over the vectors; persist the
@@ -220,16 +218,16 @@ def pq_codebook_trained(
             # so this is executor-memory-sized by policy
             vecs = vecs.persist()
         try:
-            cb = _train_rounds(df, cb, vecs, iters, round_scale)
+            cb = _train_rounds(df, cb, vecs, iters)
         finally:
             if iters > 1:
                 vecs.unpersist()
         return _literal_codebook(df.sparkSession, cb)
 
-    return memo(df, ("pq_trained", id_col, vec_col, k, iters, round_scale), _train)
+    return memo(df, ("pq_trained", id_col, vec_col, iters), _train)
 
 
-def _train_rounds(df, cb, vecs, iters, round_scale):
+def _train_rounds(df, cb, vecs, iters):
     """The eager Lloyd loop of :func:`pq_codebook_trained` (factored so
     the persist lifecycle wraps it in one try/finally)."""
     import numpy as np
@@ -287,7 +285,7 @@ def _train_rounds(df, cb, vecs, iters, round_scale):
                 F.round(
                     F.sum(F.col("val").cast("decimal(18,12)")).cast("double")
                     / F.count("*"),
-                    round_scale,
+                    6,
                 ).alias("cval")
             )
             .groupBy("s", "j")
@@ -547,7 +545,7 @@ def ivf_pq_topk(
     # selection shared with ivf_topk (r13: expression-based for literal
     # broadcast-sized centroid tables, window fallback above the bound)
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    probes = probe_cells(q, cent, label_col, nprobe, round_scale=5).select(
+    probes = probe_cells(q, cent, label_col, nprobe).select(
         F.struct(F.col("query_id"), F.col("cell")).alias("qc"),
         F.zip_with(
             F.col("__qvec"), F.col("centroid"), lambda x, y: x.cast("double") - y

@@ -14,8 +14,9 @@ re-aggregation is exactly Spark's own partial-agg combine semantics, so
 aggregate over the union — the invariant the q63 gate hash-verifies
 cross-engine.
 
-Sums accumulate in DECIMAL so the merged result is independent of batch
-order and split (IEEE double addition is not associative; decimal is).
+The count column is ``n``. Sums accumulate in DECIMAL(28,6) so the merged
+result is independent of batch order and split (IEEE double addition is
+not associative; decimal is).
 """
 
 from __future__ import annotations
@@ -28,8 +29,8 @@ from .merge import recover_plain_table, swap_plain_table
 __all__ = ["rollup_aggregate", "fold_rollup"]
 
 
-def _agg_exprs(sum_cols: list[str], min_cols: list[str], max_cols: list[str], count_col: str):
-    exprs = [F.sum(F.col(count_col)).alias(count_col)]
+def _agg_exprs(sum_cols: list[str], min_cols: list[str], max_cols: list[str]):
+    exprs = [F.sum(F.col("n")).alias("n")]
     exprs += [F.sum(F.col(c)).alias(c) for c in sum_cols]
     exprs += [F.min(F.col(c)).alias(c) for c in min_cols]
     exprs += [F.max(F.col(c)).alias(c) for c in max_cols]
@@ -42,20 +43,18 @@ def rollup_aggregate(
     sum_cols: list[str] | None = None,
     min_cols: list[str] | None = None,
     max_cols: list[str] | None = None,
-    count_col: str = "n",
-    sum_decimal: str = "decimal(28,6)",
 ) -> DataFrame:
     """Partially aggregate raw rows into the rollup's mergeable shape:
     one row per key with count / decimal sums / mins / maxs."""
     sum_cols, min_cols, max_cols = sum_cols or [], min_cols or [], max_cols or []
     pre = df.select(
         *key_cols,
-        F.lit(1).cast("long").alias(count_col),
-        *[F.col(c).cast(sum_decimal).alias(c) for c in sum_cols],
+        F.lit(1).cast("long").alias("n"),
+        *[F.col(c).cast("decimal(28,6)").alias(c) for c in sum_cols],
         *[F.col(c).alias(c) for c in min_cols],
         *[F.col(c).alias(c) for c in max_cols],
     )
-    return pre.groupBy(*key_cols).agg(*_agg_exprs(sum_cols, min_cols, max_cols, count_col))
+    return pre.groupBy(*key_cols).agg(*_agg_exprs(sum_cols, min_cols, max_cols))
 
 
 def fold_rollup(
@@ -66,8 +65,6 @@ def fold_rollup(
     sum_cols: list[str] | None = None,
     min_cols: list[str] | None = None,
     max_cols: list[str] | None = None,
-    count_col: str = "n",
-    sum_decimal: str = "decimal(28,6)",
 ) -> DataFrame:
     """Fold a raw batch into the stored rollup at ``target_path``: batch →
     partial aggregate → union with stored partials → re-aggregate →
@@ -79,15 +76,13 @@ def fold_rollup(
     the new table (operators/merge.py swap_plain_table).
     """
     sum_cols, min_cols, max_cols = sum_cols or [], min_cols or [], max_cols or []
-    batch_agg = rollup_aggregate(
-        batch_df, key_cols, sum_cols, min_cols, max_cols, count_col, sum_decimal
-    )
+    batch_agg = rollup_aggregate(batch_df, key_cols, sum_cols, min_cols, max_cols)
     if recover_plain_table(target_path):
         existing = spark.read.parquet(target_path)
         merged = (
             existing.unionByName(batch_agg)
             .groupBy(*key_cols)
-            .agg(*_agg_exprs(sum_cols, min_cols, max_cols, count_col))
+            .agg(*_agg_exprs(sum_cols, min_cols, max_cols))
         )
     else:
         merged = batch_agg

@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 
 from ._cache import memo
 
+#: The embeddings table's id and vector columns, which every search and
+#: dedup entry point reads, and the decimal places every cosine is rounded
+#: to before it is compared (so ties are engine-invariant).
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+ROUND_SCALE = 5
+
 
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -54,10 +61,7 @@ def cosine(a: Column, b: Column) -> Column:
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    round_scale: int = 5,
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set against the
     corpus, score every pair, keep k best per query.
@@ -82,7 +86,7 @@ def cosine_topk(
     # stands), and an Arrow pandas_udf np.einsum dot 0.353 → 0.487
     # (0.579 with the spread: worker startup × partitions, the r5
     # measurement reproduced).
-    corpus = spread_degenerate_scan(corpus, id_col)
+    corpus = spread_degenerate_scan(corpus, ID_COL)
 
     # Norms are precomputed per vector on each side (corpus norm once per
     # corpus row, not once per (query, corpus) pair) — same expressions and
@@ -97,14 +101,14 @@ def cosine_topk(
         " x -> x * x), 0.0D, (acc, x) -> acc + x))"
     )
     q = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS q_vec",
-        norm_sql.format(v=vec_col) + " AS q_norm",
+        f"`{ID_COL}` AS query_id",
+        f"transform(`{VEC_COL}`, x -> CAST(x AS DOUBLE)) AS q_vec",
+        norm_sql.format(v=VEC_COL) + " AS q_norm",
     )
     c = corpus.selectExpr(
-        f"`{id_col}` AS neighbor_id",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS c_vec",
-        norm_sql.format(v=vec_col) + " AS c_norm",
+        f"`{ID_COL}` AS neighbor_id",
+        f"transform(`{VEC_COL}`, x -> CAST(x AS DOUBLE)) AS c_vec",
+        norm_sql.format(v=VEC_COL) + " AS c_norm",
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -113,7 +117,7 @@ def cosine_topk(
             "query_id",
             "neighbor_id",
             "round(aggregate(zip_with(q_vec, c_vec, (x, y) -> x * y), 0.0D,"
-            f" (acc, x) -> acc + x) / (q_norm * c_norm), {round_scale})"
+            f" (acc, x) -> acc + x) / (q_norm * c_norm), {ROUND_SCALE})"
             " AS cosine_sim",
         )
     )
@@ -199,14 +203,10 @@ ADAPTIVE_PLANE_STRIDE = 24
 ADAPTIVE_PLANES_OCCUPANCY = 8
 
 
-def adaptive_num_planes(
-    n: int,
-    occupancy: int = ADAPTIVE_PLANES_OCCUPANCY,
-    lo: int = 6,
-    hi: int = ADAPTIVE_PLANE_STRIDE,
-) -> int:
+def adaptive_num_planes(n: int, hi: int = ADAPTIVE_PLANE_STRIDE) -> int:
     """Corpus-adaptive LSH signature width (VERDICT r13 item 1): the
-    smallest ``p ≥ lo`` with ``n ≤ occupancy · 2^p``, capped at ``hi`` —
+    smallest ``p ≥ 6`` with ``n ≤ ADAPTIVE_PLANES_OCCUPANCY · 2^p``, capped
+    at ``hi`` —
     log₂-style growth that holds expected bucket occupancy ≈ constant as
     the corpus grows, so the capped emitters' collider-density contract
     (lsh_candidate_pairs_capped / cosine_near_dup_pairs) doesn't silently
@@ -226,10 +226,9 @@ def adaptive_num_planes(
     extreme corpus scale can pass ``num_tables="auto"``
     (:func:`adaptive_num_tables`, r15) — base amplification at the
     occupancy-pinned width, doubling cost-linearly once the width deviates
-    into a bucket-miss or bucket-dense regime — or lower ``occupancy``
-    deliberately."""
-    p = lo
-    while p < hi and n > (occupancy << p):
+    into a bucket-miss or bucket-dense regime."""
+    p = 6
+    while p < hi and n > (ADAPTIVE_PLANES_OCCUPANCY << p):
         p += 1
     return p
 
@@ -253,14 +252,9 @@ ADAPTIVE_TABLES_DOUBLING_PLANES = 12
 ADAPTIVE_TABLES_CAP = 32
 
 
-def adaptive_num_tables(
-    n: int,
-    num_planes: int,
-    base: int = ADAPTIVE_TABLES_BASE,
-    cap: int = ADAPTIVE_TABLES_CAP,
-) -> int:
+def adaptive_num_tables(n: int, num_planes: int) -> int:
     """Corpus/width-driven OR-amplification (the policy the RECALL_r14
-    tables-2/4/8 sweep motivated): ``base`` tables at the occupancy-pinned
+    tables-2/4/8 sweep motivated): ``ADAPTIVE_TABLES_BASE`` tables at the occupancy-pinned
     width, doubling per :data:`ADAPTIVE_TABLES_DOUBLING_PLANES` planes of
     DEVIATION between the actual signature width and the uncapped
     occupancy ladder point for ``n`` vectors — wider-than-pinned means
@@ -274,7 +268,7 @@ def adaptive_num_tables(
     arithmetic, mirrorable like the planes ladder."""
     p_star = adaptive_num_planes(n, hi=1 << 30)  # uncapped ladder point
     doublings = abs(num_planes - p_star) // ADAPTIVE_TABLES_DOUBLING_PLANES
-    return min(cap, base << doublings)
+    return min(ADAPTIVE_TABLES_CAP, ADAPTIVE_TABLES_BASE << doublings)
 
 
 def hyperplane_bucket(
@@ -325,11 +319,7 @@ def hyperplane_bucket(
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    num_planes: int = 8,
-    round_scale: int = 5,
 ) -> DataFrame:
     """Approximate top-k: score only pairs sharing an LSH bucket.
 
@@ -344,18 +334,18 @@ def lsh_topk(
     # making the projection NULL and silently mis-bucketing (ADVICE r4). So
     # the dim must be detected on BOTH inputs and agree; any mismatch (or
     # ragged side) falls back to the fully dynamic expression.
-    dim_c = detect_fixed_dim(corpus, vec_col)
-    dim_q = detect_fixed_dim(queries, vec_col)
+    dim_c = detect_fixed_dim(corpus, VEC_COL)
+    dim_q = detect_fixed_dim(queries, VEC_COL)
     dim = dim_c if (dim_c is not None and dim_c == dim_q) else None
     cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        hyperplane_bucket(F.col(vec_col), num_planes, dim=dim).alias("bucket"),
+        F.col(ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        hyperplane_bucket(F.col(VEC_COL), 8, dim=dim).alias("bucket"),
     )
     qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        hyperplane_bucket(F.col(vec_col), num_planes, dim=dim).alias("bucket"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        hyperplane_bucket(F.col(VEC_COL), 8, dim=dim).alias("bucket"),
     )
     # bucket-shared candidates scored by the shared vectorized pair kernel
     # (r12) — at scale the candidate set is |bucket| rows per query and the
@@ -372,9 +362,8 @@ def lsh_topk(
     )
     scored = _pair_cosine_scores(
         joined,
-        queries.schema[id_col].dataType.simpleString(),
-        corpus.schema[id_col].dataType.simpleString(),
-        round_scale,
+        queries.schema[ID_COL].dataType.simpleString(),
+        corpus.schema[ID_COL].dataType.simpleString(),
     )
     # per-query top-k WITHOUT a per-query single-task sort: the scored set
     # is corpus-sized per query, so a bare partitionBy(query_id) window is
@@ -394,11 +383,10 @@ def label_centroids(
     df: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
-    scale: int = 6,
 ) -> DataFrame:
     """Per-label centroid vectors: exact DECIMAL per-dimension means (order-
-    independent across partial aggregations — see plans/_util.py), rounded,
-    re-assembled into an ``array<double>`` ordered by dimension.
+    independent across partial aggregations — see plans/_util.py), rounded
+    to 6 places, re-assembled into an ``array<double>`` ordered by dimension.
 
     Output: (label, centroid array). Centroid count == label cardinality, so
     the result is broadcast-sized by construction at any corpus scale.
@@ -413,15 +401,13 @@ def label_centroids(
     """
     return memo(
         df,
-        ("label_centroids", vec_col, label_col, scale),
-        lambda: _label_centroids_literal(df, vec_col, label_col, scale),
+        ("label_centroids", vec_col, label_col),
+        lambda: _label_centroids_literal(df, vec_col, label_col),
     )
 
 
-def _label_centroids_literal(
-    df: DataFrame, vec_col: str, label_col: str, scale: int
-) -> DataFrame:
-    built = _label_centroids_build(df, vec_col, label_col, scale)
+def _label_centroids_literal(df: DataFrame, vec_col: str, label_col: str) -> DataFrame:
+    built = _label_centroids_build(df, vec_col, label_col)
     # r13 (VERDICT r12 item 2): LITERAL-ize (the pq._literal_codebook
     # pattern). The table is broadcast-sized by construction and the
     # assign kernel driver-collects it anyway — but as a lazy plan, every
@@ -437,15 +423,13 @@ def _label_centroids_literal(
     return out
 
 
-def _label_centroids_build(
-    df: DataFrame, vec_col: str, label_col: str, scale: int
-) -> DataFrame:
+def _label_centroids_build(df: DataFrame, vec_col: str, label_col: str) -> DataFrame:
     long = df.select(label_col, F.posexplode(vec_col).alias("pos0", "val"))
     cent_long = long.groupBy(label_col, (F.col("pos0") + 1).alias("pos")).agg(
         F.round(
             F.sum(F.col("val").cast("double").cast("decimal(18,12)")).cast("double")
             / F.count("*"),
-            scale,
+            6,
         ).alias("cval")
     )
     return cent_long.groupBy(label_col).agg(
@@ -475,7 +459,6 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    round_scale: int = 5,
 ) -> DataFrame:
     """Coarse quantization: assign each vector to its nearest centroid cell
     (max cosine, ties to the lowest cell id).
@@ -523,7 +506,7 @@ def ivf_assign(
     cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     dim = cmat.shape[1]
     cnorm = _seq_norm(cmat, dim)
-    scale = 10**round_scale
+    scale = 10**ROUND_SCALE
 
     def _assign(batches):
         for pdf in batches:
@@ -575,7 +558,7 @@ def _sql_double(x) -> str | None:
 
 
 def _probe_selected_col(
-    cent: DataFrame, rows: list, label_col: str, nprobe: int, round_scale: int
+    cent: DataFrame, rows: list, label_col: str, nprobe: int
 ):
     """The probe-selection expression for :func:`probe_cells` — an
     ``array<struct<cell, centroid>>`` of each query row's nprobe winning
@@ -593,7 +576,7 @@ def _probe_selected_col(
             lambda c: F.struct(
                 c["cell"].alias("cell"),
                 c["centroid"].alias("centroid"),
-                F.round(cosine(F.col("__qvec"), c["centroid"]), round_scale).alias("sim"),
+                F.round(cosine(F.col("__qvec"), c["centroid"]), ROUND_SCALE).alias("sim"),
             ),
         )
 
@@ -615,7 +598,7 @@ def _probe_selected_col(
             lambda c: F.size(F.filter(sc2, lambda o: _better(o, c))) < F.lit(nprobe),
         )
 
-    return memo(cent, ("probe_sel", label_col, nprobe, round_scale), _build)
+    return memo(cent, ("probe_sel", label_col, nprobe), _build)
 
 
 def _cells_literal_col(cent: DataFrame, rows: list, label_col: str):
@@ -664,7 +647,6 @@ def probe_cells(
     cent: DataFrame,
     label_col: str,
     nprobe: int,
-    round_scale: int = 5,
 ) -> DataFrame:
     """(query_id, __qvec, cell, centroid): each query's ``nprobe`` nearest
     centroid cells under the row_number total order (rounded cosine DESC —
@@ -696,7 +678,7 @@ def probe_cells(
 
     rows = _collect_centroids(cent, label_col)
     selected = (
-        _probe_selected_col(cent, rows, label_col, nprobe, round_scale)
+        _probe_selected_col(cent, rows, label_col, nprobe)
         if rows and len(rows) <= PROBE_EXPR_MAX_CELLS
         else None
     )
@@ -716,7 +698,7 @@ def probe_cells(
     return (
         q.crossJoin(F.broadcast(cent))
         .withColumn(
-            "__sim", F.round(cosine(F.col("__qvec"), F.col("centroid")), round_scale)
+            "__sim", F.round(cosine(F.col("__qvec"), F.col("centroid")), ROUND_SCALE)
         )
         .withColumn("__rn", F.row_number().over(pw))
         .filter(F.col("__rn") <= nprobe)
@@ -727,12 +709,8 @@ def probe_cells(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     k: int = 5,
     nprobe: int = 2,
-    round_scale: int = 5,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into centroid
     cells, probe only the ``nprobe`` cells nearest each query.
@@ -751,11 +729,11 @@ def ivf_topk(
     DataFrame object) or call ``_cache.forget(corpus)`` to force a
     re-train.
     """
-    cent = label_centroids(corpus, vec_col, label_col)
-    assigned = ivf_assign(corpus, cent, id_col, vec_col, label_col, round_scale)
+    cent = label_centroids(corpus, VEC_COL, "label")
+    assigned = ivf_assign(corpus, cent, ID_COL, VEC_COL, "label")
 
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    probes = probe_cells(q, cent, label_col, nprobe, round_scale).select(
+    q = queries.select(F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("__qvec"))
+    probes = probe_cells(q, cent, "label", nprobe).select(
         "query_id", "__qvec", "cell"
     )
     # Probe scoring: the candidate set is nprobe cells' worth of corpus per
@@ -765,19 +743,18 @@ def ivf_topk(
     # (one Arrow pass over the join output, zero extra shuffles).
     joined = (
         assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col(ID_COL) != F.col("query_id"))
         .select(
             "query_id",
             F.col("__qvec"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__nvec"),
+            F.col(ID_COL).alias("neighbor_id"),
+            F.col(VEC_COL).alias("__nvec"),
         )
     )
     scored = _pair_cosine_scores(
         joined,
-        queries.schema[id_col].dataType.simpleString(),
-        corpus.schema[id_col].dataType.simpleString(),
-        round_scale,
+        queries.schema[ID_COL].dataType.simpleString(),
+        corpus.schema[ID_COL].dataType.simpleString(),
     )
     # per-query top-k WITHOUT a per-query single-task sort: the scored set
     # is corpus-sized per query, so a bare partitionBy(query_id) window is
@@ -795,11 +772,8 @@ def ivf_topk(
 
 def kmeans_cells(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
-    round_scale: int = 5,
 ) -> DataFrame:
     """Deterministic k-means coarse quantizer (the learned-centroid IVF).
 
@@ -814,17 +788,14 @@ def kmeans_cells(
     Returns final (id, vec, cell) assignments. Fixed ``iters`` rather than
     convergence-test keeps the plan static and the oracle mirrorable.
     """
-    cents = kmeans_centroids(df, id_col, vec_col, k, iters, round_scale)
-    return ivf_assign(df, cents, id_col, vec_col, "cell", round_scale)
+    cents = kmeans_centroids(df, k, iters)
+    return ivf_assign(df, cents, ID_COL, VEC_COL, "cell")
 
 
 def kmeans_centroids(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
-    round_scale: int = 5,
 ) -> DataFrame:
     """The trained (cell, centroid) table of :func:`kmeans_cells` — exposed
     separately so train-once/assign-forever indexes (fold_semantic_index)
@@ -839,28 +810,24 @@ def kmeans_centroids(
     starts a new session, as the driver and all tools do)."""
 
     def _train() -> DataFrame:
-        key = F.md5(F.col(id_col).cast("string"))
+        key = F.md5(F.col(ID_COL).cast("string"))
         seeds = df.select(
-            key.alias("__h"), F.col(id_col).alias("__sid"), F.col(vec_col)
+            key.alias("__h"), F.col(ID_COL).alias("__sid"), F.col(VEC_COL)
         ).orderBy("__h", "__sid").limit(k)
         cents = seeds.withColumn(
             "cell", F.row_number().over(Window.orderBy("__h", "__sid")) - 1
-        ).select("cell", F.col(vec_col).alias("centroid"))
+        ).select("cell", F.col(VEC_COL).alias("centroid"))
         for _ in range(iters):
-            assigned = ivf_assign(df, cents, id_col, vec_col, "cell", round_scale)
-            cents = label_centroids(assigned, vec_col, "cell")
+            assigned = ivf_assign(df, cents, ID_COL, VEC_COL, "cell")
+            cents = label_centroids(assigned, VEC_COL, "cell")
         return cents
 
-    return memo(df, ("kmeans", id_col, vec_col, k, iters, round_scale), _train)
+    return memo(df, ("kmeans", k, iters), _train)
 
 
 def brute_force_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
-    round_scale: int = 5,
-    num_blocks: int = 8,
 ) -> DataFrame:
     """Exact embedding near-dup pairs: all (a < b) pairs with cosine ≥
     threshold. O(N²) compute — the correctness baseline the LSH/IVF variants
@@ -868,10 +835,10 @@ def brute_force_near_dup_pairs(
     sub-quadratic path at corpus scale.
 
     Fully distributed block-grid: rows hash (md5-derived, deterministic)
-    into ``num_blocks`` blocks; each of the B(B+1)/2 block pairs cogroups
+    into B = 8 blocks; each of the B(B+1)/2 block pairs cogroups
     into one ``applyInPandas`` task scoring an (N/B)×(N/B) tile with a
     vectorized numpy kernel. Nothing is collected or broadcast — peak task
-    memory is two block matrices + one tile, and ``num_blocks`` scales the
+    memory is two block matrices + one tile; a larger B would scale the
     tile down as N grows (tasks = B², so parallelism grows with it). The
     expression-HOF cosine on an exploded pair space is ~50× slower
     (measured 92s vs <2s at sf0.1) — interpreted per element, and the
@@ -888,14 +855,17 @@ def brute_force_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    id_dt = df.schema[id_col].dataType.simpleString()
-    scale = 10**round_scale
+    id_dt = df.schema[ID_COL].dataType.simpleString()
+    scale = 10**ROUND_SCALE
+    num_blocks = 8
 
     block = F.pmod(
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10).cast("long"),
+        F.conv(F.substring(F.md5(F.col(ID_COL).cast("string")), 1, 8), 16, 10).cast("long"),
         F.lit(num_blocks),
     ).cast("int")
-    rows = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"), block.alias("__blk"))
+    rows = df.select(
+        F.col(ID_COL).alias("__id"), F.col(VEC_COL).alias("__vec"), block.alias("__blk")
+    )
     # Replicate each row to its grid cells (bi <= bj) by exploding a small
     # int range — no self-join, each row ships at most `num_blocks` times.
     left = rows.select(
@@ -1006,7 +976,7 @@ def _vmat_or_nan(vs, dim: int):
 
 
 def _pair_cosine_scores(
-    joined: DataFrame, qid_t: str, nid_t: str, round_scale: int
+    joined: DataFrame, qid_t: str, nid_t: str
 ) -> DataFrame:
     """Rounded cosine per candidate pair, vectorized (r12): input columns
     (query_id, __qvec, neighbor_id, __nvec) → (query_id, neighbor_id,
@@ -1033,7 +1003,7 @@ def _pair_cosine_scores(
     import numpy as np
     import pandas as pd
 
-    scale = 10**round_scale
+    scale = 10**ROUND_SCALE
     joined = joined.withColumn(
         "__pnull",
         F.expr(
@@ -1141,12 +1111,9 @@ def _bucket_table_arrow(
 
 def cosine_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     num_planes: int | str = 6,
     num_tables: int | str = 4,
-    round_scale: int = 5,
     max_bucket_successors: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-table LSH + verify.
@@ -1197,7 +1164,7 @@ def cosine_near_dup_pairs(
         # deviates into a bucket-miss/bucket-dense regime. Same memoized
         # corpus_count freeze as the width.
         num_tables = adaptive_num_tables(corpus_count(df), num_planes)
-    dim = detect_fixed_dim(df, vec_col)
+    dim = detect_fixed_dim(df, VEC_COL)
     # The bucket table is the LSH index: (id, bucket) only — num_tables
     # short strings per vector, a sliver of the corpus width. persist()
     # materializes it once instead of recomputing the projections on BOTH
@@ -1208,7 +1175,7 @@ def cosine_near_dup_pairs(
 
     if dim is not None:
         bt = _bucket_table_arrow(
-            df, id_col, vec_col, num_planes, num_tables, dim, stride
+            df, ID_COL, VEC_COL, num_planes, num_tables, dim, stride
         )
     else:
         sigs = F.array(
@@ -1216,13 +1183,13 @@ def cosine_near_dup_pairs(
                 F.concat(
                     F.lit(f"{t}|"),
                     hyperplane_bucket(
-                        F.col(vec_col), num_planes, table=t, dim=dim, stride=stride
+                        F.col(VEC_COL), num_planes, table=t, dim=dim, stride=stride
                     ),
                 )
                 for t in range(num_tables)
             ]
         )
-        bt = df.select(F.col(id_col).alias("vid"), F.explode(sigs).alias("bucket"))
+        bt = df.select(F.col(ID_COL).alias("vid"), F.explode(sigs).alias("bucket"))
     b = persist_tracked(bt)
     # Candidate-dedup partitioning (r16, guide §2.5/§2.2): the exchange under
     # this ``distinct`` carries only (a_id, b_id) ids — a couple of MB even
@@ -1286,9 +1253,9 @@ def cosine_near_dup_pairs(
         " x -> x * x), 0.0D, (acc, x) -> acc + x))"
     )
     v = df.selectExpr(
-        f"`{id_col}` AS __id",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS __vec",
-        norm_sql.format(v=vec_col) + " AS __norm",
+        f"`{ID_COL}` AS __id",
+        f"transform(`{VEC_COL}`, x -> CAST(x AS DOUBLE)) AS __vec",
+        norm_sql.format(v=VEC_COL) + " AS __norm",
     )
     va = v.selectExpr("__id AS a_id", "__vec AS __a_vec", "__norm AS __a_norm")
     vb = v.selectExpr("__id AS b_id", "__vec AS __b_vec", "__norm AS __b_norm")
@@ -1302,19 +1269,16 @@ def cosine_near_dup_pairs(
         "a_id",
         "b_id",
         "round(aggregate(zip_with(__a_vec, __b_vec, (x, y) -> x * y), 0.0D,"
-        f" (acc, x) -> acc + x) / (__a_norm * __b_norm), {round_scale})"
+        f" (acc, x) -> acc + x) / (__a_norm * __b_norm), {ROUND_SCALE})"
         " AS cosine_sim",
     ).where(f"cosine_sim >= {threshold!r}D")
 
 
 def semantic_dedup(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.4,
-    round_scale: int = 5,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     k-means-cluster the embedding corpus, restrict the quadratic near-dup
@@ -1351,22 +1315,21 @@ def semantic_dedup(
     oracle hashes), and emits only the dropped ids. Peak task memory is
     the cell matrices plus one chunk×cell tile (a-axis chunked), so a
     skew-bloated cell degrades to more chunk passes, not OOM."""
-    cells = kmeans_cells(df, id_col, vec_col, k, iters, round_scale)
+    cells = kmeans_cells(df, k, iters)
     sides = cells.select(
-        "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+        "cell", F.col(ID_COL).alias("__id"), F.col(VEC_COL).alias("__vec")
     )
     dropped = _cross_dropped_ids(
         sides,
         sides,
-        df.schema[id_col].dataType.simpleString(),
+        df.schema[ID_COL].dataType.simpleString(),
         "__dropped_id",
         threshold,
-        round_scale,
     )
     return cells.join(
-        dropped, cells[id_col] == F.col("__dropped_id"), "left"
+        dropped, cells[ID_COL] == F.col("__dropped_id"), "left"
     ).select(
-        id_col,
+        ID_COL,
         "cell",
         F.when(F.col("__dropped_id").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("kept"),
     )
@@ -1376,12 +1339,9 @@ def fold_semantic_index(
     spark,
     target_root: str,
     new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.4,
-    round_scale: int = 5,
 ) -> None:
     """Fold a batch of NEW vectors into a persistent semantic-dedup index
     (the incremental form of :func:`semantic_dedup`, same lifecycle as
@@ -1408,9 +1368,9 @@ def fold_semantic_index(
     cents = read_table(spark, target_root, "centroids")
     parts = {}
     if cents is None:
-        cents = kmeans_centroids(new_vectors, id_col, vec_col, k, iters, round_scale)
+        cents = kmeans_centroids(new_vectors, k, iters)
         parts["centroids"] = cents
-    assigned = ivf_assign(new_vectors, cents, id_col, vec_col, "cell", round_scale)
+    assigned = ivf_assign(new_vectors, cents, ID_COL, VEC_COL, "cell")
 
     stored = read_table(spark, target_root, "vectors")
     universe = assigned if stored is None else assigned.unionByName(stored)
@@ -1420,15 +1380,14 @@ def fold_semantic_index(
     # vectorized, only loser ids come back
     dropped = _cross_dropped_ids(
         assigned.select(
-            "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+            "cell", F.col(ID_COL).alias("__id"), F.col(VEC_COL).alias("__vec")
         ),
         universe.select(
-            "cell", F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+            "cell", F.col(ID_COL).alias("__id"), F.col(VEC_COL).alias("__vec")
         ),
-        new_vectors.schema[id_col].dataType.simpleString(),
-        id_col,
+        new_vectors.schema[ID_COL].dataType.simpleString(),
+        ID_COL,
         threshold,
-        round_scale,
     )
     parts["vectors"] = assigned
     # ADVICE r13: the kernel dedupes only within a cell cogroup — an id
@@ -1446,7 +1405,6 @@ def _cross_dropped_ids(
     id_dt: str,
     out_col: str,
     threshold: float,
-    round_scale: int,
 ) -> DataFrame:
     """Per-cell new×universe election of every semantic-dedup path
     (:func:`semantic_dedup` passes the same rows on both sides,
@@ -1470,7 +1428,7 @@ def _cross_dropped_ids(
     import numpy as np
     import pandas as pd
 
-    scale = 10**round_scale
+    scale = 10**ROUND_SCALE
     left = new_rows.withColumn("__pnull", F.expr("exists(__vec, x -> x is null)"))
     # fresh aliases on the right: both sides can derive from the same plan
     # (the brute_force_near_dup_pairs cogroup self-join note)
@@ -1531,15 +1489,15 @@ def _cross_dropped_ids(
     )
 
 
-def semantic_index_state(spark, target_root: str, id_col: str = "vec_id") -> DataFrame:
+def semantic_index_state(spark, target_root: str) -> DataFrame:
     """Accumulated (id, cell, kept) of a folded semantic-dedup index."""
     from ..streaming.store import read_table
 
     vecs = read_table(spark, target_root, "vectors")
     dropped = read_table(spark, target_root, "dropped")
-    d = dropped.select(F.col(id_col).alias("__dropped_id")).distinct()
-    return vecs.join(d, vecs[id_col] == F.col("__dropped_id"), "left").select(
-        id_col,
+    d = dropped.select(F.col(ID_COL).alias("__dropped_id")).distinct()
+    return vecs.join(d, vecs[ID_COL] == F.col("__dropped_id"), "left").select(
+        ID_COL,
         "cell",
         F.when(F.col("__dropped_id").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("kept"),
     )
@@ -1551,9 +1509,6 @@ def mmr_rerank(
     *,
     k: int = 8,
     n_candidates: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_scale: int = 5,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein
     1998, public): greedily select k of the ``n_candidates`` most relevant
@@ -1566,20 +1521,17 @@ def mmr_rerank(
     greedy loop is ONE JVM fold (``aggregate`` over sequence(1,k)) on a
     one-row-per-query matrix column — no per-step shuffle, no Python
     worker, no driver loop. Determinism: similarities are rounded to
-    ``round_scale`` before any comparison, ties break on candidate rank,
+    ``ROUND_SCALE`` before any comparison, ties break on candidate rank,
     and ``+0.0`` normalizes ``-0.0`` so the score sort is engine-invariant.
 
     Returns (query_id, pos, neighbor_id, relevance), pos = 1..k in
     selection order.
     """
-    cand = cosine_topk(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=n_candidates,
-        round_scale=round_scale,
-    )
+    cand = cosine_topk(corpus, queries, k=n_candidates)
     e = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("__v"),
-        l2_norm(_to_double(F.col(vec_col))).alias("__n"),
+        F.col(ID_COL).alias("neighbor_id"),
+        _to_double(F.col(VEC_COL)).alias("__v"),
+        l2_norm(_to_double(F.col(VEC_COL))).alias("__n"),
     )
     ce = cand.join(e, "neighbor_id")
     a = ce.select(
@@ -1607,7 +1559,7 @@ def mmr_rerank(
         "b_rn",
         F.round(
             dot(F.col("__av"), F.col("__bv")) / (F.col("__an") * F.col("__bn")),
-            round_scale,
+            ROUND_SCALE,
         ).alias("sim"),
     )
     rowsim = pairs.groupBy("query_id", "a_rn", "a_id", "rel").agg(

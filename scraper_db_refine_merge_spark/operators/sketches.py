@@ -155,23 +155,16 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _cms_bucket(value: Column, row: int, width: int) -> Column:
+def _cms_bucket(value: Column, row: int) -> Column:
     """Row-independent bucket: md5 of "row:value" (the row prefix makes the
     d hash functions independent slices of one md5 family), first 8 hex
-    chars → 32-bit int mod width. Reproducible in any engine with
+    chars → 32-bit int mod CMS_WIDTH. Reproducible in any engine with
     md5/substring — the oracle mirrors it via '0x…'::UBIGINT."""
     h = F.md5(F.concat(F.lit(f"{row}:"), value.cast("string")).cast("binary"))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width).cast("int")
+    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % CMS_WIDTH).cast("int")
 
 
-def cms_registers(
-    df: DataFrame,
-    group_cols: list[str],
-    key_col: str,
-    weight_col: str | None = None,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_registers(df: DataFrame, group_cols: list[str], key_col: str) -> DataFrame:
     """(group..., row, bucket, cnt): count-min sketch state — the mergeable
     FREQUENCY sketch completing the family (HLL = distinct, histogram =
     quantiles, CMS = per-key counts). Merge = element-wise SUM of cells
@@ -181,34 +174,27 @@ def cms_registers(
     Shape: explode each input row to its d (row, bucket) cells, ONE
     partial-aggregated shuffle — map-side combine collapses each partition
     to ≤ d·w cells before the exchange, so shuffle volume is O(partitions ·
-    d·w), not O(rows)."""
-    w = F.col(weight_col) if weight_col else F.lit(1)
+    d·w), not O(rows). d = CMS_DEPTH, w = CMS_WIDTH; each row counts 1."""
     cells = F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("row"),
-                    _cms_bucket(F.col(key_col), i, width).alias("bucket"),
+                    _cms_bucket(F.col(key_col), i).alias("bucket"),
                 )
-                for i in range(depth)
+                for i in range(CMS_DEPTH)
             ]
         )
     ).alias("rb")
     return (
-        df.select(*group_cols, cells, w.alias("__w"))
+        df.select(*group_cols, cells, F.lit(1).alias("__w"))
         .select(*group_cols, F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"), "__w")
         .groupBy(*group_cols, "row", "bucket")
         .agg(F.sum("__w").alias("cnt"))
     )
 
 
-def cms_estimate(
-    registers: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_estimate(registers: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     """Per-key count estimate = min over the d rows of the key's cell — the
     classic CMS upper-biased point query. ``keys`` is the candidate-key
     table (at scale you pass candidates, not the full key universe); the
@@ -221,9 +207,9 @@ def cms_estimate(
                 *[
                     F.struct(
                         F.lit(i).alias("row"),
-                        _cms_bucket(F.col(key_col), i, width).alias("bucket"),
+                        _cms_bucket(F.col(key_col), i).alias("bucket"),
                     )
-                    for i in range(depth)
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("rb"),
@@ -312,27 +298,26 @@ QD_U = 1 << QD_LEVELS  # integer universe [0, 65536)
 QD_K = 256  # compression parameter: sketch ~O(k) nodes, error ≤ L·⌈N/k⌉
 
 
-def _qd_level(node: Column, levels: int = QD_LEVELS) -> Column:
+def _qd_level(node: Column) -> Column:
     """floor(log2(node)) as a pure-integer CASE ladder (no floating log,
     no bin()-padding assumptions — the same 17-branch expression is
     emitted in the DuckDB oracle via ``_qd_level_sql``)."""
     out = F.lit(0)
-    for lv in range(1, levels + 1):
+    for lv in range(1, QD_LEVELS + 1):
         out = F.when(node >= F.lit(1 << lv), F.lit(lv)).otherwise(out)
     return out
 
 
-def qdigest_compress(
-    state: DataFrame, group_cols: list[str], levels: int = QD_LEVELS, k: int = QD_K
-) -> DataFrame:
-    """Compress a (group..., node, cnt) table into q-digest form: L rounds
-    bottom-up; round lv merges sibling pairs at level lv whose combined
-    count ≤ ⌈N/k⌉ into their parent. N is the per-group total (counts are
-    conserved, so it can be re-derived from any state). Deterministic:
+def qdigest_compress(state: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Compress a (group..., node, cnt) table into q-digest form: L =
+    QD_LEVELS rounds bottom-up; round lv merges sibling pairs at level lv
+    whose combined count ≤ ⌈N/QD_K⌉ into their parent. N is the per-group
+    total (counts are conserved, so it can be re-derived from any state).
+    Deterministic:
     integer-only (Python ints — no overflow), order-independent.
 
     Executed as ONE shuffle on the group key + a per-group Arrow task: a
-    group's state is ≤ 2^levels rows BY CONSTRUCTION (the dyadic tree has
+    group's state is ≤ 2^L rows BY CONSTRUCTION (the dyadic tree has
     that many leaves) regardless of data volume, so per-group local
     compression is bounded-memory at any corpus scale, and parallelism
     grows with the number of groups. The pure-DataFrame formulation (L
@@ -352,8 +337,8 @@ def qdigest_compress(
         for node, c in zip(pdf["node"], pdf["cnt"]):
             counts[int(node)] = counts.get(int(node), 0) + int(c)
         n = sum(counts.values())
-        thr = max(1, (n + k - 1) // k)
-        for lv in range(levels, 0, -1):
+        thr = max(1, (n + QD_K - 1) // QD_K)
+        for lv in range(QD_LEVELS, 0, -1):
             lo, hi = 1 << lv, 1 << (lv + 1)
             sib: dict[int, int] = {}
             for node, c in counts.items():
@@ -373,29 +358,20 @@ def qdigest_compress(
     return state.groupBy(*group_cols).applyInPandas(_compress, out_schema)
 
 
-def qdigest_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    levels: int = QD_LEVELS,
-    k: int = QD_K,
-) -> DataFrame:
+def qdigest_sketch(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """(group..., node, cnt) q-digest over an integer value column already
-    mapped into [0, 2^levels). The ONLY corpus-scale shuffle is the leaf
+    mapped into [0, QD_U). The ONLY corpus-scale shuffle is the leaf
     aggregation (groupBy value — partial-aggregated map-side); the L
-    compression rounds run over ≤2^levels sketch rows per group."""
-    u = 1 << levels
+    compression rounds run over ≤QD_U sketch rows per group."""
     leaves = (
-        df.select(*group_cols, (F.lit(u) + F.col(value_col).cast("long")).alias("node"))
+        df.select(*group_cols, (F.lit(QD_U) + F.col(value_col).cast("long")).alias("node"))
         .groupBy(*group_cols, "node")
         .agg(F.count("*").alias("cnt"))
     )
-    return qdigest_compress(leaves, group_cols, levels, k)
+    return qdigest_compress(leaves, group_cols)
 
 
-def qdigest_merge(
-    a: DataFrame, b: DataFrame, group_cols: list[str], levels: int = QD_LEVELS, k: int = QD_K
-) -> DataFrame:
+def qdigest_merge(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
     """Merge two q-digests: SUM counts per node, recompress under the
     combined per-group N. Counts are conserved by compression, so the
     merged sketch summarizes exactly N_a + N_b observations."""
@@ -404,22 +380,20 @@ def qdigest_merge(
         .groupBy(*group_cols, "node")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    return qdigest_compress(summed, group_cols, levels, k)
+    return qdigest_compress(summed, group_cols)
 
 
-def qdigest_quantiles(
-    sk: DataFrame, group_cols: list[str], qpcts: list[int], levels: int = QD_LEVELS
-) -> DataFrame:
+def qdigest_quantiles(sk: DataFrame, group_cols: list[str], qpcts: list[int]) -> DataFrame:
     """Per-group quantile estimates from a q-digest: nodes sorted by
     interval upper bound, first node whose running count reaches
     ⌈qpct·N/100⌉ reports its upper bound (the classic q-digest query —
     estimates are ≥ the true quantile by at most the rank error). Output:
     (group..., qpct, est_scaled, n_total) — all integers, bit-reproducible."""
-    lv = _qd_level(F.col("node"), levels)
+    lv = _qd_level(F.col("node"))
     h = sk.withColumn("__lv", lv).withColumn(
         "__hi",
         (F.col("node") - F.expr("shiftleft(1L, __lv)") + 1)
-        * F.expr(f"shiftleft(1L, {levels} - __lv)")
+        * F.expr(f"shiftleft(1L, {QD_LEVELS} - __lv)")
         - 1,
     )
     w_cum = Window.partitionBy(*group_cols).orderBy("__hi", "node")
@@ -439,11 +413,11 @@ def qdigest_quantiles(
     )
 
 
-def _qd_level_sql(col: str, levels: int = QD_LEVELS) -> str:
+def _qd_level_sql(col: str) -> str:
     """The 17-branch integer CASE ladder for floor(log2(node)) — shared
     between the Spark expression builder and the DuckDB oracle text."""
     branches = " ".join(
-        f"WHEN {col} >= {1 << lv} THEN {lv}" for lv in range(levels, 0, -1)
+        f"WHEN {col} >= {1 << lv} THEN {lv}" for lv in range(QD_LEVELS, 0, -1)
     )
     return f"(CASE {branches} ELSE 0 END)"
 

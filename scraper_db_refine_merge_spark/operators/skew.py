@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, salt_from: list[str], n_salts: int, col_name: str = "__salt") -> DataFrame:
-    """Deterministic salt in [0, n_salts) from a hash of stable columns."""
-    return df.withColumn(col_name, F.pmod(F.hash(*[F.col(c) for c in salt_from]), F.lit(n_salts)))
+def with_salt(df: DataFrame, salt_from: list[str], n_salts: int) -> DataFrame:
+    """Deterministic ``__salt`` in [0, n_salts) from a hash of stable columns."""
+    return df.withColumn("__salt", F.pmod(F.hash(*[F.col(c) for c in salt_from]), F.lit(n_salts)))
 
 
 def salted_join(
@@ -45,32 +45,25 @@ def salted_join(
     on: list[str],
     n_salts: int = 16,
     salt_from: list[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the skewed side salted and the other side replicated.
+    """Inner equi-join with the skewed side salted and the other side
+    replicated.
 
     The skewed side gets a deterministic salt; the other side is exploded
     ×``n_salts`` so every (key, salt) bucket finds its match. Shuffle volume
     for the replicated side grows ×n_salts — use when that side is much
     smaller than the skewed side but too big (or too dynamic) to broadcast.
 
-    Result equals ``skewed.join(other, on, how)`` row-for-row for
-    ``inner``/``left``/``left_semi``/``left_anti`` ONLY: for right/full
-    outer joins the replicated side's unmatched rows would surface once per
-    salt (n_salts duplicates), so those modes are rejected.
+    Result equals ``skewed.join(other, on)`` row-for-row. (A right or
+    full outer form would surface the replicated side's unmatched rows once
+    per salt.)
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports {sorted(allowed)}; got {how!r} — right/full "
-            "outer would duplicate unmatched replicated-side rows n_salts times"
-        )
     salt_from = salt_from or skewed.columns
     s = with_salt(skewed, salt_from, n_salts)
     r = other.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
-    out = s.join(r, [*on, "__salt"], how)
+    out = s.join(r, [*on, "__salt"], "inner")
     return out.drop("__salt")
 
 
@@ -79,7 +72,6 @@ def sessionize_two_phase(
     key_cols: list[str],
     ts_col: str,
     gap_sec: int,
-    block_sec: int | None = None,
     order_tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Skew-hardened gap-sessionization: per-key ``(session_count,
@@ -89,7 +81,7 @@ def sessionize_two_phase(
     single-task straggler at scale).
 
     Phase 1 windows over ``(key, time-block)`` — ``block =
-    floor(epoch/block_sec)`` is a deterministic time-range salt, so a hot
+    floor(epoch/gap_sec)`` is a deterministic time-range salt, so a hot
     key's events spread across as many tasks as it has active blocks —
     counting within-block session starts exactly as the naive lag-window
     does. Phase 2 fixes the block boundaries on block SUMMARIES (one row
@@ -97,12 +89,12 @@ def sessionize_two_phase(
     the first event of a block follows the last event of the key's
     previous non-empty block by ≤ gap; each such continuation was counted
     as a fresh start in phase 1, so it subtracts one. The phase-2 window
-    per key is bounded by CALENDAR TIME (range/block_sec summaries),
+    per key is bounded by CALENDAR TIME (range/gap_sec summaries),
     independent of event density — the property that kills the straggler.
 
-    Exact for ANY block_sec > 0 (empty blocks are skipped by the lag over
+    Exact for any block width (empty blocks are skipped by the lag over
     non-empty summaries; equal timestamps always share a block because the
-    block is derived from ts). Default block_sec = gap_sec: finest
+    block is derived from ts). The block is gap_sec wide: the finest
     granularity that still lets most sessions resolve in phase 1.
     ``order_tiebreak``: extra columns making the within-block order total
     (mirrors the naive window's ORDER BY ts, tiebreak...; the per-key
@@ -114,10 +106,9 @@ def sessionize_two_phase(
     bounded, or carry phase-1 local ids + phase-2 offsets if ids are
     needed at scale.
     """
-    block_sec = block_sec or gap_sec
     tb = order_tiebreak or []
     ts_long = F.col(ts_col).cast("long")
-    b = df.withColumn("__block", F.floor(ts_long / F.lit(block_sec)))
+    b = df.withColumn("__block", F.floor(ts_long / F.lit(gap_sec)))
     w1 = Window.partitionBy(*key_cols, "__block").orderBy(ts_col, *tb)
     prev = F.lag(ts_col).over(w1)
     start = F.when(

@@ -74,13 +74,11 @@ def char_grams(
     text_col: str,
     length: int,
     stride: int = 1,
-    hashed: bool = True,
 ) -> DataFrame:
     """One row per (full) character position: ``(doc, pos, h)``.
 
     ``pos`` is 1-based; only positions with a full ``length``-char gram are
-    emitted. ``h`` is md5 of the gram (``hashed=False`` keeps the raw gram
-    — tests only; production shuffles hashes). ``stride=k`` emits every
+    emitted. ``h`` is md5 of the gram. ``stride=k`` emits every
     k-th position: an equi-join of a stride-k side against a stride-1 side
     finds every shared span of length ≥ ``length``+k-1 (any such span
     contains a full gram starting on a stride-k boundary).
@@ -103,7 +101,7 @@ def char_grams(
             ).alias("pos"),
             F.col(text_col),
         )
-        .select("doc", "pos", (F.md5(gram) if hashed else gram).alias("h"))
+        .select("doc", "pos", F.md5(gram).alias("h"))
     )
 
 
@@ -340,42 +338,36 @@ def redact_repeated_spans(
 _MAX_GROUP_BUCKETS = 2048
 
 
-def _resolve_n_buckets(spark, n_buckets: int | None) -> int:
-    """Bucket count for :func:`_dense_group_ids`: explicit argument wins,
-    else the ``spark.graft.substr.denseGroupBuckets`` conf knob, else
+def _resolve_n_buckets(spark) -> int:
+    """Bucket count for :func:`_dense_group_ids`: the
+    ``spark.graft.substr.denseGroupBuckets`` conf knob, else
     ``spark.sql.shuffle.partitions``. Non-numeric conf values (AQE-managed
     deployments set shuffle.partitions to 'auto') fall back to 200 instead
     of raising; the result is clamped to [1, 2048] — a wide-cluster 100-TB
     run raises the knob toward the cap so each bucket's window sort stays
     spill-free, while a pathological conf can't inline a million-element
     literal array into every row."""
-    if n_buckets is None:
-        raw = spark.conf.get(
-            "spark.graft.substr.denseGroupBuckets",
-            spark.conf.get("spark.sql.shuffle.partitions", "200"),
-        )
-        try:
-            n_buckets = int(raw)
-        except (TypeError, ValueError):  # e.g. 'auto' under AQE management
-            n_buckets = 200
-    return max(1, min(int(n_buckets), _MAX_GROUP_BUCKETS))
+    raw = spark.conf.get(
+        "spark.graft.substr.denseGroupBuckets",
+        spark.conf.get("spark.sql.shuffle.partitions", "200"),
+    )
+    try:
+        n_buckets = int(raw)
+    except (TypeError, ValueError):  # e.g. 'auto' under AQE management
+        n_buckets = 200
+    return max(1, min(n_buckets, _MAX_GROUP_BUCKETS))
 
 
-def _dense_group_ids(
-    d: DataFrame,
-    key_cols: list[str],
-    out_col: str = "r",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Deterministic dense GROUP IDS for ``key_cols`` under an
+def _dense_group_ids(d: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Deterministic dense GROUP IDS ``r`` for ``key_cols`` under an
     equality-only contract: every distinct key tuple gets a unique long in
     1..#distinct, equal tuples share it, and the assignment is stable
     across runs/partitionings — but carries NO order relation to the keys.
 
     Shape (r10, replacing per-round with_global_ranks in the ladder):
-    hash-bucket the key (xxhash64 mod ``n_buckets`` — equal keys always
-    co-bucket; see :func:`_resolve_n_buckets` for the default and the
-    conf knob), dense_rank within each bucket over the key's total
+    hash-bucket the key (xxhash64 mod the bucket count — equal keys always
+    co-bucket; see :func:`_resolve_n_buckets` for the conf knob),
+    dense_rank within each bucket over the key's total
     order, then add per-bucket offsets so bucket id ranges are disjoint.
     The offsets come from one |buckets|-row aggregate COLLECTED to the
     driver and inlined as a literal array — the same driver-side scalar
@@ -393,7 +385,7 @@ def _dense_group_ids(
     rows.
     """
     spark = d.sparkSession
-    n_buckets = _resolve_n_buckets(spark, n_buckets)
+    n_buckets = _resolve_n_buckets(spark)
     dd = d.withColumn(
         "__b", F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
     )
@@ -409,8 +401,8 @@ def _dense_group_ids(
         acc += counts.get(i, 0)
     off_arr = F.array(*[F.lit(o).cast("long") for o in offsets])
     return (
-        win.withColumn(out_col, F.element_at(off_arr, F.col("__b") + 1) + F.col("__lr"))
-        .drop("__b", "__lr", *[c for c in key_cols if c != out_col])
+        win.withColumn("r", F.element_at(off_arr, F.col("__b") + 1) + F.col("__lr"))
+        .drop("__b", "__lr", *[c for c in key_cols if c != "r"])
     )
 
 
@@ -509,6 +501,10 @@ OCC_PROBE_MOD = 100
 #: (the corpus has ≲ OCC_PROBE_MOD × this many positions)
 OCC_PROBE_MIN_ROWS = 1000
 
+#: the hottest sampled gram's share of sampled positions above which the
+#: profile takes the groupBy regime
+OCC_SKEW_THRESHOLD = 0.10
+
 
 def _occ_probe(g: DataFrame, mod: int):
     """(max group count, total rows) over a 1/mod row-level hash sample of
@@ -531,8 +527,6 @@ def repeated_span_profile(
     id_col: str,
     text_col: str,
     length: int,
-    skew_threshold: float = 0.10,
-    mode: str | None = None,
 ) -> DataFrame:
     """Per-doc duplication profile over all ``length``-char positions:
     ``(doc, n_grams, n_repeated, max_occ)`` where n_repeated counts
@@ -553,38 +547,30 @@ def repeated_span_profile(
       — the right plan when one span dominates (exactly the corpora
       max_occ exists to profile).
 
-    ``mode=None`` means ``auto``, which probes a ~1% row-level hash
-    sample of the positions (one small aggregation job, memoized per
-    (source frame, params)): if the hottest sampled gram holds more than
-    ``skew_threshold`` of sampled positions, take groupby. Both regimes
+    The choice probes a ~1% row-level hash sample of the positions (one
+    small aggregation job, memoized per (source frame, params)): if the
+    hottest sampled gram holds more than ``OCC_SKEW_THRESHOLD`` of sampled
+    positions, take groupby. Both regimes
     produce IDENTICAL rows (the switch is observable only in the plan),
     so the oracle gate is regime-independent."""
     g = suffix_ngram_groups(df, id_col, text_col, length)
-    mode = "auto" if mode is None else mode
-    if mode not in ("auto", "window", "groupby"):
-        raise ValueError(f"unknown repeated_span_profile mode {mode!r}")
-    if mode == "auto":
 
-        def _skewed() -> bool:
-            probe = _occ_probe(g, OCC_PROBE_MOD)
-            if probe is None or not probe["tot"] or probe["tot"] < OCC_PROBE_MIN_ROWS:
-                # sample too small to resolve the threshold → exact probe
-                # (bounded: the corpus is ≲ mod × min_rows positions)
-                probe = _occ_probe(g, 1)
-            return bool(
-                probe and probe["tot"] and probe["mx"] / probe["tot"] > skew_threshold
-            )
+    def _skewed() -> bool:
+        probe = _occ_probe(g, OCC_PROBE_MOD)
+        if probe is None or not probe["tot"] or probe["tot"] < OCC_PROBE_MIN_ROWS:
+            # sample too small to resolve the threshold → exact probe
+            # (bounded: the corpus is ≲ mod × min_rows positions)
+            probe = _occ_probe(g, 1)
+        return bool(
+            probe and probe["tot"] and probe["mx"] / probe["tot"] > OCC_SKEW_THRESHOLD
+        )
 
-        key = ("occ_skew", length, skew_threshold, OCC_PROBE_MOD, id_col, text_col)
-        skewed = memo(df, key, _skewed)
-        mode = "groupby" if skewed else "window"
-
-    if mode == "window":
-        w = Window.partitionBy("g1", "g2")
-        counted = g.withColumn("__n", F.count("*").over(w))
-    else:
+    if memo(df, ("occ_skew", length, OCC_PROBE_MOD, id_col, text_col), _skewed):
         cnt = g.groupBy("g1", "g2").agg(F.count("*").alias("__n"))
         counted = g.join(cnt, ["g1", "g2"])
+    else:
+        w = Window.partitionBy("g1", "g2")
+        counted = g.withColumn("__n", F.count("*").over(w))
     return counted.groupBy("doc").agg(
         F.count("*").alias("n_grams"),
         F.sum(F.when(F.col("__n") > 1, 1).otherwise(0))

@@ -54,25 +54,19 @@ def asof_join(
     on,
     left_time: str,
     right_time: str,
-    direction: str = "backward",
-    tolerance_us: int | None = None,
     right_tiebreak: str | None = None,
     matched_time_alias: str | None = None,
 ) -> DataFrame:
     """For each left row, attach the nearest right row per key at-or-before
-    (``backward``) / at-or-after (``forward``) the left row's time; left
-    rows without a match keep NULL right columns (left-join semantics).
+    the left row's time (a backward as-of join); left rows without a match
+    keep NULL right columns (left-join semantics).
 
     ``right`` must be pre-projected to: key columns, ``right_time``, and the
     payload columns to carry (whose names must not collide with ``left``'s).
-    Ties on ``right_time`` resolve to the greatest ``right_tiebreak``
-    (backward) / least (forward) — pass a unique column for determinism.
-    ``tolerance_us`` bounds the match distance in microseconds (for numeric
-    time columns: in the column's own units); farther matches null out.
-    ``matched_time_alias`` additionally exposes the matched right time.
+    Ties on ``right_time`` resolve to the greatest ``right_tiebreak`` —
+    pass a unique column for determinism. ``matched_time_alias``
+    additionally exposes the matched right time.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"unknown direction {direction!r}")
     keys = _keys(on)
     carried = [c for c in right.columns if c not in keys and c != right_time]
     clash = (set(carried) | {matched_time_alias}) & set(left.columns)
@@ -102,19 +96,16 @@ def asof_join(
     )
     u = lu.unionByName(ru)
 
-    back = direction == "backward"
-    t_ord = F.col("__t").asc() if back else F.col("__t").desc()
     tie_ord = []
     if right_tiebreak is not None:
-        tie = F.col(right_tiebreak)
         # NULL tiebreaks (the left rows) must not sort between right rows
         # and the left rows they should match; side asc already dominates.
-        tie_ord = [tie.asc_nulls_first() if back else tie.desc_nulls_first()]
+        tie_ord = [F.col(right_tiebreak).asc_nulls_first()]
     # right rows (side 0) sort before left rows at equal time, so an
     # exactly-simultaneous right row matches.
     w = (
         Window.partitionBy(*keys)
-        .orderBy(t_ord, F.col("__side").asc(), *tie_ord)
+        .orderBy(F.col("__t").asc(), F.col("__side").asc(), *tie_ord)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = {c: F.last(c, ignorenulls=True).over(w) for c in carried}
@@ -122,14 +113,6 @@ def asof_join(
 
     out = u.select(*keys, "__t", "__side", *lpayload, *[v.alias(k) for k, v in matched.items()])
     out = out.filter(F.col("__side") == 1)
-
-    if tolerance_us is not None:
-        rt_t = _time_expr(out, "__rt")
-        gap = (F.col("__t") - rt_t) if back else (rt_t - F.col("__t"))
-        ok = F.col("__rt").isNotNull() & (gap <= F.lit(tolerance_us))
-        for c in carried:
-            out = out.withColumn(c, F.when(ok, F.col(c)))
-        out = out.withColumn("__rt", F.when(ok, F.col("__rt")))
 
     if matched_time_alias is not None:
         out = out.withColumnRenamed("__rt", matched_time_alias)

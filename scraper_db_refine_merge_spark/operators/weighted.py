@@ -55,7 +55,6 @@ def weighted_sample_with_replacement(
     weight_col: str,
     order_cols: list[str],
     seed: str = "ws",
-    num_buckets: int = SAMPLE_BUCKETS,
 ) -> DataFrame:
     """k rows drawn with replacement, P(row) ∝ its positive integer weight;
     output = the row's columns plus ``sample_idx`` (0..k-1), one output row
@@ -86,7 +85,7 @@ def weighted_sample_with_replacement(
     cum = persist_tracked(cum.withColumn("__lo", F.col("__hi") - w))
 
     total = cum.agg(F.max("__hi").alias("__W")).withColumn(
-        "__bs", F.expr(f"(__W + {num_buckets - 1}) DIV {num_buckets}")
+        "__bs", F.expr(f"(__W + {SAMPLE_BUCKETS - 1}) DIV {SAMPLE_BUCKETS}")
     )  # 1 row
     probes = (
         total.crossJoin(
@@ -119,7 +118,6 @@ def weighted_sample_stratified(
     weight_col: str,
     order_cols: list[str],
     seed: str = "ws",
-    num_buckets: int = SAMPLE_BUCKETS,
 ) -> DataFrame:
     """``k_per_stratum`` weighted draws WITHIN each stratum (the q48-style
     per-group quota composed with weighted selection — data mixing with
@@ -138,7 +136,7 @@ def weighted_sample_stratified(
     totals = (
         cum.groupBy(stratum_col)
         .agg(F.sum(w).alias("__Ws"), F.min(F.col("__g") - w).alias("__start"))
-        .withColumn("__bs", F.expr(f"(__Ws + {num_buckets - 1}) DIV {num_buckets}"))
+        .withColumn("__bs", F.expr(f"(__Ws + {SAMPLE_BUCKETS - 1}) DIV {SAMPLE_BUCKETS}"))
     )  # one row per stratum
     probes = (
         totals.crossJoin(
@@ -184,9 +182,6 @@ def weighted_sample_without_replacement(
     weight_col: str,
     order_cols: list[str],
     seed: str = "wsr",
-    num_buckets: int = SAMPLE_BUCKETS,
-    initial_probes: int | None = None,
-    max_rounds: int = 16,
 ) -> DataFrame:
     """k DISTINCT rows, weighted without replacement (r16, VERDICT r15
     item 4 — the k-distinct form the with-replacement sampler documents
@@ -205,14 +200,14 @@ def weighted_sample_without_replacement(
     the module doc.
 
     The probe count is data-determined: rounds double the probe prefix
-    (``initial_probes`` default ``max(4k, 64)``) until it covers ≥ k
+    (starting at ``max(4k, 64)`` probes) until it covers ≥ k
     distinct rows, and the result is INVARIANT to the stopping round —
     first-k-distinct by min probe index only depends on the stream prefix
     up to the k-th distinct hit, so any probe count at or past that point
     (including an oracle's fixed larger one) selects the identical rows
     with identical ranks. Each round is one bucketed probe equi-join (the
     q164 shape) + a count; under heavy weight skew rounds grow
-    geometrically until ``max_rounds`` (then raises — rescale weights).
+    geometrically for up to 16 rounds (then raises — rescale weights).
 
     Degenerate contracts: fewer than k positive-weight rows returns ALL of
     them, ``sample_rank`` ordered by ``order_cols`` (a size-≥n WOR sample
@@ -240,14 +235,15 @@ def weighted_sample_without_replacement(
         )
 
     total = cum.agg(F.max("__hi").alias("__W")).withColumn(
-        "__bs", F.expr(f"(__W + {num_buckets - 1}) DIV {num_buckets}")
+        "__bs", F.expr(f"(__W + {SAMPLE_BUCKETS - 1}) DIV {SAMPLE_BUCKETS}")
     )  # 1 row
     rows = cum.crossJoin(F.broadcast(total)).withColumn(
         "__b",
         F.explode(F.sequence(F.expr("__lo DIV __bs"), F.expr("(__hi - 1) DIV __bs"))),
     )
     spark = _spark_of(df)
-    m = initial_probes or max(4 * k, 64)
+    max_rounds = 16
+    m = max(4 * k, 64)
     first_hits = None
     for _ in range(max_rounds):
         probes = (

@@ -75,8 +75,8 @@ def spark_money_sum(c: str) -> str:
     return f"CAST(SUM(CAST({spark_cents(c)} AS DECIMAL(38,0))) / 100 AS DOUBLE)"
 
 
-def spark_money_avg(c: str, scale: int = 4) -> str:
-    return f"ROUND({spark_money_sum(c)} / COUNT({c}), {scale})"
+def spark_money_avg(c: str) -> str:
+    return f"ROUND({spark_money_sum(c)} / COUNT({c}), 4)"
 
 
 def spark_disc_price_sum(price: str, discount: str) -> str:

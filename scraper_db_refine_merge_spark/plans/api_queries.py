@@ -1,12 +1,14 @@
 """The reference's read-API query surface as engine functions (SURVEY §3.1,
-Phase 4; SURVEY P1, P3-P10, O1, O3): each FastAPI endpoint
+Phase 4; SURVEY P1, O1, O3): each FastAPI endpoint
 (database/api_server.py) becomes a function
 ``(events_df, params) -> DataFrame``.
 
 The input is the unified events table (gold layer: nested structs + derived
 ``start_ts``/``overall_score`` columns from refine). The reference compares
 ISO strings lexicographically; the engine compares real timestamps — same
-ordering after UTC normalization (SURVEY §1.3).
+ordering after UTC normalization (SURVEY §1.3). Every time-relative
+query takes the clock as its ``now`` argument, so results are a function
+of the inputs.
 
 Scale: every function is filter/project/agg over the partitioned events
 table — predicate pushdown hits the parquet scan (``start_ts`` range ⇒
@@ -16,7 +18,7 @@ venue rollups shuffle once on venue name.
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,19 +46,19 @@ def _summary(df: DataFrame) -> DataFrame:
     )
 
 
-def _now_lit(now: datetime | None) -> Column:
-    now = now or datetime.now(timezone.utc)
+def _now_lit(now: datetime) -> Column:
     return F.lit(now.replace(tzinfo=None)).cast("timestamp")
 
 
+# SURVEY P6/P7/P8/P10
 def get_events(
     events: DataFrame,
+    now: datetime,
     min_quality: float = 0.7,
     venue: str | None = None,
     future_only: bool = True,
     limit: int = 50,
     skip: int = 0,
-    now: datetime | None = None,
 ) -> DataFrame:
     """GET /api/events (api_server.py:250-295): quality threshold, optional
     case-insensitive venue regex, future filter, start-date sort, pagination."""
@@ -112,7 +114,8 @@ def search_events(
     )
 
 
-def get_venues(events: DataFrame, now: datetime | None = None) -> DataFrame:
+# SURVEY P3/P9
+def get_venues(events: DataFrame, now: datetime) -> DataFrame:
     """GET /api/venues (api_server.py:353-385, A7): per-venue rollup with
     count, rounded avg quality, conditional upcoming counter."""
     upcoming = F.sum(F.when(F.col("start_ts") >= _now_lit(now), 1).otherwise(0))
@@ -128,6 +131,7 @@ def get_venues(events: DataFrame, now: datetime | None = None) -> DataFrame:
     )
 
 
+# SURVEY P3
 def get_top_venues(events: DataFrame, k: int = 10) -> DataFrame:
     """Top-k venues by quality then count (api_server.py:465-483, A8/W4/O2
     multi-key sort; P3 rename of the group key to venueName)."""
@@ -143,9 +147,8 @@ def get_top_venues(events: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def get_venue_events(
-    events: DataFrame, venue_name: str, limit: int = 50, now: datetime | None = None
-) -> DataFrame:
+# SURVEY P4/P8
+def get_venue_events(events: DataFrame, venue_name: str, limit: int = 50) -> DataFrame:
     """GET /api/venues/{name}/events (api_server.py:390-424, P4/P8)."""
     return _summary(
         events.filter(F.upper(F.col("venue.name")).rlike(venue_name.upper()))
@@ -168,16 +171,16 @@ def get_quality_stats(events: DataFrame) -> DataFrame:
     )
 
 
+# SURVEY P6
 def get_upcoming_events(
     events: DataFrame,
+    now: datetime,
     days: int = 7,
     min_quality: float = 0.75,
     limit: int = 20,
-    now: datetime | None = None,
 ) -> DataFrame:
     """GET /api/upcoming (api_server.py:498-539, P6 horizon window)."""
-    now = now or datetime.now(timezone.utc)
-    lo = F.lit(now.replace(tzinfo=None)).cast("timestamp")
+    lo = _now_lit(now)
     hi = F.lit((now + timedelta(days=days)).replace(tzinfo=None)).cast("timestamp")
     return _summary(
         events.filter(
@@ -190,13 +193,11 @@ def get_upcoming_events(
     )
 
 
-def mark_for_refresh(
-    events: DataFrame, event_id: str, now: datetime | None = None
-) -> DataFrame:
+# SURVEY ST4
+def mark_for_refresh(events: DataFrame, event_id: str, now: datetime) -> DataFrame:
     """POST /api/events/{id}/refresh (api_server.py:542-564, ST4): returns the
     table with system_flags updated for the matched row; persist via
     operators.merge.merge_upsert on event_id."""
-    now = now or datetime.now(timezone.utc)
     hit = F.col("event_id") == event_id
     return events.withColumn(
         "system_flags",
@@ -220,6 +221,7 @@ def sitemap_urls(events: DataFrame, limit: int | None = None) -> DataFrame:
     return out.limit(limit) if limit else out
 
 
+# SURVEY P4
 def find_events_by_venue(events: DataFrame, venue_name: str, limit: int = 10) -> DataFrame:
     """find_events_by_venue (mongo_queries.py:15-26): P4 exact nested-field
     equality + P6 future filter + O1 date sort."""
@@ -230,6 +232,7 @@ def find_events_by_venue(events: DataFrame, venue_name: str, limit: int = 10) ->
     )
 
 
+# SURVEY P5
 def find_events_by_artist(events: DataFrame, artist: str, limit: int = 50) -> DataFrame:
     """find_events_by_artist (mongo_queries.py:28-30): P5 — Mongo's
     ``{"acts.act_name": artist}`` matches if ANY array element matches;
@@ -242,6 +245,7 @@ def find_events_by_artist(events: DataFrame, artist: str, limit: int = 50) -> Da
     )
 
 
+# SURVEY P5/P9
 def find_events_by_promoter(events: DataFrame, promoter: str, limit: int = 50) -> DataFrame:
     """find_events_by_promoter (mongo_queries.py:32-34): P5 into the doubly
     nested ``venue.stages[].host.host_name`` path; P9 guards the null array."""
@@ -256,6 +260,7 @@ def find_events_by_promoter(events: DataFrame, promoter: str, limit: int = 50) -
     )
 
 
+# SURVEY R5/R6
 def event_cards(events: DataFrame, limit: int = 100) -> DataFrame:
     """Card projection with derived counts and previews: R5 — ``size`` count
     derivations (mono_ticketmaster.py:382-383 artistCount/imageCount); R6 —

@@ -454,9 +454,7 @@ from ..operators.sketches import (  # noqa: E402
 )
 
 
-def _qd_compress_ctes(
-    prefix: str, src: str, levels: int = QD_LEVELS, k: int = QD_K
-) -> tuple[list[str], str]:
+def _qd_compress_ctes(prefix: str, src: str) -> tuple[list[str], str]:
     """The q-digest compression as SQL text: per-group totals of ``src``
     (a (event_type, node, cnt) relation), then the L bottom-up sibling-merge
     rounds, all CTE names carrying ``prefix``. Returns (cte_list,
@@ -473,7 +471,7 @@ def _qd_compress_ctes(
     )"""
     ]
     prev = f"{prefix}s0"
-    for j, lv in enumerate(range(levels, 0, -1), start=1):
+    for j, lv in enumerate(range(QD_LEVELS, 0, -1), start=1):
         cur = f"{prefix}s{j}"
         lo, hi = 1 << lv, 1 << (lv + 1)
         parts.append(f"""
@@ -486,7 +484,7 @@ def _qd_compress_ctes(
             SELECT event_type, __n, node, cnt,
                    SUM(CASE WHEN node >= {lo} AND node < {hi} THEN cnt END)
                        OVER (PARTITION BY event_type, node // 2) AS sib_sum,
-                   GREATEST(1, (__n + {k} - 1) // {k}) AS thr
+                   GREATEST(1, (__n + {QD_K} - 1) // {QD_K}) AS thr
             FROM {prev}
         )
         GROUP BY 1, 2, 3
@@ -495,20 +493,20 @@ def _qd_compress_ctes(
     return parts, prev
 
 
-def _qd_sketch_cte(levels: int = QD_LEVELS, k: int = QD_K) -> str:
+def _qd_sketch_cte() -> str:
     """WITH-clause body computing the q-digest of events.value per
     event_type into CTE ``sk`` — shared by the q106 and q107 oracles."""
     parts = [
         f"""
     s0raw AS (
         SELECT event_type,
-               {1 << levels} + LEAST({(1 << levels) - 1},
+               {QD_U} + LEAST({QD_U - 1},
                    GREATEST(0, CAST(floor(value * 100) AS BIGINT))) AS node,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM events GROUP BY 1, 2
     )"""
     ]
-    rounds, final = _qd_compress_ctes("", "s0raw", levels, k)
+    rounds, final = _qd_compress_ctes("", "s0raw")
     parts += rounds
     parts.append(f"""
     sk AS (SELECT event_type, __n, node, cnt FROM {final})""")

@@ -615,7 +615,7 @@ def q131_incremental_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQT_ITERS = 2
 
 
-def _pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
+def _pq_trained_oracle() -> str:
     parts = [
         """
     subs AS (SELECT unnest(range(0, 8)) AS s),
@@ -629,7 +629,7 @@ def _pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
         f"cb0 AS (SELECT j, s, {_PQ_SLICE} AS cbv FROM seeds CROSS JOIN subs)",
         f"sub AS (SELECT vec_id, s, {_PQ_SLICE} AS sv FROM embeddings CROSS JOIN subs)",
     ]
-    for i in range(iters):
+    for i in range(_PQT_ITERS):
         parts.append(
             f"d{i} AS (SELECT vec_id, s, j, {_PQ_RD2} AS d2 FROM sub JOIN cb{i} USING (s))"
         )
@@ -665,7 +665,7 @@ def _pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
         FROM cb{i} c LEFT JOIN upd{i} u ON u.s = c.s AND u.j = c.j
     )"""
         )
-    fin = f"cb{iters}"
+    fin = f"cb{_PQT_ITERS}"
     ctes = ",".join(parts)
     return f"""
     WITH {ctes},
@@ -720,7 +720,7 @@ def q133_trained_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantization error lands strictly below the sampled baseline's.
 
 
-def _ivf_pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
+def _ivf_pq_trained_oracle() -> str:
     parts = [
         f"""
     cent_long AS (
@@ -762,7 +762,7 @@ def _ivf_pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
         f"cb0 AS (SELECT j, s, {_PQ_RSLICE} AS cbv FROM seeds CROSS JOIN subs)",
         f"sub AS (SELECT vec_id, cell, s, {_PQ_RSLICE} AS sv FROM resid CROSS JOIN subs)",
     ]
-    for i in range(iters):
+    for i in range(_PQT_ITERS):
         parts.append(
             f"d{i} AS (SELECT vec_id, s, j, {_PQ_RD2} AS d2 FROM sub JOIN cb{i} USING (s))"
         )
@@ -798,7 +798,7 @@ def _ivf_pq_trained_oracle(iters: int = _PQT_ITERS) -> str:
         FROM cb{i} c LEFT JOIN upd{i} u ON u.s = c.s AND u.j = c.j
     )"""
         )
-    fin = f"cb{iters}"
+    fin = f"cb{_PQT_ITERS}"
     ctes = ",".join(parts)
     return f"""
     WITH {ctes},
@@ -1364,11 +1364,12 @@ def q150_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CAPND_SUCCESSORS = 3
 
 
-def _sql_adaptive_planes(occ: int = 8, lo: int = 6, hi: int = 24) -> str:
+def _sql_adaptive_planes() -> str:
     """Integer-comparison mirror of similarity.adaptive_num_planes —
-    byte-for-byte the same ladder (no float log2 at branch boundaries)."""
-    whens = " ".join(f"WHEN count(*) <= {occ << p} THEN {p}" for p in range(lo, hi))
-    return f"CASE {whens} ELSE {hi} END"
+    byte-for-byte the same ladder (occupancy 8, widths 6..24; no float
+    log2 at branch boundaries)."""
+    whens = " ".join(f"WHEN count(*) <= {8 << p} THEN {p}" for p in range(6, 24))
+    return f"CASE {whens} ELSE 24 END"
 
 
 # plane_(t*24+j)[d] for d = i-1 — _sql_plane with a DYNAMIC plane index

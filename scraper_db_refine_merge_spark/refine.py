@@ -1,4 +1,4 @@
-"""The refine pipeline (SURVEY D3/D4, R4-R7, W2, F19): raw scraped rows →
+"""The refine pipeline (SURVEY D3/D4, R4, R7, W2, F19): raw scraped rows →
 unified events.
 
 Re-expresses the reference's ``map_to_unified_schema`` orchestration
@@ -65,12 +65,11 @@ def refine(
     df: DataFrame,
     source_platform: str,
     now: datetime,
-    default_city: str = "Ibiza",
-    default_country: str = "Spain",
 ) -> DataFrame:
     """Raw rows → unified event rows (a scan + map, SURVEY D4). Works on
     batch and streaming frames alike. ``now`` stamps the scrape and
-    audit timestamps and anchors the quality scorer's date checks."""
+    audit timestamps and anchors the quality scorer's date checks. Every
+    venue is placed in the reference's home market, Ibiza, Spain."""
     now_iso = now.strftime("%Y-%m-%dT%H:%M:%S+00:00")
     df = _ensure_columns(df)
 
@@ -132,7 +131,7 @@ def refine(
 
     # F3 — club-default datetime from the raw date text
     start_date_iso = to_utc_iso(F.col("__start_ts"))
-    tz = timezone_from_location(F.concat_ws(" ", venue_name, F.lit(default_city)))
+    tz = timezone_from_location(F.concat_ws(" ", venue_name, F.lit("Ibiza")))
 
     datetime_struct = F.struct(
         start_date_iso.alias("start_date"),
@@ -155,9 +154,9 @@ def refine(
         venue_name.alias("name"),
         F.struct(
             F.lit(None).cast("string").alias("street"),
-            F.lit(default_city).alias("city"),
+            F.lit("Ibiza").alias("city"),
             F.lit(None).cast("string").alias("state"),
-            F.lit(default_country).alias("country"),
+            F.lit("Spain").alias("country"),
             F.lit(None).cast("string").alias("postal_code"),
             F.lit(None).cast("string").alias("full_address"),
         ).alias("address"),

@@ -1,4 +1,4 @@
-"""File sinks (SURVEY S9-S12, P2, F22): JSON, CSV with union-of-keys +
+"""File sinks: JSON, CSV with union-of-keys +
 JSON-stringified complex cells (P2 exclude-projection, F22 serialize),
 markdown report rendering, filtered app export.
 
@@ -15,12 +15,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 
+# SURVEY S9
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S9 — JSON lines export (scrapers_v2/utils.py:213-243 writes an array;
     engine-native form is JSONL, one doc per line, distributed)."""
     df.write.mode(mode).json(path)
 
 
+# SURVEY F22
 def _stringify_complex(df: DataFrame) -> DataFrame:
     """F22 — complex values → JSON strings in cells (scrapers_v2/utils.py:268-283)."""
     out = df
@@ -30,6 +32,7 @@ def _stringify_complex(df: DataFrame) -> DataFrame:
     return out
 
 
+# SURVEY S10
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S10 — CSV with sorted union-of-keys header and JSON-stringified complex
     cells (scrapers_v2/utils.py:246-294)."""
@@ -38,6 +41,7 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     ordered.write.mode(mode).option("header", True).csv(path)
 
 
+# SURVEY S12/P2
 def export_for_app(
     events: DataFrame, min_quality: float = 0.7, limit: int = 100
 ) -> DataFrame:
@@ -56,6 +60,7 @@ def export_for_app(
     return slim
 
 
+# SURVEY S11
 def render_markdown(rows: list, title: str = "Events Report") -> str:
     """S11 — human-readable markdown over collected summary rows
     (generate_events_markdown.py:60-133 shape: title header + field bullets).

@@ -55,17 +55,16 @@ def stream_asof_enrich(
     target_path: str,
     checkpoint_dir: str,
     schema: str,
-    key: str = "user_id",
-    ts_col: str = "pts",
 ):
     """Streaming SCD2 / as-of dimension enrichment in foreachBatch: each
-    micro-batch of probe rows joins the versioned ``history`` table
-    (raw [vf, vt) interval bounds, NULL vt = current version) AS-OF the
-    probe's event time — the streaming analog of upsert-with-history
-    lookup (reference database/data_migration.py:133-139 generalized).
+    micro-batch of probe rows (keyed ``user_id``, event time ``pts``)
+    joins the versioned ``history`` table (raw [vf, vt) interval bounds,
+    NULL vt = current version) AS-OF the probe's event time — the
+    streaming analog of upsert-with-history lookup (reference
+    database/data_migration.py:133-139 generalized).
     Returns the started StreamingQuery (one landing file per micro-batch).
 
-    Per micro-batch this is a batch equi-join on ``key`` with the interval
+    Per micro-batch this is a batch equi-join on the key with the interval
     post-filter — Spark plans the static side as a batch relation inside
     every micro-batch (AQE broadcasts it while it is genuinely small; no
     forced hint, the history is user-cardinality-sized). Appending enriched
@@ -76,9 +75,9 @@ def stream_asof_enrich(
     from .sketch_stream import stream_guarded_merge
 
     def _build(batch_df: DataFrame) -> DataFrame:
-        t = F.col(ts_col)
+        t = F.col("pts")
         return (
-            batch_df.join(history, key)
+            batch_df.join(history, "user_id")
             .filter((F.col("vf") <= t) & (F.col("vt").isNull() | (t < F.col("vt"))))
         )
 

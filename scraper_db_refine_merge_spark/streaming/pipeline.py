@@ -1,4 +1,4 @@
-"""Incremental / streaming ingestion (SURVEY §2.11 ST1-ST5, S15).
+"""Incremental / streaming ingestion (SURVEY §2.11; SURVEY S15).
 
 The reference is batch + incremental re-scrape with upsert semantics
 (data_migration.py:133-139, unified_scraper.py:622-642). Structured
@@ -37,6 +37,7 @@ RAW_STREAM_SCHEMA = (
 )
 
 
+# SURVEY ST1/ST5
 def stream_ingest(
     spark: SparkSession,
     landing_dir: str,
@@ -138,6 +139,7 @@ def stream_ingest(
     return start(refined, checkpoint_dir, _apply)
 
 
+# SURVEY ST2
 def fresh_rows(df: DataFrame, ts_col: str, max_age_hours: float, now: datetime) -> DataFrame:
     """ST2 — TTL cache predicate: rows scraped within the window
     (ventura_crawler.py:260-287)."""
@@ -145,6 +147,7 @@ def fresh_rows(df: DataFrame, ts_col: str, max_age_hours: float, now: datetime) 
     return df.filter(F.try_to_timestamp(F.col(ts_col)) >= F.lit(cutoff).cast("timestamp"))
 
 
+# SURVEY ST3
 def refresh_queue(events: DataFrame, now: datetime) -> DataFrame:
     """ST3 — staleness detection (DF001: scraped > 7d ago; DF002: stale
     future events) + explicit refresh flags (ST4) → rows needing re-scrape."""

@@ -472,9 +472,7 @@ def store_commit_parts(
     return _commit_tables(target_path, tables, markers, keep)
 
 
-def store_compact(
-    spark: SparkSession, target_path: str, keep: int = 1
-) -> str | None:
+def store_compact(spark: SparkSession, target_path: str) -> str | None:
     """Squash a multi-part store's accumulated parts (r14, VERDICT r13
     item 5): N folds leave N parts per table, so replay/read cost grows
     with fold count — fine for a harness, wrong at a year of daily batches.
@@ -488,9 +486,9 @@ def store_compact(
     Returns the committed version dir; None for an empty store; the live
     dir unchanged when there is nothing to squash. Same single-writer
     contract as every commit. Time-travel note: compaction commits a NEW
-    version — with ``keep=1`` older versions (and the fine-grained parts
-    they reference) are reclaimed, so run it only when replay-from-parts
-    is no longer needed, or raise ``keep``.
+    version and keeps no other — older versions (and the fine-grained
+    parts they reference) are reclaimed, so run it only when
+    replay-from-parts is no longer needed.
     """
     prior = _version_dir_for_write(target_path)
     if prior is None:
@@ -506,7 +504,7 @@ def store_compact(
         if fname != _MANIFEST:
             with open(os.path.join(prior, fname)) as f:
                 markers[fname] = f.read()
-    return _commit_tables(target_path, tables, markers, keep)
+    return _commit_tables(target_path, tables, markers)
 
 
 def _commit_partitions(

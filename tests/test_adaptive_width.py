@@ -105,14 +105,14 @@ def test_minhash_signature_lanes_beyond_md5(spark):
 
 @pytest.mark.slow
 def test_minhash_wide_bands_verify_true_jaccard(spark, sf_dir):
-    """band_size=3 (num_hashes=12, the >2^28 regime forced explicitly):
+    """band_size=3 (12 lanes, the >2^28 regime forced explicitly):
     the pipeline still emits only verified pairs — every output pair is in
     the exact n-gram Jaccard pair set."""
     d = load_table(spark, sf_dir, "documents")
     wide = {
         (r["a_id"], r["b_id"], r["jaccard"])
         for r in dd.minhash_dedup_pairs(
-            d, "doc_id", "text", k=5, threshold=0.2, num_hashes=12, band_size=3
+            d, "doc_id", "text", k=5, threshold=0.2, band_size=3
         ).collect()
     }
     exact = {
@@ -317,12 +317,10 @@ def test_contamination_k_freezes_and_mismatch_raises(spark, tmp_path):
     # k=None adopts the frozen width
     dd.fold_contamination_index(spark, root, _docs(spark, [(2, _PROT2)]), k=None)
 
-    # scan side: frozen k adopted by default, mismatch raises
+    # scan side: the frozen k
     corpus = _docs(spark, [(10, "x " + _PROT1 + " y"), (11, "nothing shared here at all ok")])
     got = {r["doc_id"] for r in dd.contamination_scan(spark, root, corpus).collect()}
     assert got == {10}
-    with pytest.raises(ValueError, match="frozen width"):
-        dd.contamination_scan(spark, root, corpus, k=7)
 
 
 @pytest.mark.slow

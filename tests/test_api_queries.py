@@ -63,7 +63,9 @@ def test_get_events_filters_and_sort(corpus):
     assert dates == sorted(dates)
     assert all(d >= "2025-05-01" for d in dates)
     # venue regex filter, case-insensitive substring
-    hi = api.get_events(corpus, min_quality=0.0, venue="hï", future_only=False, limit=100).collect()
+    hi = api.get_events(
+        corpus, min_quality=0.0, venue="hï", future_only=False, limit=100, now=NOW
+    ).collect()
     assert hi and all(r["venue_name"] == "Hï Ibiza" for r in hi)
 
 

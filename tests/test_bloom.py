@@ -17,7 +17,6 @@ from scraper_db_refine_merge_spark.operators.bloom import (
 )
 
 BITS = 1 << 14  # small filter → measurable fp rate, still zero fn
-HASHES = 5
 
 
 def _rows(df, cols):
@@ -27,9 +26,9 @@ def _rows(df, cols):
 
 def test_probe_has_no_false_negatives(spark):
     keys = spark.range(500).select(F.concat(F.lit("k"), F.col("id")).alias("k"))
-    bf = bloom_build(keys, ["k"], BITS, HASHES)
+    bf = bloom_build(keys, ["k"], BITS)
     probed = keys.crossJoin(F.broadcast(bf)).select(
-        bloom_might_contain(["k"], F.col("__bf_words"), BITS, HASHES).alias("hit")
+        bloom_might_contain(["k"], F.col("__bf_words"), BITS).alias("hit")
     )
     assert probed.filter(~F.col("hit")).count() == 0
 
@@ -46,14 +45,14 @@ def test_pruned_anti_join_matches_plain_anti_join(spark):
         "a string, b int",
     )
     expected = target.join(batch, ["a", "b"], "left_anti")
-    got = pruned_left_anti(target, batch, ["a", "b"], BITS, HASHES)
+    got = pruned_left_anti(target, batch, ["a", "b"])
     assert _rows(got, ["a", "b", "v"]) == _rows(expected, ["a", "b", "v"])
 
 
 def test_pruned_anti_join_empty_batch_keeps_everything(spark):
     target = spark.createDataFrame([("x", 1.0), ("y", 2.0)], "k string, v double")
     batch = spark.createDataFrame([], "k string")
-    got = pruned_left_anti(target, batch, ["k"], BITS, HASHES)
+    got = pruned_left_anti(target, batch, ["k"])
     assert _rows(got, ["k", "v"]) == _rows(target, ["k", "v"])
 
 
@@ -64,15 +63,15 @@ def test_definite_branch_bypasses_the_join(spark):
     per branch, so the pruned plan has exactly one of those per side.)"""
     target = spark.createDataFrame([(str(i),) for i in range(50)], "k string")
     batch = spark.createDataFrame([("1",), ("2",)], "k string")
-    plan = pruned_left_anti(target, batch, ["k"], BITS, HASHES)._jdf.queryExecution().executedPlan().toString()
+    plan = pruned_left_anti(target, batch, ["k"])._jdf.queryExecution().executedPlan().toString()
     anti_joins = plan.count("LeftAnti")
     assert anti_joins == 1, plan
 
 
 def test_auto_num_bits_scales_with_batch_and_stays_exact(spark):
-    """r16: num_bits="auto" sizes the filter from the batch count (floor
-    2^16, ~16 bits/key, power of two) and the auto-sized pruned anti-join
-    stays row-identical to the plain anti-join."""
+    """r16: the filter is sized from the batch count (floor 2^16, ~16
+    bits/key, power of two) and the pruned anti-join stays row-identical
+    to the plain anti-join."""
     from scraper_db_refine_merge_spark.operators.bloom import (
         _AUTO_MAX_BITS,
         _AUTO_MIN_BITS,
@@ -81,14 +80,13 @@ def test_auto_num_bits_scales_with_batch_and_stays_exact(spark):
 
     small = spark.range(100).select(F.col("id").alias("k"))
     big = spark.range(50_000).select(F.col("id").alias("k"))
-    assert resolve_num_bits(small, "auto") == _AUTO_MIN_BITS
-    nb = resolve_num_bits(big, "auto")
+    assert resolve_num_bits(small) == _AUTO_MIN_BITS
+    nb = resolve_num_bits(big)
     assert nb >= 50_000 * 16 and nb & (nb - 1) == 0 and nb <= _AUTO_MAX_BITS
-    assert resolve_num_bits(small, 1 << 20) == 1 << 20  # explicit passthrough
 
     target = spark.range(2_000).select(F.col("id").alias("k"))
     batch = spark.range(0, 2_000, 3).select(F.col("id").alias("k"))
-    got = pruned_left_anti(target, batch, ["k"])  # default num_bits="auto"
+    got = pruned_left_anti(target, batch, ["k"])
     want = target.join(batch, ["k"], "left_anti")
     assert _rows(got, ["k"]) == _rows(want, ["k"])
 
@@ -99,14 +97,14 @@ def test_probe_derives_size_from_words_when_not_given(spark):
     silently probe an auto-built filter at the wrong size (which produces
     false negatives). Zero false negatives at a non-default build size."""
     keys = spark.range(500).select(F.concat(F.lit("k"), F.col("id")).alias("k"))
-    bf = bloom_build(keys, ["k"], 1 << 16, HASHES)  # != DEFAULT_NUM_BITS
+    bf = bloom_build(keys, ["k"], 1 << 16)
     probed = keys.crossJoin(F.broadcast(bf)).select(
-        bloom_might_contain(["k"], F.col("__bf_words"), num_hashes=HASHES).alias("hit")
+        bloom_might_contain(["k"], F.col("__bf_words")).alias("hit")
     )
     assert probed.filter(~F.col("hit")).count() == 0
     # derived-size probe is expression-identical to the explicit-size probe
     explicit = keys.crossJoin(F.broadcast(bf)).select(
-        bloom_might_contain(["k"], F.col("__bf_words"), 1 << 16, HASHES).alias("hit")
+        bloom_might_contain(["k"], F.col("__bf_words"), 1 << 16).alias("hit")
     )
     assert probed.exceptAll(explicit).count() == 0
 
@@ -117,7 +115,7 @@ def test_derived_size_probe_is_false_not_null_on_null_words(spark):
     which is what makes ``filter(~probe)`` safe."""
     rows = spark.createDataFrame([("a", None), ("b", [0, 0])], "k string, w array<bigint>")
     got = rows.select(
-        "k", bloom_might_contain(["k"], F.col("w"), num_hashes=HASHES).alias("hit")
+        "k", bloom_might_contain(["k"], F.col("w")).alias("hit")
     ).collect()
     assert sorted((r["k"], r["hit"]) for r in got) == [("a", False), ("b", False)]
 
@@ -134,10 +132,10 @@ def test_resolve_num_bits_memo_starts_no_second_job(spark):
     base = spark.range(70_013).select(F.col("id").alias("k"))
     sc.setJobGroup(group, "bloom sizing memo")
     try:
-        a = resolve_num_bits(base.select("k"), "auto")
+        a = resolve_num_bits(base.select("k"))
         first_jobs = set(tracker.getJobIdsForGroup(group))
         # fresh, semantically identical frame: must hit the memo
-        b = resolve_num_bits(base.select("k"), "auto")
+        b = resolve_num_bits(base.select("k"))
         second_jobs = set(tracker.getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

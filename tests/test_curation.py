@@ -25,22 +25,6 @@ def test_pack_contiguous_offsets_and_straddles(spark):
     assert (rows[4]["first_bin"], rows[4]["last_bin"]) == (1, 2)
 
 
-def test_pack_contiguous_sharded_equals_per_shard(spark):
-    docs = spark.createDataFrame(
-        [(i, (i * 37) % 5 + 1, f"s{i % 3}") for i in range(60)],
-        "doc_id long, n_tok long, shard string",
-    )
-    sharded = pack_contiguous(docs, "doc_id", "n_tok", ctx=8, shard_col="shard")
-    for s in ("s0", "s1", "s2"):
-        alone = pack_contiguous(docs.filter(F.col("shard") == s), "doc_id", "n_tok", ctx=8)
-        got = sorted(
-            (r["doc_id"], r["offset"], r["first_bin"])
-            for r in sharded.filter(F.col("shard") == s).collect()
-        )
-        want = sorted((r["doc_id"], r["offset"], r["first_bin"]) for r in alone.collect())
-        assert got == want
-
-
 def test_pack_bins_summary_totals(spark):
     docs = spark.createDataFrame([(i, 10) for i in range(1, 11)], "doc_id long, n_tok long")
     out = pack_bins_summary(pack_contiguous(docs, "doc_id", "n_tok", 32), "n_tok")

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from scraper_db_refine_merge_spark.functions.dates import (
-    inject_year,
     parse_club_date,
     parse_fuzzy_to_utc_iso,
     parse_multi_format,
@@ -114,17 +113,13 @@ def test_strip_day_and_club_default(spark):
 
 
 def test_inject_year_and_fuzzy(spark):
-    assert _one(spark, inject_year(F.lit("Sat 31 May"), 2025)) == "Sat 31 May 2025"
-    assert _one(spark, inject_year(F.lit("31 May 2024"), 2025)) == "31 May 2024"
-    got = _one(
-        spark,
-        parse_fuzzy_to_utc_iso(F.lit("2024-08-15T18:00:00+02:00"), default_tz="Europe/Madrid"),
-    )
+    # no year is injected: a yearless date stays unparsed (deterministic;
+    # dateutil would take its wall-clock year)
+    assert _one(spark, parse_fuzzy_to_utc_iso(F.lit("Saturday 31 May"))) is None
+    got = _one(spark, parse_fuzzy_to_utc_iso(F.lit("2024-08-15T18:00:00+02:00")))
     assert got == "2024-08-15T16:00:00Z"
-    got2 = _one(
-        spark, parse_fuzzy_to_utc_iso(F.lit("2024-08-15 18:00"), default_tz="Europe/Madrid")
-    )
-    assert got2 == "2024-08-15T16:00:00Z"
+    assert _one(spark, parse_fuzzy_to_utc_iso(F.lit("2024-08-15 18:00"))) == "2024-08-15T18:00:00Z"
+    assert _one(spark, parse_fuzzy_to_utc_iso(F.lit("Friday 15th August 2024"))) == "2024-08-15T00:00:00Z"
 
 
 # ---------------------------------------------------------------- F9 price

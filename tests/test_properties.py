@@ -207,22 +207,21 @@ def test_club_date_roundtrip(spark, dates):
 
 # ----------------------------------------------------------------------
 # fuzzy date chain ≡ dateutil on the chain's declared formats (the
-# compatibility oracle of SURVEY §7 hard-part 1); tz localization included
+# compatibility oracle of SURVEY §7 hard-part 1); naive times read as UTC
 
 from scraper_db_refine_merge_spark.functions.dates import (  # noqa: E402
     parse_fuzzy_to_utc_iso,
 )
 
 
-def _py_fuzzy(s, default_tz="Europe/Madrid"):
+def _py_fuzzy(s):
     from datetime import timezone as _tz
-    from zoneinfo import ZoneInfo
 
     from dateutil import parser as dateutil_parser
 
     dt = dateutil_parser.parse(s.strip())
     if dt.tzinfo is None or dt.tzinfo.utcoffset(dt) is None:
-        dt = dt.replace(tzinfo=ZoneInfo(default_tz))
+        dt = dt.replace(tzinfo=_tz.utc)
     return dt.astimezone(_tz.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
 
@@ -374,11 +373,7 @@ def test_fuzzy_chain_matches_dateutil_on_declared_formats(spark, dts):
         iso_z = d.strftime("%Y-%m-%dT%H:%M:%SZ")
         renderings += [iso_offset, plain, iso_z]
         expected += [_py_fuzzy(iso_offset), _py_fuzzy(plain), _py_fuzzy(iso_z)]
-    got = _run(
-        spark,
-        renderings,
-        lambda c: parse_fuzzy_to_utc_iso(c, default_tz="Europe/Madrid"),
-    )
+    got = _run(spark, renderings, parse_fuzzy_to_utc_iso)
     assert got == expected
 
 

@@ -17,6 +17,11 @@ only: it imports nothing and starts no Spark.
 A def the scan cannot reach fails the test unless ``EXEMPT_MODULES`` or
 ``EXEMPT_DEFS`` names it with a reason. An exemption that names a missing
 or reached def fails too, so the table shrinks as code gets a caller.
+
+The same scan guards parameters: a defaulted parameter of a reached def
+that no reached call site passes has one value in use and belongs in the
+body as a constant. It fails the test unless ``EXEMPT_PARAMS`` names it
+with a reason; a stale entry fails too.
 """
 
 from __future__ import annotations
@@ -57,11 +62,23 @@ EXEMPT_DEFS = {
     "functions.strings.snippet": "only implementation of SURVEY F23",
     "functions.strings.is_sold_out": "only implementation of SURVEY F24's sold-out half",
     "functions.strings.confidence_score": "only implementation of SURVEY F25",
-    "functions.dates.dateutil_fallback_udf": "SURVEY F2 dateutil mirror that ROADMAP exempts",
     "operators.merge.insert_if_absent": "crash-atomic writer ROADMAP aim 3 names; N7 decides its fate",
     "operators.pq.pq_quantization_error": "tests/test_pq.py measures codebook training with it",
     "operators._cache.forget": "cache lifecycle (ROADMAP aim 3)",
     "operators._cache.release_all_threads": "cache lifecycle (ROADMAP aim 3)",
+}
+
+# "def.param" (dotted, under the package) -> reason. Only for a value a
+# test needs to reach a real production path in bounded time.
+EXEMPT_PARAMS = {
+    "streaming.runner.drain.timeout_s": (
+        "drives the overrun path (stop + TimeoutError) that a 300 s wait "
+        "cannot reach in a test (test_stream_runner)"
+    ),
+    "operators.graph.connected_components.max_iter": (
+        "drives the no-convergence RuntimeError that 25 rounds of pointer "
+        "doubling cannot reach on a test-sized graph (test_graph)"
+    ),
 }
 
 _DEF_NODES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -151,30 +168,39 @@ class _Scan:
             return None
         return src if attr is None else self.resolve(src, attr, depth + 1)
 
+    def lookup(self, node: ast.AST, module: str) -> tuple[str | None, int]:
+        """What a bare name or dotted attribute in ``module`` resolves to (a
+        def key, a module name, or None), and how many trailing attributes
+        were left when the lookup reached a def."""
+        chain = []
+        while isinstance(node, ast.Attribute):
+            chain.append(node.attr)
+            node = node.value
+        if not isinstance(node, ast.Name):
+            return None, 0
+        hit = self.resolve(module, node.id)
+        while chain and hit is not None and hit not in self.defs:
+            hit = self.resolve(hit, chain.pop())
+        return hit, len(chain)
+
     def refs(self, nodes, module: str) -> set[str]:
         """Def keys that the code in ``nodes`` names, as a bare name or as
         a dotted attribute of a module."""
         out = set()
         for top in nodes:
             for node in ast.walk(top):
-                chain = []
-                while isinstance(node, ast.Attribute):
-                    chain.append(node.attr)
-                    node = node.value
-                if not isinstance(node, ast.Name):
-                    continue
-                hit = self.resolve(module, node.id)
-                for attr in reversed(chain):
-                    if hit is None or hit in self.defs:
-                        break
-                    hit = self.resolve(hit, attr)
+                hit, _ = self.lookup(node, module)
                 if hit in self.defs:
                     out.add(hit)
         return out
 
-    def unreached(self) -> list[str]:
-        edges = {}
+    def walk(self) -> None:
+        """Fill ``reached`` (the def keys the roots reach) and ``units``
+        (the reached code, as (nodes, module) pairs: reached def bodies,
+        package module-level code and the root files)."""
+        edges, bodies = {}, {}
         roots = set()
+        self.units = []
         for mod, tree in self.trees.items():
             module_level = []
             for node in tree.body:
@@ -192,23 +218,68 @@ class _Scan:
                 if any(_is_register(d) for d in node.decorator_list):
                     roots.add(key)
                 edges[key] = self.refs(body, mod)
+                bodies[key] = (body, mod)
             roots |= self.refs(module_level, mod)
+            self.units.append((module_level, mod))
         for path in _root_files():
             tree = _parse(path)
             self.imports[path] = _imports(tree, "", False)
             roots |= self.refs([tree], path)
+            self.units.append(([tree], path))
         seen, todo = set(), list(roots)
         while todo:
             k = todo.pop()
             if k not in seen:
                 seen.add(k)
                 todo.extend(edges[k])
-        return sorted(set(self.defs) - seen)
+        self.reached = seen
+        self.units += [bodies[k] for k in sorted(seen)]
+
+    def unreached(self) -> list[str]:
+        return sorted(set(self.defs) - self.reached)
+
+    def unpassed_params(self) -> list[str]:
+        """``def.param`` for every defaulted parameter of a reached
+        function that some reached call site calls and none passes. A
+        call with ``*args`` or ``**kwargs`` passes every parameter; a def
+        that is only referenced, never called, is skipped."""
+        passed: dict[str, set[str]] = {}
+        spread: set[str] = set()
+        for nodes, mod in self.units:
+            for top in nodes:
+                for call in ast.walk(top):
+                    if not isinstance(call, ast.Call):
+                        continue
+                    key, rest = self.lookup(call.func, mod)
+                    if rest or key not in self.defs or isinstance(self.defs[key], ast.ClassDef):
+                        continue
+                    args = self.defs[key].args
+                    positional = args.posonlyargs + args.args
+                    passed.setdefault(key, set()).update(
+                        [a.arg for a in positional[: len(call.args)]]
+                        + [kw.arg for kw in call.keywords if kw.arg]
+                    )
+                    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                        kw.arg is None for kw in call.keywords
+                    ):
+                        spread.add(key)
+        out = []
+        for key, names in sorted(passed.items()):
+            if key in spread or key not in self.reached:
+                continue
+            args = self.defs[key].args
+            positional = args.posonlyargs + args.args
+            defaulted = positional[len(positional) - len(args.defaults) :] if args.defaults else []
+            defaulted += [a for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+            out += [f"{key}.{a.arg}" for a in defaulted if a.arg not in names]
+        return out
 
 
 @pytest.fixture(scope="module")
 def scan() -> _Scan:
-    return _Scan()
+    scan = _Scan()
+    scan.walk()
+    return scan
 
 
 def _is_register(dec: ast.AST) -> bool:
@@ -244,3 +315,23 @@ def test_exemptions_name_unreached_defs(scan):
     stale += [m for m in EXEMPT_MODULES if f"{PKG}.{m}" not in scan.modules]
     assert not stale, f"exemptions that name a missing or reached def: {stale}"
     assert all(r.strip() for r in list(EXEMPT_DEFS.values()) + list(EXEMPT_MODULES.values()))
+
+
+def test_every_defaulted_param_is_passed_outside_tests(scan):
+    knobs = [
+        short
+        for short in map(_short, scan.unpassed_params())
+        if short not in EXEMPT_PARAMS and not _exempt(short.rsplit(".", 1)[0])
+    ]
+    assert not knobs, (
+        "defaulted parameters that no registered query, pipeline, tool or "
+        "perfbench workload passes (inline the default as a constant and "
+        "delete the branches only other values reach):\n  " + "\n  ".join(knobs)
+    )
+
+
+def test_param_exemptions_name_unpassed_params(scan):
+    unpassed = set(map(_short, scan.unpassed_params()))
+    stale = [p for p in EXEMPT_PARAMS if p not in unpassed]
+    assert not stale, f"parameter exemptions that name a missing or passed parameter: {stale}"
+    assert all(r.strip() for r in EXEMPT_PARAMS.values())

@@ -18,7 +18,7 @@ def _final(spark, tmp_path, batches, name):
     out = None
     for b in batches:
         out = fold_rollup(
-            spark, target, b, key_cols=["event_type"], sum_cols=["value"], count_col="n"
+            spark, target, b, key_cols=["event_type"], sum_cols=["value"]
         )
     return {
         r["event_type"]: (r["n"], float(r["value"])) for r in out.collect()

@@ -344,7 +344,7 @@ def test_pair_cosine_null_element_is_null_not_nan(spark):
     )
     got = {
         r["neighbor_id"]: r["cosine_sim"]
-        for r in _pair_cosine_scores(joined, "bigint", "bigint", 5).collect()
+        for r in _pair_cosine_scores(joined, "bigint", "bigint").collect()
     }
     assert got[10] == 1.0
     assert got[11] is None
@@ -461,7 +461,7 @@ def test_arrow_kernels_survive_null_and_ragged_vectors(spark):
     assert got == ref and got[4] == "a" and got[5] == "a" and got[6] == "a"
 
     # brute force: same-length pairs score; NULL / odd lengths never crash
-    pairs = brute_force_near_dup_pairs(df, threshold=0.5, num_blocks=2)
+    pairs = brute_force_near_dup_pairs(df, threshold=0.5)
     got_pairs = {(r["a_id"], r["b_id"]) for r in pairs.collect()}
     assert (1, 2) in got_pairs and (1, 7) in got_pairs and (2, 7) in got_pairs
     assert not any(4 in p or 5 in p or 6 in p for p in got_pairs)

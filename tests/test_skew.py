@@ -20,41 +20,29 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_salted_join_rejects_outer_modes(spark):
-    """right/full outer would surface unmatched replicated-side rows once
-    per salt — the operator must refuse those modes."""
-    import pytest
-
-    a = spark.createDataFrame([(1, "x")], "k int, v string")
-    b = spark.createDataFrame([(1, "y")], "k int, w string")
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(a, b, on=["k"], how=how, salt_from=["v"])
-
-
 def test_sessionize_two_phase_equals_single_window(spark, sf_dir):
     """The two-phase (key, time-block) sessionization must equal the naive
-    per-key lag window's (session_count, event_count) — for the default
-    block and for a pathologically small block (forces boundary merges)."""
+    per-key lag window's (session_count, event_count) — for the catalog's
+    30-minute gap and for a 1-minute gap, whose gap-wide blocks leave many
+    blocks empty and split most sessions across block boundaries (the
+    empty-block lag and boundary-merge paths)."""
     from scraper_db_refine_merge_spark.operators.skew import sessionize_two_phase
 
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
-    naive = (
-        e.withColumn(
-            "s",
-            F.when(prev.isNull() | (F.col("ts").cast("long") - prev.cast("long") > 1800), 1).otherwise(0),
+    for gap in (1800, 60):
+        naive = (
+            e.withColumn(
+                "s",
+                F.when(prev.isNull() | (F.col("ts").cast("long") - prev.cast("long") > gap), 1).otherwise(0),
+            )
+            .groupBy("user_id")
+            .agg(F.sum("s").cast("long").alias("session_count"), F.count("*").alias("event_count"))
         )
-        .groupBy("user_id")
-        .agg(F.sum("s").cast("long").alias("session_count"), F.count("*").alias("event_count"))
-    )
-    expected = sorted(map(tuple, naive.collect()))
-    for block in (1800, 60):  # block << gap exercises the empty-block lag path
-        got = sessionize_two_phase(
-            e, ["user_id"], "ts", gap_sec=1800, block_sec=block, order_tiebreak=["event_id"]
-        )
-        assert sorted(map(tuple, got.collect())) == expected, block
+        expected = sorted(map(tuple, naive.collect()))
+        got = sessionize_two_phase(e, ["user_id"], "ts", gap_sec=gap, order_tiebreak=["event_id"])
+        assert sorted(map(tuple, got.collect())) == expected, gap
 
 
 def test_sessionize_two_phase_no_single_task_holds_hot_key(spark, sf_dir):

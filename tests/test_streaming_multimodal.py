@@ -161,7 +161,7 @@ def test_media_feature_extraction(media):
 
 
 def test_video_frame_sampling(media):
-    frames = sample_video_frames(media, every_n_bytes=1 << 16).collect()
+    frames = sample_video_frames(media).collect()
     assert {f["media_id"] for f in frames} == {"vid1"}
     assert [f["frame_index"] for f in sorted(frames, key=lambda f: f["frame_offset"])] == [0, 1, 2, 3]
 

@@ -6,8 +6,10 @@ consistency hazard (r8)."""
 
 from __future__ import annotations
 
-import pytest
 import collections
+import hashlib
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -111,13 +113,11 @@ def test_suffix_groups_match_hashed_grams_multipartition(spark, sf_dir):
 
 def test_char_grams_stride_and_short_docs(spark):
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
-    got = sorted(
-        map(tuple, char_grams(df, "doc_id", "text", 3, stride=2, hashed=False).collect())
-    )
+    got = sorted(map(tuple, char_grams(df, "doc_id", "text", 3, stride=2).collect()))
     exp = []
     for d, t in ROWS:
         for i in range(1, len(t) - 1, 2):
-            exp.append((d, i, t[i - 1 : i + 2]))
+            exp.append((d, i, hashlib.md5(t[i - 1 : i + 2].encode()).hexdigest()))
     assert got == sorted(exp)
     # a doc shorter than L contributes nothing (and must not crash sequence())
     tiny = spark.createDataFrame([(9, "ab")], "doc_id long, text string")
@@ -212,22 +212,24 @@ def test_dense_group_ids_dense_and_partition_invariant(spark):
         ids_per_key.setdefault(i % 7, set()).add(r)
     assert all(len(s) == 1 for s in ids_per_key.values())
     assert sorted(next(iter(s)) for s in ids_per_key.values()) == list(range(1, 8))
-    # density and equality classes hold at ANY bucket count (r11: n_buckets
-    # is now a parameter — a 100-TB run raises it; ids need not be
-    # bit-identical across bucket counts, only dense + class-consistent)
-    for nb in (7, 64):
-        outb = {r["id"]: r["r"] for r in _dense_group_ids(df, ["k"], n_buckets=nb).collect()}
-        per_key: dict[int, set] = {}
-        for i, r in outb.items():
-            per_key.setdefault(i % 7, set()).add(r)
-        assert all(len(s) == 1 for s in per_key.values()), nb
-        assert sorted(next(iter(s)) for s in per_key.values()) == list(range(1, 8)), nb
-        # same-bucket-count reruns are bit-stable whatever the partitioning
-        outb2 = {
-            r["id"]: r["r"]
-            for r in _dense_group_ids(df.repartition(5), ["k"], n_buckets=nb).collect()
-        }
-        assert outb == outb2, nb
+    # density and equality classes hold at ANY bucket count (a 100-TB run
+    # raises the conf knob; ids need not be bit-identical across bucket
+    # counts, only dense + class-consistent)
+    knob = "spark.graft.substr.denseGroupBuckets"
+    try:
+        for nb in (7, 64):
+            spark.conf.set(knob, str(nb))
+            outb = {r["id"]: r["r"] for r in _dense_group_ids(df, ["k"]).collect()}
+            per_key: dict[int, set] = {}
+            for i, r in outb.items():
+                per_key.setdefault(i % 7, set()).add(r)
+            assert all(len(s) == 1 for s in per_key.values()), nb
+            assert sorted(next(iter(s)) for s in per_key.values()) == list(range(1, 8)), nb
+            # same-bucket-count reruns are bit-stable whatever the partitioning
+            outb2 = {r["id"]: r["r"] for r in _dense_group_ids(df.repartition(5), ["k"]).collect()}
+            assert outb == outb2, nb
+    finally:
+        spark.conf.unset(knob)
 
 
 def test_resolve_n_buckets_conf_fallback_and_clamp(spark):
@@ -239,18 +241,15 @@ def test_resolve_n_buckets_conf_fallback_and_clamp(spark):
         _resolve_n_buckets,
     )
 
-    assert _resolve_n_buckets(spark, 7) == 7
-    assert _resolve_n_buckets(spark, 10**9) == _MAX_GROUP_BUCKETS
-    assert _resolve_n_buckets(spark, 0) == 1
     knob = "spark.graft.substr.denseGroupBuckets"
     try:
-        spark.conf.set(knob, "auto")
-        assert _resolve_n_buckets(spark, None) == 200
-        spark.conf.set(knob, "96")
-        assert _resolve_n_buckets(spark, None) == 96
+        cases = (("7", 7), (str(10**9), _MAX_GROUP_BUCKETS), ("0", 1), ("auto", 200), ("96", 96))
+        for raw, want in cases:
+            spark.conf.set(knob, raw)
+            assert _resolve_n_buckets(spark) == want, raw
     finally:
         spark.conf.unset(knob)
-    got = _resolve_n_buckets(spark, None)
+    got = _resolve_n_buckets(spark)
     assert 1 <= got <= _MAX_GROUP_BUCKETS
 
 
@@ -341,11 +340,12 @@ def test_direct_regime_pair_hash_independently_seeded(spark):
 @pytest.mark.slow
 def test_repeated_span_profile_auto_skew_switch(spark):
     """VERDICT r12 item 3: the window→groupBy skew fallback is code, not
-    comment. A corpus where ONE gram holds >10% of positions must make
-    the auto probe pick the groupBy+join-back regime (observable in the
-    plan: a join appears, the group-key Window disappears); a flat corpus
-    stays on the window regime; and BOTH forced regimes emit identical
-    rows on the skewed fixture, so the switch can never change results."""
+    comment, and each regime is chosen from the input alone. A corpus
+    where ONE gram holds >10% of positions must plan the groupBy+join-back
+    regime (observable in the plan: a join appears, the group-key Window
+    disappears); a uniform corpus plans the window count; and BOTH regimes
+    emit exactly the per-doc profile a plain Python count gives, so the
+    switch can never change results."""
     from pyspark.sql import functions as F
 
     from scraper_db_refine_merge_spark.operators.substr import (
@@ -361,13 +361,21 @@ def test_repeated_span_profile_auto_skew_switch(spark):
     skewed = spark.createDataFrame(docs, "doc_id long, text string")
     flat = spark.createDataFrame(docs[1:], "doc_id long, text string")
 
-    auto_sk = repeated_span_profile(skewed, "doc_id", "text", L)
-    assert "count(1) windowspecdefinition" not in auto_sk._jdf.queryExecution().executedPlan().toString().lower()
-    auto_fl = repeated_span_profile(flat, "doc_id", "text", L)
-    assert "windowspecdefinition" in auto_fl._jdf.queryExecution().executedPlan().toString().lower()
+    def _profile(rows):
+        grams = {d: [t[i : i + L] for i in range(len(t) - L + 1)] for d, t in rows}
+        occ = collections.Counter(g for gs in grams.values() for g in gs)
+        return sorted(
+            (d, len(gs), sum(occ[g] > 1 for g in gs), max(occ[g] for g in gs))
+            for d, gs in grams.items()
+        )
 
-    w = repeated_span_profile(skewed, "doc_id", "text", L, mode="window")
-    gb = repeated_span_profile(skewed, "doc_id", "text", L, mode="groupby")
-    assert sorted(map(tuple, w.collect())) == sorted(map(tuple, gb.collect()))
+    gb = repeated_span_profile(skewed, "doc_id", "text", L)
+    plan = gb._jdf.queryExecution().executedPlan().toString().lower()
+    assert "count(1) windowspecdefinition" not in plan and "join" in plan
+    w = repeated_span_profile(flat, "doc_id", "text", L)
+    assert "windowspecdefinition" in w._jdf.queryExecution().executedPlan().toString().lower()
+
+    assert sorted(map(tuple, gb.collect())) == _profile(docs)
+    assert sorted(map(tuple, w.collect())) == _profile(docs[1:])
     rows = {r["doc"]: r for r in gb.collect()}
     assert rows[0]["max_occ"] == 33  # the hot doc: 33 positions, one gram

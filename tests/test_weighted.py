@@ -136,23 +136,24 @@ def _wor_mirror(rows, k, seed):
 @pytest.mark.slow
 def test_wor_matches_first_k_distinct_mirror(spark):
     """Engine output equals the hand-computed successive-WOR sample,
-    including ranks — and is invariant to the probe-round schedule
-    (initial_probes=1 forces many doubling rounds; the default takes one)."""
+    including ranks — whether the first probe round covers k distinct rows
+    (mild weights) or the probe prefix has to double over several rounds
+    (one row holding ~99% of the mass, so most probes repeat it)."""
     from scraper_db_refine_merge_spark.operators.weighted import (
         weighted_sample_without_replacement,
     )
 
-    rows = [(i, "s", (i * 13) % 37 + 1) for i in range(60)]
-    want = _wor_mirror(rows, 10, "t")
-    df = _docs(spark, rows)
-    for probes in (None, 1):
+    mild = [(i, "s", (i * 13) % 37 + 1) for i in range(60)]
+    skewed = [(0, "s", 10_000)] + [(i, "s", 1 + i % 3) for i in range(1, 60)]
+    for rows in (mild, skewed):
+        want = _wor_mirror(rows, 10, "t")
         got = sorted(
             (r["sample_rank"], r["doc_id"])
             for r in weighted_sample_without_replacement(
-                df, 10, "w", ["doc_id"], seed="t", initial_probes=probes
+                _docs(spark, rows), 10, "w", ["doc_id"], seed="t"
             ).collect()
         )
-        assert got == want, probes
+        assert got == want, rows[0]
     # distinctness by construction
     assert len({d for _, d in got}) == 10
 

@@ -2,9 +2,10 @@
 source locations, plus the full query catalog (id → module → oracle).
 
 Everything in the output is machine-derived — IDs come from grepping
-`SURVEY <id>` annotations (range forms like `F1-F8` expand), the query
-table from importing the live catalog — so the document cannot drift from
-the code the way a hand-written table can.
+`SURVEY <id>` annotations, the query table from importing the live
+catalog — so the document cannot drift from the code the way a
+hand-written table can. Annotations name IDs one by one (`F3`, `J4/W3`);
+there is no range form, so an ID counts only where some code names it.
 
 Usage: PYTHONPATH=. python tools/coverage_map.py > COVERAGE.md
 """
@@ -21,20 +22,13 @@ FAMILIES = {
 
 PKG = Path(__file__).resolve().parent.parent / "scraper_db_refine_merge_spark"
 
-# `SURVEY` followed by one or more id tokens (`F3`, `F1-F8`, `J4/W3`, …)
-TOKEN = re.compile(r"\b(ST|[SPJAWOUFRTGD])(\d+)(?:-(?:ST|[SPJAWOUFRTGD])?(\d+))?")
-ANNOT = re.compile(r"SURVEY\s+((?:§[\d.]+\s+)?(?:(?:ST|[SPJAWOUFRTGD])\d+(?:-(?:ST|[SPJAWOUFRTGD])?\d+)?[/, ]{0,2})+)")
+# `SURVEY` followed by one or more id tokens (`F3`, `J4/W3`, …)
+TOKEN = re.compile(r"\b(ST|[SPJAWOUFRTGD])(\d+)\b")
+ANNOT = re.compile(r"SURVEY\s+((?:§[\d.]+\s+)?(?:(?:ST|[SPJAWOUFRTGD])\d+\b[/, ]{0,2})+)")
 
 
-def expand(annot: str) -> set[str]:
-    ids: set[str] = set()
-    for fam, lo, hi in TOKEN.findall(annot):
-        lo_i = int(lo)
-        hi_i = int(hi) if hi else lo_i
-        for i in range(lo_i, hi_i + 1):
-            if i <= FAMILIES.get(fam, 0):
-                ids.add(f"{fam}{i}")
-    return ids
+def ids_of(annot: str) -> set[str]:
+    return {f"{fam}{n}" for fam, n in TOKEN.findall(annot) if int(n) <= FAMILIES.get(fam, 0)}
 
 
 def scan() -> dict[str, list[str]]:
@@ -43,7 +37,7 @@ def scan() -> dict[str, list[str]]:
         rel = path.relative_to(PKG.parent)
         for lineno, line in enumerate(path.read_text().splitlines(), 1):
             for m in ANNOT.finditer(line):
-                for op in expand(m.group(1)):
+                for op in ids_of(m.group(1)):
                     loc = f"{rel}:{lineno}"
                     if loc not in hits[op]:
                         hits[op].append(loc)

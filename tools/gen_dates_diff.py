@@ -7,7 +7,7 @@ messy-date corpus, classify every string, and write DATES_DIFF_{round}.json
 Classes:
 - equal          both parse, identical UTC ISO instant
 - both_null      neither parses (true garbage)
-- dateutil_only  dateutil parses, the chain doesn't (the fallback domain —
+- dateutil_only  dateutil parses, the chain doesn't (the divergence domain —
                  shrunk by the r14 chain extension; what remains is the
                  yearless / fuzzy-prose tail)
 - native_only    the chain parses, dateutil doesn't (should stay empty)
@@ -106,7 +106,8 @@ def main() -> int:
     doc = {
         "methodology": (
             "native parse_fuzzy_to_utc_iso vs the reference-compatible "
-            "dateutil parse (dateutil_fallback_udf body) over a "
+            "dateutil parse (dates.dateutil_utc_iso, the differential "
+            "oracle) over a "
             "deterministic messy-date corpus; differ_day_first is the "
             "documented intentional divergence (European %d/%m vs "
             "dateutil's US month-first on ambiguous numeric dates)."

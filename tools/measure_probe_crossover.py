@@ -53,7 +53,7 @@ def main() -> int:
         rows = sim._collect_centroids(cent, "label")
 
         def run_expr():
-            sel = sim._probe_selected_col(cent, rows, "label", 2, 5)
+            sel = sim._probe_selected_col(cent, rows, "label", 2)
             out = q.select("query_id", F.explode(sel).alias("__pc"))
             return out.count()
 
